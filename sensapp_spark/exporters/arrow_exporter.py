@@ -124,18 +124,25 @@ def _row_batch(buf: list[tuple]) -> pa.RecordBatch:
     return pa.record_batch(arrays, schema=schema)
 
 
+def multi_row_frame(df: DataFrame, sensor_type: SensorType) -> DataFrame:
+    """The ordered multi-layout frame as ``(ts_us, 5×string)`` rows —
+    what :func:`_row_batch` assembles. The gateway peeks it with one
+    bounded collect; :func:`multi_rows` streams it."""
+    return _multi_frame(df, sensor_type).select(
+        F.unix_micros("timestamp").alias("ts_us"),
+        "sensor_id", "sensor_name", "value", "type", "labels",
+    )
+
+
 def multi_rows(df: DataFrame, sensor_type: SensorType):
     """Bounded-memory row-tuple iterator for the multi layout
     (``toLocalIterator``, one prefetched partition in flight). Closing
     this generator closes the Spark local iterator — same
     abandoned-stream contract as row_lines/iter_senml
-    (csv_exporter.py:117-124). The gateway peeks THIS iterator to pick
-    collect-vs-stream with a single query execution."""
-    out = _multi_frame(df, sensor_type).select(
-        F.unix_micros("timestamp").alias("ts_us"),
-        "sensor_id", "sensor_name", "value", "type", "labels",
+    (csv_exporter.row_lines)."""
+    rows = multi_row_frame(df, sensor_type).toLocalIterator(
+        prefetchPartitions=True
     )
-    rows = out.toLocalIterator(prefetchPartitions=True)
     try:
         for row in rows:
             yield tuple(row)

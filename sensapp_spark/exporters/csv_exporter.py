@@ -4,12 +4,17 @@ Row formatting is JVM-side (`lines_*` return a DataFrame of formatted
 lines). Three driver-side assembly strategies, by result size:
 
 * `to_csv_*` — full-collect into one string (what the reference's
-  exporters do, src/exporters/csv.rs); right for small results.
+  exporters do, src/exporters/csv.rs); right for small results. The
+  multi layout collects `multi_parts` (formatted fixed columns plus
+  escaped label cells) and derives the header's label keys from the
+  same rows, so it is one Spark action.
 * `iter_csv_*` — bounded-memory generators over ``toLocalIterator``:
   the driver holds one chunk (and one prefetched partition) at a time.
-  The HTTP gateway switches to these above its row threshold, so a
-  near-limit export (the reference caps at 10M rows,
-  src/storage/mod.rs:15-17) never materializes a multi-GB string.
+  The HTTP gateway first peeks ``threshold+1`` rows with one bounded
+  collect and assembles small results from them; only results above
+  its threshold re-execute through these streams, so a near-limit
+  export (the reference caps at 10M rows, src/storage/mod.rs:15-17)
+  never materializes a multi-GB string.
 * `write_csv_multi` — fully distributed `df.write.text`, no driver
   data path at all; for offline exports beyond HTTP scale.
 
@@ -161,10 +166,15 @@ def csv_multi_header(label_keys: list[str]) -> str:
     )
 
 
-def lines_multi(df: DataFrame, sensor_type: SensorType,
-                label_keys: list[str]) -> DataFrame:
-    """Long-format lines for one typed result frame joined with metadata
-    ``(sensor_id, time, value, name, labels)``."""
+def multi_parts(df: DataFrame, sensor_type: SensorType) -> DataFrame:
+    """The long layout before the label columns are known, in export
+    order: ``prefix`` is the formatted fixed columns, ``cells`` the
+    row's labels with each value already CSV-escaped. A line is the
+    prefix plus one ``,<cell>`` per header label key, ``""`` for a key
+    the row lacks — :func:`lines_multi` joins in the JVM once the keys
+    are known; :func:`assemble_multi` joins on the driver over
+    collected parts, deriving the keys from the same rows, so a
+    collected export is ONE Spark action."""
     ts = rfc3339_col(F.col("time"))
     if sensor_type is SensorType.LOCATION:
         value = F.concat(
@@ -173,30 +183,49 @@ def lines_multi(df: DataFrame, sensor_type: SensorType,
         )
     else:
         value = csv_escape(value_text(F.col("value"), sensor_type))
-    cols = [
-        ts,
-        F.col("sensor_id"),
-        csv_escape(F.col("name")),
-        value,
+    prefix = F.concat_ws(
+        ",", ts, F.col("sensor_id"), csv_escape(F.col("name")), value,
         F.lit(TYPE_TEXT[sensor_type]),
-    ]
-    cols += [
-        csv_escape(F.coalesce(F.element_at("labels", F.lit(k)), F.lit("")))
-        for k in label_keys
-    ]
-    return (
-        df.orderBy("sensor_id", "time")
-        .select(F.concat_ws(",", *cols).alias("line"))
     )
+    cells = F.transform_values(
+        "labels", lambda _k, v: csv_escape(F.coalesce(v, F.lit("")))
+    )
+    return df.orderBy("sensor_id", "time").select(
+        prefix.alias("prefix"), cells.alias("cells")
+    )
+
+
+def lines_multi(df: DataFrame, sensor_type: SensorType,
+                label_keys: list[str]) -> DataFrame:
+    """Long-format lines for one typed result frame joined with metadata
+    ``(sensor_id, time, value, name, labels)``."""
+    return multi_parts(df, sensor_type).select(
+        F.concat_ws(
+            ",", "prefix",
+            *[
+                F.coalesce(F.element_at("cells", F.lit(k)), F.lit(""))
+                for k in label_keys
+            ],
+        ).alias("line")
+    )
+
+
+def assemble_multi(parts: list) -> str:
+    """The complete multi-layout CSV body from collected
+    :func:`multi_parts` rows: header keys are the union of the rows'
+    label keys, exactly :func:`multi_label_keys` over the same rows."""
+    keys = sorted({k for r in parts if r.cells for k in r.cells})
+    lines = [
+        r.prefix + "".join("," + (r.cells or {}).get(k, "") for k in keys)
+        for r in parts
+    ]
+    return "\n".join([csv_multi_header(keys)] + lines) + "\n"
 
 
 def to_csv_multi(df: DataFrame, sensor_type: SensorType) -> str:
     """Multi-sensor export of one typed frame (the common case: a matcher
     query over one value table)."""
-    keys = multi_label_keys(df)
-    header = csv_multi_header(keys)
-    lines = [r.line for r in lines_multi(df, sensor_type, keys).collect()]
-    return "\n".join([header] + lines) + "\n"
+    return assemble_multi(multi_parts(df, sensor_type).collect())
 
 
 def iter_csv_multi(df: DataFrame, sensor_type: SensorType,

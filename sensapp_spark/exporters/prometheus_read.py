@@ -43,7 +43,9 @@ def execute_read_queries(
     limit: int | None = None,
 ) -> list[list[TimeSeries]]:
     """Run each query through the Q1-Q9 pipeline over the three numeric
-    value tables and assemble protobuf-ready series."""
+    value tables and assemble protobuf-ready series. ``values_for``
+    returns None for a type with nothing to scan (the gateway's
+    never-committed tables), which skips that type's plan entirely."""
     return [
         _execute_one_query(q, sensors, values_for, limit) for q in queries
     ]
@@ -71,7 +73,10 @@ def _execute_one_query(
             (F.unix_micros("time") / 1000).cast("long").alias("ts_ms"),
             F.col("value").cast("double").alias("value"),  # P4 lossy cast
         )
-        for row in out.toLocalIterator():
+        # One collect per (query, type): the response holds the whole
+        # query's series anyway, and a local iterator would launch one
+        # job per result partition.
+        for row in out.collect():
             series = per_series.get(row.sensor_id)
             if series is None:
                 labels = [("__name__", row.name)] + sorted(

@@ -58,7 +58,7 @@ def _sample_records(sensor_type: SensorType, row, rel: float) -> list[dict]:
     return [{"t": t, entry[0]: entry[1]}]
 
 
-def _ordered_rows(df: DataFrame) -> DataFrame:
+def ordered_rows(df: DataFrame) -> DataFrame:
     return df.orderBy("sensor_id", "time").select(
         "sensor_id", "name", "unit", "labels",
         (F.unix_micros("time") / 1000).cast("long").alias("t_ms"),
@@ -66,7 +66,7 @@ def _ordered_rows(df: DataFrame) -> DataFrame:
     )
 
 
-def _records_from_rows(rows, sensor_type: SensorType):
+def records_from_rows(rows, sensor_type: SensorType):
     """SenML records from (sensor_id, time)-ordered rows — works over any
     iterable, so the same logic backs the full-collect list and the
     bounded-memory generator. Fully streaming: only the sensor's FIRST
@@ -99,7 +99,7 @@ def _records_from_rows(rows, sensor_type: SensorType):
 
 def to_senml(df: DataFrame, sensor_type: SensorType) -> list[dict]:
     """``(sensor_id, time, value, name, unit, labels)`` → SenML record list."""
-    return list(_records_from_rows(_ordered_rows(df).collect(), sensor_type))
+    return list(records_from_rows(ordered_rows(df).collect(), sensor_type))
 
 
 def iter_senml(df: DataFrame, sensor_type: SensorType):
@@ -111,9 +111,9 @@ def iter_senml(df: DataFrame, sensor_type: SensorType):
     iterator is globally ordered. Closing this generator (or exhausting
     it) closes the underlying Spark local iterator, so an abandoned
     stream releases its serving thread immediately."""
-    rows = _ordered_rows(df).toLocalIterator(prefetchPartitions=True)
+    rows = ordered_rows(df).toLocalIterator(prefetchPartitions=True)
     try:
-        yield from _records_from_rows(rows, sensor_type)
+        yield from records_from_rows(rows, sensor_type)
     finally:
         close = getattr(rows, "close", None)
         if close is not None:

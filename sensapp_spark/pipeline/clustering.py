@@ -93,18 +93,22 @@ def _kmeans_local(
     (round 14; the PQ ``_codebooks_local`` precedent): identical init
     (``vec_id < k``), identical round-6 cosine argmax with the
     smallest-cid tie-break, identical rounded coordinate-mean update.
-    IEEE parity by construction: dot products and |e|² accumulate per
-    COORDINATE with elementwise numpy adds in index order — the exact
-    ``aggregate(zip_with(...), 0.0, acc + v)`` fold — centroid norms
-    use the same Python left-to-right sum the literal LUT uses, and
-    rounding is monotone, so the rounded argmax winner always lies
-    within ``unrounded_max − 2e-6`` (only that tie window pays the
-    exact-but-slow ``_round6_py``). Mean sums run through
-    ``np.add.accumulate`` (sequential by definition) in vec_id order —
-    the distributed update sums in partition order; both land on the
-    same round-6 coordinate (the pq/oracle-gate argument). A zero
-    vector yields NaN cosines exactly like the engine (NaN sorts
-    greatest, ties → smallest cid)."""
+    The ASSIGNMENT step is IEEE-identical by construction: dot products
+    and |e|² accumulate per COORDINATE with elementwise numpy adds in
+    index order — the exact ``aggregate(zip_with(...), 0.0, acc + v)``
+    fold — centroid norms use the same Python left-to-right sum the
+    literal LUT uses, and rounding is monotone, so the rounded argmax
+    winner always lies within ``unrounded_max − 2e-6`` (only that tie
+    window pays the exact-but-slow ``_round6_py``). The UPDATE step is
+    not: mean sums run through ``np.add.accumulate`` (sequential by
+    definition) in vec_id order while the distributed update averages
+    in partition order, so the two agree because round-6 absorbs the
+    summation-order ULPs — the same argument as ``_codebooks_local``.
+    A sum landing exactly on a half-up tie at the 7th decimal could
+    still round apart; the parity test and the oracle gate are the
+    pin, not a bit-identity claim. A zero vector yields NaN cosines
+    exactly like the engine (NaN sorts greatest, ties → smallest
+    cid)."""
     import math
 
     import numpy as np
@@ -179,7 +183,8 @@ def kmeans_codebook(
     ANN store's drift-triggered reindex passes order-based seeds.
     ``train`` (from ``similarity.collect_train_vectors``) fits the
     codebook driver-locally without the per-round Spark jobs — see
-    ``_kmeans_local`` for the bit-parity argument."""
+    ``_kmeans_local`` for the parity argument (round-6 absorption of
+    summation order)."""
     if train is not None:
         return _kmeans_local(train, k, rounds, dim, init=init)
     cents = init if init is not None else init_centroids(embeddings, k)

@@ -17,6 +17,7 @@ both engines, then rounded, so value-hash comparison is stable.
 from __future__ import annotations
 
 import hashlib
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -138,8 +139,6 @@ def auto_planes(
     "more planes, not a bigger cap" lever applied automatically:
     occupancy stays ~constant as the corpus grows 100x because b grows
     by log2(100) ≈ 7."""
-    import math
-
     target = max(1, max_bucket // 4)
     if n <= target:
         return lo
@@ -564,18 +563,26 @@ def sql_array_lit(values, depth: int = 1) -> F.Column:
     even starts. The SQL string round-trips in one call and parses
     JVM-side in milliseconds.
 
-    Doubles serialize via ``repr`` (shortest round-trip — Spark's
-    ``Double.parseDouble`` restores the identical bits) with the ``D``
-    suffix so the parser yields DOUBLE, not DECIMAL; ints pass through
-    as plain literals. ``depth`` is the nesting level of ``values``
-    (1 = flat list)."""
+    Finite doubles serialize via ``repr`` (shortest round-trip —
+    Spark's ``Double.parseDouble`` restores the identical bits) with
+    the ``D`` suffix so the parser yields DOUBLE, not DECIMAL; the SQL
+    grammar has no non-finite literal, so NaN and ±Infinity become
+    ``CAST('NaN' AS DOUBLE)``-style casts. Ints pass through as plain
+    literals. ``depth`` is the nesting level of ``values`` (1 = flat
+    list)."""
 
     def fmt(v) -> str:
         if isinstance(v, bool):  # pragma: no cover — not used today
             raise TypeError("bool literals unsupported")
         if isinstance(v, int):
             return str(v)
-        return repr(float(v)) + "D"
+        v = float(v)
+        if math.isfinite(v):
+            return repr(v) + "D"
+        name = "NaN" if math.isnan(v) else (
+            "Infinity" if v > 0 else "-Infinity"
+        )
+        return f"CAST('{name}' AS DOUBLE)"
 
     def render(vals, d: int) -> str:
         if d == 0:
@@ -597,8 +604,6 @@ def _assign_best(vec, centroids: list[tuple[int, list[float]]]) -> F.Column:
     left-to-right IEEE fold in Python (the pq_topk query-LUT
     precedent). Ties still break to the smallest centroid id via the
     struct's (c, n=-cid) ordering."""
-    import math
-
     cvecs = sql_array_lit(
         [[float(x) for x in cv] for _, cv in centroids], depth=2
     )

@@ -58,17 +58,21 @@ def register(name: str, oracle: str | None = None):
 # footer schema read) per call, and the pipeline entries call these
 # loaders once each. Only the unexecuted DataFrame (the plan) is
 # memoized — no rows, no materialized state — so every bench/oracle
-# invocation still computes from the parquet inputs.
-_PLAN_MEMO: dict[tuple[int, str, str], DataFrame] = {}
+# invocation still computes from the parquet inputs. Keyed on the
+# application id, not ``id(spark)``: a stopped session's id can be
+# reused by the next one, whose plans must not be served the dead
+# context's frames. The session confs are re-applied on every lookup
+# (idempotent), so a memo hit never skips them.
+_PLAN_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def _read_memo(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     from sensapp_spark.plans.testdata import ensure_session_confs
 
-    key = (id(spark), sf_dir, table)
+    ensure_session_confs(spark)
+    key = (spark.sparkContext.applicationId, sf_dir, table)
     cached = _PLAN_MEMO.get(key)
     if cached is None:
-        ensure_session_confs(spark)
         cached = spark.read.parquet(f"{sf_dir}/{table}.parquet")
         _PLAN_MEMO[key] = cached
     return cached

@@ -119,11 +119,14 @@ def _await_all(futures) -> None:
     (or ``pool.map``) surfaces only the FIRST exception and silently
     discards any concurrent one, which can mask the more informative of
     two overlapping maintenance failures (round-13 ADVICE). Secondary
-    errors ride the raised exception as ``__context__``-style notes."""
+    errors ride the raised exception as ``__context__``-style notes.
+    Errors are read in SUBMISSION order (``wait``'s done set is
+    unordered), so the primary one is deterministic."""
     import concurrent.futures as _cf
 
-    done, _ = _cf.wait(list(futures))
-    errs = [f.exception() for f in done]
+    futures = list(futures)
+    _cf.wait(futures)
+    errs = [f.exception() for f in futures]
     errs = [e for e in errs if e is not None]
     if errs:
         primary = errs[0]

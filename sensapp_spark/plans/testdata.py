@@ -34,7 +34,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # table; within one session it is immutable per sf_dir, so cache the
 # (tiny) result instead of re-shuffling it for every query. In
 # production the dimension is a real table and this memo disappears.
-_SENSORS_CACHE: dict[tuple[int, str], DataFrame] = {}
+_SENSORS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def ensure_session_confs(spark: SparkSession) -> None:
@@ -52,8 +52,9 @@ def ensure_session_confs(spark: SparkSession) -> None:
 # call, and the tagged-union entries call the loaders once per case.
 # Only the unexecuted DataFrame (the plan) is memoized — no rows, no
 # materialized state — so every bench/oracle invocation still computes
-# from the parquet inputs.
-_EVENTS_PLAN: dict[tuple[int, str], DataFrame] = {}
+# from the parquet inputs. Keyed per Spark application, like
+# pipeline_queries._PLAN_MEMO.
+_EVENTS_PLAN: dict[tuple[str, str], DataFrame] = {}
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -64,11 +65,11 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     testdata stores µs TIMESTAMP directly. Handle both: if ``ts`` arrives
     as a long, it is ns — integer-DIV to µs (a double division would round
     at ~256 ns granularity for 2024 epochs, 53-bit mantissa < 1.7e18)."""
-    key = (id(spark), sf_dir)
+    ensure_session_confs(spark)
+    key = (spark.sparkContext.applicationId, sf_dir)
     cached = _EVENTS_PLAN.get(key)
     if cached is not None:
         return cached
-    ensure_session_confs(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     if dict(ev.dtypes)["ts"] == "bigint":
         ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
@@ -85,7 +86,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_sensors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sensors dimension derived from events: one series per
     (event_type, user_id)."""
-    key = (id(spark), sf_dir)
+    key = (spark.sparkContext.applicationId, sf_dir)
     cached = _SENSORS_CACHE.get(key)
     if cached is not None:
         return cached

@@ -122,10 +122,13 @@ def create_app(
     driver-side up to its 10M-row limit (src/storage/mod.rs:15-17 +
     src/exporters/*) — at that limit that is a multi-GB driver string,
     the one reference behavior SURVEY §7.4 risk 10 says NOT to copy.
-    Text formats decide by PEEK-AHEAD on one iterator (the query
-    executes once, no probe job); Arrow keeps an O(threshold)
-    CollectLimit probe because its golden small path is a single
-    toArrow() batch. ``None`` disables streaming (always collect)."""
+    Every format decides with ONE bounded job: a
+    ``limit(threshold+1).collect()`` of the ordered result (a single
+    ``TakeOrderedAndProject``). A result that fits is assembled from
+    those rows; a larger one re-executes the query through the
+    bounded-memory ``toLocalIterator`` streams, so only over-threshold
+    exports pay the query twice. ``None`` disables streaming (always
+    collect)."""
     app = Flask("sensapp_spark")
 
     def _stream_senml(records) -> Response:
@@ -146,36 +149,49 @@ def create_app(
 
         return Response(gen(), mimetype="application/json")
 
-    def _export(df, fmt: str, stype: SensorType) -> Response:
-        from itertools import islice
+    def _peek(ordered) -> list | None:
+        """THE collect-vs-stream decision: one bounded
+        ``limit(threshold+1).collect()`` over an ordered frame — Spark
+        plans it as a ``TakeOrderedAndProject``, so the query executes
+        once and no range-sort sampling job runs. Returns the
+        complete result when it fits under the threshold, else None
+        (the caller then streams by re-executing the query through a
+        bounded-memory iterator)."""
+        head = ordered.limit(stream_threshold + 1).collect()
+        return head if len(head) <= stream_threshold else None
 
+    def _export(df, fmt: str, stype: SensorType) -> Response:
         from sensapp_spark.exporters.csv_exporter import (
+            assemble_multi,
             chunk_lines,
             csv_multi_header,
             lines_multi,
             multi_label_keys,
+            multi_parts,
             row_lines,
         )
         from sensapp_spark.exporters.jsonl_exporter import lines_jsonl
+        from sensapp_spark.exporters.senml_exporter import (
+            ordered_rows,
+            records_from_rows,
+        )
 
         cols = df.select("sensor_id", "time", "value", "name", "unit", "labels")
         if fmt in ("arrow", "parquet"):
-            # Columnar formats use the SAME single-execution peek-ahead
-            # as the text formats (the former CollectLimit probe job is
-            # gone): peek threshold+1 row tuples off one iterator; a
-            # result that fits assembles the complete file from the
-            # buffered rows — for Arrow BYTE-identical to the golden
-            # toArrow() path (schema nullability matched in
+            # A result that fits assembles the complete file from the
+            # peeked row tuples — for Arrow BYTE-identical to the
+            # golden toArrow() path (schema nullability matched in
             # MULTI_ARROW_SCHEMA), for parquet content-identical (its
             # golden pins decoded content) — and a larger one streams
-            # buffered head + live iterator with bounded driver memory.
-            # A consumer wanting more than the 10M-row limit reads the
+            # from the live iterator with bounded driver memory. A
+            # consumer wanting more than the 10M-row limit reads the
             # lake's partitioned tables directly — that IS the scale
             # path for columnar handoff.
             from sensapp_spark.exporters.arrow_exporter import (
                 arrow_multi_bytes_from_rows,
                 iter_arrow_from_rows,
                 iter_parquet_from_rows,
+                multi_row_frame,
                 multi_rows,
                 parquet_multi_bytes_from_rows,
                 to_parquet_multi,
@@ -188,25 +204,19 @@ def create_app(
                     else to_parquet_multi(cols, stype)
                 )
                 return Response(body, mimetype=EXPORT_MEDIA[fmt])
-            rows = multi_rows(cols, stype)
-            head = list(islice(rows, stream_threshold + 1))
-            if len(head) <= stream_threshold:
-                rows.close()
+            head = _peek(multi_row_frame(cols, stype))
+            if head is not None:
+                rows = [tuple(r) for r in head]
                 body = (
-                    arrow_multi_bytes_from_rows(head)
+                    arrow_multi_bytes_from_rows(rows)
                     if fmt == "arrow"
-                    else parquet_multi_bytes_from_rows(head)
+                    else parquet_multi_bytes_from_rows(rows)
                 )
                 return Response(body, mimetype=EXPORT_MEDIA[fmt])
-
-            def columnar_rest(first=head):
-                yield from first
-                yield from rows
-
             frames = (
-                iter_arrow_from_rows(columnar_rest())
+                iter_arrow_from_rows(multi_rows(cols, stype))
                 if fmt == "arrow"
-                else iter_parquet_from_rows(columnar_rest())
+                else iter_parquet_from_rows(multi_rows(cols, stype))
             )
             return Response(frames, mimetype=EXPORT_MEDIA[fmt])
         if stream_threshold is None:
@@ -217,53 +227,45 @@ def create_app(
             else:
                 return jsonify(to_senml(cols, stype))
             return Response(body, mimetype=EXPORT_MEDIA[fmt])
-        # Peek-ahead (single execution, no probe job): pull up to
-        # threshold+1 rows from the JVM-formatted iterator; a result
-        # that fits assembles the exact collect-path body from the
-        # buffered rows (closing the abandoned iterator so its Spark
-        # serving thread dies now, not at GC), a larger one streams
-        # the buffer + the rest with bounded driver memory. The
-        # upstream query runs ONCE either way.
-        # NOTE the resumed streams below use `yield from` generators,
-        # not itertools.chain: closing a delegating generator (client
-        # disconnect mid-stream) propagates the close into the
-        # underlying Spark iterator, where chain would drop it to GC.
+        # Peek (one bounded action, _peek): a result that fits assembles
+        # the exact collect-path body from the peeked rows. A larger
+        # one RE-EXECUTES the query through the bounded-memory
+        # iterators (toLocalIterator: one job per result partition
+        # plus the range-sort sampling job), so above the threshold
+        # the query runs twice — the bounded top-K pass is the price
+        # of the single-job small path, which is every request under
+        # the threshold.
         if fmt == "senml":
-            it = iter_senml(cols, stype)
-            head = list(islice(it, stream_threshold + 1))
-            if len(head) <= stream_threshold:
-                it.close()
-                return jsonify(head)
-
-            def senml_rest(first=head):
-                yield from first
-                yield from it
-
-            return _stream_senml(senml_rest())
+            head = _peek(ordered_rows(cols))
+            if head is not None:
+                return jsonify(list(records_from_rows(head, stype)))
+            return _stream_senml(iter_senml(cols, stype))
         if fmt == "csv":
+            # The header's label keys come from the peeked rows
+            # themselves (assemble_multi), so the small path is one
+            # job; only a stream needs them up front.
+            head = _peek(multi_parts(cols, stype))
+            if head is not None:
+                return Response(
+                    assemble_multi(head), mimetype=EXPORT_MEDIA[fmt]
+                )
             keys = multi_label_keys(cols)
             header = csv_multi_header(keys)
-            lines = row_lines(lines_multi(cols, stype, keys))
+            lines = lines_multi(cols, stype, keys)
         else:
             header = None
-            lines = row_lines(lines_jsonl(cols, stype))
-        head = list(islice(lines, stream_threshold + 1))
-        if len(head) <= stream_threshold:
-            lines.close()
-            if fmt == "csv":
-                body = "\n".join([header] + head) + "\n"
-            else:
-                body = "".join(ln + "\n" for ln in head)
-            return Response(body, mimetype=EXPORT_MEDIA[fmt])
-        def resumed(first=head):
-            yield from first
-            yield from lines
-
+            lines = lines_jsonl(cols, stype)
+            head = _peek(lines)
+            if head is not None:
+                return Response(
+                    "".join(r.line + "\n" for r in head),
+                    mimetype=EXPORT_MEDIA[fmt],
+                )
         # Shared chunk assembly (csv_exporter.chunk_lines): the streamed
         # bytes stay byte-identical to the full-collect bodies, and the
         # guarantee lives in exactly one implementation.
         return Response(
-            chunk_lines(resumed(), header), mimetype=EXPORT_MEDIA[fmt]
+            chunk_lines(row_lines(lines), header), mimetype=EXPORT_MEDIA[fmt]
         )
 
     @app.errorhandler(400)
@@ -351,10 +353,15 @@ def create_app(
         # schema probe would report ok for a corrupt or unmounted lake.
         import os as _os
 
+        from sensapp_spark.storage.lake import resolve_table
+
         try:
             _os.listdir(lake.root)  # filesystem round trip
-            if _os.path.exists(lake._sensors_path()):
-                lake.sensors().limit(1).collect()  # real scan, ≤1 row
+            data = resolve_table(lake._sensors_path())
+            if data is not None:
+                # The parquet scan itself (≤1 row), not lake.sensors():
+                # the pinned in-memory dimension never touches storage.
+                lake._sensor_scan(data).limit(1).collect()
             else:
                 # Empty lake: prove the session can still run a job.
                 spark.range(1).collect()
@@ -446,6 +453,13 @@ def create_app(
         lake.publish(batch)
         return "", 204
 
+    def _committed_values(stype: SensorType):
+        """Remote-read scan source: None (no plan, no job) for a value
+        table that has never committed — one pointer read."""
+        if lake.committed_seq(stype) is None:
+            return None
+        return lake.values(stype)
+
     @app.post("/api/v1/prometheus_remote_read")
     def prom_read():
         # Response type chosen from accepted_response_types, like
@@ -472,7 +486,7 @@ def create_app(
                 # decoded above, so malformed payloads 400 before any
                 # frame goes out).
                 frames = iter_read_request_streamed(
-                    raw_body, lake.sensors(), lake.values
+                    raw_body, lake.sensors(), _committed_values
                 )
                 return Response(
                     frames,
@@ -481,7 +495,9 @@ def create_app(
                         "proto=prometheus.ChunkedReadResponse"
                     ),
                 )
-            body = handle_read_request(raw_body, lake.sensors(), lake.values)
+            body = handle_read_request(
+                raw_body, lake.sensors(), _committed_values
+            )
         except ValueError as e:
             return jsonify({"error": str(e)}), 400
         return Response(
@@ -919,11 +935,12 @@ def create_app(
 
     @app.get("/api/v1/rollup")
     def rollup_read():
-        from itertools import islice
-
         from pyspark.sql import functions as F
 
-        from sensapp_spark.exporters.csv_exporter import row_lines
+        from sensapp_spark.exporters.csv_exporter import (
+            chunk_lines,
+            row_lines,
+        )
         from sensapp_spark.exporters.text import rfc3339_col
         from sensapp_spark.storage.rollup import RollupStore
 
@@ -973,25 +990,18 @@ def create_app(
                 ).alias("line")
             )
         )
-        it = row_lines(lines)
         if stream_threshold is None:
-            body = "".join(ln + "\n" for ln in it)
-            return Response(body, mimetype="application/jsonl")
-        head = list(islice(it, stream_threshold + 1))
-        if len(head) <= stream_threshold:
-            it.close()
+            head = lines.collect()
+        else:
+            head = _peek(lines)
+        if head is not None:
             return Response(
-                "".join(ln + "\n" for ln in head),
+                "".join(r.line + "\n" for r in head),
                 mimetype="application/jsonl",
             )
-
-        def resumed(first=head):
-            for ln in first:
-                yield ln + "\n"
-            for ln in it:
-                yield ln + "\n"
-
-        return Response(resumed(), mimetype="application/jsonl")
+        return Response(
+            chunk_lines(row_lines(lines)), mimetype="application/jsonl"
+        )
 
     # Beyond-reference (round 11): one composed maintenance pass —
     # rollup/sketch refresh, stats-driven compaction, zone-map

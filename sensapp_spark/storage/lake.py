@@ -81,6 +81,9 @@ class SensorLake:
         self.root = root
         self.retain_generations = max(2, int(retain_generations))
         self.zonemap_on_append = zonemap_on_append
+        # (committed sensors version dir, pinned frame or None when the
+        # version is too large to pin) — see :meth:`sensors`.
+        self._pinned_sensors: tuple[str, DataFrame | None] | None = None
         os.makedirs(root, exist_ok=True)
 
     # -- paths -------------------------------------------------------------
@@ -382,16 +385,59 @@ class SensorLake:
     def sensors(self, at_seq: int | None = None) -> DataFrame:
         """The dimension table — optionally TIME-TRAVELLED to commit
         ``at_seq`` (see :meth:`history`; raises
-        :class:`VersionNotRetained` past the retention window)."""
+        :class:`VersionNotRetained` past the retention window).
+
+        The current version is PINNED in memory: it is read once per
+        committed version dir (one ``toArrow`` job) into a
+        ``LocalRelation``, and later calls return that frame until a
+        commit — from this or any other ``SensorLake`` on the root —
+        resolves to a new dir. Optimizer rules fold filters, limits and
+        projections over a local relation on the driver, so matcher
+        probes and id lookups run no Spark job at all; this is the
+        reference's in-process dimension cache
+        (``#[cached(size=1024)]``, sqlite_utilities.rs:9-15) with the
+        commit log as its invalidation. Only a version whose on-disk
+        bytes are under Spark's own
+        ``spark.sql.execution.arrow.localRelationThreshold`` is pinned
+        (above it ``createDataFrame`` would ship the batches to
+        executors anyway); larger dimensions, legacy layouts without a
+        commit log (seq 0 — a flat legacy dir changes in place, so its
+        path is no version key) and ``at_seq`` reads get the plain
+        parquet scan."""
+        path = self._sensors_path()
         if at_seq is not None:
-            data = resolve_at(self._sensors_path(), at_seq)
+            data, pin = resolve_at(path, at_seq), False
         else:
-            data = resolve_table(self._sensors_path())
+            seq, data = read_committed(path)
+            pin = seq > 0
         if data is None:
             return self.spark.createDataFrame([], SENSOR_SCHEMA)
+        if not pin:
+            return self._sensor_scan(data)
+        pinned = self._pinned_sensors
+        if pinned is None or pinned[0] != data:
+            pinned = self._pinned_sensors = (data, self._pin_sensors(data))
+        return self._sensor_scan(data) if pinned[1] is None else pinned[1]
+
+    def _sensor_scan(self, data: str) -> DataFrame:
         # Explicit schema for the same reason as values(): no footer
         # inference, no race against a concurrent dimension rewrite.
         return self.spark.read.schema(SENSOR_SCHEMA).parquet(data)
+
+    def _pin_sensors(self, data: str) -> DataFrame | None:
+        """The in-memory ``LocalRelation`` copy of one committed
+        sensors version, or None when its on-disk bytes reach Spark's
+        local-relation threshold."""
+        limit = (
+            self.spark._jsparkSession.sessionState()
+            .conf().arrowLocalRelationThreshold()
+        )
+        size = sum(os.path.getsize(f) for f in _list_data_files(data))
+        if size >= limit:
+            return None
+        return self.spark.createDataFrame(
+            self._sensor_scan(data).toArrow(), SENSOR_SCHEMA
+        )
 
     def history(self, stype: SensorType | None = None) -> list[dict]:
         """Retained commit history of the values table for ``stype`` (or

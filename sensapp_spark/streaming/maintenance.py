@@ -16,15 +16,21 @@ deterministic tests, rate source for background operation).
 
 Order inside a tick (deliberate):
 
-1. rollup/sketch refresh FIRST — they poll the changes feed, and a
-   compaction in the same tick would otherwise force every consumer
-   through a preserved-rewrite crossing each tick;
-2. optimize_auto next (content-preserving rewrite — the feeds cross it
-   without replay);
-3. retention (when a cutoff policy is given) — metadata-only expiry;
+1. rollup/sketch/quantile refresh FIRST — they poll the changes
+   feed and fold this tick's appends before anything rewrites the
+   version they read;
+2. dedup (opt-in) and optimize_auto next (content-preserving
+   rewrites);
+3. the crossing: every maintained store whose table was rewritten in
+   step 2 refreshes again. The feed crosses a content-preserving
+   rewrite with an EMPTY delta, so this commits the advanced cursor
+   alone — and the stores' committed cursors are current when the
+   tick ends, which is what lets reads served from them skip the
+   feed-poll jobs (``RollupStore._cursor_current``);
+4. retention (when a cutoff policy is given) — metadata-only expiry;
    the NEXT tick's refresh folds the dropped months out of the
    aggregates (the lazy whole-month delete crossing);
-4. zone-map refresh last, over whatever version the tick settled on.
+5. zone-map refresh last, over whatever version the tick settled on.
 
 A step that loses its CAS race ``max_retries`` times reports
 ``{"conflict": …}`` instead of raising — the loop's next tick retries
@@ -88,14 +94,17 @@ class MaintenancePlan:
     )
 
 
-def _guard(report: dict, key: str, fn: Callable[[], object]) -> None:
+def _guard(report: dict, key: str, fn: Callable[[], object]) -> bool:
     """Run one step; a CAS loss after its internal retries is reported,
-    not raised — the next tick retries from fresh state."""
+    not raised — the next tick retries from fresh state. Returns
+    whether the step completed."""
     try:
         report[key] = fn()
+        return True
     except CommitConflict as e:
         report[key] = {"conflict": str(e)}
         report["conflicts"] = report.get("conflicts", 0) + 1
+        return False
 
 
 def maintenance_tick(
@@ -113,14 +122,15 @@ def maintenance_tick(
         if resolve_table(lake._values_path(st)) is not None
     ]
     numeric = [st for st in written if st in RollupStore._NUMERIC]
+    # Every maintained (report key, store, type), in refresh order —
+    # the compaction crossing below walks the same list.
+    maintained: list[tuple[str, RollupStore, SensorType]] = []
     for grain in plan.rollup_grains:
         store = RollupStore(lake, grain_s=grain)
         for st in numeric:
-            _guard(
-                report,
-                f"rollup_{grain}s_{st.name.lower()}",
-                lambda s=store, t=st: s.refresh(t),
-            )
+            key = f"rollup_{grain}s_{st.name.lower()}"
+            maintained.append((key, store, st))
+            _guard(report, key, lambda s=store, t=st: s.refresh(t))
             if plan.upgrade_months_per_tick > 0:
                 # After the refresh so a first-ever tick (full
                 # rebuild at current schema) makes this a pure
@@ -133,37 +143,45 @@ def maintenance_tick(
                         t, max_months=plan.upgrade_months_per_tick
                     ),
                 )
-    for grain in plan.sketch_grains:
-        store = SketchRollupStore(lake, grain_s=grain)
-        for st in numeric:
-            _guard(
-                report,
-                f"sketch_{grain}s_{st.name.lower()}",
-                lambda s=store, t=st: s.refresh(t),
-            )
+    families = [(SketchRollupStore, "sketch", plan.sketch_grains)]
     if plan.quantile_grains:
         from sensapp_spark.storage.qrollup import QuantileRollupStore
 
-        for grain in plan.quantile_grains:
-            store = QuantileRollupStore(lake, grain_s=grain)
+        families.append(
+            (QuantileRollupStore, "quantile", plan.quantile_grains)
+        )
+    for cls, family, grains in families:
+        for grain in grains:
+            store = cls(lake, grain_s=grain)
             for st in numeric:
-                _guard(
-                    report,
-                    f"quantile_{grain}s_{st.name.lower()}",
-                    lambda s=store, t=st: s.refresh(t),
-                )
+                key = f"{family}_{grain}s_{st.name.lower()}"
+                maintained.append((key, store, st))
+                _guard(report, key, lambda s=store, t=st: s.refresh(t))
+    rewritten = set()
     for st in written:
-        if plan.dedup:
+        if plan.dedup and _guard(
+            report,
+            f"dedup_{st.name.lower()}",
+            lambda t=st: lake.dedup_rewrite(t),
+        ):
+            rewritten.add(st)
+        if plan.optimize and _guard(
+            report,
+            f"optimize_{st.name.lower()}",
+            lambda t=st: lake.optimize_auto(t),
+        ):
+            rewritten.add(st)
+    # Carry every maintained cursor across this tick's content-
+    # preserving rewrites: the refresh crosses them with an EMPTY
+    # delta and commits the cursor alone, so the committed cursor is
+    # current again and reads served from the store skip the
+    # feed-poll jobs until the next append — instead of every read
+    # re-proving the crossing until the next tick.
+    for key, store, st in maintained:
+        if st in rewritten:
             _guard(
-                report,
-                f"dedup_{st.name.lower()}",
-                lambda t=st: lake.dedup_rewrite(t),
-            )
-        if plan.optimize:
-            _guard(
-                report,
-                f"optimize_{st.name.lower()}",
-                lambda t=st: lake.optimize_auto(t),
+                report, f"{key}_crossing",
+                lambda s=store, t=st: s.refresh(t),
             )
     if plan.retention_before is not None:
         cutoff = plan.retention_before()
