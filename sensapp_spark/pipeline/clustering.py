@@ -4,17 +4,18 @@ data-derived init, over ``embeddings(vec_id, embedding float[], label)``.
 
 Design for 100 TB:
 
-* The codebook (k × dim floats) is the ONLY state that ever leaves the
-  executors — collected once per iteration, re-broadcast as literal
-  expressions. Assignment is a narrow whole-stage-codegen projection
-  (the centroid loop unrolls into one ``array_max`` over (cosine, -cid)
-  structs, exactly the IVF pattern) — no shuffle, no Python.
-* The update step is one groupBy(cluster) with ``dim`` avg aggregates —
-  map-side partials, shuffle bytes ∝ k × dim per input partition.
-* Iterations are a fixed, small constant (2 assignment rounds here):
-  each round is one job, so the full fit is O(iters) scans. Convergence
-  looping belongs to offline training; a pipeline wants reproducible
-  output.
+* The fit runs on the driver over :func:`similarity.train_sample` —
+  the whole corpus up to ``ANN_DRIVER_TRAIN_ROWS``, a deterministic
+  md5 sample above it — so training is one bounded collect whatever
+  the round count (standard IVF/PQ practice: train on a sample,
+  assign the full corpus).
+* Assignment is a narrow whole-stage-codegen projection (the
+  centroid loop becomes one ``array_max`` over (cosine, -cid)
+  structs, exactly the IVF pattern) — no shuffle, no Python; the
+  codebook (k × dim floats) enters the plan as a literal.
+* Iterations are a fixed, small constant (2 assignment rounds here).
+  Convergence looping belongs to offline training; a pipeline wants
+  reproducible output.
 
 Determinism contract (mirrored by the DuckDB oracle in
 plans/pipeline_queries.py): init centroids are the first ``k`` vectors
@@ -28,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from sensapp_spark.pipeline.pq import _round6_py
 
 
 KMEANS_K = 8
@@ -44,44 +47,6 @@ def assign_expr(vec, centroids: list[tuple[int, list[float]]]) -> F.Column:
     return (-_assign_best(vec, centroids)["n"]).cast("int")
 
 
-def init_centroids(
-    embeddings: DataFrame, k: int = KMEANS_K
-) -> list[tuple[int, list[float]]]:
-    """First ``k`` stored vectors by vec_id — the same deterministic
-    data-derived codebook rule as the IVF index (similarity.py), so
-    both engines and every scale factor agree without a training step."""
-    rows = (
-        embeddings.filter(F.col("vec_id") < k)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    )
-    return [(int(r.vec_id), [float(x) for x in r.embedding]) for r in rows]
-
-
-def update_centroids(
-    assigned: DataFrame, dim: int
-) -> list[tuple[int, list[float]]]:
-    """One Lloyd update: per-cluster coordinate means, rounded to 6
-    decimals. Returns only non-empty clusters, sorted by cluster id.
-    The collect is k × dim floats — codebook-sized by construction."""
-    aggs = [
-        F.round(F.avg(F.col("embedding")[i].cast("double")), 6).alias(f"c{i}")
-        for i in range(dim)
-    ]
-    rows = assigned.groupBy("cluster").agg(*aggs).orderBy("cluster").collect()
-    return [
-        (int(r["cluster"]), [float(r[f"c{i}"]) for i in range(dim)])
-        for r in rows
-    ]
-
-
-def _round6_py(x: float) -> float:
-    from sensapp_spark.pipeline.pq import _round6_py as r6
-
-    return r6(x)
-
-
 def _kmeans_local(
     train: list[tuple[int, list[float]]],
     k: int,
@@ -89,26 +54,26 @@ def _kmeans_local(
     dim: int,
     init: list[tuple[int, list[float]]] | None = None,
 ) -> list[tuple[int, list[float]]]:
-    """Driver-local twin of the distributed spherical-kmeans fit
-    (round 14; the PQ ``_codebooks_local`` precedent): identical init
-    (``vec_id < k``), identical round-6 cosine argmax with the
-    smallest-cid tie-break, identical rounded coordinate-mean update.
-    The ASSIGNMENT step is IEEE-identical by construction: dot products
-    and |e|² accumulate per COORDINATE with elementwise numpy adds in
-    index order — the exact ``aggregate(zip_with(...), 0.0, acc + v)``
-    fold — centroid norms use the same Python left-to-right sum the
-    literal LUT uses, and rounding is monotone, so the rounded argmax
-    winner always lies within ``unrounded_max − 2e-6`` (only that tie
-    window pays the exact-but-slow ``_round6_py``). The UPDATE step is
-    not: mean sums run through ``np.add.accumulate`` (sequential by
-    definition) in vec_id order while the distributed update averages
-    in partition order, so the two agree because round-6 absorbs the
-    summation-order ULPs — the same argument as ``_codebooks_local``.
-    A sum landing exactly on a half-up tie at the 7th decimal could
-    still round apart; the parity test and the oracle gate are the
-    pin, not a bit-identity claim. A zero vector yields NaN cosines
-    exactly like the engine (NaN sorts greatest, ties → smallest
-    cid)."""
+    """The spherical-kmeans fit, on the driver over the training rows
+    (``similarity.train_sample``): init = the first ``k`` rows with
+    ``vec_id < k`` (or ``init``), round-6 cosine argmax with the
+    smallest-cid tie-break, coordinate-mean update rounded to 6.
+    The ASSIGNMENT step is IEEE-identical to the engine's
+    ``assign_expr`` by construction: dot products and |e|² accumulate
+    per COORDINATE with elementwise numpy adds in index order — the
+    exact ``aggregate(zip_with(...), 0.0, acc + v)`` fold — centroid
+    norms use the same Python left-to-right sum the literal LUT uses,
+    and rounding is monotone, so the rounded argmax winner always lies
+    within ``unrounded_max − 2e-6`` (only that tie window pays the
+    exact-but-slow ``_round6_py``). The UPDATE step sums through
+    ``np.add.accumulate`` (sequential by definition) in vec_id order
+    while the DuckDB oracle's ``avg`` sums in its own order; the two
+    agree because round-6 absorbs the summation-order ULPs (the
+    ``_codebooks_local`` argument). A sum landing exactly on a half-up
+    tie at the 7th decimal could still round apart; the oracle gate is
+    the pin, not a bit-identity claim. A zero vector yields NaN
+    cosines exactly like the engine (NaN sorts greatest, ties →
+    smallest cid)."""
     import math
 
     import numpy as np
@@ -176,24 +141,17 @@ def kmeans_codebook(
 ) -> list[tuple[int, list[float]]]:
     """The TRAINED centroids after ``rounds - 1`` Lloyd updates — the
     production IVF codebook (``similarity.ivf_topk(codebook=...)``
-    accepts it directly). Driver traffic stays k x dim floats per
-    update; the scans are the same ones ``kmeans_assign`` runs.
-    ``init`` overrides the dense-id seeding rule (``init_centroids``'
-    ``vec_id < k``) for corpora with hashed/sparse id spaces — the
-    ANN store's drift-triggered reindex passes order-based seeds.
-    ``train`` (from ``similarity.collect_train_vectors``) fits the
-    codebook driver-locally without the per-round Spark jobs — see
-    ``_kmeans_local`` for the parity argument (round-6 absorption of
-    summation order)."""
-    if train is not None:
-        return _kmeans_local(train, k, rounds, dim, init=init)
-    cents = init if init is not None else init_centroids(embeddings, k)
-    for _ in range(rounds - 1):
-        assigned = embeddings.withColumn(
-            "cluster", assign_expr(F.col("embedding"), cents)
-        )
-        cents = update_centroids(assigned, dim)
-    return cents
+    accepts it directly). Fits on ``train`` (default: one
+    ``similarity.train_sample`` collect with the ``vec_id < k`` seed
+    band), so no Spark job runs per round — see ``_kmeans_local``.
+    ``init`` overrides the dense-id seeding rule (``vec_id < k``) for
+    corpora with hashed/sparse id spaces — the ANN store's
+    drift-triggered reindex passes order-based seeds."""
+    from sensapp_spark.pipeline.similarity import train_sample
+
+    if train is None:
+        train = train_sample(embeddings, seeds=k)
+    return _kmeans_local(train, k, rounds, dim, init=init)
 
 
 def kmeans_assign(
@@ -204,24 +162,13 @@ def kmeans_assign(
     train: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """Fit-and-assign: ``rounds`` assignment passes with a centroid
-    update between each. Returns (vec_id, cluster). ``train`` fits the
-    codebook driver-locally (``_kmeans_local``) — the final assignment
-    projection is identical because the trained centroids are."""
-    if train is not None:
-        cents = _kmeans_local(train, k, rounds, dim)
-        return embeddings.withColumn(
-            "cluster", assign_expr(F.col("embedding"), cents)
-        ).select("vec_id", "cluster")
-    cents = init_centroids(embeddings, k)
-    assigned = embeddings.withColumn(
+    update between each. Returns (vec_id, cluster): the codebook is fit
+    on the driver (:func:`kmeans_codebook`), the final assignment is
+    one shuffle-free projection over the whole corpus."""
+    cents = kmeans_codebook(embeddings, k, rounds, dim, train=train)
+    return embeddings.withColumn(
         "cluster", assign_expr(F.col("embedding"), cents)
-    )
-    for _ in range(rounds - 1):
-        cents = update_centroids(assigned, dim)
-        assigned = embeddings.withColumn(
-            "cluster", assign_expr(F.col("embedding"), cents)
-        )
-    return assigned.select("vec_id", "cluster")
+    ).select("vec_id", "cluster")
 
 
 DEFAULT_MAX_SEMDEDUP_CLUSTER = 2000

@@ -16,13 +16,10 @@ Spark shape:
   the IVF/spherical-kmeans codebooks (init = subvectors of the first
   ``ksub`` vectors by vec_id; L2 argmin assignment with distances
   rounded to 6 decimals, smallest-code tie-break; coordinate-mean
-  update rounded to 6; empty codes drop out). The one Lloyd update for
-  ALL subspaces is fused into a single job: explode (subspace, code,
-  subvector) structs, one groupBy — driver traffic is the
-  ``m × ksub × dsub`` codebook only. At corpus scale you train on a
-  deterministic sample (``vec_id % s == 0``-style) and encode the full
-  corpus; the fit here uses the whole frame because the test corpora
-  are codebook-sized.
+  update rounded to 6; empty codes drop out). The fit runs on the
+  driver over :func:`similarity.train_sample` — the whole corpus up to
+  ``ANN_DRIVER_TRAIN_ROWS``, a deterministic md5 sample above it — and
+  the full corpus is then encoded against the trained books.
 * ENCODE / SCORE (:func:`pq_topk`): assignment and ADC scoring are ONE
   whole-stage-codegen projection — the argmin structs carry the
   query-side lookup-table values (dot(q_m, c) and |c|²) as literal
@@ -46,65 +43,6 @@ from pyspark.sql import functions as F
 PQ_M = 8        # subspaces
 PQ_KSUB = 16    # codes per subspace
 PQ_ROUNDS = 2   # assignment rounds (one Lloyd update between)
-
-
-def _assign_struct(
-    emb, offset: int, cents: list[tuple[int, list[float]]],
-    query_sub: list[float] | None = None,
-) -> F.Column:
-    """Argmin-by-L2 over one subspace as ``array_min`` of (distance,
-    code[, dot(q_m,c), |c|²]) structs — deterministic smallest-code
-    tie-break via the struct ordering; the optional query-LUT fields
-    ride along so ADC scoring needs no lookup join.
-
-    The codebook enters the plan as ONE nested-array LITERAL walked by
-    higher-order functions, not as unrolled per-centroid expression
-    trees: the unrolled form (ksub structs × dsub-term distances ×
-    m subspaces) blows past Janino's 64 KiB method limit and drops the
-    whole projection out of codegen (measured: 25 s interpreted vs
-    ~1 s codegen at 2k vectors). Distances accumulate left-to-right
-    (fold from 0.0) so the oracle's textual expansion sums in the
-    identical IEEE order, and round to 6 decimals like every similarity
-    operator here."""
-    dsub = len(cents[0][1])
-    sub = F.slice(emb, offset + 1, dsub)
-    cvecs = F.lit([[float(x) for x in cv] for _, cv in cents])
-    codes = F.lit([int(j) for j, _ in cents])
-
-    def dist(c):
-        return F.round(
-            F.aggregate(
-                F.zip_with(sub, c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            ),
-            6,
-        )
-
-    if query_sub is None:
-        entries = F.transform(
-            cvecs,
-            lambda c, i: F.struct(
-                dist(c).alias("d"),
-                F.element_at(codes, i + 1).alias("j"),
-            ),
-        )
-    else:
-        dq = F.lit([
-            float(sum(q * x for q, x in zip(query_sub, cv)))
-            for _, cv in cents
-        ])
-        n2 = F.lit([float(sum(x * x for x in cv)) for _, cv in cents])
-        entries = F.transform(
-            cvecs,
-            lambda c, i: F.struct(
-                dist(c).alias("d"),
-                F.element_at(codes, i + 1).alias("j"),
-                F.element_at(dq, i + 1).alias("dq"),
-                F.element_at(n2, i + 1).alias("n2"),
-            ),
-        )
-    return F.array_min(entries)
 
 
 def _round6_py(x: float) -> float:
@@ -132,14 +70,15 @@ def _codebooks_local(
     rounds: int,
     dsub: int,
 ) -> list[list[tuple[int, list[float]]]]:
-    """Driver-local twin of the distributed codebook fit (round 14):
-    the identical init (subvectors of the first ``ksub`` vectors by
-    vec_id), the identical L2 argmin — distances accumulate
-    left-to-right from 0.0 exactly like the ``aggregate`` fold, round
-    to 6, smallest-code tie-break — and the coordinate-mean update
-    rounded to 6. Replaces one Spark job per Lloyd round (plus the
-    init collect) with in-process loops over the already-collected
-    corpus; the distributed path remains for corpora above the gate."""
+    """The codebook fit, on the driver over the training rows
+    (``similarity.train_sample``): init = subvectors of the first
+    ``ksub`` rows with ``vec_id < ksub``; L2 argmin with distances
+    accumulated left-to-right from 0.0 exactly like the encode
+    projection's ``aggregate`` fold, rounded to 6, smallest-code
+    tie-break; coordinate-mean update rounded to 6. The means sum in
+    vec_id order while the DuckDB oracle's ``avg`` sums in its own
+    order; round-6 absorbs the summation-order ULPs, and the oracle
+    gate pins it."""
     import numpy as np
 
     init = [vec for vid, vec in train if vid < ksub][:ksub]
@@ -210,64 +149,17 @@ def pq_codebooks(
     train: list[tuple[int, list[float]]] | None = None,
 ) -> list[list[tuple[int, list[float]]]]:
     """Per-subspace codebooks: ``books[mi]`` is [(code, centroid), …]
-    sorted by code, after ``rounds − 1`` fused Lloyd updates.
+    sorted by code, after ``rounds − 1`` Lloyd updates fit on the
+    driver (``_codebooks_local``) over ``train`` — by default one
+    ``similarity.train_sample`` collect with the ``vec_id < ksub``
+    seed band, so no Spark job runs per round."""
+    from sensapp_spark.pipeline.similarity import train_sample
 
-    ``train`` (from ``similarity.collect_train_vectors``) fits the
-    books driver-locally — the same init, argmin, and rounded mean
-    update without the per-round Spark jobs (the coordinate mean sums
-    in vec_id order instead of partition order; both land on the same
-    round-6 value, pinned by the oracle gate exactly like the
-    distributed path's own order vs DuckDB's)."""
     if dim % m:
         raise ValueError(f"dim {dim} is not divisible by m {m}")
-    dsub = dim // m
-    if train is not None:
-        return _codebooks_local(train, m, ksub, rounds, dsub)
-    emb = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    init = (
-        emb.filter(F.col("vec_id") < ksub).orderBy("vec_id").collect()
-    )
-    books = [
-        [
-            (j, [float(r.emb[mi * dsub + i]) for i in range(dsub)])
-            for j, r in enumerate(init)
-        ]
-        for mi in range(m)
-    ]
-    for _ in range(rounds - 1):
-        structs = [
-            F.struct(
-                F.lit(mi).alias("mi"),
-                _assign_struct(
-                    F.col("emb"), mi * dsub, books[mi]
-                )["j"].alias("code"),
-                *[
-                    F.col("emb")[mi * dsub + i].alias(f"x{i}")
-                    for i in range(dsub)
-                ],
-            )
-            for mi in range(m)
-        ]
-        rows = (
-            emb.select(F.explode(F.array(*structs)).alias("s"))
-            .select("s.*")
-            .groupBy("mi", "code")
-            .agg(*[
-                F.round(F.avg(f"x{i}"), 6).alias(f"c{i}")
-                for i in range(dsub)
-            ])
-            .collect()
-        )
-        books = [[] for _ in range(m)]
-        for r in rows:
-            books[int(r.mi)].append(
-                (int(r.code), [float(r[f"c{i}"]) for i in range(dsub)])
-            )
-        for b in books:
-            b.sort()
-    return books
+    if train is None:
+        train = train_sample(embeddings, seeds=ksub)
+    return _codebooks_local(train, m, ksub, rounds, dim // m)
 
 
 def _best_per_subspace(
@@ -280,7 +172,7 @@ def _best_per_subspace(
     (round 14; the round-13 ``_assign_best`` precedent applied to PQ):
     ``transform`` over the subspace index walks a single nested
     (m × ksub × dsub) codebook literal instead of ``m`` separately
-    analyzed ``_assign_struct`` trees — measured 2.9-3.9 s of
+    analyzed per-subspace argmin trees — measured 2.9-3.9 s of
     per-entry Catalyst analysis collapsing to one tree. Per-element
     semantics are IDENTICAL: the same left-to-right ``(x-y)²`` fold
     from 0.0, ``round(…, 6)``, and the (distance, code[, dq, n2])
@@ -384,7 +276,7 @@ def pq_topk(
     rows via a broadcast semi-join on vec_id.
 
     NOT the production entry point: this convenience form RE-TRAINS
-    both codebooks on every call (k-means over the corpus) so a replay
+    the codebooks on every call (k-means over ``train_sample``) so a replay
     — and the DuckDB oracle — sees deterministic books. Production
     trains once and persists: ``storage/ann.write_ivfpq`` stores codes
     + both codebooks in the versioned layout and ``ivfpq_topk`` probes

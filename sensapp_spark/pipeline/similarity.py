@@ -473,34 +473,61 @@ def _py_cos(a: list[float], b: list[float]) -> float:
     )
 
 
-# The ANN convenience *_topk paths re-train per call by design (a
-# replay — and the DuckDB oracle — must see deterministic artifacts
-# derived from the data alone). Below this corpus size the trainings
-# run DRIVER-LOCALLY from one bounded collect instead of one Spark job
-# per training collect (round 14, guide §1.2/§5 — the scheduler
-# round-trips were the cost, not the data; the BPE/union-find
-# driver-gate precedent). 200k × 64 doubles ≈ 100 MB driver memory.
+# Every ANN/clustering training (IVF centroids, PQ codebooks, SQ stats,
+# spherical k-means) fits DRIVER-LOCALLY on at most this many rows
+# (round 14, guide §1.2/§5 — the scheduler round-trips were the cost,
+# not the data; the BPE/union-find driver-gate precedent). 200k × 64
+# doubles ≈ 100 MB driver memory.
 ANN_DRIVER_TRAIN_ROWS = 200_000
 
 
-def collect_train_vectors(
-    embeddings: DataFrame, threshold: int = ANN_DRIVER_TRAIN_ROWS
-) -> list[tuple[int, list[float]]] | None:
-    """ONE bounded collect of (vec_id, embedding-as-doubles), sorted by
-    vec_id, shared by every training that needs corpus vectors (IVF
-    centroids, PQ codebooks, SQ stats). Returns None when the corpus
-    exceeds ``threshold`` — callers then keep their distributed
-    training paths (the probe costs one job either way; above the
-    gate it IS the first training collect's scan, not extra work)."""
-    rows = (
-        embeddings.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-        )
-        .limit(threshold + 1)
-        .collect()
+def train_sample(
+    embeddings: DataFrame,
+    cap: int = ANN_DRIVER_TRAIN_ROWS,
+    seeds: int = 0,
+) -> list[tuple[int, list[float]]]:
+    """The training rows every fit runs on: (vec_id, embedding as
+    doubles), sorted by vec_id, at most ``cap`` of them.
+
+    * At most ``cap`` rows: ONE bounded ``limit(cap + 1)`` collect
+      returns the whole corpus, so trainings (and the oracle rows that
+      replay them) see every vector.
+    * Above ``cap``: a ``count()``, then one collect of the rows whose
+      ``md5(CAST(vec_id AS STRING))`` 32-bit prefix falls in the lowest
+      (cap + 8·√cap)/n of the hash range, plus every row with
+      ``0 <= vec_id < seeds``; the driver keeps the first ``cap`` by
+      (seed band first, md5 prefix, vec_id). The eight-binomial-σ
+      widening makes the result exactly ``cap`` rows in practice, so
+      ``len(sample) < cap`` still means "whole corpus". The sample
+      depends on the ids alone — not on partitioning — so DuckDB or
+      hashlib replays it.
+
+    The seed band keeps the dense ``vec_id < k`` init rules (IVF
+    first-N, k-means and PQ seeds) seeing the same seeds at every
+    size. It is ``0 <=`` bounded because changes-feed ids are signed
+    xxhash64: a bare ``vec_id < seeds`` would pull about half of a
+    hashed corpus onto the driver."""
+    vecs = embeddings.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    if len(rows) > threshold:
-        return None
+    rows = vecs.limit(cap + 1).collect()
+    if len(rows) > cap:
+        del rows  # the probe rows are up to ~100 MB: drop them first
+        n = embeddings.count()
+        band = math.ceil((cap + 8 * math.isqrt(cap)) / n * (1 << 32))
+        h = F.conv(
+            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
+        ).cast("long")
+        seed = (F.col("vec_id") >= 0) & (F.col("vec_id") < seeds)
+        hit = vecs.filter((h < band) | seed).collect()
+        rows = sorted(
+            hit,
+            key=lambda r: (
+                not 0 <= r.vec_id < seeds,
+                int(hashlib.md5(str(r.vec_id).encode()).hexdigest()[:8], 16),
+                r.vec_id,
+            ),
+        )[:cap]
     return sorted(
         (int(r.vec_id), [float(x) for x in r.emb]) for r in rows
     )
@@ -518,9 +545,12 @@ def ivf_centroids(
     other part of the index is unchanged. Collecting them is a ~nlist·d
     float driver fetch: the codebook is a broadcast dimension by design.
 
-    ``train`` (from :func:`collect_train_vectors`) serves the same
-    rows without a Spark job — float64 widening of the stored vectors
-    is exact, so both routes yield bit-identical centroids."""
+    ``train`` (from :func:`train_sample`) serves the same rows without
+    a Spark job — exact at every size for non-negative ids because the
+    sample always holds the ``0 <= vec_id < seeds`` band (pass
+    ``seeds >= nlist``), and
+    float64 widening of the stored vectors is exact, so both routes
+    yield bit-identical centroids."""
     if train is not None:
         return [(vid, list(vec)) for vid, vec in train if vid < nlist]
     rows = (

@@ -73,11 +73,14 @@ def sq_stats(
     the didactic error here beats both wrong outcomes. (Binary
     quantization handles NaN fine — sign bits only.)
 
-    ``train`` (from ``similarity.collect_train_vectors``) computes the
-    same stats driver-locally without a Spark job — min/max are exact
-    and order-insensitive, with Spark's NaN-greatest ordering
-    replicated (a NaN component poisons max, never min), so the
-    finite check behaves identically."""
+    ``train`` computes the same stats driver-locally without a Spark
+    job. Pass it the WHOLE corpus only (``similarity.train_sample``
+    below its cap, i.e. ``len(train) < ANN_DRIVER_TRAIN_ROWS``): the
+    min/max of a sample is not the corpus min/max, and codes outside
+    it would clamp. Over the whole corpus min/max are exact and
+    order-insensitive, with Spark's NaN-greatest ordering replicated
+    (a NaN component poisons max, never min), so the finite check
+    behaves identically."""
     if train is not None:
         lo, hi = [], []
         for i in range(dim):

@@ -1444,11 +1444,13 @@ def ann_ivf_topk(spark, sf_dir):
       per vector (32×), integer-exact Hamming prefilter
       (bit_count(xor)), exact re-rank.
     """
-    from sensapp_spark.pipeline.pq import pq_topk
+    from sensapp_spark.pipeline.pq import PQ_KSUB, pq_topk
     from sensapp_spark.pipeline.similarity import (
-        collect_train_vectors,
+        ANN_DRIVER_TRAIN_ROWS,
+        IVF_NLIST,
         ivf_centroids,
         ivf_topk,
+        train_sample,
     )
     from sensapp_spark.pipeline.sq import (
         BQ_RERANK,
@@ -1458,24 +1460,13 @@ def ann_ivf_topk(spark, sf_dir):
     )
 
     emb = _emb(spark, sf_dir)
-    # Round 14 (guide §1.2/§5): ONE bounded collect feeds every
-    # training (IVF centroids, PQ codebooks, SQ stats) driver-locally
-    # below the size gate — previously ivf/pq/sq each ran their own
-    # 1-2 training collect jobs over the same corpus. None above the
-    # gate (or with SENSAPP_ANN_DRIVER_TRAIN=0, the A/B lever) keeps
-    # the distributed trainings unchanged.
-    import os as _os
-
-    train = (
-        collect_train_vectors(emb)
-        if _os.environ.get("SENSAPP_ANN_DRIVER_TRAIN", "1") != "0"
-        else None
-    )
+    # ONE bounded sample collect feeds every training (IVF centroids,
+    # PQ codebooks, SQ stats) on the driver. SQ stats are an exact
+    # corpus min/max, so they use the rows only while the sample IS
+    # the corpus; above the cap sq_stats runs its one aggregate.
+    train = train_sample(emb, seeds=max(IVF_NLIST, PQ_KSUB))
     ivf = ivf_topk(
-        emb, QUERY_VEC, ANN_K,
-        codebook=(
-            ivf_centroids(emb, train=train) if train is not None else None
-        ),
+        emb, QUERY_VEC, ANN_K, codebook=ivf_centroids(emb, train=train)
     ).select(
         F.lit("ivf").alias("scope"),
         "vec_id",
@@ -1499,7 +1490,10 @@ def ann_ivf_topk(spark, sf_dir):
             F.col("score").alias("cosine"),
         )
 
-    sq = _qarm("sq8", sq_topk, SQ_RERANK, train=train)
+    sq = _qarm(
+        "sq8", sq_topk, SQ_RERANK,
+        train=train if len(train) < ANN_DRIVER_TRAIN_ROWS else None,
+    )
     bq = _qarm("bq", bq_topk, BQ_RERANK)
     return ivf.unionByName(pq).unionByName(sq).unionByName(bq)
 
@@ -1631,24 +1625,13 @@ def dedup_embedding_pairs(spark, sf_dir):
       pairwise cosine, one min-id keeper per dropped vector. The
       cluster id bounds the quadratic step; ``k`` is the 100 TB lever.
     """
-    import os as _os
-
     from sensapp_spark.pipeline.clustering import semdedup_pairs
-    from sensapp_spark.pipeline.similarity import collect_train_vectors
 
     emb = _emb(spark, sf_dir)
-    # Driver-local k-means fit below the size gate (round 14 — the
-    # ann_ivf_topk pattern extended to the semdedup codebook; bit-
-    # parity pinned by tests/test_clustering_text.py).
-    train = (
-        collect_train_vectors(emb)
-        if _os.environ.get("SENSAPP_ANN_DRIVER_TRAIN", "1") != "0"
-        else None
-    )
     lsh = embedding_neardup_pairs(emb, threshold=0.3).select(
         F.lit("lsh").alias("scope"), "vec_a", "vec_b", "cosine"
     )
-    sem = semdedup_pairs(emb, threshold=0.35, train=train).select(
+    sem = semdedup_pairs(emb, threshold=0.35).select(
         F.lit("semdedup").alias("scope"), "vec_a", "vec_b", "cosine"
     )
     return lsh.unionByName(sem)
@@ -1668,21 +1651,13 @@ def _kmeans_oracle() -> str:
 @register("embedding_kmeans", _kmeans_oracle())
 def embedding_kmeans(spark, sf_dir):
     """Spherical k-means (2 Lloyd rounds, deterministic init): cluster
-    assignment over the embedding corpus. Assignment is a shuffle-free
-    codegen projection; only the k×dim codebook ever reaches the
-    driver. The oracle replays both rounds with windowed argmax CTEs."""
-    import os as _os
-
+    assignment over the embedding corpus. The codebook is fit on the
+    driver over one bounded training collect; the assignment is a
+    shuffle-free codegen projection. The oracle replays both rounds
+    with windowed argmax CTEs."""
     from sensapp_spark.pipeline.clustering import kmeans_assign
-    from sensapp_spark.pipeline.similarity import collect_train_vectors
 
-    emb = _emb(spark, sf_dir)
-    train = (
-        collect_train_vectors(emb)
-        if _os.environ.get("SENSAPP_ANN_DRIVER_TRAIN", "1") != "0"
-        else None
-    )
-    return kmeans_assign(emb, train=train)
+    return kmeans_assign(_emb(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

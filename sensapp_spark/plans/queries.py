@@ -137,7 +137,7 @@ def _await_all(futures) -> None:
         raise primary
 
 
-def _operand_cache() -> dict | None:
+def _operand_cache() -> dict:
     """One PromQL operand memo per ENTRY CONSTRUCTION (round 14, guide
     §2.4/§3.3): the tagged-union entries evaluate several expressions
     whose operands repeat (rate(click[31d]) appears in all 7
@@ -146,12 +146,8 @@ def _operand_cache() -> dict | None:
     union branches stop re-executing the sample scan + reduction (AQE's
     stage cache does not reuse canonically-equal exchanges across union
     branches — measured round 13). The dict never outlives one entry
-    call, so every bench/oracle invocation still computes from parquet.
-    SENSAPP_PROMQL_SHARE=0 disables sharing (same-session A/B lever;
-    results are identical either way)."""
-    return (
-        {} if os.environ.get("SENSAPP_PROMQL_SHARE", "1") != "0" else None
-    )
+    call, so every bench/oracle invocation still computes from parquet."""
+    return {}
 
 
 @register(
@@ -1708,12 +1704,11 @@ def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n")
     )
     cache = _operand_cache()
-    if cache is not None:
-        # The hist and quantile arms both consume this metrics×buckets
-        # frame; a lazy localCheckpoint makes the sample scan + groupBy
-        # run once instead of once per union branch (guide §2.4 — AQE
-        # does not reuse canonically-equal exchanges across branches).
-        hist = hist.localCheckpoint(eager=False)
+    # The hist and quantile arms both consume this metrics×buckets
+    # frame; a lazy localCheckpoint makes the sample scan + groupBy
+    # run once instead of once per union branch (guide §2.4 — AQE
+    # does not reuse canonically-equal exchanges across branches).
+    hist = hist.localCheckpoint(eager=False)
     wcum = Window.partitionBy("name").orderBy("bucket")
     cum = hist.withColumn("c", F.sum("n").over(wcum)).withColumn(
         "total", F.sum("n").over(Window.partitionBy("name"))

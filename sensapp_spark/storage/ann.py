@@ -62,6 +62,7 @@ from sensapp_spark.pipeline.similarity import (
     ivf_probes,
     ivf_topk,
     query_bucket,
+    train_sample,
 )
 from sensapp_spark.storage.lake import (
     CommitConflict,
@@ -180,27 +181,23 @@ def _retrain_codebook(
 ) -> list[tuple[int, list[float]]]:
     """A freshly TRAINED coarse codebook for :meth:`AnnIndexStore.
     reindex` — the whole point of a drift-triggered rebuild is that the
-    new quantizer fits the data the frozen one drifted away from. Seeds
-    with the first ``nlist`` vectors BY ORDER (TakeOrderedAndProject —
-    id-space-independent, unlike ``ivf_centroids``' ``vec_id < nlist``
-    rule, which returns nothing for hashed/sparse id spaces like a
-    changes-feed's xxhash ids), then delegates the Lloyd rounds to
-    ``clustering.kmeans_codebook`` (ONE training loop in the repo —
-    round-10 review, finding 5)."""
+    new quantizer fits the data the frozen one drifted away from. ONE
+    ``similarity.train_sample`` collect feeds the whole fit: seeds are
+    the first ``nlist`` training rows BY ORDER (id-space-independent,
+    unlike ``ivf_centroids``' ``vec_id < nlist`` rule, which returns
+    nothing for hashed/sparse id spaces like a changes-feed's xxhash
+    ids), then ``clustering.kmeans_codebook`` runs the Lloyd rounds on
+    the same rows (ONE training loop in the repo — round-10 review,
+    finding 5)."""
     from sensapp_spark.pipeline.clustering import kmeans_codebook
 
-    rows = (
-        vectors.select("vec_id", "embedding")
-        .orderBy("vec_id").limit(nlist).collect()
-    )
-    if not rows:
+    train = train_sample(vectors, seeds=nlist)
+    if not train:
         raise ValueError("cannot retrain a codebook from an empty corpus")
-    seeds = [
-        (i, [float(x) for x in r.embedding]) for i, r in enumerate(rows)
-    ]
+    seeds = [(i, vec) for i, (_, vec) in enumerate(train[:nlist])]
     return kmeans_codebook(
         vectors, k=nlist, rounds=rounds,
-        dim=len(rows[0].embedding), init=seeds,
+        dim=len(train[0][1]), init=seeds, train=train,
     )
 
 
@@ -426,12 +423,16 @@ class AnnIndexStore:
 
         m = PQ_M if m is None else m
         ksub = PQ_KSUB if ksub is None else ksub
+        # ONE training collect feeds both codebooks.
+        train = train_sample(embeddings, seeds=max(nlist, ksub))
         cents = (
             codebook
             if codebook is not None
-            else ivf_centroids(embeddings, nlist)
+            else ivf_centroids(embeddings, nlist, train=train)
         )
-        books = pq_codebooks(embeddings, m=m, ksub=ksub, dim=dim)
+        books = pq_codebooks(
+            embeddings, m=m, ksub=ksub, dim=dim, train=train
+        )
         # Persisted: the fit aggregate and the coded join both consume
         # the corpus-sized assignment.
         assigned = ivf_assign(embeddings, cents, keep_score=True).persist()

@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 
 from sensapp_spark.pipeline.clustering import (
     KMEANS_K,
-    init_centroids,
     kmeans_assign,
+    kmeans_codebook,
 )
 from sensapp_spark.pipeline.dedup import benchmark_collisions
 from sensapp_spark.pipeline.text import (
@@ -36,8 +36,15 @@ def _cos(a, b):
 
 
 def test_init_centroids_are_first_k(emb):
-    cents = init_centroids(emb, 4)
+    """With no Lloyd update (``rounds=1``) the codebook is the init:
+    the first ``k`` stored vectors by vec_id."""
+    cents = kmeans_codebook(emb, k=4, rounds=1)
     assert [c[0] for c in cents] == [0, 1, 2, 3]
+    stored = {
+        r.vec_id: [float(x) for x in r.embedding]
+        for r in emb.filter(F.col("vec_id") < 4).collect()
+    }
+    assert {cid: vec for cid, vec in cents} == stored
 
 
 def test_kmeans_assign_deterministic(emb):
@@ -50,9 +57,15 @@ def test_kmeans_assign_deterministic(emb):
 
 def test_kmeans_first_round_matches_naive(emb):
     """Round-1 assignment (against the init codebook) replayed in plain
-    Python must agree with the Spark expression."""
-    cents = init_centroids(emb, KMEANS_K)
+    Python must agree with the Spark expression. The init codebook is
+    the first ``KMEANS_K`` vectors by vec_id."""
     rows = emb.select("vec_id", "embedding").collect()
+    cents = sorted(
+        (r.vec_id, [float(x) for x in r.embedding])
+        for r in rows
+        if r.vec_id < KMEANS_K
+    )
+    assert [cid for cid, _ in cents] == list(range(KMEANS_K))
     naive = {}
     for r in rows:
         v = [float(x) for x in r.embedding]
@@ -472,29 +485,13 @@ def test_semdedup_oversized_cluster_degrades_to_hub(spark):
     ]
 
 
-def test_driver_local_kmeans_matches_distributed(spark):
-    """Round 14: kmeans_codebook(train=...) must be BIT-IDENTICAL to
-    the distributed fit — the same init, round-6 cosine argmax with
-    smallest-cid ties, and rounded coordinate-mean update — on both
-    the real corpus and a tie-heavy synthetic one (duplicated vectors
-    force rounded-cosine ties, the case the tie-window must get
-    right)."""
-    from sensapp_spark.pipeline.clustering import (
-        kmeans_assign,
-        kmeans_codebook,
-    )
-    from sensapp_spark.pipeline.similarity import collect_train_vectors
+def test_kmeans_tie_heavy_matches_oracle(spark):
+    """The driver fit's round-6 tie window against the DuckDB replay
+    the oracle gate uses: duplicated vectors force rounded-cosine ties
+    (smallest cid must win) on a synthetic corpus."""
+    import duckdb
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    train = collect_train_vectors(emb)
-    assert train is not None
-    assert kmeans_codebook(emb, train=train) == kmeans_codebook(emb)
-    got = {
-        (r.vec_id, r.cluster)
-        for r in kmeans_assign(emb, train=train).collect()
-    }
-    want = {(r.vec_id, r.cluster) for r in kmeans_assign(emb).collect()}
-    assert got == want
+    from sensapp_spark.plans.pipeline_queries import _kmeans_ctes
 
     rows = []
     for vid in range(120):
@@ -504,8 +501,13 @@ def test_driver_local_kmeans_matches_distributed(spark):
         rows.append((vid, [float(x) for x in base]))
     # exact duplicates across ids → guaranteed cosine ties
     rows += [(200 + i, rows[i][1]) for i in range(10)]
-    emb2 = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>"
-    )
-    train2 = collect_train_vectors(emb2)
-    assert kmeans_codebook(emb2, train=train2) == kmeans_codebook(emb2)
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = sorted(tuple(r) for r in kmeans_assign(emb).collect())
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
+    want = con.execute(
+        f"WITH {_kmeans_ctes()} SELECT vec_id, cluster FROM a2 ORDER BY 1"
+    ).fetchall()
+    assert got == want

@@ -85,32 +85,100 @@ def test_pq_plan_stays_jvm_side(emb):
     assert "TakeOrderedAndProject" in plan
 
 
-# -- driver-local training gate (round 14) ------------------------------------
+# -- driver-local training on one bounded sample -----------------------------
 
 def test_driver_local_training_matches_distributed(emb):
-    """collect_train_vectors feeds every training driver-locally below
-    the size gate; artifacts must be BIT-IDENTICAL to the distributed
-    collects (IVF centroids / SQ stats are exact min-max/first-N; the
-    PQ Lloyd mean re-runs the identical fold + HALF_UP round-6)."""
-    from sensapp_spark.pipeline.similarity import (
-        collect_train_vectors,
-        ivf_centroids,
-    )
+    """train_sample feeds the trainings that keep a Spark path;
+    their artifacts must be BIT-IDENTICAL to it (IVF centroids are an
+    exact first-N selection, SQ stats an exact whole-corpus min/max)."""
+    from sensapp_spark.pipeline.similarity import ivf_centroids, train_sample
     from sensapp_spark.pipeline.sq import sq_stats
 
-    train = collect_train_vectors(emb)
-    assert train is not None and train == sorted(train)
+    train = train_sample(emb)
     assert ivf_centroids(emb, train=train) == ivf_centroids(emb)
-    assert pq_codebooks(emb, train=train) == pq_codebooks(emb)
     assert sq_stats(emb, train=train) == sq_stats(emb)
 
 
-def test_collect_train_vectors_gate(emb):
-    """Above the threshold the collect returns None — callers keep the
-    distributed training path (corpus never lands on the driver)."""
-    from sensapp_spark.pipeline.similarity import collect_train_vectors
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
 
-    assert collect_train_vectors(emb, threshold=3) is None
+
+def _replay(rows, cap, seeds):
+    """hashlib replay of train_sample's above-cap rule over (vec_id,
+    vector) rows: md5 band plus the 0 <= vec_id < seeds band,
+    truncated to cap by (seed band first, md5 prefix, vec_id)."""
+    import hashlib
+    import math
+
+    def md5(vid):
+        return int(hashlib.md5(str(vid).encode()).hexdigest()[:8], 16)
+
+    band = math.ceil((cap + 8 * math.isqrt(cap)) / len(rows) * (1 << 32))
+    hit = [r for r in rows if md5(r[0]) < band or 0 <= r[0] < seeds]
+    hit.sort(key=lambda r: (not 0 <= r[0] < seeds, md5(r[0]), r[0]))
+    return sorted(hit[:cap])
+
+
+def test_train_sample_under_cap_is_sorted_corpus(emb):
+    """At or under the cap the sample is the whole corpus, sorted by
+    vec_id — the trainings (and the oracle replaying them) see every
+    vector."""
+    from sensapp_spark.pipeline.similarity import train_sample
+
+    want = sorted(
+        (r.vec_id, [float(x) for x in r.embedding]) for r in emb.collect()
+    )
+    assert train_sample(emb) == want
+    assert train_sample(emb, cap=len(want)) == want
+
+
+def test_train_sample_above_cap_is_id_deterministic(emb):
+    """Above the cap the sample depends on the ids alone: the same
+    rows after a repartition, equal to a hashlib replay, the seed
+    band always present, so the first-N IVF codebook stays exact."""
+    from sensapp_spark.pipeline.similarity import ivf_centroids, train_sample
+
+    sample = train_sample(emb, cap=120, seeds=16)
+    assert len(sample) == 120
+    assert train_sample(emb.repartition(7), cap=120, seeds=16) == sample
+    rows = [
+        (r.vec_id, [float(x) for x in r.embedding]) for r in emb.collect()
+    ]
+    assert sample == _replay(rows, 120, 16)
+    assert set(range(16)) <= {vid for vid, _ in sample}
+    assert ivf_centroids(emb, train=sample) == ivf_centroids(emb)
+
+
+def test_train_sample_seed_band_ignores_negative_ids(spark):
+    """Changes-feed ids are signed hashes: the seed band is 0 <= id <
+    seeds, so negative ids compete on md5 like every other id and the
+    sample stays within the cap."""
+    from sensapp_spark.pipeline.similarity import train_sample
+
+    rows = [
+        (vid, [float(vid % 7), 1.0]) for vid in range(-399, 201, 3)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    sample = train_sample(df, cap=50, seeds=8)
+    assert len(sample) <= 50
+    assert sample == _replay(rows, 50, 8)
+    assert {0, 3, 6} <= {vid for vid, _ in sample}
+
+
+def test_training_jobs_are_bounded(spark, emb):
+    """Fitting on a sample runs no Spark job at all, and the sample
+    itself costs at most 4 jobs above the cap (probe, count, collect)
+    whatever the number of Lloyd rounds."""
+    from sensapp_spark.pipeline.clustering import kmeans_codebook
+    from sensapp_spark.pipeline.similarity import train_sample
+
+    j0 = _jobs(spark)
+    sample = train_sample(emb, cap=120, seeds=16)
+    assert _jobs(spark) - j0 <= 4
+    j1 = _jobs(spark)
+    kmeans_codebook(emb, rounds=5, train=sample)
+    pq_codebooks(emb, rounds=5, train=sample)
+    assert _jobs(spark) == j1
 
 
 def test_round6_py_matches_spark(spark):
