@@ -10,22 +10,24 @@ Semantics follow reference src/importers/arrow.rs:26-296:
   Struct{latitude,longitude}→Location, Binary→Blob (arrow.rs:143-296).
 
 Arrow is Spark's native interchange format: the table converts to a
-DataFrame without row-wise marshalling.
+DataFrame without row-wise marshalling. Sensor names and per-row ids
+are derived with ``pyarrow.compute`` on the driver, so building the
+batch runs no Spark job; the value frame is cast to the lake's
+``value_schema`` (µs UTC timestamps, the table's value type).
 """
 
 from __future__ import annotations
 
-import io
-
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.ipc as ipc
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from sensapp_spark.datamodel.sensor import sensor_uuid
-from sensapp_spark.datamodel.types import SENSOR_SCHEMA, SensorType
+from sensapp_spark.datamodel.types import SENSOR_SCHEMA, SensorType, value_schema
 from sensapp_spark.ingest.csv_importer import IngestBatch
+from sensapp_spark.ingest.frames import arrow_frame
 
 DEFAULT_SENSOR_NAME = "arrow_sensor"
 
@@ -81,37 +83,38 @@ def ingest_arrow_table(spark: SparkSession, table: pa.Table) -> IngestBatch:
         )
     stype = _sensor_type_of(table.schema.field("value"))
 
-    has_name = "sensor_name" in names
-    has_id = "sensor_id" in names
-    df = spark.createDataFrame(table)
-
-    if has_name:
-        name_col = F.col("sensor_name")
+    if "sensor_name" in names:
+        name_col = pc.cast(table.column("sensor_name"), pa.string())
+        if name_col.null_count:
+            raise ArrowFormatError("'sensor_name' has null entries")
+        distinct = pc.unique(name_col)
     else:
-        name_col = F.lit(DEFAULT_SENSOR_NAME)
+        name_col = None
+        distinct = pa.array([DEFAULT_SENSOR_NAME])
     # Distinct sensor names (small dim) → deterministic UUIDs on driver.
-    dims = df.select(name_col.alias("s_name")).distinct().collect()
-    rows = [
-        (sensor_uuid(r.s_name, stype, None, {}), r.s_name, stype.label, None,
-         None, {})
-        for r in dims
-    ]
-    sensors = spark.createDataFrame(rows, SENSOR_SCHEMA)
+    dim_names = distinct.to_pylist()
+    uuids = [sensor_uuid(name, stype, None, {}) for name in dim_names]
+    sensors = arrow_frame(
+        spark,
+        [(uid, name, stype.label, None, None, {})
+         for uid, name in zip(uuids, dim_names)],
+        SENSOR_SCHEMA,
+    )
 
-    if has_id:
+    if "sensor_id" in names:
         # Respect provided series ids (reference keeps them, arrow.rs:75-141)
-        vals = df.select(
-            F.col("sensor_id").cast("string").alias("sensor_id"),
-            F.col("timestamp").alias("time"),
-            "value",
-        )
+        ids = pc.cast(table.column("sensor_id"), pa.string())
+    elif name_col is None:
+        ids = pa.repeat(uuids[0], table.num_rows)
     else:
-        ids = F.broadcast(
-            sensors.select(F.col("name").alias("s_name"), "sensor_id")
+        ids = pa.array(uuids, pa.string()).take(
+            pc.index_in(name_col, value_set=distinct)
         )
-        vals = (
-            df.withColumn("s_name", name_col)
-            .join(ids, "s_name")
-            .select("sensor_id", F.col("timestamp").alias("time"), "value")
-        )
-    return IngestBatch(sensors=sensors, values={stype: vals})
+    vals = pa.table(
+        [ids, table.column("timestamp"), table.column("value")],
+        names=["sensor_id", "time", "value"],
+    )
+    return IngestBatch(
+        sensors=sensors,
+        values={stype: spark.createDataFrame(vals, value_schema(stype))},
+    )

@@ -42,6 +42,7 @@ from pyspark.sql import types as T
 from sensapp_spark.config import CONFIG
 from sensapp_spark.datamodel.sensor import sensor_uuid
 from sensapp_spark.datamodel.types import SENSOR_SCHEMA, SensorType
+from sensapp_spark.ingest.frames import arrow_frame
 from sensapp_spark.ingest.inference import (
     InferredType,
     infer_column,
@@ -294,7 +295,7 @@ def _sensor_rows(spark: SparkSession, entries: list[tuple]) -> DataFrame:
          labels)
         for name, stype, unit, labels in entries
     ]
-    return spark.createDataFrame(rows, SENSOR_SCHEMA)
+    return arrow_frame(spark, rows, SENSOR_SCHEMA)
 
 
 def _ingest_long(spark: SparkSession, timed: DataFrame, plan: CsvPlan) -> IngestBatch:

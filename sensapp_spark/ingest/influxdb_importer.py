@@ -14,10 +14,10 @@ Semantics follow reference src/ingestors/http/influxdb.rs:
 * precision ∈ {ns, us, ms, s}, default ns (influxdb.rs:129-152).
 
 The parser is pure Python (the wire format is escape-heavy and
-request-scoped); ``ingest_lines`` builds distributed frames from parsed
-points. For file-scale replays, ``parse_line`` can run inside
-``mapInPandas`` over a ``spark.read.text`` scan — the parser has no
-driver state.
+request-scoped); ``ingest_lines`` builds Arrow-built local frames from
+parsed points (``ingest/frames.py``). For file-scale replays,
+``parse_line`` can run inside ``mapInPandas`` over a ``spark.read.text``
+scan — the parser has no driver state.
 """
 
 from __future__ import annotations
@@ -32,6 +32,7 @@ from pyspark.sql import SparkSession
 from sensapp_spark.datamodel.sensor import sensor_uuid
 from sensapp_spark.datamodel.types import SENSOR_SCHEMA, SensorType, value_schema
 from sensapp_spark.ingest.csv_importer import IngestBatch
+from sensapp_spark.ingest.frames import arrow_frame
 
 I64_MAX = 2**63 - 1
 
@@ -212,9 +213,9 @@ def ingest_lines(
                 )
             values.setdefault(stype, []).append((uid, ts, value))
 
-    sensors_df = spark.createDataFrame(list(sensors.values()), SENSOR_SCHEMA)
+    sensors_df = arrow_frame(spark, list(sensors.values()), SENSOR_SCHEMA)
     frames = {
-        stype: spark.createDataFrame(rows, value_schema(stype))
+        stype: arrow_frame(spark, rows, value_schema(stype))
         for stype, rows in values.items()
     }
     return IngestBatch(sensors=sensors_df, values=frames)

@@ -9,8 +9,9 @@ Reference src/ingestors/http/prometheus_write.rs:21-180:
   follow last-wins.
 
 Decoding happens driver-side (bodies are request-scoped); the resulting
-frames are distributed. Both codecs are in-repo pure Python
-(wire/protowire.py, wire/snappy_codec.py) — no external deps.
+frames are Arrow-built local relations (``ingest/frames.py``). Both
+codecs are in-repo pure Python (wire/protowire.py,
+wire/snappy_codec.py) — no external deps.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from pyspark.sql import SparkSession
 from sensapp_spark.datamodel.sensor import sensor_uuid
 from sensapp_spark.datamodel.types import SENSOR_SCHEMA, SensorType, value_schema
 from sensapp_spark.ingest.csv_importer import IngestBatch
+from sensapp_spark.ingest.frames import arrow_frame
 from sensapp_spark.wire import snappy_codec
 from sensapp_spark.wire.prompb import decode_write_request
 
@@ -55,6 +57,6 @@ def ingest_remote_write(
                 + dt.timedelta(milliseconds=ts_ms)
             rows.append((uid, t, value))
 
-    sensors_df = spark.createDataFrame(list(sensors.values()), SENSOR_SCHEMA)
-    values = spark.createDataFrame(rows, value_schema(SensorType.FLOAT))
+    sensors_df = arrow_frame(spark, list(sensors.values()), SENSOR_SCHEMA)
+    values = arrow_frame(spark, rows, value_schema(SensorType.FLOAT))
     return IngestBatch(sensors=sensors_df, values={SensorType.FLOAT: values})

@@ -18,7 +18,8 @@ hash everywhere, so re-ingesting the same stream upserts instead of
 duplicating.
 
 SenML payloads are HTTP-request-scoped (≤ body limit), so parsing is
-driver-side like the reference; the resulting frames are distributed.
+driver-side like the reference; the resulting frames are Arrow-built
+local relations (``ingest/frames.py``).
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ from pyspark.sql import SparkSession
 from sensapp_spark.datamodel.sensor import sensor_uuid
 from sensapp_spark.datamodel.types import SENSOR_SCHEMA, SensorType, value_schema
 from sensapp_spark.ingest.csv_importer import IngestBatch
+from sensapp_spark.ingest.frames import arrow_frame
 
 RELATIVE_TIME_CUTOFF = 2**28  # RFC 8428 §4.5.3
 
@@ -119,16 +121,15 @@ def ingest_senml(
         uid = sensor_uuid(name, stype, unit, {})
         sensor_rows.append((uid, name, stype.label, unit, None, {}))
         for rec in recs:
-            # tz-aware UTC: a naive datetime would be reinterpreted in
-            # the driver process timezone by createDataFrame.
+            # tz-aware UTC: arrow_frame refuses a naive datetime.
             ts = dt.datetime.fromtimestamp(rec["time"], dt.timezone.utc)
             values.setdefault(stype, []).append(
                 (uid, ts, _convert(rec["value"], stype))
             )
 
-    sensors = spark.createDataFrame(sensor_rows, SENSOR_SCHEMA)
+    sensors = arrow_frame(spark, sensor_rows, SENSOR_SCHEMA)
     frames = {
-        stype: spark.createDataFrame(rows, value_schema(stype))
+        stype: arrow_frame(spark, rows, value_schema(stype))
         for stype, rows in values.items()
     }
     return IngestBatch(sensors=sensors, values=frames)

@@ -6,7 +6,8 @@ Layout mirrors the reference's proven ClickHouse shape
 
 * ``sensors/`` — small dimension table (the upsert target; the
   reference's dimension get-or-create caches, sqlite_utilities.rs:9-270,
-  become one MERGE-style rewrite of a tiny table);
+  become a probe of the in-memory pinned dimension and, only when a
+  sensor is new, one MERGE-style rewrite of a tiny table);
 * ``<type>_values/`` — 8 narrow tall fact tables ``(sensor_id, time,
   value)`` **partitioned by month(time)** — the analogue of ClickHouse
   ``PARTITION BY toYYYYMM(timestamp_us)``; time-range queries prune
@@ -41,6 +42,7 @@ from sensapp_spark.datamodel.types import (
     value_table_name,
 )
 from sensapp_spark.ingest.csv_importer import IngestBatch
+from sensapp_spark.ingest.frames import arrow_frame
 from sensapp_spark.storage import zonemap as zm
 from sensapp_spark.storage.logstore import get_store
 
@@ -204,9 +206,21 @@ class SensorLake:
         max_retries: int = 8,
         _pause_before_commit=None,
     ) -> None:
-        """MERGE-by-rewrite: the dimension is small (≤ millions), so a
-        dedup-union rewrite is cheap; the deterministic UUID is the merge
-        key — re-publishing a sensor is a no-op (Delta: MERGE INTO).
+        """Insert the batch's sensors that the dimension does not hold
+        yet (Delta: ``MERGE INTO … WHEN NOT MATCHED THEN INSERT``). The
+        deterministic UUID is the merge key, and a committed row always
+        wins: re-publishing a sensor never replaces it, even when the
+        new row differs in ``unit_description`` (the one column outside
+        the UUID hash).
+
+        Each attempt first probes the committed version for the batch's
+        ids (``sensor_id IN (…)``). While the dimension is pinned in
+        memory (:meth:`sensors`) the probe runs no Spark job, so a
+        publish that adds no sensor costs no job and no commit — the
+        reference's cached get-or-create (``#[cached(size=1024)]``,
+        sqlite_utilities.rs:9-15). Only when some id is missing does it
+        rewrite: the committed rows plus the missing ones, one write
+        job. Within one batch the first row of a repeated id wins.
 
         Concurrency contract (cross-HOST safe since round 7): the
         read-merge-write runs as an optimistic CAS transaction. The
@@ -215,10 +229,10 @@ class SensorLake:
         (``atomic_overwrite(expected_seq=…)``), and a lost race —
         detected by the filesystem-atomic ``link(2)`` claim, which
         works across kernels where ``flock`` does not — re-reads the
-        WINNER's table and re-merges, so no writer's sensors are ever
-        lost. This replaces the round-6 flock guard, whose per-kernel
-        scope was the one gap between "single-host engine" and
-        "deployable lake" (VERDICT r6 §missing #1); the reference
+        WINNER's table, re-probes and re-merges, so no writer's sensors
+        are ever lost. This replaces the round-6 flock guard, whose
+        per-kernel scope was the one gap between "single-host engine"
+        and "deployable lake" (VERDICT r6 §missing #1); the reference
         delegates the same job to its DB transaction
         (src/storage/sqlite/storage.rs:69-77), a Delta deployment to
         ``MERGE INTO``'s log commit.
@@ -228,13 +242,26 @@ class SensorLake:
         two-writer test force the exact interleaving that loses an
         update under a non-CAS protocol."""
         path = self._sensors_path()
+        # Every importer builds the batch on the driver as a local
+        # relation, so collecting it runs no job.
+        batch: dict[str, tuple] = {}
+        for row in sensors.select(*SENSOR_SCHEMA.fieldNames()).collect():
+            batch.setdefault(row.sensor_id, tuple(row))
+        ids = sorted(batch)
         for _ in range(max_retries):
             seq, data = read_committed(path)
-            if data is None:
-                base = self.spark.createDataFrame([], SENSOR_SCHEMA)
-            else:
-                base = self.spark.read.schema(SENSOR_SCHEMA).parquet(data)
-            merged = base.unionByName(sensors).dropDuplicates(["sensor_id"])
+            base = self._committed_sensors(seq, data)
+            present = {
+                r.sensor_id
+                for r in base.filter(F.col("sensor_id").isin(ids))
+                .select("sensor_id").collect()
+            }
+            missing = [batch[i] for i in ids if i not in present]
+            if not missing:
+                return
+            merged = base.unionByName(
+                arrow_frame(self.spark, missing, SENSOR_SCHEMA)
+            )
             if _pause_before_commit is not None:
                 _pause_before_commit()
             try:
@@ -244,11 +271,12 @@ class SensorLake:
             except CommitConflict:
                 continue
             except Exception as e:  # noqa: BLE001 — filtered below
-                # The pinned merge base can lose its one-generation
-                # grace to TWO interleaved commits while the merge plan
+                # An unpinned merge base (a parquet scan, see
+                # _committed_sensors) can lose its one-generation grace
+                # to TWO interleaved commits while the merge plan
                 # executes — the scan then fails with a vanished-file
-                # error, which is staleness, not corruption: re-read
-                # the (newer) committed base and retry. Anything else
+                # error, which is staleness, not corruption: re-read the
+                # (newer) committed base and retry. Anything else
                 # propagates.
                 if _is_stale_scan_error(e):
                     continue
@@ -405,14 +433,21 @@ class SensorLake:
         path is no version key) and ``at_seq`` reads get the plain
         parquet scan."""
         path = self._sensors_path()
-        if at_seq is not None:
-            data, pin = resolve_at(path, at_seq), False
-        else:
-            seq, data = read_committed(path)
-            pin = seq > 0
+        if at_seq is None:
+            return self._committed_sensors(*read_committed(path))
+        data = resolve_at(path, at_seq)
         if data is None:
             return self.spark.createDataFrame([], SENSOR_SCHEMA)
-        if not pin:
+        return self._sensor_scan(data)
+
+    def _committed_sensors(self, seq: int, data: str | None) -> DataFrame:
+        """The rows of what :func:`read_committed` returned: the pinned
+        in-memory copy of version dir ``data`` while it is under the
+        pinning threshold, else a parquet scan (always one for a legacy
+        seq-0 layout)."""
+        if data is None:
+            return self.spark.createDataFrame([], SENSOR_SCHEMA)
+        if seq == 0:
             return self._sensor_scan(data)
         pinned = self._pinned_sensors
         if pinned is None or pinned[0] != data:

@@ -56,3 +56,14 @@ def spark():
                       shuffle_partitions=4)
     yield spark
     spark.stop()
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """Zero-argument callable: how many Spark jobs the session has run.
+
+    It reads the DAG scheduler's job-id counter, which also counts jobs
+    launched on the scheduler's behalf (broadcasts, AQE query stages),
+    so an unchanged count means no Spark job ran at all."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    return scheduler.numTotalJobs

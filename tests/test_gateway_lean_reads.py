@@ -2,9 +2,8 @@
 one-action export peek, remote read over committed tables only, and
 rollup cursors carried across a maintenance tick's compaction.
 
-Job counts come from the DAG scheduler's job-id counter, which also
-counts jobs launched on the scheduler's behalf (broadcasts, AQE query
-stages), so a zero delta means no Spark job ran at all.
+Job counts come from the ``spark_jobs`` fixture (tests/conftest.py):
+a zero delta means no Spark job ran at all.
 """
 
 from __future__ import annotations
@@ -22,10 +21,6 @@ T0 = dt.datetime(2024, 1, 1)
 FORMATS = ("csv", "jsonl", "arrow", "senml", "parquet")
 QUERY = "/api/v1/query?query=lean[100000h]&format="
 LABELS = ({"host": "a"}, {"host": "b", "dc": "x,y"}, {})
-
-
-def _jobs(spark) -> int:
-    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
 
 
 def _sensors(spark, ids, labels):
@@ -63,7 +58,7 @@ def lean(spark, tmp_path_factory):
     return _lake(spark, root), root
 
 
-def test_dimension_probe_and_meta_lookup_run_no_job(spark, lean):
+def test_dimension_probe_and_meta_lookup_run_no_job(spark, lean, spark_jobs):
     from sensapp_spark.operators.matchers import LabelMatcher, MatcherType
     from sensapp_spark.operators.selection import (
         probe_sensor_rows,
@@ -73,7 +68,7 @@ def test_dimension_probe_and_meta_lookup_run_no_job(spark, lean):
     lake, _ = lean
     lake.sensors()  # pin the committed version (one toArrow job)
     app = create_app(spark, lake)
-    before = _jobs(spark)
+    before = spark_jobs()
     rows = probe_sensor_rows(select_sensors(
         lake.sensors(),
         [LabelMatcher("__name__", "lean"),
@@ -85,7 +80,7 @@ def test_dimension_probe_and_meta_lookup_run_no_job(spark, lean):
     with app.test_client() as c:
         # An unknown id answers from the meta lookup alone.
         assert c.get("/series/no-such-sensor").status_code == 404
-    assert _jobs(spark) == before
+    assert spark_jobs() == before
     assert sorted(r.sensor_id for r in rows) == ["lean/0", "lean/1"]
     assert meta[0].labels == {"host": "b", "dc": "x,y"}
 

@@ -99,10 +99,6 @@ def test_driver_local_training_matches_distributed(emb):
     assert sq_stats(emb, train=train) == sq_stats(emb)
 
 
-def _jobs(spark) -> int:
-    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
-
-
 def _replay(rows, cap, seeds):
     """hashlib replay of train_sample's above-cap rule over (vec_id,
     vector) rows: md5 band plus the 0 <= vec_id < seeds band,
@@ -165,20 +161,20 @@ def test_train_sample_seed_band_ignores_negative_ids(spark):
     assert {0, 3, 6} <= {vid for vid, _ in sample}
 
 
-def test_training_jobs_are_bounded(spark, emb):
+def test_training_jobs_are_bounded(spark, emb, spark_jobs):
     """Fitting on a sample runs no Spark job at all, and the sample
     itself costs at most 4 jobs above the cap (probe, count, collect)
     whatever the number of Lloyd rounds."""
     from sensapp_spark.pipeline.clustering import kmeans_codebook
     from sensapp_spark.pipeline.similarity import train_sample
 
-    j0 = _jobs(spark)
+    j0 = spark_jobs()
     sample = train_sample(emb, cap=120, seeds=16)
-    assert _jobs(spark) - j0 <= 4
-    j1 = _jobs(spark)
+    assert spark_jobs() - j0 <= 4
+    j1 = spark_jobs()
     kmeans_codebook(emb, rounds=5, train=sample)
     pq_codebooks(emb, rounds=5, train=sample)
-    assert _jobs(spark) == j1
+    assert spark_jobs() == j1
 
 
 def test_round6_py_matches_spark(spark):

@@ -3,19 +3,22 @@ example-based suite (SURVEY §5 notes it has no property testing).
 
 Each property pins an invariant that example tests can't sweep:
 codec round-trips over arbitrary inputs, parser/lattice laws, identity
-hash stability.
+hash stability, Arrow-built ingest frames equal to row-built ones.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import math
+import zoneinfo
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from sensapp_spark.datamodel.sensor import sensor_uuid
-from sensapp_spark.datamodel.types import SensorType
+from sensapp_spark.datamodel.types import SENSOR_SCHEMA, SensorType, value_schema
+from sensapp_spark.ingest.frames import arrow_frame
 from sensapp_spark.ingest.inference import (
     InferredType,
     infer_cell,
@@ -283,3 +286,72 @@ def test_png_subbyte_gray_roundtrip(w, h, depth, interlace, seed):
     scale = 255 // mx
     got = decode_png_pixels(p)
     assert got == (w, h, 1, bytes(v * scale for r in rows for v in r))
+
+
+# ---------------------------------------------------------------------------
+# Arrow-built ingest frames (ingest/frames.py) collect like row-built ones
+# ---------------------------------------------------------------------------
+
+_ZONES = st.sampled_from([
+    dt.timezone.utc,
+    dt.timezone(dt.timedelta(hours=5, minutes=30)),
+    dt.timezone(-dt.timedelta(hours=8)),
+    zoneinfo.ZoneInfo("Europe/Oslo"),
+])
+_aware_times = st.datetimes(min_value=dt.datetime(1900, 1, 1),
+                            max_value=dt.datetime(2100, 1, 1),
+                            timezones=_ZONES)
+_doubles = st.floats() | st.sampled_from(
+    [math.nan, math.inf, -math.inf, -0.0])
+_VALUES = {
+    SensorType.INTEGER: st.integers(-(2**63), 2**63 - 1),
+    SensorType.NUMERIC: st.decimals(min_value=-(10**19), max_value=10**19,
+                                    allow_nan=False, allow_infinity=False),
+    SensorType.FLOAT: _doubles,
+    SensorType.STRING: st.text(max_size=12),
+    SensorType.BOOLEAN: st.booleans(),
+    SensorType.LOCATION: st.tuples(_doubles, _doubles),
+    SensorType.JSON: st.text(max_size=12),
+    SensorType.BLOB: st.binary(max_size=12),
+}
+
+
+@pytest.mark.parametrize("stype", list(SensorType), ids=lambda t: t.name)
+@settings(max_examples=6, deadline=None)
+@given(data=st.data())
+def test_arrow_frame_collects_like_row_frame(spark, stype, data):
+    """Nulls, non-finite and signed-zero doubles, pre-1970 and
+    µs-precision times in any zone, decimals past the column scale
+    (rounded half-up on both paths): ``arrow_frame`` and
+    ``createDataFrame(rows, schema)`` collect the same rows."""
+    rows = data.draw(st.lists(st.tuples(
+        st.text(min_size=1, max_size=8), _aware_times,
+        st.none() | _VALUES[stype],
+    ), max_size=8))
+    schema = value_schema(stype)
+    got = arrow_frame(spark, rows, schema).collect()
+    # repr, not ==: NaN != NaN, and -0.0 == 0.0 would hide a lost sign.
+    assert repr(got) == repr(spark.createDataFrame(rows, schema).collect())
+
+
+@settings(max_examples=6, deadline=None)
+@given(rows=st.lists(st.tuples(
+    st.text(min_size=1, max_size=8), st.text(max_size=8),
+    st.sampled_from([t.label for t in SensorType]),
+    st.none() | st.text(max_size=4), st.none() | st.text(max_size=4),
+    st.dictionaries(st.text(max_size=4), st.text(max_size=4), max_size=3),
+), max_size=6))
+def test_arrow_frame_sensor_rows_collect_like_row_frame(spark, rows):
+    """Equal rows, and labels stored in key order whatever order the
+    dict was built in (the row path kept the JVM HashMap's order).
+    ``map_keys`` shows the stored order; a collected dict does not."""
+    df = arrow_frame(spark, rows, SENSOR_SCHEMA)
+    assert df.collect() == spark.createDataFrame(rows, SENSOR_SCHEMA).collect()
+    keys = [r.k for r in df.selectExpr("map_keys(labels) AS k").collect()]
+    assert keys == [sorted(labels) for *_, labels in rows]
+
+
+def test_arrow_frame_refuses_naive_datetimes(spark):
+    with pytest.raises(ValueError, match="naive datetime"):
+        arrow_frame(spark, [("s", dt.datetime(2024, 1, 1), 1.0)],
+                    value_schema(SensorType.FLOAT))
