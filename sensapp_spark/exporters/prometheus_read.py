@@ -24,7 +24,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sensapp_spark.datamodel.types import SensorType
-from sensapp_spark.operators.selection import query_samples
+from sensapp_spark.operators.selection import (
+    meta_probe_cols,
+    probe_sensor_rows,
+    query_samples,
+    select_sensors,
+)
 from sensapp_spark.wire import snappy_codec
 from sensapp_spark.wire.prompb import (
     ReadQuery,
@@ -35,17 +40,23 @@ from sensapp_spark.wire.prompb import (
 
 NUMERIC_TYPES = (SensorType.INTEGER, SensorType.NUMERIC, SensorType.FLOAT)
 
+# (stype, sensor_ids or None) → that value table's scan, or None.
+ValuesFor = Callable[[SensorType, "list[str] | None"], "DataFrame | None"]
+
 
 def execute_read_queries(
     queries: list[ReadQuery],
     sensors: DataFrame,
-    values_for: Callable[[SensorType], DataFrame],
+    values_for: ValuesFor,
     limit: int | None = None,
 ) -> list[list[TimeSeries]]:
     """Run each query through the Q1-Q9 pipeline over the three numeric
-    value tables and assemble protobuf-ready series. ``values_for``
-    returns None for a type with nothing to scan (the gateway's
-    never-committed tables), which skips that type's plan entirely."""
+    value tables and assemble protobuf-ready series.
+    ``values_for(stype, sensor_ids)`` returns the scan of one value
+    table — narrowed to ``sensor_ids`` when they are given (the probed
+    ids, so the zone map can skip files) — or None for a type with
+    nothing to scan (the gateway's never-committed tables), which skips
+    that type's plan entirely."""
     return [
         _execute_one_query(q, sensors, values_for, limit) for q in queries
     ]
@@ -54,24 +65,41 @@ def execute_read_queries(
 def _execute_one_query(
     q: ReadQuery,
     sensors: DataFrame,
-    values_for: Callable[[SensorType], DataFrame],
+    values_for: ValuesFor,
     limit: int | None = None,
 ) -> list[TimeSeries]:
+    """One query's series. A match under the probe cap scans each
+    numeric type by its probed ids (a type with none is never planned)
+    and labels the series on the driver from the probed rows; a larger
+    match keeps the broadcast plan and reads the labels from its join."""
     epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
     start = epoch + dt.timedelta(milliseconds=q.start_ms)
     end = epoch + dt.timedelta(milliseconds=q.end_ms)
+    probed = probe_sensor_rows(
+        select_sensors(sensors, q.matchers, numeric_only=True),
+        extra_cols=meta_probe_cols(),
+    )
+    meta = {r.sensor_id: r for r in probed or ()}
     per_series: dict[str, TimeSeries] = {}
     for stype in NUMERIC_TYPES:
-        vals = values_for(stype)
+        rows = None
+        if probed is not None:
+            rows = [r for r in probed if r.type == stype.label]
+            if not rows:
+                continue
+        vals = values_for(
+            stype, None if rows is None else [r.sensor_id for r in rows]
+        )
         if vals is None:
             continue
         out = query_samples(
-            sensors, vals, q.matchers,
-            start=start, end=end, limit=limit, numeric_only=True,
+            sensors, vals, q.matchers, start=start, end=end, limit=limit,
+            numeric_only=True, probed=rows,
         ).select(
-            "sensor_id", "name", "labels",
+            "sensor_id",
             (F.unix_micros("time") / 1000).cast("long").alias("ts_ms"),
             F.col("value").cast("double").alias("value"),  # P4 lossy cast
+            *([] if probed is not None else meta_probe_cols()),
         )
         # One collect per (query, type): the response holds the whole
         # query's series anyway, and a local iterator would launch one
@@ -79,8 +107,9 @@ def _execute_one_query(
         for row in out.collect():
             series = per_series.get(row.sensor_id)
             if series is None:
-                labels = [("__name__", row.name)] + sorted(
-                    (row.labels or {}).items()
+                m = meta.get(row.sensor_id, row)
+                labels = [("__name__", m.name)] + sorted(
+                    map(tuple, m.labels or ())
                 )
                 series = per_series[row.sensor_id] = TimeSeries(labels=labels)
             series.samples.append((row.value, row.ts_ms))
@@ -90,7 +119,7 @@ def _execute_one_query(
 def handle_read_request(
     body: bytes,
     sensors: DataFrame,
-    values_for: Callable[[SensorType], DataFrame],
+    values_for: ValuesFor,
     compressed: bool = True,
 ) -> bytes:
     """ReadRequest bytes → snappy-compressed SAMPLES ReadResponse bytes."""
@@ -104,7 +133,7 @@ def handle_read_request(
 def handle_read_request_streamed(
     body: bytes,
     sensors: DataFrame,
-    values_for: Callable[[SensorType], DataFrame],
+    values_for: ValuesFor,
     compressed: bool = True,
 ) -> bytes:
     """ReadRequest bytes → STREAMED_XOR_CHUNKS response (operator X7).
@@ -124,7 +153,7 @@ def handle_read_request_streamed(
 def iter_read_request_streamed(
     body: bytes,
     sensors: DataFrame,
-    values_for: Callable[[SensorType], DataFrame],
+    values_for: ValuesFor,
     compressed: bool = True,
 ):
     """Generator form of :func:`handle_read_request_streamed`: yields one

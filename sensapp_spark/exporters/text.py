@@ -19,12 +19,16 @@ def rfc3339_col(ts: Column) -> Column:
     """RFC3339 text: seconds precision, fractional part trimmed of trailing
     zeros, ``+00:00`` suffix — the shape of hifitime's ``to_rfc3339``
     (reference src/infer/columns.rs:330-332 shows the golden form)."""
-    frac = F.nullif(
-        F.regexp_replace(F.date_format(ts, "SSSSSS"), "0+$", ""), F.lit("")
-    )
+    # The fraction keeps its dot and loses the trailing zeros — the dot
+    # too when nothing is left. A plain regexp, not ``nullif``: Spark 4
+    # rewrites ``nullif`` into a ``With`` expression whose extra Project
+    # between a Limit and its Sort stops the planner from fusing them
+    # into one ``TakeOrderedAndProject`` (every export peek would run a
+    # range-partitioned global sort instead).
+    frac = F.regexp_replace(F.date_format(ts, ".SSSSSS"), r"\.?0+$", "")
     return F.concat(
         F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss"),
-        F.coalesce(F.concat(F.lit("."), frac), F.lit("")),
+        frac,
         F.lit("+00:00"),
     )
 

@@ -2,20 +2,36 @@
 
 This is the reference's entire query engine (operators Q1-Q11,
 src/storage/sqlite/storage.rs:429-489), re-expressed as one declarative
-DataFrame plan:
+DataFrame plan. The matched set decides between two shapes, with
+:func:`probe_sensor_rows` (at most ``ZONEMAP_PROBE_MAX``+1 dimension rows,
+0 jobs on the pinned dimension) as the one switch:
+
+    under the cap (probed rows on the driver):
+
+    values scan WHERE sensor_id IN (probed ids)   (zone-map file skipping)
+                                  │  time-range filter  (parquet pushdown)
+                                  ▼
+                    window row_number() ≤ limit per sensor
+                                  ▼
+        name/type/unit/… = try_element_at(<literal id→meta map>, sensor_id)
+
+    over the cap:
 
     sensors.filter(matchers) ──broadcast semi-join──▶ values scan
                                   │  time-range filter  (parquet pushdown)
                                   ▼
                     window row_number() ≤ limit per sensor
                                   ▼
-                        orderBy(sensor_id, time)
+                 broadcast left join back to the selected sensors
 
 Scale notes (100 TB posture):
 
-* The sensors dimension is small (≤ millions of rows) while value tables are
-  huge; the semi-join is explicitly ``broadcast()`` so the big scan never
-  shuffles for selection.
+* Under the cap the scan is id-keyed, like the reference's one query per
+  type table over resolved ids (src/storage/sqlite/batch_queries.rs:25-116):
+  no broadcast exchange runs, and the metadata rides in the plan as a
+  literal. Over the cap the sensors dimension is still small (≤ millions
+  of rows) while value tables are huge; the semi-join is explicitly
+  ``broadcast()`` so the big scan never shuffles for selection.
 * The time-range predicate lands in the Parquet scan as ``PushedFilters``
   and prunes month partitions — same effect as the reference's ClickHouse
   ``PARTITION BY toYYYYMM`` (clickhouse init.sql:38).
@@ -30,8 +46,9 @@ Scale notes (100 TB posture):
 from __future__ import annotations
 
 import datetime as dt
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sensapp_spark.config import CONFIG
@@ -112,27 +129,111 @@ def query_samples(
     limit: int | None = None,
     numeric_only: bool = False,
     tiebreakers: list[str] | None = None,
+    probed: list | None = None,
 ) -> DataFrame:
-    """The full Q1-Q9 pipeline: matcher selection, broadcast semi-join into
-    the value scan, inclusive time range, per-sensor limit, time sort.
+    """The full Q1-Q9 pipeline: matcher selection, id-keyed or broadcast
+    semi-joined value scan, inclusive time range, per-sensor limit.
 
-    Returns ``(sensor_id, time, value, name, type, unit, labels)`` — result
-    assembly (Q9) is the join back to sensor metadata.
+    ``probed`` are the matched dimension rows from
+    :func:`probe_sensor_rows` with :func:`meta_probe_cols`. Given,
+    the scan keeps ``sensor_id IN (ids)`` and the metadata is attached
+    from a literal (no join, no broadcast). ``None`` (a match over the
+    probe cap, or a caller without a probe) keeps the broadcast plan.
+
+    Returns the value columns followed by ``name, type, unit,
+    unit_description, labels`` — result assembly (Q9).
     """
-    selected = select_sensors(sensors, matchers, numeric_only)
-    # Broadcast the (small) selected-sensor set into the (huge) value scan:
-    # a broadcast hash semi-join — no shuffle of the fact table.
-    ids = F.broadcast(selected.select("sensor_id"))
-    scan = values.join(ids, "sensor_id", "leftsemi")
+    if probed is None:
+        selected = select_sensors(sensors, matchers, numeric_only)
+        # Broadcast the (small) selected-sensor set into the (huge)
+        # value scan: a broadcast hash semi-join — no shuffle of the
+        # fact table.
+        scan = values.join(
+            F.broadcast(selected.select("sensor_id")), "sensor_id", "leftsemi"
+        )
+    else:
+        scan = values.filter(ids_in([r.sensor_id for r in probed]))
     scan = time_range(scan, start, end)
     scan = per_sensor_limit(scan, limit, tiebreakers=tiebreakers)
-    out = scan.join(F.broadcast(selected), "sensor_id", "left")
     # Ordering guarantee (Q6): the limit window leaves rows partitioned by
     # sensor and time-sorted within each sensor — the same per-series
     # order the reference returns. A GLOBAL orderBy here would add a full
     # range-exchange for nothing; exporters that need total order sort at
     # the edge.
-    return out
+    if probed is None:
+        return scan.join(F.broadcast(selected), "sensor_id", "left")
+    return with_sensor_meta(scan, probed)
+
+
+META_COLS = ("name", "type", "unit", "unit_description", "labels")
+
+
+def sql_str(value: str | None) -> str:
+    """``value`` as a SQL STRING literal for :func:`F.expr`: its UTF-8
+    bytes as a hex binary literal cast back to STRING, which Catalyst
+    folds to a plain literal. No character needs escaping, whatever
+    the parser's string-literal settings."""
+    if value is None:
+        return "CAST(NULL AS STRING)"
+    return f"CAST(X'{value.encode().hex()}' AS STRING)"
+
+
+def ids_in(ids: Sequence[str], col: str = "sensor_id") -> Column:
+    """``col IN (ids)`` built as ONE ``F.expr`` (the ``sql_array_lit``
+    lesson): ``Column.isin`` sends one py4j ``lit`` per id, and those
+    driver round-trips cost more than the scan of a small read. It
+    plans and pushes into Parquet exactly like ``isin``; no ids
+    matches nothing."""
+    if not ids:
+        return F.lit(False)
+    return F.expr(f"`{col}` IN ({', '.join(map(sql_str, ids))})")
+
+
+def meta_probe_cols() -> list[Column]:
+    """The :data:`META_COLS` as a probe collects them for
+    :func:`with_sensor_meta`: ``labels`` as its ``map_entries``. A
+    collected map comes back in Java ``HashMap`` order; the entries
+    array keeps the stored key order, which ``to_json`` of the map
+    (jsonl, arrow) prints."""
+    return [F.col(c) for c in META_COLS[:-1]] + [
+        F.map_entries("labels").alias("labels")
+    ]
+
+
+_META_TYPE = (
+    "struct<name:string,type:string,unit:string,unit_description:string,"
+    "labels:map<string,string>>"
+)
+
+
+def with_sensor_meta(df: DataFrame, rows: list) -> DataFrame:
+    """Append the :data:`META_COLS` of each row's sensor from driver-side
+    dimension ``rows`` (collected with :func:`meta_probe_cols`): one
+    literal ``sensor_id → struct`` map read with
+    ``try_element_at`` — Catalyst folds it to a single map literal, so
+    the plan carries the metadata with no join and no broadcast job. An
+    id missing from ``rows`` gets nulls, like the left join it
+    replaces. The map is ONE ``F.expr`` string, because ``F.lit`` and
+    ``F.struct`` cost about 100 py4j round-trips per sensor."""
+    entries = []
+    # Keyed by id so a duplicated dimension row cannot fail the map
+    # literal on a duplicate key.
+    for r in {r.sensor_id: r for r in rows}.values():
+        fields = ", ".join(
+            f"'{c}', {sql_str(getattr(r, c))}" for c in META_COLS[:-1]
+        )
+        labels = ", ".join(sql_str(x) for kv in r.labels or () for x in kv)
+        entries.append(
+            f"{sql_str(r.sensor_id)}, CAST(named_struct({fields}, "
+            f"'labels', map({labels})) AS {_META_TYPE})"
+        )
+    table = (
+        f"map({', '.join(entries)})"
+        if entries
+        else f"CAST(NULL AS map<string,{_META_TYPE}>)"
+    )
+    meta = F.expr(f"try_element_at({table}, sensor_id)")
+    return df.select("*", *(meta.getField(c).alias(c) for c in META_COLS))
 
 
 def fetch_series(
@@ -160,17 +261,18 @@ def dedup_values(values: DataFrame) -> DataFrame:
 
 
 def probe_sensor_rows(
-    selected: DataFrame, extra_cols: list[str] | None = None
+    selected: DataFrame, extra_cols: Sequence[str | Column] = ()
 ) -> list | None:
-    """THE bounded dimension probe for zone-map file skipping (shared
-    by :func:`query_all_types` and the HTTP PromQL paths so the cap
-    semantics can never diverge): collect at most PROBE_MAX+1 matched
-    rows; return them when the match fits under the cap, else None
-    (caller keeps the full scan + broadcast semi-join plan)."""
+    """THE bounded dimension probe for zone-map file skipping and the
+    id-keyed scan (shared by :func:`query_all_types`, the gateway's raw
+    reads and the HTTP PromQL paths so the cap semantics can never
+    diverge): collect at most PROBE_MAX+1 matched rows — 0 jobs on the
+    pinned dimension; return them when the match fits under the cap,
+    else None (caller keeps the full scan + broadcast semi-join plan)."""
     from sensapp_spark.storage.lake import ZONEMAP_PROBE_MAX
 
     rows = (
-        selected.select("sensor_id", *(extra_cols or []))
+        selected.select("sensor_id", *extra_cols)
         .limit(ZONEMAP_PROBE_MAX + 1)
         .collect()
     )
@@ -200,7 +302,6 @@ def query_all_types(
     sensors use — unmatched type tables are never scanned.
     """
     from sensapp_spark.datamodel.types import SensorType
-    from sensapp_spark.storage.lake import ZONEMAP_PROBE_MAX
 
     selected = select_sensors(lake.sensors(), matchers, numeric_only)
     # Matcher queries typically select a handful of series out of the
@@ -209,28 +310,27 @@ def query_all_types(
     # the scan so the zone map FILE-SKIPS the fact table before any IO.
     # Over the cap, the broadcast semi-join below is the right plan and
     # the type set comes from the (cheaper) distinct collect instead.
-    probe = probe_sensor_rows(selected, extra_cols=["type"])
-    ids_by_type: dict[str, list[str]] | None
+    probe = probe_sensor_rows(selected, extra_cols=meta_probe_cols())
+    rows_by_type: dict[str, list] | None
     if probe is not None:
-        ids_by_type = {}
+        rows_by_type = {}
         for r in probe:
-            ids_by_type.setdefault(r.type, []).append(r.sensor_id)
-        type_labels = list(ids_by_type)
+            rows_by_type.setdefault(r.type, []).append(r)
+        type_labels = list(rows_by_type)
     else:
-        ids_by_type = None
+        rows_by_type = None
         type_labels = [
             r.type for r in selected.select("type").distinct().collect()
         ]
     out = {}
     for label in type_labels:
         stype = SensorType.from_label(label)
-        values = lake.values(
-            stype, start, end,
-            sensor_ids=None if ids_by_type is None else ids_by_type[label],
-        )
+        probed = None if rows_by_type is None else rows_by_type[label]
+        ids = None if probed is None else [r.sensor_id for r in probed]
+        values = lake.values(stype, start, end, sensor_ids=ids)
         out[stype] = query_samples(
             selected, values, matchers, start=start, end=end,
-            limit=limit, numeric_only=numeric_only,
+            limit=limit, numeric_only=numeric_only, probed=probed,
         )
     return out
 

@@ -68,7 +68,11 @@ from sensapp_spark.ingest.prometheus_write import (
 from sensapp_spark.ingest.senml_importer import SenMLError, ingest_senml
 from sensapp_spark.operators.catalog import metrics_list, series_list
 from sensapp_spark.operators.dcat import metrics_catalog, series_catalog
-from sensapp_spark.operators.selection import query_samples
+from sensapp_spark.operators.selection import (
+    meta_probe_cols,
+    query_samples,
+    with_sensor_meta,
+)
 from sensapp_spark.query.promql import PromQLError, parse_promql_query
 from sensapp_spark.storage.lake import SensorLake, VersionNotRetained
 
@@ -122,13 +126,20 @@ def create_app(
     driver-side up to its 10M-row limit (src/storage/mod.rs:15-17 +
     src/exporters/*) — at that limit that is a multi-GB driver string,
     the one reference behavior SURVEY §7.4 risk 10 says NOT to copy.
-    Every format decides with ONE bounded job: a
+    Every format decides with ONE bounded action: a
     ``limit(threshold+1).collect()`` of the ordered result (a single
     ``TakeOrderedAndProject``). A result that fits is assembled from
     those rows; a larger one re-executes the query through the
     bounded-memory ``toLocalIterator`` streams, so only over-threshold
     exports pay the query twice. ``None`` disables streaming (always
-    collect)."""
+    collect).
+
+    Raw reads resolve their sensors on the driver first (the pinned
+    dimension answers with 0 jobs): under ``ZONEMAP_PROBE_MAX`` matched
+    sensors the value scan is keyed by those ids and the metadata is a
+    plan literal (``operators/selection.py``), so a small ``/series``
+    or ``/api/v1/query`` export on a zone-mapped lake runs 1–2 jobs
+    and no broadcast exchange."""
     app = Flask("sensapp_spark")
 
     def _stream_senml(records) -> Response:
@@ -153,10 +164,15 @@ def create_app(
         """THE collect-vs-stream decision: one bounded
         ``limit(threshold+1).collect()`` over an ordered frame — Spark
         plans it as a ``TakeOrderedAndProject``, so the query executes
-        once and no range-sort sampling job runs. Returns the
-        complete result when it fits under the threshold, else None
-        (the caller then streams by re-executing the query through a
-        bounded-memory iterator)."""
+        once and no range-sort sampling job runs. That fusion needs
+        the Limit to sit directly on the Sort and its projection:
+        formatting expressions that the optimizer rewrites into an
+        extra Project (Spark 4's ``nullif`` → ``With``) turn it into a
+        ``CollectLimit`` over a range-partitioned global sort — pinned
+        for every format by ``tests/test_gateway_lean_reads.py``.
+        Returns the complete result when it fits under the threshold,
+        else None (the caller then streams by re-executing the query
+        through a bounded-memory iterator)."""
         head = ordered.limit(stream_threshold + 1).collect()
         return head if len(head) <= stream_threshold else None
 
@@ -453,12 +469,13 @@ def create_app(
         lake.publish(batch)
         return "", 204
 
-    def _committed_values(stype: SensorType):
+    def _committed_values(stype: SensorType, sensor_ids=None):
         """Remote-read scan source: None (no plan, no job) for a value
-        table that has never committed — one pointer read."""
+        table that has never committed — one pointer read. Probed
+        ``sensor_ids`` let the zone map skip files."""
         if lake.committed_seq(stype) is None:
             return None
-        return lake.values(stype)
+        return lake.values(stype, sensor_ids=sensor_ids)
 
     @app.post("/api/v1/prometheus_remote_read")
     def prom_read():
@@ -738,14 +755,36 @@ def create_app(
             return jsonify({"error": str(e)}), 400
         start = parsed.start_time.replace(tzinfo=None)
         end = parsed.end_time.replace(tzinfo=None)
+        from pyspark.sql import functions as F
+
+        from sensapp_spark.operators.selection import (
+            probe_sensor_rows,
+            select_sensors,
+        )
+
         # The simple endpoint serves Float series (the reference's
-        # fixture path); extend per-type on demand.
+        # fixture path); extend per-type on demand. A match under the
+        # probe cap scans by id (zone-map file skipping, no broadcast);
+        # a larger one keeps the broadcast semi-join plan.
+        probed = probe_sensor_rows(
+            select_sensors(lake.sensors(), parsed.matchers).filter(
+                F.col("type") == SensorType.FLOAT.label
+            ),
+            extra_cols=meta_probe_cols(),
+        )
         df = query_samples(
             lake.sensors(),
-            lake.values(SensorType.FLOAT, parsed.start_time, parsed.end_time),
+            lake.values(
+                SensorType.FLOAT, parsed.start_time, parsed.end_time,
+                sensor_ids=(
+                    None if probed is None
+                    else [r.sensor_id for r in probed]
+                ),
+            ),
             parsed.matchers,
             start=start,
             end=end,
+            probed=probed,
         )
         return _export(df, fmt, SensorType.FLOAT)
 
@@ -767,6 +806,7 @@ def create_app(
         meta = (
             lake.sensors()
             .filter(F.col("sensor_id") == sensor_id)
+            .select("sensor_id", *meta_probe_cols())
             .collect()
         )
         if not meta:
@@ -805,8 +845,9 @@ def create_app(
             return jsonify({"error": str(e)}), 410
         if limit:
             vals = vals.orderBy("time").limit(limit)
-        df = vals.join(F.broadcast(lake.sensors()), "sensor_id", "left")
-        return _export(df, fmt, stype)
+        # The metadata rides in as literals from the collected row: no
+        # join, no broadcast of the dimension.
+        return _export(with_sensor_meta(vals, meta), fmt, stype)
 
     @app.get("/metrics")
     def metrics():

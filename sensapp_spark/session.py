@@ -58,5 +58,13 @@ def get_spark(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.driver.memory", os.environ.get("SENSAPP_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark's DataFrame debugging wraps EVERY Column / functions
+        # call: it looks up the active session over py4j, reads a conf,
+        # walks the Python stack for the call site and sets/clears it in
+        # the JVM — several round-trips per ``F.col``, and a gateway
+        # read builds hundreds of Column expressions per request. Off,
+        # an analysis or runtime error keeps its message but no longer
+        # cites the Python line that built the failing expression.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()

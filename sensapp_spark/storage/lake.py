@@ -505,7 +505,8 @@ class SensorLake:
         ``sensor_ids`` both filters the rows AND probes the zone map:
         after a clustering :meth:`optimize` the per-file sensor ranges
         are disjoint, so a single-series fetch plans over ~1 file per
-        month instead of every file in the month. Callers with a
+        month instead of every file in the month. An empty list reads
+        nothing (an empty local relation, no job). Callers with a
         LARGE selected set should keep their broadcast semi-join and
         pass nothing (the isin literal stops paying for itself past
         :data:`ZONEMAP_PROBE_MAX`).
@@ -530,7 +531,9 @@ class SensorLake:
         else:
             data = resolve_table(self._values_path(stype))
         schema = value_schema(stype).add(MONTH_COL, "string")
-        if data is None:
+        if data is None or (sensor_ids is not None and not sensor_ids):
+            # Nothing committed, or no sensor to read: an empty local
+            # relation, which plans no scan and runs no job.
             return self.spark.createDataFrame([], schema)
         # Explicit schema: the table's layout is known, so nothing is
         # inferred from footers — a scan planned while a concurrent
@@ -546,7 +549,9 @@ class SensorLake:
             df = df.filter(F.col(MONTH_COL) <= end.strftime("%Y-%m"))
             df = df.filter(F.col("time") <= F.lit(end))
         if sensor_ids is not None:
-            df = df.filter(F.col("sensor_id").isin(list(sensor_ids)))
+            from sensapp_spark.operators.selection import ids_in
+
+            df = df.filter(ids_in(list(sensor_ids)))
         return df
 
     def _pruned_scan(

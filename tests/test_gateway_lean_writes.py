@@ -136,6 +136,29 @@ def test_publish_adding_a_series_commits_once_and_reads_back(gateway):
     assert len(r.data.decode().splitlines()) == 5
 
 
+def test_jsonl_read_back_job_counts(spark_jobs, gateway):
+    """The read-back after a write is one job — the peek, a
+    TakeOrderedAndProject over the id-filtered scan — and one more (the
+    re-pin of the new sensors version) after a write that added a
+    series."""
+    lake, client = gateway
+    _remote_write(client, T0, hosts=("a",))
+    sid = sensor_uuid("rw", SensorType.FLOAT, None, {"host": "a"})
+    lake.sensors()  # pin the committed version (one toArrow job)
+
+    def read_back_jobs() -> int:
+        before = spark_jobs()
+        r = client.get(f"/series/{sid}?format=jsonl")
+        assert r.status_code == 200
+        assert r.data
+        return spark_jobs() - before
+
+    _remote_write(client, T0 + 86400, hosts=("a",))
+    assert read_back_jobs() == 1
+    _remote_write(client, T0 + 2 * 86400, hosts=("a", "c"))
+    assert read_back_jobs() == 2
+
+
 def test_erased_sensor_is_re_added_by_a_re_publish(gateway):
     lake, client = gateway
     _arrow(client, T0)

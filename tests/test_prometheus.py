@@ -118,7 +118,7 @@ def test_remote_read_samples(spark, lake_frames):
         ReadQuery(start_ms=1700000000000 - 60000, end_ms=1700000000000 + 60000,
                   matchers=[LabelMatcher("__name__", "cpu", MatcherType.EQUAL)]),
     ]))
-    resp = handle_read_request(req, sensors, frames.get)
+    resp = handle_read_request(req, sensors, lambda st, ids: frames.get(st))
     results = decode_read_response(snappy_codec.decompress(resp))
     assert len(results) == 1
     series = results[0]
@@ -135,7 +135,7 @@ def test_remote_read_numeric_only_casts_and_skips(spark, lake_frames):
         ReadQuery(start_ms=0, end_ms=2000000000000,
                   matchers=[LabelMatcher("__name__", ".*", MatcherType.REGEX_MATCH)]),
     ]))
-    resp = handle_read_request(req, sensors, frames.get)
+    resp = handle_read_request(req, sensors, lambda st, ids: frames.get(st))
     (series,) = decode_read_response(snappy_codec.decompress(resp))
     names = sorted(dict(s.labels)["__name__"] for s in series)
     assert names == ["cpu", "cpu", "mem"]  # String series skipped

@@ -355,3 +355,34 @@ def test_arrow_frame_refuses_naive_datetimes(spark):
     with pytest.raises(ValueError, match="naive datetime"):
         arrow_frame(spark, [("s", dt.datetime(2024, 1, 1), 1.0)],
                     value_schema(SensorType.FLOAT))
+
+
+# -- ANN training sample ----------------------------------------------------
+
+
+@settings(max_examples=12, deadline=None)
+@given(
+    cap=st.integers(min_value=1, max_value=300),
+    extra=st.integers(min_value=1, max_value=3000),
+    seeds=st.integers(min_value=0, max_value=16),
+)
+def test_train_sample_above_cap_holds_exactly_cap(spark, cap, extra, seeds):
+    """Above the cap the md5 band, widened by 8·√cap, always holds at
+    least ``cap`` rows, so the sample is exactly ``cap`` distinct corpus
+    rows — ``len(sample) < cap`` keeps meaning "the whole corpus"."""
+    from pyspark.sql import functions as F
+
+    from sensapp_spark.pipeline.similarity import train_sample
+
+    n = cap + extra
+    corpus = spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.col("id").cast("float")).alias("embedding"),
+    )
+    sample = train_sample(corpus, cap=cap, seeds=seeds)
+    ids = [vid for vid, _ in sample]
+    assert len(sample) == cap
+    assert ids == sorted(set(ids))
+    assert all(0 <= vid < n and emb == [float(vid)] for vid, emb in sample)
+    seed_band = set(range(seeds))
+    assert seed_band <= set(ids) if seeds <= cap else set(ids) <= seed_band

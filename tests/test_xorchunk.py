@@ -114,7 +114,7 @@ def test_streamed_read_response(spark):
                   matchers=[LabelMatcher("__name__", "none", MatcherType.EQUAL)]),
     ]))
     stream = handle_read_request_streamed(
-        req, sensors, {SensorType.FLOAT: floats}.get)
+        req, sensors, lambda st, ids: {SensorType.FLOAT: floats}.get(st))
 
     # Exactly one frame (empty query skipped); frame = uvarint len + crc + msg
     length, pos = decode_varint(stream, 0)
