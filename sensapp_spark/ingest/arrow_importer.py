@@ -116,5 +116,5 @@ def ingest_arrow_table(spark: SparkSession, table: pa.Table) -> IngestBatch:
     )
     return IngestBatch(
         sensors=sensors,
-        values={stype: spark.createDataFrame(vals, value_schema(stype))},
+        values={stype: arrow_frame(spark, vals, value_schema(stype))},
     )

@@ -1,14 +1,21 @@
-"""Driver-side ingest batches as Arrow-built local frames.
+"""The one constructor for driver-side frames: Arrow-built local relations.
 
-Every wire importer parses its request on the driver into row tuples.
-``spark.createDataFrame(rows, schema)`` plans those as ``Scan
-ExistingRDD``: the rows are pickled and spread over
-``defaultParallelism`` tasks, so each action on the batch is a Spark
-job. :func:`arrow_frame` builds the same rows into a ``pa.Table`` first,
-and ``createDataFrame(table, schema)`` plans it as a ``LocalRelation``
-(below ``spark.sql.execution.arrow.localRelationThreshold``), which the
-optimizer folds on the driver: projecting the sensor ids of a batch or
-filtering it runs no job, and only the write that lands it does.
+Every frame the serving code builds on the driver (an ingest batch, an
+empty "nothing here" result, a small literal such as a probe list) goes
+through :func:`arrow_frame`. ``spark.createDataFrame(rows, schema)`` on a
+Python list plans as ``Scan ExistingRDD`` over a ``PythonRDD``: the rows
+are pickled and spread over ``defaultParallelism`` tasks, so every
+action on the frame is a Spark job, and the first one starts the
+``pyspark.daemon`` and a Python worker per task (about 60 MB resident
+each) even when the list is empty. :func:`arrow_frame` builds the rows
+into a ``pa.Table`` first, and ``createDataFrame(table, schema)`` plans
+it as a ``LocalRelation`` (below
+``spark.sql.execution.arrow.localRelationThreshold``), which the
+optimizer folds on the driver: an empty frame collects with no job,
+projecting the sensor ids of a batch or filtering it runs none either,
+only the write that lands it does, and no Python worker is ever needed.
+``tests/test_worker_free.py`` fails if a serving package calls
+``createDataFrame`` anywhere else.
 """
 
 from __future__ import annotations
@@ -25,11 +32,18 @@ _EPOCH = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
 _MICROSECOND = dt.timedelta(microseconds=1)
 
 
-def arrow_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+def arrow_frame(
+    spark: SparkSession,
+    rows: list[tuple] | pa.Table,
+    schema: T.StructType | str,
+) -> DataFrame:
     """``spark.createDataFrame(rows, schema)``, built through Arrow.
 
-    The rows collect equal to the row-built frame's, with two
-    conversions made here rather than in the JVM:
+    ``schema`` is a ``StructType`` or, as for ``createDataFrame``, a DDL
+    string (``"sensor_id string, bucket timestamp"``). ``rows`` is a
+    list of tuples or an already built ``pa.Table``, which is handed
+    over as it is. Tuples collect equal to the row-built frame's, with
+    three conversions made here rather than in the JVM:
 
     * a ``TimestampType`` value must be a tz-aware ``datetime``; it is
       stored as its UTC instant. A naive one raises ``ValueError``:
@@ -45,6 +59,10 @@ def arrow_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) ->
       a request sent them in, as the sensor UUID hashes them. The row
       path's order was the JVM ``HashMap``'s iteration order.
     """
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(rows, schema)
     arrow_schema = to_arrow_schema(schema)
     columns = list(zip(*rows)) or [()] * len(schema.fields)
     arrays = [

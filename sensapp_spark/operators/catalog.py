@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sensapp_spark.ingest.frames import arrow_frame
 from sensapp_spark.operators.matchers import LabelMatcher, matchers_predicate
 
 
@@ -88,8 +89,8 @@ def label_names(sensors: DataFrame) -> DataFrame:
     ``__name__``. Dimension-only aggregate — per-row ``map_keys`` then a
     distinct over short strings."""
     keys = sensors.select(F.explode(F.map_keys("labels")).alias("label"))
-    reserved = sensors.sparkSession.createDataFrame(
-        [("__name__",)], "label string"
+    reserved = arrow_frame(
+        sensors.sparkSession, [("__name__",)], "label string"
     )
     return keys.union(reserved).distinct().orderBy("label")
 

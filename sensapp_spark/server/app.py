@@ -60,6 +60,7 @@ from sensapp_spark.exporters import (
 from sensapp_spark.exporters.prometheus_read import handle_read_request
 from sensapp_spark.ingest.arrow_importer import ingest_arrow
 from sensapp_spark.ingest.csv_importer import CsvFormatError, ingest_csv
+from sensapp_spark.ingest.frames import arrow_frame
 from sensapp_spark.ingest.influxdb_importer import LineProtocolError, ingest_lines
 from sensapp_spark.ingest.prometheus_write import (
     RemoteWriteError,
@@ -1187,8 +1188,8 @@ def create_app(
             store, rows = _sketch_store_from_args()
         except (KeyError, ValueError) as e:
             return jsonify({"error": str(e)}), 400
-        probes = spark.createDataFrame(
-            [(s,) for s in ids], "sensor_id string"
+        probes = arrow_frame(
+            spark, [(s,) for s in ids], "sensor_id string"
         )
         est = store.heavy_hitters(rows, probes).orderBy(
             "bucket", "sensor_id"

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 import shutil
 
+from sensapp_spark.ingest.frames import arrow_frame
 from sensapp_spark.pipeline.similarity import (
     IVF_NLIST,
     sql_array_lit,
@@ -1262,8 +1263,8 @@ class AnnIndexStore:
         else:
             raise ValueError(f"unknown layout kind {kind!r}")
         if epoch is not None:
-            empty = self.spark.createDataFrame(
-                [], "vec_id bigint, embedding array<float>"
+            empty = arrow_frame(
+                self.spark, [], "vec_id bigint, embedding array<float>"
             )
             return self.append(name, empty, epoch=epoch, state=state)
         return self._resolve(name, kind=None)[1]

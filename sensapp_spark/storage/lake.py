@@ -47,6 +47,8 @@ from sensapp_spark.storage import zonemap as zm
 from sensapp_spark.storage.logstore import get_store
 
 MONTH_COL = "month"
+# An append's private staging dir, a sibling of the table's versions.
+STAGE_PREFIX = ".stage_"
 
 # Pass at most this many sensor ids down to the file-skipping layer as
 # a zone-map probe: beyond it the isin literal stops paying for itself
@@ -327,7 +329,7 @@ class SensorLake:
             # late-landing-file story as before.
             staging = os.path.join(
                 os.path.dirname(dest),
-                f".stage_{uuid_mod.uuid4().hex}",
+                f"{STAGE_PREFIX}{uuid_mod.uuid4().hex}",
             )
             try:
                 (
@@ -437,7 +439,7 @@ class SensorLake:
             return self._committed_sensors(*read_committed(path))
         data = resolve_at(path, at_seq)
         if data is None:
-            return self.spark.createDataFrame([], SENSOR_SCHEMA)
+            return arrow_frame(self.spark, [], SENSOR_SCHEMA)
         return self._sensor_scan(data)
 
     def _committed_sensors(self, seq: int, data: str | None) -> DataFrame:
@@ -446,7 +448,7 @@ class SensorLake:
         pinning threshold, else a parquet scan (always one for a legacy
         seq-0 layout)."""
         if data is None:
-            return self.spark.createDataFrame([], SENSOR_SCHEMA)
+            return arrow_frame(self.spark, [], SENSOR_SCHEMA)
         if seq == 0:
             return self._sensor_scan(data)
         pinned = self._pinned_sensors
@@ -470,8 +472,8 @@ class SensorLake:
         size = sum(os.path.getsize(f) for f in _list_data_files(data))
         if size >= limit:
             return None
-        return self.spark.createDataFrame(
-            self._sensor_scan(data).toArrow(), SENSOR_SCHEMA
+        return arrow_frame(
+            self.spark, self._sensor_scan(data).toArrow(), SENSOR_SCHEMA
         )
 
     def history(self, stype: SensorType | None = None) -> list[dict]:
@@ -532,9 +534,10 @@ class SensorLake:
             data = resolve_table(self._values_path(stype))
         schema = value_schema(stype).add(MONTH_COL, "string")
         if data is None or (sensor_ids is not None and not sensor_ids):
-            # Nothing committed, or no sensor to read: an empty local
-            # relation, which plans no scan and runs no job.
-            return self.spark.createDataFrame([], schema)
+            # Nothing committed, or no sensor to read: an empty
+            # Arrow-built local relation, which plans as a
+            # LocalTableScan and collects with no job.
+            return arrow_frame(self.spark, [], schema)
         # Explicit schema: the table's layout is known, so nothing is
         # inferred from footers — a scan planned while a concurrent
         # publish is materializing the directory (streaming ingest polls
@@ -590,7 +593,7 @@ class SensorLake:
             sensor_ids=list(sensor_ids) if sensor_ids else None,
         )
         if not files:
-            return self.spark.createDataFrame([], schema)
+            return arrow_frame(self.spark, [], schema)
         return (
             self.spark.read.schema(schema)
             .option("basePath", data)
@@ -659,9 +662,11 @@ class SensorLake:
                 df = df.withColumn("_change_type", F.lit("insert"))
             return df
 
-        empty = self.spark.createDataFrame([], schema)
+        def empty() -> DataFrame:
+            return out(arrow_frame(self.spark, [], schema))
+
         if data is None:
-            return out(empty), {
+            return empty(), {
                 "seq": seq, "files": [], "gen": -1, "reset": False,
             }
         # Repair the acknowledged-but-unrecorded state before trusting
@@ -698,7 +703,7 @@ class SensorLake:
                         "seq": seq, "gen": gens[-1], "reset": False,
                     }
                     if not new_rels:
-                        return out(empty), next_cursor
+                        return empty(), next_cursor
                     df = (
                         self.spark.read.schema(schema)
                         .option("basePath", data)
@@ -725,7 +730,7 @@ class SensorLake:
                 if os.path.relpath(f, data) not in seen
             ]
             if not new:
-                return out(empty), next_cursor
+                return empty(), next_cursor
             df = (
                 self.spark.read.schema(schema)
                 .option("basePath", data)
@@ -920,9 +925,7 @@ class SensorLake:
                 if cdc
                 else schema
             )
-            return (
-                self.spark.createDataFrame([], out_schema), next_cursor
-            )
+            return arrow_frame(self.spark, [], out_schema), next_cursor
         ev = None
         for s, df, ctype in parts:
             tagged = (
@@ -2873,11 +2876,14 @@ def _prune_versions(path: str, seq: int, keep_generations: int = 2) -> None:
     if len(entries) >= 2:
         for d in os.listdir(path):
             # Everything that is not a version dir, the commit log, the
-            # pointer, or an in-flight pointer temp is legacy data
-            # (including Spark's hidden .crc shadows).
-            if d.startswith(("v_", ".ptr_")) or d in (CURRENT_PTR,
-                                                      COMMITS_DIR,
-                                                      TOMBSTONES_DIR):
+            # pointer, an in-flight pointer temp or an in-flight
+            # append's private staging dir is legacy data (including
+            # Spark's hidden .crc shadows). A staging dir removed here
+            # fails the concurrent append's job commit; a crashed
+            # writer's is vacuum_orphans' age-gated job.
+            if d.startswith(("v_", ".ptr_", STAGE_PREFIX)) or d in (
+                CURRENT_PTR, COMMITS_DIR, TOMBSTONES_DIR
+            ):
                 continue
             full = os.path.join(path, d)
             if os.path.isdir(full):
@@ -2914,7 +2920,7 @@ def vacuum_orphans(path: str, min_age_s: float = 3600.0) -> list[str]:
     now = time.time()
     deleted = []
     for d in os.listdir(path):
-        if not d.startswith(("v_", ".ptr_")):
+        if not d.startswith(("v_", ".ptr_", STAGE_PREFIX)):
             continue
         full = os.path.join(path, d)
         has_manifest = os.path.isdir(full) and os.path.exists(

@@ -50,8 +50,10 @@ import shutil
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sensapp_spark.datamodel.types import SensorType
+from sensapp_spark.ingest.frames import arrow_frame
 from sensapp_spark.storage.lake import (
     MONTH_COL,
     CommitConflict,
@@ -395,13 +397,11 @@ class RollupStore:
         Month partition pruning applies through the hive layout."""
         start = _utc_naive(start)
         end = _utc_naive(end)
-        schema_df = self.spark.createDataFrame([], self.SCHEMA)
         data = resolve_table(self._path(stype))
         if data is None:
-            return schema_df
-        df = self.spark.read.schema(
-            schema_df.schema.add(MONTH_COL, "string")
-        ).parquet(data)
+            return arrow_frame(self.spark, [], self.SCHEMA)
+        schema = T.StructType.fromDDL(self.SCHEMA).add(MONTH_COL, "string")
+        df = self.spark.read.schema(schema).parquet(data)
         if start is not None:
             df = df.filter(F.col(MONTH_COL) >= start.strftime("%Y-%m"))
             df = df.filter(F.col("bucket") >= F.lit(start))

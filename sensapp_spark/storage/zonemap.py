@@ -55,6 +55,8 @@ from __future__ import annotations
 import json
 import os
 
+from sensapp_spark.ingest.frames import arrow_frame
+
 # Sketch geometry and hash space come from the ONE declaration in
 # operators/sketches.py (its docstring claims single-source-of-truth
 # for the portable construction — round-9 review: a re-declared copy
@@ -290,7 +292,7 @@ def file_stats_many(
         1, min(len(files), spark.sparkContext.defaultParallelism * 2)
     )
     rows = (
-        spark.createDataFrame([(f,) for f in files], "path string")
+        arrow_frame(spark, [(f,) for f in files], "path string")
         .repartition(n_tasks)
         .mapInPandas(_scan, "path string, stats string")
         .collect()

@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from sensapp_spark.datamodel.types import SensorType
+from sensapp_spark.ingest.frames import arrow_frame
 from sensapp_spark.storage.ann import AnnIndexStore
 from sensapp_spark.storage.lake import SensorLake
 
@@ -132,8 +133,8 @@ def bootstrap_ann_index(
         )
     else:
         builder(vectors)
-    empty = store.spark.createDataFrame(
-        [], "vec_id bigint, embedding array<float>"
+    empty = arrow_frame(
+        store.spark, [], "vec_id bigint, embedding array<float>"
     )
     sid = _stream_id(checkpoint_dir, name)
     return store.append(
@@ -252,8 +253,8 @@ def maintenance_tick(
                 # force a needless full reindex (round-10 review,
                 # finding 4). An empty epoch-bearing append is a
                 # metadata-only commit.
-                empty = store.spark.createDataFrame(
-                    [], "vec_id bigint, embedding array<float>"
+                empty = arrow_frame(
+                    store.spark, [], "vec_id bigint, embedding array<float>"
                 )
                 store.append(
                     name, empty, epoch=epoch, state={"cursor": nxt}

@@ -103,6 +103,20 @@ def test_existing_series_write_runs_one_job_per_value_type(
     assert spark_jobs() - before == value_types
 
 
+@pytest.mark.parametrize("route,jobs", [("influx", 3), ("remote_write", 2),
+                                        ("arrow", 2)])
+def test_first_publish_into_an_empty_lake_job_counts(
+        spark_jobs, gateway, route, jobs):
+    """The dimension probe of an empty lake reads an Arrow-built empty
+    frame (no job), so the first publish runs the value appends plus
+    the one commit of the new sensors."""
+    lake, client = gateway
+    write, value_types = WRITERS[route]
+    before = spark_jobs()
+    write(client, T0)
+    assert spark_jobs() - before == jobs == value_types + 1
+
+
 def test_noop_publish_keeps_history_and_pinned_dimension(
         spark_jobs, gateway, monkeypatch):
     lake, client = gateway

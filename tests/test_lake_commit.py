@@ -266,6 +266,28 @@ def test_vacuum_reclaims_stale_claim_temps(spark, tmp_path):
     assert resolve_table(path) is not None
 
 
+def test_commit_keeps_an_in_flight_append_staging_dir(spark, tmp_path):
+    """An append stages its job in a private `.stage_*` dir beside the
+    versions. A commit that prunes legacy data must leave it alone, or
+    the concurrent append's job commit fails with `_temporary/0 does
+    not exist`; a crashed writer's staging dir is reclaimed by the
+    age-gated vacuum."""
+    from sensapp_spark.storage.lake import STAGE_PREFIX, vacuum_orphans
+
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([("x", "n", "Float", None, None, {})],
+                               SENSOR_DDL)
+    atomic_overwrite(df, path)
+    stage = os.path.join(path, f"{STAGE_PREFIX}inflight", "_temporary")
+    os.makedirs(stage)
+    atomic_overwrite(df, path)
+    atomic_overwrite(df, path)
+    assert os.path.isdir(stage)
+    assert vacuum_orphans(path, min_age_s=3600) == []
+    assert vacuum_orphans(path, min_age_s=0.0) == [f"{STAGE_PREFIX}inflight"]
+    assert resolve_table(path) is not None
+
+
 def test_maintenance_folds_in_concurrent_append(spark, tmp_path):
     """Round 7: an append landing DURING a maintenance rewrite is no
     longer lost — the rewrite pins its read set, and post-commit
