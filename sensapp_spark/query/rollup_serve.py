@@ -676,7 +676,7 @@ def maintained_grains(
     quantile: bool = False,
 ) -> list[int]:
     """The grains (seconds, descending) with a COMMITTED rollup for
-    ``stype`` under this lake — one listdir + one committed-pointer
+    ``stype`` under this lake — one listdir + one commit-log
     read per candidate, no Spark jobs. Descending so the first
     serveable grain is the coarsest (fewest bucket rows scanned).
     ``sketch=True`` lists the bucket-keyed KMV/CMS sketch rollups

@@ -472,7 +472,7 @@ def create_app(
 
     def _committed_values(stype: SensorType, sensor_ids=None):
         """Remote-read scan source: None (no plan, no job) for a value
-        table that has never committed — one pointer read. Probed
+        table that has never committed — one commit-log read. Probed
         ``sensor_ids`` let the zone map skip files."""
         if lake.committed_seq(stype) is None:
             return None
@@ -562,7 +562,7 @@ def create_app(
         return [r.sensor_id for r in rows]
 
     def _numeric_types_present():
-        """Numeric value tables with a committed version — one pointer
+        """Numeric value tables with a committed version — one log
         read each, no Spark jobs. FLOAT is always included so an empty
         lake still plans the canonical empty scan."""
         from sensapp_spark.storage.rollup import RollupStore

@@ -25,8 +25,8 @@ scan the wrong lists (the similarity functions refuse stored layouts
 without an explicit codebook for this reason — similarity.py:517-523).
 So the store persists that metadata as a ``_ann_meta.json`` file
 INSIDE the committed version directory (underscore-prefixed → hidden
-to parquet scans, like ``_SUCCESS``): the pointer flip publishes data
-and metadata in ONE atomic step, so a reader that resolves the pointer
+to parquet scans, like ``_SUCCESS``): the commit-log claim publishes
+data and metadata in ONE atomic step, so a reader that resolves the log
 once can never pair one version's assignment with another's codebook —
 not even across a concurrent re-index or a writer crash mid-publish.
 
@@ -43,8 +43,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
-
-import shutil
 
 from sensapp_spark.ingest.frames import arrow_frame
 from sensapp_spark.pipeline.similarity import (
@@ -66,17 +64,13 @@ from sensapp_spark.pipeline.similarity import (
     train_sample,
 )
 from sensapp_spark.storage.lake import (
-    CommitConflict,
-    _backfill_legacy_entry,
-    _claim_commit,
-    _flip_current,
-    _is_stale_scan_error,
-    _next_version,
-    _prune_versions,
+    _write_blob,
     atomic_overwrite,
+    commit_version,
     dir_lock,
-    read_committed,
+    link_files,
     resolve_table,
+    retry_commit,
     vacuum_orphans,
 )
 
@@ -202,43 +196,23 @@ def _retrain_codebook(
     )
 
 
-def _clone_tree(
-    src: str,
-    dst: str,
-    skip: frozenset[str],
-    skip_rel: frozenset[str] = frozenset(),
-    _rel: str = "",
-) -> None:
-    """Hardlink-clone a committed version dir into a new one: directory
-    structure is recreated, every data file becomes a ``link(2)`` to
-    the same inode — O(number of files) metadata work, ZERO bytes
-    copied, so an append's cost is the appended batch, not the corpus.
-    The old version stays immutable (links share content, and neither
-    protocol ever rewrites a committed data file in place). Falls back
-    to a real copy across devices. On object storage this step is a
-    manifest copy instead — same shape, documented, not runnable here.
-
-    ``skip`` matches an entry NAME at any depth (sidecar files);
-    ``skip_rel`` matches a RELATIVE path from ``src`` — the partition
-    dirs a delete-bearing append rewrites instead of cloning (nested
-    multi-table LSH partitions like ``table=0/bucket=5`` need the
-    path form: skipping the name ``table=0`` would drop its untouched
-    sibling buckets too)."""
-    os.makedirs(dst, exist_ok=True)
-    for entry in os.listdir(src):
-        if entry in skip:
-            continue
-        rel = f"{_rel}/{entry}" if _rel else entry
-        if rel in skip_rel:
-            continue
-        s, d = os.path.join(src, entry), os.path.join(dst, entry)
-        if os.path.isdir(s):
-            _clone_tree(s, d, skip, skip_rel, rel)
-        else:
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
+def _clone_rels(data: str, rewritten: set[str]) -> list[str]:
+    """The files of committed version ``data`` that an append carries
+    into its new version by hard link (:func:`link_files` — O(files)
+    metadata, zero bytes copied, so an append's cost is the appended
+    batch, not the corpus): every file but the meta sidecar (each
+    version writes its own) and those under ``rewritten``, the
+    partition dirs (relative paths) a delete-bearing append rewrites
+    instead. Nested multi-table LSH partitions like
+    ``table=0/bucket=5`` are matched by path, so their untouched
+    sibling buckets are still linked."""
+    out = []
+    for root, dirs, files in os.walk(data):
+        rel = os.path.relpath(root, data)
+        rel = "" if rel == "." else rel
+        dirs[:] = [d for d in dirs if os.path.join(rel, d) not in rewritten]
+        out += [os.path.join(rel, f) for f in files if f != META_FILE]
+    return out
 
 
 class AnnIndexStore:
@@ -246,8 +220,8 @@ class AnnIndexStore:
     partitioned parquet table per index name, each committed version
     carrying its ``_ann_meta.json`` inside the version dir. Writes are
     serialized per-index by the same kernel-flock lock as the sensor
-    lake's maintenance ops and published by the pointer flip; reads
-    resolve the pointer ONCE and take data + meta from that same
+    lake's maintenance ops and published by a commit-log claim; reads
+    resolve the log ONCE and take data + meta from that same
     immutable version dir — consistency by construction, no reader
     lock."""
 
@@ -262,7 +236,7 @@ class AnnIndexStore:
         return os.path.join(self.root, name)
 
     def _resolve(self, name: str, kind: str | None) -> tuple[str, dict]:
-        """One pointer resolution → (version data dir, its meta).
+        """One log resolution → (version data dir, its meta).
         ``kind=None`` accepts any layout kind (drift reports)."""
         data = resolve_table(self._path(name))
         meta_path = data and os.path.join(data, META_FILE)
@@ -839,7 +813,7 @@ class AnnIndexStore:
         plane set(s) — and lands as new part files inside the matching
         centroid/bucket partition directories of a NEW COMMITTED
         VERSION: the previous version's data files are hardlink-cloned
-        (:func:`_clone_tree` — O(files) metadata, zero bytes copied),
+        (:func:`link_files` — O(files) metadata, zero bytes copied),
         the batch is parquet-appended into the clone, the refreshed
         meta is written INSIDE it, and the version commits through the
         same link(2) CAS claim as every lake table — so a concurrent
@@ -867,7 +841,7 @@ class AnnIndexStore:
         CAS, retries against the winner's version, sees the epoch, and
         skips. (Stronger than the lake's O_EXCL ledger: there is no
         check-then-act window at all, because the epoch record and the
-        data commit are one atomic pointer flip.)
+        data commit are one atomic log claim.)
 
         NAMESPACE the epoch like the lake does — pass
         ``(stream_id, batch_id)``, not the bare foreachBatch batch_id:
@@ -925,19 +899,11 @@ class AnnIndexStore:
             for col in ("centroid_id", "assign_cos", "bucket", "table"):
                 if col in del_src.columns:
                     del_src = del_src.drop(col)
-        for _ in range(max_retries):
-            # Idempotent: a pre-log (pointer-era) layout gets its
-            # pointer version recorded as log entry 0, so the old
-            # corpus-sized dir is retired on the normal prune schedule
-            # instead of lingering unreferenced forever.
-            _backfill_legacy_entry(path)
-            seq, data = read_committed(path)
+
+        def attempt(seq: int, data: str | None) -> dict | None:
             meta_path = data and os.path.join(data, META_FILE)
             if data is None or not os.path.exists(meta_path):
-                raise FileNotFoundError(
-                    f"no layout named {name!r} under {self.root} — "
-                    "write it first"
-                )
+                return None  # no layout: raised below, never retried
             with open(meta_path) as f:
                 meta = json.load(f)
             if epoch is not None and any(
@@ -1129,13 +1095,10 @@ class AnnIndexStore:
                 new_meta["n_vectors"] = max(
                     0, int(new_meta["n_vectors"]) + record["n"] - removed
                 )
-            version = _next_version(path)
-            vdir = os.path.join(path, version)
-            try:
-                _clone_tree(
-                    data, vdir, skip=frozenset({META_FILE}),
-                    skip_rel=frozenset(affected),
-                )
+
+            def fill(vdir: str) -> None:
+                os.makedirs(vdir)
+                link_files(data, vdir, _clone_rels(data, affected))
                 if rewritten is not None:
                     rewritten.write.mode("append").partitionBy(
                         *partition
@@ -1143,36 +1106,31 @@ class AnnIndexStore:
                 batch.write.mode("append").partitionBy(
                     *partition
                 ).parquet(vdir)
-                with open(os.path.join(vdir, META_FILE), "wb") as f:
-                    f.write(json.dumps(new_meta).encode())
-                    f.flush()
-                    os.fsync(f.fileno())
-                _claim_commit(path, seq + 1, version)
-            except CommitConflict:
-                shutil.rmtree(vdir, ignore_errors=True)
-                continue
-            except Exception as e:  # noqa: BLE001 — filtered below
-                # The pinned base dir can be pruned out from under the
-                # clone/write by two interleaved commits — staleness,
-                # not corruption: discard and retry against the newer
-                # committed version. Anything else propagates (with the
-                # orphan dir reclaimed).
-                shutil.rmtree(vdir, ignore_errors=True)
-                if isinstance(e, FileNotFoundError) or _is_stale_scan_error(
-                    e
-                ):
-                    continue
-                raise
+                _write_blob(
+                    os.path.join(vdir, META_FILE),
+                    json.dumps(new_meta).encode(),
+                )
+
+            # The pinned base dir can be pruned out from under the
+            # clone/write by two interleaved commits — staleness, not
+            # corruption: retry_commit retries against the newer
+            # committed version.
+            try:
+                commit_version(path, fill, seq)
             finally:
                 if cached is not None:
                     cached.unpersist()
-            _flip_current(path, version)
-            _prune_versions(path, seq + 1)
             return new_meta
-        raise CommitConflict(
-            f"append to {name!r} lost {max_retries} consecutive commit "
-            "races — pathological writer contention"
+
+        new_meta = retry_commit(
+            path, attempt, max_retries, f"append to {name!r}"
         )
+        if new_meta is None:
+            raise FileNotFoundError(
+                f"no layout named {name!r} under {self.root} — "
+                "write it first"
+            )
+        return new_meta
 
     def vacuum(
         self, name: str, min_age_s: float = 3600.0
@@ -1286,14 +1244,11 @@ class AnnIndexStore:
         same CAS protocol; ``epoch``/``state`` ride the record exactly
         as in :meth:`append`."""
         path = self._path(name)
-        for _ in range(max_retries):
-            _backfill_legacy_entry(path)
-            seq, data = read_committed(path)
+
+        def attempt(seq: int, data: str | None) -> dict | None:
             meta_path = data and os.path.join(data, META_FILE)
             if data is None or not os.path.exists(meta_path):
-                raise FileNotFoundError(
-                    f"no layout named {name!r} under {self.root}"
-                )
+                return None  # no layout: raised below, never retried
             with open(meta_path) as f:
                 meta = json.load(f)
             if epoch is not None and any(
@@ -1312,33 +1267,25 @@ class AnnIndexStore:
             )
             if "n_vectors" in new_meta:
                 new_meta["n_vectors"] = 0
-            version = _next_version(path)
-            vdir = os.path.join(path, version)
-            try:
-                empty = self.spark.read.parquet(data).limit(0)
-                empty.write.parquet(vdir)
-                with open(os.path.join(vdir, META_FILE), "wb") as f:
-                    f.write(json.dumps(new_meta).encode())
-                    f.flush()
-                    os.fsync(f.fileno())
-                _claim_commit(path, seq + 1, version)
-            except CommitConflict:
-                shutil.rmtree(vdir, ignore_errors=True)
-                continue
-            except Exception as e:  # noqa: BLE001 — filtered below
-                shutil.rmtree(vdir, ignore_errors=True)
-                if isinstance(e, FileNotFoundError) or _is_stale_scan_error(
-                    e
-                ):
-                    continue
-                raise
-            _flip_current(path, version)
-            _prune_versions(path, seq + 1)
+
+            def fill(vdir: str) -> None:
+                self.spark.read.parquet(data).limit(0).write.parquet(vdir)
+                _write_blob(
+                    os.path.join(vdir, META_FILE),
+                    json.dumps(new_meta).encode(),
+                )
+
+            commit_version(path, fill, seq)
             return new_meta
-        raise CommitConflict(
-            f"truncate of {name!r} lost {max_retries} consecutive "
-            "commit races"
+
+        new_meta = retry_commit(
+            path, attempt, max_retries, f"truncate of {name!r}"
         )
+        if new_meta is None:
+            raise FileNotFoundError(
+                f"no layout named {name!r} under {self.root}"
+            )
+        return new_meta
 
     def drift(
         self, name: str, reindex_ratio: float = 1.5,

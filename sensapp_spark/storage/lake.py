@@ -250,9 +250,13 @@ class SensorLake:
         for row in sensors.select(*SENSOR_SCHEMA.fieldNames()).collect():
             batch.setdefault(row.sensor_id, tuple(row))
         ids = sorted(batch)
-        for _ in range(max_retries):
-            seq, data = read_committed(path)
-            base = self._committed_sensors(seq, data)
+
+        def attempt(seq: int, data: str | None) -> None:
+            # An unpinned merge base (a parquet scan, see
+            # _committed_sensors) can lose its one-generation grace to
+            # TWO interleaved commits while the merge plan executes;
+            # retry_commit re-reads the (newer) base and retries.
+            base = self._committed_sensors(data)
             present = {
                 r.sensor_id
                 for r in base.filter(F.col("sensor_id").isin(ids))
@@ -266,27 +270,10 @@ class SensorLake:
             )
             if _pause_before_commit is not None:
                 _pause_before_commit()
-            try:
-                atomic_overwrite(merged, path, expected_seq=seq,
-                                 keep_generations=self.retain_generations)
-                return
-            except CommitConflict:
-                continue
-            except Exception as e:  # noqa: BLE001 — filtered below
-                # An unpinned merge base (a parquet scan, see
-                # _committed_sensors) can lose its one-generation grace
-                # to TWO interleaved commits while the merge plan
-                # executes — the scan then fails with a vanished-file
-                # error, which is staleness, not corruption: re-read the
-                # (newer) committed base and retry. Anything else
-                # propagates.
-                if _is_stale_scan_error(e):
-                    continue
-                raise
-        raise CommitConflict(
-            f"upsert_sensors lost {max_retries} consecutive commit races "
-            f"on {path} — pathological writer contention"
-        )
+            atomic_overwrite(merged, path, expected_seq=seq,
+                             keep_generations=self.retain_generations)
+
+        retry_commit(path, attempt, max_retries, "upsert_sensors")
 
     def append_values(self, stype: SensorType, df: DataFrame) -> None:
         # Replicate the reference's publisher policy: non-finite floats
@@ -398,17 +385,17 @@ class SensorLake:
         data = resolve_table(path)
         if data is not None:
             return data
-        os.makedirs(path, exist_ok=True)
-        version = _next_version(path)
-        os.makedirs(os.path.join(path, version), exist_ok=True)
-        _filelog_init(os.path.join(path, version), [])
+
+        def fill(vdir: str) -> None:
+            os.makedirs(vdir)
+            _filelog_init(vdir, [])
+
         try:
-            _claim_commit(path, 1, version)
+            commit_version(path, fill, expected_seq=0,
+                           keep_generations=self.retain_generations)
         except CommitConflict:
-            shutil.rmtree(os.path.join(path, version), ignore_errors=True)
-            return resolve_table(path)
-        _flip_current(path, version)
-        return os.path.join(path, version)
+            pass
+        return resolve_table(path)
 
     # -- read path -----------------------------------------------------------
 
@@ -430,27 +417,22 @@ class SensorLake:
         bytes are under Spark's own
         ``spark.sql.execution.arrow.localRelationThreshold`` is pinned
         (above it ``createDataFrame`` would ship the batches to
-        executors anyway); larger dimensions, legacy layouts without a
-        commit log (seq 0 — a flat legacy dir changes in place, so its
-        path is no version key) and ``at_seq`` reads get the plain
-        parquet scan."""
+        executors anyway); larger dimensions and ``at_seq`` reads get
+        the plain parquet scan."""
         path = self._sensors_path()
         if at_seq is None:
-            return self._committed_sensors(*read_committed(path))
+            return self._committed_sensors(resolve_table(path))
         data = resolve_at(path, at_seq)
         if data is None:
             return arrow_frame(self.spark, [], SENSOR_SCHEMA)
         return self._sensor_scan(data)
 
-    def _committed_sensors(self, seq: int, data: str | None) -> DataFrame:
-        """The rows of what :func:`read_committed` returned: the pinned
-        in-memory copy of version dir ``data`` while it is under the
-        pinning threshold, else a parquet scan (always one for a legacy
-        seq-0 layout)."""
+    def _committed_sensors(self, data: str | None) -> DataFrame:
+        """The rows of committed version dir ``data``: the pinned
+        in-memory copy while it is under the pinning threshold, else a
+        parquet scan."""
         if data is None:
             return arrow_frame(self.spark, [], SENSOR_SCHEMA)
-        if seq == 0:
-            return self._sensor_scan(data)
         pinned = self._pinned_sensors
         if pinned is None or pinned[0] != data:
             pinned = self._pinned_sensors = (data, self._pin_sensors(data))
@@ -1102,34 +1084,22 @@ class SensorLake:
             self.delete_where(st, cond, record_cdc=False, **kw)
             erased.append(st.name)
         path = self._sensors_path()
-        removed = False
-        for _ in range(8):
-            seq, data = read_committed(path)
+
+        def attempt(seq: int, data: str | None) -> bool:
             if data is None:
-                break
+                return False
             base = self.spark.read.schema(SENSOR_SCHEMA).parquet(data)
             if not base.filter(
                 F.col("sensor_id") == sensor_id
             ).limit(1).count():
-                break  # already absent (or erased by a lost-race retry)
-            kept = base.filter(F.col("sensor_id") != sensor_id)
-            try:
-                atomic_overwrite(
-                    kept, path, expected_seq=seq,
-                    keep_generations=self.retain_generations,
-                )
-                removed = True
-                break
-            except CommitConflict:
-                continue
-            except Exception as e:  # noqa: BLE001 — filtered below
-                if _is_stale_scan_error(e):
-                    continue
-                raise
-        else:
-            raise CommitConflict(
-                f"erase_sensor lost 8 consecutive commit races on {path}"
+                return False  # already absent (or erased by a retry)
+            atomic_overwrite(
+                base.filter(F.col("sensor_id") != sensor_id), path,
+                expected_seq=seq, keep_generations=self.retain_generations,
             )
+            return True
+
+        removed = retry_commit(path, attempt, 8, "erase_sensor")
         return {"values_erased": erased, "dimension_removed": removed}
 
     def expire_before(
@@ -1205,117 +1175,65 @@ class SensorLake:
     ) -> dict | None:
         """One table's expire: pin → hardlink kept files into a fresh
         version dir → carry filtered sidecars → conditional commit →
-        tombstone + manifest. Same locking/CAS/cleanup discipline as
-        :func:`atomic_overwrite` (claimed dirs are never deleted;
-        unclaimed ones are reclaimed on any exit)."""
+        tombstone + manifest. ``_test_after_pin`` is a test seam called
+        between the pin and the version fill."""
         if resolve_table(path) is None:
             return None
-        with self._dir_lock(path):
-            # Legacy flat tables get their commit-log entry 0 first, so
-            # the CAS claim below composes — the same upgrade step
-            # every other committer runs (atomic_overwrite).
-            _backfill_legacy_entry(path)
-            self._fold_manifest_extras(path, max_retries=max_retries)
-            for _ in range(max_retries):
-                seq, data = read_committed(path)
-                if data is None:
-                    return None
-                seen = _list_data_files(data)
-                kept_rels: list[str] = []
-                dropped_rels: list[str] = []
-                for f in seen:
-                    rel = os.path.relpath(f, data)
-                    m = zm._month_of(rel)
-                    if m is not None and m < cutoff_month:
-                        dropped_rels.append(rel)
-                    else:
-                        kept_rels.append(rel)
-                if not dropped_rels:
-                    return None
-                if _test_after_pin is not None:
-                    _test_after_pin()
-                months = sorted(
-                    {os.path.dirname(r) for r in dropped_rels}
-                )
-                version = _next_version(path)
-                vdir = os.path.join(path, version)
-                claimed = False
-                try:
-                    os.makedirs(vdir, exist_ok=True)
-                    for rel in kept_rels:
-                        dst = os.path.join(vdir, rel)
-                        os.makedirs(os.path.dirname(dst), exist_ok=True)
-                        try:
-                            os.link(os.path.join(data, rel), dst)
-                        except OSError:  # cross-device: degrade to copy
-                            shutil.copy2(os.path.join(data, rel), dst)
-                    doc = zm._read_doc(data)
-                    if (
-                        doc is not None
-                        and doc.get("sketch_geom") == zm._SKETCH_GEOM
-                    ):
-                        # Relative layout is identical (links preserve
-                        # paths), so the old entries transfer verbatim.
-                        # A stale-geometry doc is NOT carried: write_
-                        # zonemap would re-stamp sketch-less entries as
-                        # current and refresh would never rebuild them
-                        # (the documented re-stamp trap) — commit
-                        # map-less and let the next refresh rebuild.
-                        kept = set(kept_rels)
-                        zm.write_zonemap(
-                            vdir,
-                            {
-                                r: st_
-                                for r, st_ in doc["files"].items()
-                                if r in kept
-                            },
-                        )
-                    _filelog_init(
-                        vdir, [os.path.join(vdir, r) for r in kept_rels]
-                    )
-                    meta = json.dumps({
+
+        def attempt(seq: int, data: str | None):
+            if data is None:
+                return None
+            seen = _list_data_files(data)
+            kept_rels: list[str] = []
+            dropped_rels: list[str] = []
+            for f in seen:
+                rel = os.path.relpath(f, data)
+                m = zm._month_of(rel)
+                if m is not None and m < cutoff_month:
+                    dropped_rels.append(rel)
+                else:
+                    kept_rels.append(rel)
+            if not dropped_rels:
+                return None
+            if _test_after_pin is not None:
+                _test_after_pin()
+            months = sorted({os.path.dirname(r) for r in dropped_rels})
+
+            def fill(vdir: str) -> None:
+                _link_version(data, vdir, kept_rels)
+                _write_blob(
+                    os.path.join(vdir, CHANGES_META),
+                    json.dumps({
                         "base_seq": seq,
                         "preserved": False,
                         "has_removed": False,
                         "removed_dirs": months,
-                    }).encode()
-                    with open(
-                        os.path.join(vdir, CHANGES_META), "wb"
-                    ) as fh:
-                        fh.write(meta)
-                        fh.flush()
-                        os.fsync(fh.fileno())
-                    _claim_commit(path, seq + 1, version)
-                    claimed = True
-                except CommitConflict:
-                    shutil.rmtree(vdir, ignore_errors=True)
-                    continue
-                except BaseException:
-                    if not claimed:
-                        shutil.rmtree(vdir, ignore_errors=True)
-                    raise
-                _flip_current(path, version)
-                _prune_versions(
-                    path, seq + 1, self.retain_generations
+                    }).encode(),
                 )
-                # Tombstone BEFORE the manifest (the delete_where
-                # ordering): no fold can run against the superseded
-                # dir without seeing the predicate.
-                _write_tombstone(
-                    path, f"{MONTH_COL} < '{cutoff_month}'", seq + 1
-                )
-                _write_manifest(data, set(seen))
-                return {
-                    "months": [
-                        m.split("=", 1)[1] for m in months
-                    ],
-                    "files": len(dropped_rels),
-                    "seq": seq + 1,
-                }
-            raise CommitConflict(
-                f"expire_before lost {max_retries} consecutive commit "
-                f"races on {path}"
+
+            new_seq = commit_version(
+                path, fill, seq, self.retain_generations
             )
+            return new_seq, data, seen, months, len(dropped_rels)
+
+        with self._dir_lock(path):
+            self._fold_manifest_extras(path, max_retries=max_retries)
+            res = retry_commit(path, attempt, max_retries, "expire_before")
+            if res is None:
+                return None
+            new_seq, data, seen, months, n_dropped = res
+            # Tombstone BEFORE the manifest (the delete_where ordering):
+            # no fold can run against the superseded dir without seeing
+            # the predicate.
+            _write_tombstone(
+                path, f"{MONTH_COL} < '{cutoff_month}'", new_seq
+            )
+            _write_manifest(data, set(seen))
+            return {
+                "months": [m.split("=", 1)[1] for m in months],
+                "files": n_dropped,
+                "seq": new_seq,
+            }
 
     def clone_to(self, dest_root: str) -> "SensorLake":
         """Zero-copy SHALLOW CLONE (Delta ``SHALLOW CLONE`` analogue,
@@ -1371,40 +1289,14 @@ class SensorLake:
                 data = resolve_table(src_path)
                 if data is None:
                     continue
-                files = _scan_file_list(data)
-                os.makedirs(dst_path, exist_ok=True)
-                version = _next_version(dst_path)
-                vdir = os.path.join(dst_path, version)
-                os.makedirs(vdir, exist_ok=True)
-                rels = []
-                for f in files:
-                    rel = os.path.relpath(f, data)
-                    rels.append(rel)
-                    dst = os.path.join(vdir, rel)
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    try:
-                        os.link(f, dst)
-                    except OSError:  # cross-device: degrade to copy
-                        shutil.copy2(f, dst)
-                doc = zm._read_doc(data)
-                if (
-                    doc is not None
-                    and doc.get("sketch_geom") == zm._SKETCH_GEOM
-                ):
-                    keep = set(rels)
-                    zm.write_zonemap(
-                        vdir,
-                        {
-                            r: st_
-                            for r, st_ in doc["files"].items()
-                            if r in keep
-                        },
-                    )
-                _filelog_init(
-                    vdir, [os.path.join(vdir, r) for r in rels]
+                rels = [
+                    os.path.relpath(f, data) for f in _scan_file_list(data)
+                ]
+                commit_version(
+                    dst_path,
+                    lambda vdir: _link_version(data, vdir, rels),  # noqa: B023
+                    expected_seq=0,
                 )
-                _claim_commit(dst_path, 1, version)
-                _flip_current(dst_path, version)
         except BaseException:
             for _, dst_path in pairs:
                 shutil.rmtree(dst_path, ignore_errors=True)
@@ -1588,13 +1480,13 @@ class SensorLake:
             return
         with self._dir_lock(path):
             self._fold_manifest_extras(path, max_retries=max_retries)
-            for _ in range(max_retries):
-                seq, data = read_committed(path)
+
+            def attempt(seq: int, data: str | None):
                 if data is None:
-                    return
+                    return None
                 seen = _list_data_files(data)
                 if not seen:
-                    return
+                    return None
                 src = self.spark.read.option("basePath", data).parquet(
                     *seen
                 )
@@ -1614,27 +1506,22 @@ class SensorLake:
                             cdc_removed(src).dropDuplicates()
                         )
                     }
-                try:
-                    atomic_overwrite(
-                        transform(src), path,
-                        partition_by=MONTH_COL, expected_seq=seq,
-                        keep_generations=self.retain_generations,
-                        collect_stats=True,
-                        extra_files={CHANGES_META: cdc_meta},
-                        side_tables=side,
-                    )
-                except CommitConflict:
-                    continue
-                except Exception as e:  # noqa: BLE001 — filtered below
-                    if _is_stale_scan_error(e):
-                        continue
-                    raise
-                break
-            else:
-                raise CommitConflict(
-                    f"maintenance rewrite of {path} lost {max_retries} "
-                    "consecutive commit races"
+                atomic_overwrite(
+                    transform(src), path,
+                    partition_by=MONTH_COL, expected_seq=seq,
+                    keep_generations=self.retain_generations,
+                    collect_stats=True,
+                    extra_files={CHANGES_META: cdc_meta},
+                    side_tables=side,
                 )
+                return seq, data, seen
+
+            pinned = retry_commit(
+                path, attempt, max_retries, "maintenance rewrite"
+            )
+            if pinned is None:
+                return
+            seq, data, seen = pinned
             # Post-commit reconciliation: fold in appends that resolved
             # the superseded version while the rewrite ran. The manifest
             # goes in FIRST, before any further commit can prune `data`
@@ -1670,54 +1557,56 @@ class SensorLake:
                         continue
                     return
                 fold_attempts += 1
-                cur_seq, cur = read_committed(path)
-                late_df = self.spark.read.option(
-                    "basePath", data
-                ).parquet(*late)
-                # Explicit schema (from the late files, which always
-                # exist here): a delete that matched every row commits
-                # an EMPTY version dir, and a schema-less read of it
-                # would die with UNABLE_TO_INFER_SCHEMA — wedging the
-                # very fold that protects the erasure (third review
-                # pass, finding 1).
-                cur_df = self.spark.read.schema(late_df.schema).parquet(
-                    cur
-                )
-                # Laggards folded here resolved the superseded version
-                # (seq = the pinned base): EARLIER deletes' tombstones
-                # apply to them exactly as in _fold_manifest_extras —
-                # a dedup/compaction fold must not resurrect rows a
-                # prior delete_where erased.
-                late_df = _apply_tombstones(path, late_df, seq)
-                if fold_scope == "late":
-                    # The transform filters ROWS independently (a
-                    # delete predicate): apply it to the late files
-                    # only. Re-applying it to `cur` would also hit
-                    # rows appended AFTER the main commit (appends
-                    # land in the current version without bumping the
-                    # seq) — destroying legitimately-new data (second
-                    # round-8 review pass, finding 2).
-                    merged = cur_df.unionByName(transform(late_df))
-                else:
-                    # Cross-set transforms (dedup, compaction) need
-                    # the whole union: a late duplicate must dedup
-                    # against current rows.
-                    merged = transform(cur_df.unionByName(late_df))
-                try:
+
+                def fold(cur_seq: int, cur: str | None) -> None:
+                    late_df = self.spark.read.option(
+                        "basePath", data
+                    ).parquet(*late)
+                    # Explicit schema (from the late files, which always
+                    # exist here): a delete that matched every row
+                    # commits an EMPTY version dir, and a schema-less
+                    # read of it would die with UNABLE_TO_INFER_SCHEMA —
+                    # wedging the very fold that protects the erasure
+                    # (third review pass, finding 1).
+                    cur_df = self.spark.read.schema(
+                        late_df.schema
+                    ).parquet(cur)
+                    # Laggards folded here resolved the superseded
+                    # version (seq = the pinned base): EARLIER deletes'
+                    # tombstones apply to them exactly as in
+                    # _fold_manifest_extras — a dedup/compaction fold
+                    # must not resurrect rows a prior delete_where
+                    # erased.
+                    late_df = _apply_tombstones(path, late_df, seq)
+                    if fold_scope == "late":
+                        # The transform filters ROWS independently (a
+                        # delete predicate): apply it to the late files
+                        # only. Re-applying it to `cur` would also hit
+                        # rows appended AFTER the main commit (appends
+                        # land in the current version without bumping
+                        # the seq) — destroying legitimately-new data
+                        # (second round-8 review pass, finding 2).
+                        merged = cur_df.unionByName(transform(late_df))
+                    else:
+                        # Cross-set transforms (dedup, compaction) need
+                        # the whole union: a late duplicate must dedup
+                        # against current rows.
+                        merged = transform(cur_df.unionByName(late_df))
                     atomic_overwrite(
                         merged, path,
                         partition_by=MONTH_COL, expected_seq=cur_seq,
                         keep_generations=self.retain_generations,
                         collect_stats=True,
                     )
-                    known |= set(late)
-                    _write_manifest(data, known)
+
+                # One attempt per fold round under the shared staleness
+                # rule; the quiesce loop above is the retry budget.
+                try:
+                    retry_commit(path, fold, 1, "maintenance fold")
                 except CommitConflict:
                     continue
-                except Exception as e:  # noqa: BLE001
-                    if _is_stale_scan_error(e):
-                        continue
-                    raise
+                known |= set(late)
+                _write_manifest(data, known)
             # Fold-retry budget exhausted: safe to leave — whatever is
             # not yet in the manifest is folded by the next maintenance
             # pass (step 0) or vacuum's fold; nothing is lost.
@@ -1755,10 +1644,10 @@ class SensorLake:
             extras = [f for f in _list_data_files(full) if f not in known]
             if not extras:
                 continue
-            for _ in range(max_retries):
-                cur_seq, cur_data = read_committed(path)
+
+            def fold(cur_seq: int, cur_data: str | None) -> bool:
                 if cur_data is None:
-                    break
+                    return False
                 extras_df = self.spark.read.option(
                     "basePath", full
                 ).parquet(*extras)
@@ -1770,21 +1659,20 @@ class SensorLake:
                 merged = self.spark.read.schema(extras_df.schema).parquet(
                     cur_data
                 ).unionByName(extras_df)
-                try:
-                    atomic_overwrite(
-                        merged, path,
-                        partition_by=MONTH_COL, expected_seq=cur_seq,
-                        keep_generations=self.retain_generations,
-                        collect_stats=True,
-                    )
-                except CommitConflict:
-                    continue
-                except Exception as e:  # noqa: BLE001
-                    if _is_stale_scan_error(e):
-                        continue
-                    raise
+                atomic_overwrite(
+                    merged, path,
+                    partition_by=MONTH_COL, expected_seq=cur_seq,
+                    keep_generations=self.retain_generations,
+                    collect_stats=True,
+                )
+                return True
+
+            try:
+                folded = retry_commit(path, fold, max_retries, "manifest fold")
+            except CommitConflict:
+                continue  # retries exhausted: the next pass folds them
+            if folded:
                 _write_manifest(full, known | set(extras))
-                break
 
     # -- zone-map maintenance --------------------------------------------
 
@@ -2089,7 +1977,6 @@ def dir_lock(path: str, timeout: float = 30.0):
         os.close(fd)
 
 
-CURRENT_PTR = "_CURRENT"
 COMMITS_DIR = "_commits"
 TOMBSTONES_DIR = "_tombstones"
 # Per-version change-capture sidecar (round 9): meta json at the
@@ -2120,12 +2007,16 @@ def _object_age_s(path: str) -> float | None:
 
 
 def _is_stale_scan_error(exc: Exception) -> bool:
-    """A Spark job failed because the files it planned against vanished
-    mid-execution. Under the CAS protocol this happens when a pinned
-    merge base loses its one-generation reader grace to TWO interleaved
-    commits from other writers — semantically the same staleness as a
-    lost claim, so retry loops treat it as a conflict. Detection is by
-    message (the JVM error classes surface through Py4J as text)."""
+    """The files an attempt planned against vanished mid-execution.
+    Under the CAS protocol this happens when a pinned merge base loses
+    its one-generation reader grace to TWO interleaved commits from
+    other writers — semantically the same staleness as a lost claim,
+    so :func:`retry_commit` treats it as a conflict. Two shapes: a
+    Spark job failing on a vanished file (the JVM error classes
+    surface through Py4J as text), and a driver-side Python
+    ``FileNotFoundError`` (hard-linking or listing a pruned base)."""
+    if isinstance(exc, FileNotFoundError):
+        return True
     text = str(exc)
     return any(
         marker in text
@@ -2661,30 +2552,17 @@ def _entry_version(path: str, seq: int) -> str:
 def read_committed(path: str) -> tuple[int, str | None]:
     """The table's committed state as ``(seq, live data dir)`` — the
     CAS read half: a writer merges against this dir and passes this seq
-    as ``expected_seq`` to :func:`atomic_overwrite`.
+    as ``expected_seq`` to :func:`commit_version`.
 
-    Resolution order: highest READABLE commit-log entry (the
-    cross-host authority; an unreadable top entry is a claim whose PUT
-    never completed — a crashed writer on the emulated object store —
-    and resolution falls back to its predecessor, exactly as if the
-    claim had not happened yet) → legacy ``_CURRENT`` pointer (pre-log
-    tables, seq 0) → legacy flat directory (seq 0) → ``(0, None)`` for
-    a never-written table."""
-    entries = _log_entries(path)
-    for seq in reversed(entries):
+    The commit log is the only table state: the highest READABLE log
+    entry wins (an unreadable top entry is a claim whose PUT never
+    completed — a crashed writer on the emulated object store — and
+    resolution falls back to its predecessor, exactly as if the claim
+    had not happened yet), else ``(0, None)`` for a never-written
+    table."""
+    for seq in reversed(_log_entries(path)):
         with contextlib.suppress(OSError):
             return seq, os.path.join(path, _entry_version(path, seq))
-    ptr_content = get_store().read(os.path.join(path, CURRENT_PTR))
-    if ptr_content is not None:
-        return 0, os.path.join(path, ptr_content.decode().strip())
-    if os.path.isdir(path):
-        legacy = [
-            d for d in os.listdir(path)
-            if not (d.startswith(".") or d.startswith("v_")
-                    or d in (CURRENT_PTR, COMMITS_DIR, TOMBSTONES_DIR))
-        ]
-        if legacy:
-            return 0, path
     return 0, None
 
 
@@ -2745,12 +2623,10 @@ def table_history(path: str) -> list[dict]:
 
 def resolve_table(path: str) -> str | None:
     """The directory holding the table's LIVE data files (the read-only
-    half of :func:`read_committed`): highest commit-log entry, else the
-    legacy ``_CURRENT`` pointer, else ``path`` itself for a legacy flat
-    directory, else ``None`` for a never-written table. A table dir
-    holding only uncommitted version dirs / pointer temps (a first
-    commit in flight) reads as "never written", not as an empty legacy
-    table."""
+    half of :func:`read_committed`): the highest commit-log entry's
+    version dir, else ``None`` for a never-written table — including
+    one holding only uncommitted version dirs (a first commit in
+    flight)."""
     return read_committed(path)[1]
 
 
@@ -2783,8 +2659,7 @@ def _fsync_dir(path: str) -> None:
         pass
 
 
-def _claim_commit(path: str, seq: int, version: str,
-                  tolerate_existing: bool = False) -> None:
+def _claim_commit(path: str, seq: int, version: str) -> None:
     """Atomically claim commit ``seq`` for ``version`` — the CAS
     primitive, expressed as the log store's CONDITIONAL CREATE
     (``LogStore.put_if_absent``): exactly one writer, on any host,
@@ -2799,19 +2674,10 @@ def _claim_commit(path: str, seq: int, version: str,
     created = get_store().put_if_absent(
         os.path.join(cdir, f"{seq:08d}"), version.encode()
     )
-    if not created and not tolerate_existing:
+    if not created:
         raise CommitConflict(
             f"commit {seq} of {path} was claimed by another writer"
         )
-
-
-def _flip_current(path: str, version: str) -> None:
-    """Refresh the legacy ``_CURRENT`` pointer cache (pre-log readers;
-    also a human-friendly marker) — an atomic last-writer-wins put.
-    Under concurrent cross-host writers two flips can land out of
-    order — harmless: every log-aware reader prefers the commit log,
-    and log-less readers predate the concurrent-writer support."""
-    get_store().put(os.path.join(path, CURRENT_PTR), version.encode())
 
 
 # Commit-log entries retained beyond the pruned versions (tiny files;
@@ -2830,16 +2696,12 @@ def _prune_versions(path: str, seq: int, keep_generations: int = 2) -> None:
 
     A ``v_`` dir NOT referenced by any log entry is never touched here:
     under cross-host CAS it may be another writer's in-flight commit,
-    and deleting it would corrupt that writer's claim. (The pre-log
-    protocol could safely sweep such orphans because every committer
-    held the table flock; that assumption is gone.) Genuinely crashed
-    writers' dirs are reclaimed by :func:`vacuum_orphans`, which is
-    age-gated and explicitly invoked by maintenance.
-
-    Once a committed predecessor exists in the log (the same grace
-    legacy readers get), a migrated table's pre-versioning flat data
-    entries are removed too; otherwise they would linger as a
-    permanent stale copy of the table."""
+    and deleting it would corrupt that writer's claim. Nothing else in
+    the table root is touched either: an in-flight append's staging
+    dir or another committer's metadata temp belongs to a live writer.
+    Genuinely crashed writers' leftovers are reclaimed by
+    :func:`vacuum_orphans`, which is age-gated and explicitly invoked
+    by maintenance."""
     entries = _log_entries(path)
     keep = {s for s in entries if s >= seq - (keep_generations - 1)}
     keep_entries = max(_KEEP_LOG_ENTRIES, keep_generations)
@@ -2873,46 +2735,24 @@ def _prune_versions(path: str, seq: int, keep_generations: int = 2) -> None:
             get_store().delete(
                 os.path.join(path, COMMITS_DIR, f"{s:08d}")
             )
-    if len(entries) >= 2:
-        for d in os.listdir(path):
-            # Everything that is not a version dir, the commit log, the
-            # pointer, an in-flight pointer temp or an in-flight
-            # append's private staging dir is legacy data (including
-            # Spark's hidden .crc shadows). A staging dir removed here
-            # fails the concurrent append's job commit; a crashed
-            # writer's is vacuum_orphans' age-gated job.
-            if d.startswith(("v_", ".ptr_", STAGE_PREFIX)) or d in (
-                CURRENT_PTR, COMMITS_DIR, TOMBSTONES_DIR
-            ):
-                continue
-            full = os.path.join(path, d)
-            if os.path.isdir(full):
-                shutil.rmtree(full, ignore_errors=True)
-            else:
-                with contextlib.suppress(OSError):
-                    os.unlink(full)
 
 
 def vacuum_orphans(path: str, min_age_s: float = 3600.0) -> list[str]:
     """Reclaim crashed writers' never-committed version dirs — delete
     ``v_`` dirs that are (a) not referenced by any commit-log entry and
-    not the legacy pointer's target, and (b) older than ``min_age_s``
-    (mtime) — plus SUPERSEDED MANIFESTED dirs (rewrite-retired versions
-    under the append-grace contract) once they are quiescent, fully
-    folded, and aged. The age gate is what distinguishes a crash orphan
+    (b) older than ``min_age_s`` (mtime) — plus SUPERSEDED MANIFESTED
+    dirs (rewrite-retired versions under the append-grace contract)
+    once they are quiescent, fully folded, and aged. The age gate is what distinguishes a crash orphan
     from a live cross-host writer's in-flight commit, so this is an
     explicit maintenance operation, not part of the commit path.
     Returns the deleted names."""
     if not os.path.isdir(path):
         return []
+    entries = _log_entries(path)
     referenced = set()
-    for s in _log_entries(path):
+    for s in entries:
         with contextlib.suppress(OSError):
             referenced.add(_entry_version(path, s))
-    ptr_content = get_store().read(os.path.join(path, CURRENT_PTR))
-    if ptr_content is not None:
-        referenced.add(ptr_content.decode().strip())
-    entries = _log_entries(path)
     current_version = None
     if entries:
         with contextlib.suppress(OSError):
@@ -2920,7 +2760,7 @@ def vacuum_orphans(path: str, min_age_s: float = 3600.0) -> list[str]:
     now = time.time()
     deleted = []
     for d in os.listdir(path):
-        if not d.startswith(("v_", ".ptr_", STAGE_PREFIX)):
+        if not d.startswith(("v_", STAGE_PREFIX)):
             continue
         full = os.path.join(path, d)
         has_manifest = os.path.isdir(full) and os.path.exists(
@@ -2971,22 +2811,140 @@ def vacuum_orphans(path: str, min_age_s: float = 3600.0) -> list[str]:
     return deleted
 
 
-def _backfill_legacy_entry(path: str) -> None:
-    """First log commit over a PRE-LOG pointer table: record the
-    pointer's version as log entry 0, so the log fully describes the
-    table's history and the prune rule can retire the pointer-era
-    version on schedule (an unreferenced dir would otherwise linger
-    forever — the prune path refuses to guess about those). Idempotent
-    and claim-tolerant: two migrating writers both backfill the SAME
-    content, so a lost race is not a conflict."""
-    if _log_entries(path):
-        return
-    ptr_content = get_store().read(os.path.join(path, CURRENT_PTR))
-    if ptr_content is not None:
-        _claim_commit(
-            path, 0, ptr_content.decode().strip(),
-            tolerate_existing=True,
+def commit_version(
+    path: str,
+    fill,
+    expected_seq: int | None = None,
+    keep_generations: int = 2,
+) -> int:
+    """Commit one new version of the table at ``path`` — the one place
+    a version is named, claimed, cleaned up and pruned. A fresh
+    IMMUTABLE version dir is named (:func:`_next_version`) and handed
+    to ``fill(vdir)``, which writes the version's complete content
+    (data files and every sidecar that must commit atomically with
+    them). The next commit-log sequence is then claimed for it
+    (:func:`_claim_commit`); readers resolve the highest log entry, so
+    they observe the old committed version or the new one, never a
+    partial state. Returns the committed sequence number.
+
+    ``expected_seq`` makes the claim CONDITIONAL — the write half of an
+    optimistic read-merge-write transaction (:func:`retry_commit`):
+    the writer claims ``expected_seq + 1``, and if any other writer
+    (same host or another — the claim is a conditional create, not a
+    per-kernel flock) committed in between, :class:`CommitConflict`
+    is raised so the caller re-reads and re-merges. The reference
+    delegates the same job to its database transaction
+    (src/storage/sqlite/storage.rs:69-77); a Delta/Iceberg deployment
+    to the table log's conditional commit. ``expected_seq=None`` is
+    last-writer-wins (full-table rewrites that merge no concurrent
+    state): the claim retries with fresh sequence numbers until it
+    lands.
+
+    A version dir that was never claimed is unreferenced by
+    construction and is removed on ANY exit — failed fill, lost claim,
+    interrupt. A claimed one is referenced by a durable log entry and
+    is never deleted here, even if an interrupt lands right after the
+    claim. After the claim, :func:`_prune_versions` retires versions
+    older than ``keep_generations``, trusting only the commit log."""
+    os.makedirs(path, exist_ok=True)
+    version = _next_version(path)
+    vdir = os.path.join(path, version)
+    claimed = False
+    try:
+        fill(vdir)
+        if expected_seq is not None:
+            seq = expected_seq + 1
+            _claim_commit(path, seq, version)
+        else:
+            for _ in range(1000):  # unconditional: last-writer-wins
+                seq = read_committed(path)[0] + 1
+                try:
+                    _claim_commit(path, seq, version)
+                    break
+                except CommitConflict:
+                    continue
+            else:  # pragma: no cover — 1000 lost races = a stuck log
+                raise CommitConflict(f"could not claim a commit on {path}")
+        claimed = True
+    except BaseException:
+        if not claimed:
+            shutil.rmtree(vdir, ignore_errors=True)
+        raise
+    _prune_versions(path, seq, keep_generations)
+    return seq
+
+
+def retry_commit(path: str, attempt, max_retries: int, what: str):
+    """The one optimistic-concurrency loop: read the table's committed
+    state, run ``attempt(seq, data)`` against it (which commits through
+    :func:`commit_version` with ``expected_seq=seq``, or returns early
+    when there is nothing to do) and return its result. A lost claim
+    (:class:`CommitConflict`) or a stale base (:func:`_is_stale_scan_error`
+    — the pinned version was pruned under the attempt) re-reads and
+    retries; anything else propagates. After ``max_retries`` stale
+    attempts it raises :class:`CommitConflict` chained from the last
+    error, so a permanent failure stays visible as the cause."""
+    last: Exception | None = None
+    for _ in range(max_retries):
+        seq, data = read_committed(path)
+        try:
+            return attempt(seq, data)
+        except Exception as e:  # noqa: BLE001 — filtered below
+            if not (
+                isinstance(e, CommitConflict) or _is_stale_scan_error(e)
+            ):
+                raise
+            last = e
+    raise CommitConflict(
+        f"{what} lost {max_retries} consecutive commit races on {path}"
+    ) from last
+
+
+def link_files(src: str, dst: str, rels) -> None:
+    """Clone the relative paths ``rels`` of version dir ``src`` into
+    ``dst``: each file becomes a ``link(2)`` to the same inode —
+    O(files) metadata, zero bytes copied — degrading to a real copy
+    across devices (or on a store without hard links). Safe because
+    committed data files are IMMUTABLE: no writer ever rewrites one in
+    place. A source pruned meanwhile raises ``FileNotFoundError``,
+    which :func:`retry_commit` treats as a stale base."""
+    for rel in rels:
+        s, d = os.path.join(src, rel), os.path.join(dst, rel)
+        os.makedirs(os.path.dirname(d), exist_ok=True)
+        try:
+            os.link(s, d)
+        except OSError:  # cross-device: degrade to copy
+            shutil.copy2(s, d)
+
+
+def _link_version(src: str, vdir: str, rels) -> None:
+    """Fill ``vdir`` with the files ``rels`` of committed version
+    ``src`` (:func:`link_files`), their zone-map entries and a fresh
+    file log — the metadata-only version of expire and clone. The
+    zone-map entries transfer verbatim (links preserve the relative
+    layout; sketch folds are per-file, so they stay exact). A
+    stale-geometry doc is NOT carried: write_zonemap would re-stamp
+    sketch-less entries as current and refresh would never rebuild
+    them — the version commits map-less and the next refresh
+    rebuilds."""
+    os.makedirs(vdir)
+    link_files(src, vdir, rels)
+    doc = zm._read_doc(src)
+    if doc is not None and doc.get("sketch_geom") == zm._SKETCH_GEOM:
+        keep = set(rels)
+        zm.write_zonemap(
+            vdir, {r: st for r, st in doc["files"].items() if r in keep}
         )
+    _filelog_init(vdir, [os.path.join(vdir, r) for r in rels])
+
+
+def _write_blob(path: str, blob: bytes) -> None:
+    """A small sidecar inside an uncommitted version dir, fsynced so it
+    is durable before the claim that publishes it."""
+    with open(path, "wb") as f:
+        f.write(blob)
+        f.flush()
+        os.fsync(f.fileno())
 
 
 def atomic_overwrite(
@@ -2999,38 +2957,12 @@ def atomic_overwrite(
     collect_stats: bool = False,
     side_tables: dict[str, DataFrame] | None = None,
 ) -> int:
-    """CAS commit protocol: write a fresh IMMUTABLE version directory
-    under the table path, then atomically claim the next commit-log
-    sequence number for it (``link(2)`` of a fsynced entry file —
-    :func:`_claim_commit`). Readers resolve the highest log entry, so
-    they observe the old committed version or the new one, never a
-    partial state. Returns the committed sequence number.
+    """Commit ``df`` as the table's next version (:func:`commit_version`
+    — conditional on ``expected_seq`` when given, last-writer-wins
+    otherwise). Returns the committed sequence number.
 
-    ``expected_seq`` makes the commit CONDITIONAL — the write half of
-    an optimistic read-merge-write transaction: pass the sequence
-    :func:`read_committed` returned when the caller read its merge
-    base, and if any other writer (same host or another — the claim is
-    a filesystem-atomic ``link``, not a per-kernel flock) committed in
-    between, the claim of ``expected_seq + 1`` fails, this writer's
-    version dir is discarded, and :class:`CommitConflict` is raised so
-    the caller re-reads and re-merges. This is what closes the
-    cross-host lost-update window the round-6 verdict flagged: the
-    reference delegates the same job to its database transaction
-    (src/storage/sqlite/storage.rs:69-77); a Delta/Iceberg deployment
-    delegates it to the table log's conditional commit.
-
-    ``expected_seq=None`` is an UNCONDITIONAL overwrite (full-table
-    rewrites whose content does not merge concurrent state —
-    maintenance compaction, materialized snapshots, ANN layout
-    builds): the claim retries with fresh sequence numbers until it
-    lands, i.e. last-writer-wins.
-
-    The PREVIOUS committed version is retained through the next commit
-    (one full generation of grace for in-flight readers) before
-    pruning; pruning itself trusts only the commit log, so a
-    concurrent writer's in-flight version dir is never touched
-    (:func:`_prune_versions`).
-
+    The version dir also receives its file log's entry 0 and, with
+    ``collect_stats``, its zone-map sidecar, both before the claim.
     ``extra_files`` land INSIDE the version dir before the claim, so
     table-level metadata (e.g. an ANN index's codebook) commits
     atomically WITH its data — a reader resolving the log once can
@@ -3041,45 +2973,29 @@ def atomic_overwrite(
     a rewrite's removed-keys change feed, ``_changes/removed``) — the
     same leading-``_``/``.`` rule applies, which also hides them from
     the main table's scan."""
-    os.makedirs(path, exist_ok=True)
-    _backfill_legacy_entry(path)
-    version = _next_version(path)
-    claimed = False
-    try:
+    for name in [*(side_tables or {}), *(extra_files or {})]:
+        if not name.startswith(("_", ".")):
+            raise ValueError(
+                f"sidecar {name!r} must start with '_' or '.' so "
+                "parquet scans skip it"
+            )
+
+    def fill(vdir: str) -> None:
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(partition_by)
-        writer.parquet(os.path.join(path, version))
+        writer.parquet(vdir)
         for name, sdf in (side_tables or {}).items():
-            if not name.startswith(("_", ".")):
-                raise ValueError(
-                    f"side table {name!r} must start with '_' or '.' so "
-                    "parquet scans skip it"
-                )
-            sdf.write.mode("overwrite").parquet(
-                os.path.join(path, version, name)
-            )
+            sdf.write.mode("overwrite").parquet(os.path.join(vdir, name))
         for name, blob in (extra_files or {}).items():
-            if not name.startswith(("_", ".")):
-                raise ValueError(
-                    f"extra file {name!r} must start with '_' or '.' so "
-                    "parquet scans skip it"
-                )
-            with open(os.path.join(path, version, name), "wb") as f:
-                f.write(blob)
-                f.flush()
-                os.fsync(f.fileno())
-        vdir = os.path.join(path, version)
+            _write_blob(os.path.join(vdir, name), blob)
         initial_files = _list_data_files(vdir)
         # Entry 0 of the version's file log: its initial file set —
         # what the changes feed and predicated scans diff against
-        # (metadata work ∝ appends, not table size). Pre-claim, so it
-        # commits atomically with the version.
+        # (metadata work ∝ appends, not table size).
         _filelog_init(vdir, initial_files)
         if collect_stats:
-            # Zone-map sidecar for file skipping (storage/zonemap.py),
-            # built BEFORE the claim so it commits atomically with the
-            # version it describes — the same contract as extra_files.
+            # Zone-map sidecar for file skipping (storage/zonemap.py).
             # The writing df carries the session, so a rewrite's
             # full-version stat collection fans out across executors.
             # Best-effort like every sidecar build: a failed stat job
@@ -3091,32 +3007,5 @@ def atomic_overwrite(
                 )
             except Exception:  # noqa: BLE001
                 pass
-        if expected_seq is not None:
-            _claim_commit(path, expected_seq + 1, version)
-            claimed = True
-            seq = expected_seq + 1
-        else:
-            for _ in range(1000):  # unconditional: last-writer-wins
-                seq = read_committed(path)[0] + 1
-                try:
-                    _claim_commit(path, seq, version)
-                    claimed = True
-                    break
-                except CommitConflict:
-                    continue
-            else:  # pragma: no cover — 1000 lost races = a stuck log
-                raise CommitConflict(f"could not claim a commit on {path}")
-    except BaseException:
-        # Never-claimed version dirs are unreferenced by construction —
-        # reclaim now (failed write, lost claim, stale-base scan error,
-        # interrupt) rather than leaving them for vacuum_orphans. The
-        # ``claimed`` flag is what makes this safe against an interrupt
-        # landing AFTER the link(2) claim: a claimed dir is referenced
-        # by a durable log entry and must never be deleted (round-7
-        # review, second pass).
-        if not claimed:
-            shutil.rmtree(os.path.join(path, version), ignore_errors=True)
-        raise
-    _flip_current(path, version)
-    _prune_versions(path, seq, keep_generations)
-    return seq
+
+    return commit_version(path, fill, expected_seq, keep_generations)

@@ -9,9 +9,8 @@ filesystem:
   so that exactly ONE writer, on any host, wins a given sequence
   number — content must be atomic with creation;
 * **atomic put** (``put``): replace a small metadata object (the
-  legacy ``_CURRENT`` pointer, the ``_reconciled.json`` manifest, the
-  zone-map sidecar) so a reader sees the old object or the new one,
-  never a torn one;
+  ``_reconciled.json`` manifest, the zone-map sidecar, epoch markers)
+  so a reader sees the old object or the new one, never a torn one;
 * **read** and **list** of those objects.
 
 Until round 9 these were hard-wired to ``link(2)``, ``os.replace``,
@@ -309,7 +308,7 @@ class S3LogStore(LogStore):
       so the claim re-probes: if the object materializes, the claim
       lost; if not, the PUT retries (bounded), matching AWS's own
       retry guidance;
-    * unconditional PUT (the ``_CURRENT`` pointer, sidecars) is
+    * unconditional PUT (manifests, sidecars, epoch markers) is
       last-writer-wins per S3's strong read-after-write consistency.
 
     The DATA plane stays Spark's: parquet part files go through the

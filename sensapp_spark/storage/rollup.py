@@ -46,7 +46,6 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
-import shutil
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -56,17 +55,15 @@ from sensapp_spark.datamodel.types import SensorType
 from sensapp_spark.ingest.frames import arrow_frame
 from sensapp_spark.storage.lake import (
     MONTH_COL,
-    CommitConflict,
     SensorLake,
-    _claim_commit,
-    _flip_current,
-    _next_version,
-    _prune_versions,
-    _is_stale_scan_error,
     _utc_naive,
+    _write_blob,
+    commit_version,
     dir_lock,
+    link_files,
     read_committed,
     resolve_table,
+    retry_commit,
 )
 from sensapp_spark.storage.logstore import get_store
 
@@ -332,7 +329,7 @@ class RollupStore:
     def committed_cursor(self, stype: SensorType) -> dict | None:
         """The changes-feed cursor of the last committed refresh, or
         None before the first one. Reading it and reading the rollup
-        rows resolve the same version dir — one pointer, no skew."""
+        rows resolve the same version dir — one log read, no skew."""
         data = resolve_table(self._path(stype))
         if data is None:
             return None
@@ -358,7 +355,7 @@ class RollupStore:
     def _cursor_current(self, stype: SensorType, cursor: dict) -> bool:
         """Metadata-only staleness check: True iff the committed
         cursor PROVABLY covers the lake's current committed state —
-        one pointer read + one listdir, zero Spark jobs. False on any
+        one log read + one listdir, zero Spark jobs. False on any
         doubt (reset cursor, legacy/missing file log, seq or
         generation mismatch, ANY append-intent marker — live or
         quiescent — whose rows may not be in the log yet); the caller
@@ -419,101 +416,73 @@ class RollupStore:
         "seq": committed seq or None}."""
         path = self._path(stype)
         os.makedirs(path, exist_ok=True)
-        with dir_lock(path):
-            for _ in range(max_retries):
-                seq, data = read_committed(path)
-                cursor = self.committed_cursor(stype)
-                if cursor is not None and self._cursor_current(
-                    stype, cursor
-                ):
-                    # Caught up: the idle tick costs one pointer read
-                    # + one listdir, not a feed-poll Spark job.
-                    return {
-                        "mode": "noop",
-                        "affected_months": 0,
-                        "seq": seq or None,
-                    }
-                delta, next_cur = self.lake.changes(
-                    stype, cursor, cdc=True
+
+        def attempt(seq: int, data: str | None) -> dict:
+            cursor = self.committed_cursor(stype)
+            if cursor is not None and self._cursor_current(stype, cursor):
+                # Caught up: the idle tick costs one log read + one
+                # listdir, not a feed-poll Spark job.
+                return {"mode": "noop", "affected_months": 0,
+                        "seq": seq or None}
+            # retry_commit wraps the WHOLE tick body, not just _commit:
+            # the delta-bounds and affected-months collects materialize
+            # the same lazily-planned scan, and a cross-host rewrite
+            # pruning that version mid-plan must re-poll from a fresh
+            # read, not surface as a raw Spark job failure.
+            delta, next_cur = self.lake.changes(stype, cursor, cdc=True)
+            rebuild = cursor is None or next_cur.get("reset")
+            if rebuild:
+                # The reset frame IS the current snapshot — one scan.
+                new_rows = self._aggregate(
+                    delta.filter(F.col("_change_type") == "insert")
+                    .drop("_change_type")
                 )
-                # The stale-scan retry wraps the WHOLE tick body, not
-                # just _commit: the delta-bounds and affected-months
-                # collects materialize the same lazily-planned scan,
-                # and a cross-host rewrite pruning that version
-                # mid-plan must re-poll from a fresh read, not surface
-                # as a raw Spark job failure.
-                try:
-                    rebuild = cursor is None or next_cur.get("reset")
-                    if rebuild:
-                        # The reset frame IS the current snapshot —
-                        # one scan.
-                        new_rows = self._aggregate(
-                            delta.filter(F.col("_change_type") == "insert")
-                            .drop("_change_type")
+                affected_months = None  # everything
+            else:
+                # ONE probe job for bounds AND affected months
+                # (round-13 optimization: the two collects each re-ran
+                # the changes-feed scan; month cardinality is tiny, so
+                # collect_set rides the same aggregation — guide §1.2,
+                # "don't compute things twice").
+                bounds = delta.agg(
+                    F.min("time").alias("lo"),
+                    F.max("time").alias("hi"),
+                    F.collect_set(
+                        F.date_format(
+                            self._bucket(F.col("time")), "yyyy-MM",
                         )
-                        affected_months = None  # everything
-                    else:
-                        # ONE probe job for bounds AND affected
-                        # months (round-13 optimization: the two
-                        # collects each re-ran the changes-feed scan;
-                        # month cardinality is tiny, so collect_set
-                        # rides the same aggregation — guide §1.2,
-                        # "don't compute things twice").
-                        bounds = delta.agg(
-                            F.min("time").alias("lo"),
-                            F.max("time").alias("hi"),
-                            F.collect_set(
-                                F.date_format(
-                                    self._bucket(F.col("time")),
-                                    "yyyy-MM",
-                                )
-                            ).alias("months"),
-                        ).collect()[0]
-                        if bounds["lo"] is None:
-                            if next_cur == cursor:
-                                return {
-                                    "mode": "noop",
-                                    "affected_months": 0,
-                                    "seq": seq or None,
-                                }
-                            # Cursor moved with an empty delta (e.g. a
-                            # preserved rewrite crossing): commit the new
-                            # cursor over unchanged rows so the next poll
-                            # does not re-prove the crossing.
-                            new_rows = None
-                            affected_months = []
-                        else:
-                            new_rows, affected_months = self._recompute(
-                                stype, delta, bounds
-                            )
-                    committed = self._commit(
-                        path, seq, data, new_rows, affected_months,
-                        next_cur,
+                    ).alias("months"),
+                ).collect()[0]
+                if bounds["lo"] is None:
+                    if next_cur == cursor:
+                        return {"mode": "noop", "affected_months": 0,
+                                "seq": seq or None}
+                    # Cursor moved with an empty delta (e.g. a
+                    # preserved rewrite crossing): commit the new
+                    # cursor over unchanged rows so the next poll does
+                    # not re-prove the crossing.
+                    new_rows = None
+                    affected_months = []
+                else:
+                    new_rows, affected_months = self._recompute(
+                        stype, delta, bounds
                     )
-                except CommitConflict:
-                    continue
-                except Exception as e:  # noqa: BLE001 — filtered below
-                    # A cross-host commit pruning the version our lazy
-                    # plan reads surfaces as a stale-scan job failure —
-                    # retry from a fresh read, the same discipline as
-                    # every lake rewrite.
-                    if _is_stale_scan_error(e):
-                        continue
-                    raise
-                return {
-                    "mode": "rebuild" if rebuild else (
-                        "incremental" if affected_months else "noop"
-                    ),
-                    "affected_months": (
-                        -1 if affected_months is None
-                        else len(affected_months)
-                    ),
-                    "seq": committed,
-                }
-            raise CommitConflict(
-                f"rollup refresh lost {max_retries} consecutive commit "
-                f"races on {path}"
+            committed = self._commit(
+                path, seq, data, new_rows, affected_months, next_cur,
             )
+            return {
+                "mode": "rebuild" if rebuild else (
+                    "incremental" if affected_months else "noop"
+                ),
+                "affected_months": (
+                    -1 if affected_months is None
+                    else len(affected_months)
+                ),
+                "seq": committed,
+            }
+
+        with dir_lock(path):
+            return retry_commit(path, attempt, max_retries, "rollup refresh")
 
     def upgrade_tick(
         self,
@@ -554,74 +523,62 @@ class RollupStore:
                 "mode": "noop", "upgraded_months": 0, "remaining": 0,
                 "schema": 0,
             }
-        with dir_lock(path):
-            for _ in range(max_retries):
-                seq, data = read_committed(path)
-                if data is None:
-                    return {
-                        "mode": "noop", "upgraded_months": 0,
-                        "remaining": 0, "schema": 0,
-                    }
-                meta = _read_meta(data) or {}
-                schema = _schema_of(data)
-                pending = meta.get("pending_upgrade_months")
-                if schema >= self.SCHEMA_VERSION and not pending:
-                    return {
-                        "mode": "noop", "upgraded_months": 0,
-                        "remaining": 0, "schema": schema,
-                    }
-                on_disk = sorted(
-                    d[len(MONTH_COL) + 1:]
-                    for d in os.listdir(data)
-                    if d.startswith(f"{MONTH_COL}=")
-                    and os.path.isdir(os.path.join(data, d))
-                )
-                if pending is None:
-                    # First tick of this upgrade: every committed
-                    # month MAY hold old-schema rows (months written
-                    # since the code upgrade get redundantly — and
-                    # idempotently — rebuilt; bounded, and only once).
-                    pending = on_disk
-                else:
-                    # Retention may have expired worklist months.
-                    keep = set(on_disk)
-                    pending = [m for m in pending if m in keep]
-                batch = pending[:max_months]
-                rest = pending[max_months:]
-                done_schema = (
-                    self.SCHEMA_VERSION if not rest else schema
-                )
-                try:
-                    if batch:
-                        rows = self._rebuild_months(stype, batch)
-                        months = [f"{MONTH_COL}={m}" for m in batch]
-                    else:
-                        # Empty table (or worklist drained by
-                        # retention): flip the version, cursor-only.
-                        rows, months = None, []
-                    committed = self._commit(
-                        path, seq, data, rows, months,
-                        meta.get("cursor"),
-                        schema_override=done_schema,
-                        pending_override=rest or None,
-                    )
-                except CommitConflict:
-                    continue
-                except Exception as e:  # noqa: BLE001 — filtered below
-                    if _is_stale_scan_error(e):
-                        continue
-                    raise
+
+        def attempt(seq: int, data: str | None) -> dict:
+            if data is None:
                 return {
-                    "mode": "upgrade" if batch else "noop",
-                    "upgraded_months": len(batch),
-                    "remaining": len(rest),
-                    "schema": done_schema,
-                    "seq": committed,
+                    "mode": "noop", "upgraded_months": 0,
+                    "remaining": 0, "schema": 0,
                 }
-            raise CommitConflict(
-                f"rollup upgrade lost {max_retries} consecutive "
-                f"commit races on {path}"
+            meta = _read_meta(data) or {}
+            schema = _schema_of(data)
+            pending = meta.get("pending_upgrade_months")
+            if schema >= self.SCHEMA_VERSION and not pending:
+                return {
+                    "mode": "noop", "upgraded_months": 0,
+                    "remaining": 0, "schema": schema,
+                }
+            on_disk = sorted(
+                d[len(MONTH_COL) + 1:]
+                for d in os.listdir(data)
+                if d.startswith(f"{MONTH_COL}=")
+                and os.path.isdir(os.path.join(data, d))
             )
+            if pending is None:
+                # First tick of this upgrade: every committed month MAY
+                # hold old-schema rows (months written since the code
+                # upgrade get redundantly — and idempotently — rebuilt;
+                # bounded, and only once).
+                pending = on_disk
+            else:
+                # Retention may have expired worklist months.
+                keep = set(on_disk)
+                pending = [m for m in pending if m in keep]
+            batch = pending[:max_months]
+            rest = pending[max_months:]
+            done_schema = self.SCHEMA_VERSION if not rest else schema
+            if batch:
+                rows = self._rebuild_months(stype, batch)
+                months = [f"{MONTH_COL}={m}" for m in batch]
+            else:
+                # Empty table (or worklist drained by retention): flip
+                # the version, cursor-only.
+                rows, months = None, []
+            committed = self._commit(
+                path, seq, data, rows, months, meta.get("cursor"),
+                schema_override=done_schema,
+                pending_override=rest or None,
+            )
+            return {
+                "mode": "upgrade" if batch else "noop",
+                "upgraded_months": len(batch),
+                "remaining": len(rest),
+                "schema": done_schema,
+                "seq": committed,
+            }
+
+        with dir_lock(path):
+            return retry_commit(path, attempt, max_retries, "rollup upgrade")
 
     def _rebuild_months(self, stype, months) -> DataFrame:
         """Re-aggregate ENTIRE month partitions from the base table:
@@ -722,10 +679,8 @@ class RollupStore:
         in-progress upgrade forget its worklist — and drops it on
         full rebuilds (everything is current); an explicit list/None
         replaces it."""
-        version = _next_version(path)
-        vdir = os.path.join(path, version)
-        claimed = False
-        try:
+
+        def fill(vdir: str) -> None:
             if new_rows is not None:
                 # One shuffle keyed by month before the partitioned
                 # write: each month lands as ~one file instead of one
@@ -738,18 +693,17 @@ class RollupStore:
                     MONTH_COL
                 ).mode("overwrite").parquet(vdir)
             else:
-                os.makedirs(vdir, exist_ok=True)
+                os.makedirs(vdir)
             if data is not None and affected_months is not None:
                 skip = set(affected_months)
-                for d in os.listdir(data):
-                    src = os.path.join(data, d)
-                    if (
-                        not d.startswith(f"{MONTH_COL}=")
-                        or d in skip
-                        or not os.path.isdir(src)
-                    ):
-                        continue
-                    _link_dir(src, os.path.join(vdir, d))
+                link_files(data, vdir, [
+                    os.path.join(d, f)
+                    for d in os.listdir(data)
+                    if d.startswith(f"{MONTH_COL}=") and d not in skip
+                    and os.path.isdir(os.path.join(data, d))
+                    # Month dirs hold part files only.
+                    for f in os.listdir(os.path.join(data, d))
+                ])
             # Schema version is a statement about EVERY row: a full
             # rebuild (affected_months None) or a fresh table writes
             # the current version; an incremental splice inherits the
@@ -781,20 +735,11 @@ class RollupStore:
                         meta["pending_upgrade_months"] = pending
             elif pending_override:
                 meta["pending_upgrade_months"] = list(pending_override)
-            blob = json.dumps(meta).encode()
-            with open(os.path.join(vdir, ROLLUP_META), "wb") as fh:
-                fh.write(blob)
-                fh.flush()
-                os.fsync(fh.fileno())
-            _claim_commit(path, (seq or 0) + 1, version)
-            claimed = True
-        except BaseException:
-            if not claimed:
-                shutil.rmtree(vdir, ignore_errors=True)
-            raise
-        _flip_current(path, version)
-        _prune_versions(path, (seq or 0) + 1, self.retain_generations)
-        return (seq or 0) + 1
+            _write_blob(
+                os.path.join(vdir, ROLLUP_META), json.dumps(meta).encode()
+            )
+
+        return commit_version(path, fill, seq, self.retain_generations)
 
     def read_folded(
         self,
@@ -1013,11 +958,8 @@ class RollupStore:
         priced as such."""
         start = _utc_naive(start)
         end = _utc_naive(end)
-        # The tail-bounds collect materializes the feed's lazy plan; a
-        # cross-host rewrite pruning that version mid-plan surfaces as
-        # a stale-scan job failure — re-poll from a fresh cursor read
-        # (same discipline as refresh), bounded, then raise.
-        for attempt in range(3):
+
+        def attempt(_seq: int, _data: str | None) -> DataFrame:
             cursor = self.committed_cursor(stype)
             if cursor is None:
                 return self._direct_buckets(stype, start, end)
@@ -1029,31 +971,31 @@ class RollupStore:
             rollup = self.read(stype, start, end)
             if tail_cur.get("reset"):
                 return self._direct_buckets(stype, start, end)
-            try:
-                bounds = tail.agg(
-                    F.min("time").alias("lo"), F.max("time").alias("hi")
-                ).collect()[0]
-            except Exception as e:  # noqa: BLE001 — filtered below
-                if _is_stale_scan_error(e) and attempt < 2:
-                    continue
-                raise
-            break
-        if bounds["lo"] is None:
-            return rollup
-        # Replace ONLY the tail's buckets: recomputed rows in, the
-        # rollup's stale versions of those same keys out. (The refresh
-        # splice `_recompute` would be wrong here — its kept-old month
-        # content is already present in `rollup`.)
-        keys = self._keys(tail)
-        fresh = self._recompute_buckets(stype, keys, bounds)
-        out = rollup.join(
-            keys, list(self.KEYS), "anti"
-        ).unionByName(fresh.drop(MONTH_COL))
-        if start is not None:
-            out = out.filter(F.col("bucket") >= F.lit(start))
-        if end is not None:
-            out = out.filter(F.col("bucket") <= F.lit(end))
-        return out
+            # The tail-bounds collect materializes the feed's lazy
+            # plan; a cross-host rewrite pruning that version mid-plan
+            # is a stale scan, and retry_commit re-polls from a fresh
+            # cursor read (bounded, like refresh).
+            bounds = tail.agg(
+                F.min("time").alias("lo"), F.max("time").alias("hi")
+            ).collect()[0]
+            if bounds["lo"] is None:
+                return rollup
+            # Replace ONLY the tail's buckets: recomputed rows in, the
+            # rollup's stale versions of those same keys out. (The
+            # refresh splice `_recompute` would be wrong here — its
+            # kept-old month content is already present in `rollup`.)
+            keys = self._keys(tail)
+            fresh = self._recompute_buckets(stype, keys, bounds)
+            out = rollup.join(
+                keys, list(self.KEYS), "anti"
+            ).unionByName(fresh.drop(MONTH_COL))
+            if start is not None:
+                out = out.filter(F.col("bucket") >= F.lit(start))
+            if end is not None:
+                out = out.filter(F.col("bucket") <= F.lit(end))
+            return out
+
+        return retry_commit(self._path(stype), attempt, 3, "realtime read")
 
 
 class SketchRollupStore(RollupStore):
@@ -1306,20 +1248,3 @@ def _schema_of(version_dir: str) -> int:
     meta = _read_meta(version_dir)
     v = 1 if meta is None else meta.get("schema", 1)
     return v if isinstance(v, int) else 1
-
-
-def _link_dir(src: str, dst: str) -> None:
-    """Hardlink-clone one partition dir (flat: rollup month dirs hold
-    part files only) — O(files) metadata, zero bytes copied; copy2 on
-    cross-device, same degrade as the lake's expire."""
-    os.makedirs(dst, exist_ok=True)
-    for entry in os.listdir(src):
-        s = os.path.join(src, entry)
-        d = os.path.join(dst, entry)
-        if os.path.isdir(s):  # pragma: no cover — not produced today
-            _link_dir(s, d)
-            continue
-        try:
-            os.link(s, d)
-        except OSError:
-            shutil.copy2(s, d)

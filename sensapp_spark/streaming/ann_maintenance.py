@@ -15,7 +15,7 @@ glue is ONE idea:
 ``append(state={"cursor": …})`` records the consumer's resume token on
 the epoch's append record, which travels atomically with the committed
 index version — so "these rows are in the index" and "the feed is
-consumed up to here" are a single atomic pointer flip. Every crash
+consumed up to here" are a single atomic log claim. Every crash
 window then lands on one of two sides:
 
 * crash AFTER the index commit, BEFORE Spark checkpoints the batch →

@@ -294,13 +294,13 @@ class TestIncrementalAppend:
         own retry loop."""
         import threading
 
-        from sensapp_spark.storage import ann as ann_mod
+        from sensapp_spark.storage import lake as lake_mod
 
         s = AnnIndexStore(spark, str(tmp_path_factory.mktemp("ann_race")))
         s.write_ivf(embeddings.filter("vec_id < 300"), name="race")
 
         barrier = threading.Barrier(2, timeout=120)
-        real_claim = ann_mod._claim_commit
+        real_claim = lake_mod._claim_commit
         passed = threading.Event()
 
         def claiming(path, seq, version, **kw):
@@ -313,7 +313,7 @@ class TestIncrementalAppend:
                     pass  # second round (the retry) races freely
             return real_claim(path, seq, version, **kw)
 
-        ann_mod._claim_commit = claiming
+        lake_mod._claim_commit = claiming
         errors = []
         try:
             def run(lo, hi):
@@ -332,7 +332,7 @@ class TestIncrementalAppend:
             t1.start(); t2.start()
             t1.join(180); t2.join(180)
         finally:
-            ann_mod._claim_commit = real_claim
+            lake_mod._claim_commit = real_claim
         assert not errors, errors
         _, meta = s._resolve("race", "ivf")
         assert meta["n_vectors"] == embeddings.count()
@@ -346,40 +346,6 @@ class TestIncrementalAppend:
             for r in s.ivf_topk(query_vec, k=10, name="race").collect()
         ]
         assert got == full
-
-    def test_append_migrates_pointer_era_layout(
-        self, spark, tmp_path_factory, embeddings, query_vec
-    ):
-        """A pre-log (pointer-only) layout gets its pointer version
-        backfilled as log entry 0 on append, so the old corpus-sized
-        dir is retired on the normal prune schedule instead of being
-        stranded unreferenced forever (round-7 review)."""
-        import os
-        import shutil
-
-        from sensapp_spark.storage.lake import COMMITS_DIR, resolve_table
-
-        s = AnnIndexStore(spark, str(tmp_path_factory.mktemp("ann_leg")))
-        s.write_ivf(embeddings.filter("vec_id < 300"), name="leg")
-        path = s._path("leg")
-        legacy = os.path.basename(resolve_table(path))
-        shutil.rmtree(os.path.join(path, COMMITS_DIR))  # simulate pre-log
-        assert os.path.basename(resolve_table(path)) == legacy
-
-        s.append("leg", embeddings.filter("vec_id >= 300 AND vec_id < 400"))
-        assert legacy in os.listdir(path)  # one generation of grace
-        s.append("leg", embeddings.filter("vec_id >= 400"))
-        assert legacy not in os.listdir(path)  # retired on schedule
-        full = [
-            (r.vec_id, r.centroid_id, r.cosine)
-            for r in ivf_topk(embeddings, query_vec, k=10).collect()
-        ]
-        got = [
-            (r.vec_id, r.centroid_id, r.cosine)
-            for r in s.ivf_topk(query_vec, k=10, name="leg").collect()
-        ]
-        assert got == full
-        assert s.vacuum("leg", min_age_s=0.0) == []  # nothing stranded
 
 
 class TestMultiTableLsh:

@@ -1,21 +1,25 @@
-"""Rename-based commit protocol + cross-PROCESS lake concurrency.
+"""Commit-log protocol + cross-PROCESS lake concurrency.
 
-The lake's swapped tables commit via immutable version directories and
-an atomically-replaced ``_CURRENT`` pointer (storage/lake.py:
-atomic_overwrite). These tests pin the protocol's guarantees:
+Every versioned table commits an immutable version directory by
+claiming the next sequence number in its ``_commits/`` log
+(storage/lake.py: commit_version); the log is the only table state.
+These tests pin the protocol's guarantees:
 
 * a reader that resolved the old version keeps scanning it safely
   through the NEXT commit (one generation of retention — the old
   double-rename rmtree'd the files out from under in-flight readers);
-* there is never a moment without a committed table (the pointer flip
-  is one ``os.replace``);
-* old versions are pruned at two generations, so storage is bounded;
-* legacy flat directories (pre-pointer lakes) still resolve;
+* there is never a moment without a committed table (the claim is one
+  conditional create, made after the version dir is complete);
+* old versions are pruned at two generations, so storage is bounded,
+  and a commit touches nothing in the table root but version dirs and
+  log entries (another writer's temp or staging dir survives it);
+* one optimistic retry loop (``retry_commit``) re-reads and retries on
+  a lost claim or a stale base, and reports exhaustion as
+  ``CommitConflict`` chained from the last error;
 * and — the round-6 verdict ask — two REAL processes (separate JVMs,
   separate Python drivers) publishing concurrently into the same lake
-  lose nothing: the flock serializes read-merge-write across process
-  boundaries, not just across threads (test_lake_streaming.py covers
-  the thread case).
+  lose nothing across process boundaries, not just across threads
+  (test_lake_streaming.py covers the thread case).
 """
 
 from __future__ import annotations
@@ -28,7 +32,6 @@ import textwrap
 import pytest
 
 from sensapp_spark.storage.lake import (
-    CURRENT_PTR,
     SensorLake,
     atomic_overwrite,
     resolve_table,
@@ -88,17 +91,22 @@ def test_reader_survives_one_commit(spark, tmp_path):
     assert {r.sensor_id for r in lake.sensors().collect()} == {"a", "b"}
 
 
-def test_pointer_always_names_a_complete_table(spark, tmp_path):
-    """Between commits the pointer file exists and names a directory
-    with a _SUCCESS marker — the commit is pointer-flip-atomic, so no
-    observable state lacks a complete table."""
+def test_log_head_always_names_a_complete_table(spark, tmp_path):
+    """Between commits the highest commit-log entry names a directory
+    with a _SUCCESS marker — the claim lands only after the version
+    dir is complete, so no observable state lacks a complete table —
+    and no pointer file is written beside the log."""
+    from sensapp_spark.storage.lake import _entry_version, _log_entries
+
     lake = SensorLake(spark, str(tmp_path / "lake"))
     path = lake._sensors_path()
     for i in range(3):
         _upsert(lake, spark, [f"s{i}"])
-        current = resolve_table(path)
-        assert os.path.exists(os.path.join(path, CURRENT_PTR))
+        head = _log_entries(path)[-1]
+        current = os.path.join(path, _entry_version(path, head))
+        assert resolve_table(path) == current
         assert os.path.exists(os.path.join(current, "_SUCCESS"))
+        assert not os.path.exists(os.path.join(path, "_CURRENT"))
 
 
 def test_crash_orphan_never_evicts_committed_predecessor(spark, tmp_path):
@@ -133,42 +141,11 @@ def test_crash_orphan_never_evicts_committed_predecessor(spark, tmp_path):
     assert {r.sensor_id for r in lake.sensors().collect()} == {"a", "b"}
 
 
-def test_legacy_files_cleaned_after_one_generation(spark, tmp_path):
-    """Migrating a flat table: the legacy data files survive the FIRST
-    versioned commit (grace for readers mid-scan of the flat layout)
-    and are removed by the second."""
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame([("x", "n", "Float", None, None, {})],
-                               SENSOR_DDL)
-    df.write.parquet(path)  # legacy flat layout
-    legacy_files = set(os.listdir(path))
-    atomic_overwrite(df, path)
-    assert legacy_files <= set(os.listdir(path))  # grace generation
-    atomic_overwrite(df, path)
-    remaining = set(os.listdir(path))
-    assert not (legacy_files & remaining), "legacy data never cleaned"
-    assert resolve_table(path) is not None
-
-
-def test_legacy_flat_layout_still_resolves(spark, tmp_path):
-    """A pre-pointer lake (data files directly under the table path)
-    reads as-is, and the first commit on top converts it to the
-    versioned layout."""
-    path = str(tmp_path / "legacy_sensors")
-    df = spark.createDataFrame([("x", "n", "Float", None, None, {})],
-                               SENSOR_DDL)
-    df.write.parquet(path)  # legacy flat write
-    assert resolve_table(path) == path
-    atomic_overwrite(df.unionByName(df).dropDuplicates(["sensor_id"]), path)
-    assert resolve_table(path) != path
-    assert resolve_table(path).startswith(path)
-
-
 def test_unwritten_and_inflight_tables_resolve_none(spark, tmp_path):
     path = str(tmp_path / "t")
     assert resolve_table(path) is None
-    # A first commit in flight (version dir exists, pointer not yet
-    # flipped) is still "never written", not a legacy table.
+    # A first commit in flight (version dir exists, log entry not yet
+    # claimed) is still "never written".
     os.makedirs(os.path.join(path, "v_00000001_deadbeef"))
     assert resolve_table(path) is None
 
@@ -193,35 +170,6 @@ def test_conditional_commit_detects_stale_base(spark, tmp_path):
     assert new_seq == seq + 1
     # Loser's dir reclaimed: only the two committed generations remain.
     assert len(_versions(path)) == 2
-
-
-def test_legacy_pointer_table_migrates_into_log(spark, tmp_path):
-    """A pre-log pointer table (v_ dir + _CURRENT, no _commits) keeps
-    resolving, its pointer-era version is backfilled as log entry 0 on
-    the first CAS commit (so it gets reader grace, then pruning, like
-    any committed version), and conditional commits work on top."""
-    import shutil as sh
-
-    from sensapp_spark.storage.lake import read_committed
-
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame([("x", "n", "Float", None, None, {})],
-                               SENSOR_DDL)
-    staging = str(tmp_path / "staging")
-    df.write.parquet(staging)
-    legacy_v = "v_00000001_0ld1ay0t"
-    os.makedirs(path)
-    sh.move(staging, os.path.join(path, legacy_v))
-    with open(os.path.join(path, CURRENT_PTR), "w") as f:
-        f.write(legacy_v)
-    assert resolve_table(path) == os.path.join(path, legacy_v)
-    assert read_committed(path)[0] == 0  # pointer era = seq 0
-
-    atomic_overwrite(df, path, expected_seq=0)  # migrates, claims seq 1
-    assert legacy_v in _versions(path)  # grace generation
-    atomic_overwrite(df, path, expected_seq=1)  # seq 2 → legacy pruned
-    assert legacy_v not in _versions(path)
-    assert resolve_table(path) is not None
 
 
 def test_failed_write_reclaims_version_dir(spark, tmp_path):
@@ -336,7 +284,115 @@ def test_stale_scan_error_classifier():
         RuntimeError("java.io.FileNotFoundException: /x/v_1/part-0")
     )
     assert _is_stale_scan_error(ValueError("[PATH_NOT_FOUND] no such"))
+    # Hard-linking from a base pruned meanwhile (driver side).
+    assert _is_stale_scan_error(FileNotFoundError("/x/v_1/part-0"))
     assert not _is_stale_scan_error(RuntimeError("OutOfMemoryError"))
+    assert not _is_stale_scan_error(PermissionError("/x/v_1"))
+
+
+def test_retry_commit_exhaustion_chains_the_last_stale_error(tmp_path):
+    """Retries that never stop going stale end in CommitConflict whose
+    __cause__ is the LAST stale error — a permanent failure (here a
+    base that is always gone) stays visible instead of reading as
+    plain writer contention. Each attempt re-reads the table."""
+    from sensapp_spark.storage.lake import CommitConflict, retry_commit
+
+    calls = []
+
+    def attempt(seq, data):
+        calls.append((seq, data))
+        raise FileNotFoundError(f"attempt {len(calls)}: base gone")
+
+    with pytest.raises(CommitConflict, match="lost 3 consecutive") as ei:
+        retry_commit(str(tmp_path / "t"), attempt, 3, "probe")
+    assert calls == [(0, None)] * 3
+    assert isinstance(ei.value.__cause__, FileNotFoundError)
+    assert "attempt 3" in str(ei.value.__cause__)
+
+
+def test_retry_commit_propagates_a_non_stale_error_at_once(tmp_path):
+    from sensapp_spark.storage.lake import retry_commit
+
+    calls = []
+
+    def attempt(seq, data):
+        calls.append(seq)
+        raise ValueError("bad input")
+
+    with pytest.raises(ValueError, match="bad input"):
+        retry_commit(str(tmp_path / "t"), attempt, 5, "probe")
+    assert calls == [0]
+
+
+def test_commits_keep_foreign_files_in_every_table_root(spark, tmp_path):
+    """A commit deletes nothing in the table root but version dirs and
+    log entries it retires. Another committer's in-flight metadata
+    temp (``._x.tmp.<hex>``, the name PosixLogStore.put gives its
+    temps) and any foreign dotfile must survive three commits of a
+    sensors table, a values table, a rollup table and an ANN layout —
+    a commit that swept them failed the other writer's os.replace
+    after its claim had landed."""
+    import datetime as dtm
+
+    from pyspark.sql import functions as F
+
+    from sensapp_spark.datamodel.types import SensorType
+    from sensapp_spark.storage.ann import AnnIndexStore
+    from sensapp_spark.storage.lake import read_committed
+    from sensapp_spark.storage.rollup import RollupStore
+
+    swept = {}
+
+    def check(path, commit):
+        planted = [
+            os.path.join(path, "._x.tmp.deadbeef"),
+            os.path.join(path, ".foreign"),
+        ]
+        for f in planted:
+            with open(f, "w") as fh:
+                fh.write("in flight")
+        seq0 = read_committed(path)[0]
+        for i in range(3):
+            commit(i)
+        assert read_committed(path)[0] == seq0 + 3, path
+        gone = [f for f in planted if not os.path.exists(f)]
+        if gone:
+            swept[os.path.relpath(path, str(tmp_path))] = gone
+
+    lake = SensorLake(spark, str(tmp_path / "lake"))
+    _upsert(lake, spark, ["s-0"])
+    check(lake._sensors_path(), lambda i: _upsert(lake, spark, [f"s{i}"]))
+
+    ft = SensorType.FLOAT
+    t0 = dtm.datetime(2024, 1, 1)
+
+    def append(i):
+        lake.append_values(
+            ft, spark.createDataFrame([("s1", t0, float(i))], VALUES_DDL)
+        )
+
+    append(-1)
+    check(lake._values_path(ft), lambda i: lake.dedup_rewrite(ft))
+
+    store = RollupStore(lake)
+    store.refresh(ft)
+
+    def refresh(i):
+        append(i)
+        store.refresh(ft)
+
+    check(store._path(ft), refresh)
+
+    ann = AnnIndexStore(spark, str(tmp_path / "ann"))
+    vecs = spark.range(8).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[
+            (F.col("id") * (k + 1) % 5 - 2).cast("float") for k in range(4)
+        ]).alias("embedding"),
+    )
+    ann.write_lsh(vecs, name="t", n_planes=2, dim=4)
+    check(ann._path("t"), lambda i: ann.append("t", vecs))
+    assert swept == {}
 
 
 # Two workers SIMULATING TWO HOSTS: the file barrier forces both to pin

@@ -444,7 +444,7 @@ def test_ann_store_lifecycle_on_emulated_object_store(
     the lake, so the whole write → probe → append → drift lifecycle
     must run with the POSIX metadata primitives out of reach. os.link
     raises OSError (an object store has no hardlinks) rather than
-    AssertionError: _clone_tree's documented fallback is a real copy —
+    AssertionError: link_files' documented fallback is a real copy —
     data plane, like Spark's parquet writes — while os.replace stays
     FORBIDDEN (any Python-side metadata rename would be a protocol
     leak)."""

@@ -7,6 +7,7 @@ composition: a compaction rewriting the version a refresh scans, a
 retention expiring months mid-schedule, writers racing every tick."""
 
 import datetime as dt
+import os
 import threading
 
 import pytest
@@ -257,6 +258,13 @@ def test_gateway_maintain_route(spark, tmp_path):
         # the NEXT tick — the scheduler's steady state.
         assert c.post("/api/v1/admin/maintain").status_code == 200
     assert _quartet(lake) == _direct_quartet(lake)
+    # The commit log is the only table state: no table of the session
+    # (sensors, values, rollups, sketches) wrote a pointer file.
+    pointers = [
+        os.path.join(d, "_CURRENT")
+        for d, _, files in os.walk(lake.root) if "_CURRENT" in files
+    ]
+    assert pointers == []
 
 
 def test_conflict_is_reported_not_raised(spark, tmp_path, monkeypatch):

@@ -261,30 +261,38 @@ def test_expire_tombstone_blocks_late_fold_resurrection(spark, tmp_path):
 def test_expire_retries_through_commit_conflict(spark, tmp_path):
     """A cross-host writer commits between the pin and the claim: the
     conditional commit loses, expire re-pins and lands on the next
-    sequence — the standard CAS discipline."""
-    lake = _mklake(spark, tmp_path)
-    path = lake._values_path(SensorType.FLOAT)
-    fired = {"n": 0}
+    sequence — the standard CAS discipline. Second case: the writer
+    commits TWICE, so the pinned base loses its one-generation grace
+    and is pruned before expire hard-links from it; the vanished base
+    (a Python FileNotFoundError) is the same staleness and retries."""
+    for commits in (1, 2):
+        case = tmp_path / f"commits_{commits}"
+        case.mkdir()
+        lake = _mklake(spark, case)
+        path = lake._values_path(SensorType.FLOAT)
+        fired = {"n": 0}
 
-    def intruder():
-        if fired["n"] == 0:
-            fired["n"] += 1
-            df = lake.values(SensorType.FLOAT)
-            atomic_overwrite(
-                df, path, partition_by="month",
-                keep_generations=lake.retain_generations,
-            )
+        def intruder():
+            if fired["n"] == 0:
+                fired["n"] += 1
+                df = lake.values(SensorType.FLOAT)
+                for _ in range(commits):
+                    atomic_overwrite(
+                        df, path, partition_by="month",
+                        keep_generations=lake.retain_generations,
+                    )
 
-    out = lake._expire_table(
-        path, "2024-01", max_retries=5, _test_after_pin=intruder
-    )
-    assert fired["n"] == 1
-    assert out["months"] == ["2023-11", "2023-12"]
-    left = {
-        (r.sensor_id, r.value)
-        for r in lake.values(SensorType.FLOAT).collect()
-    }
-    assert left == {("a", 3.0), ("c", 4.0)}
+        out = lake._expire_table(
+            path, "2024-01", max_retries=5, _test_after_pin=intruder
+        )
+        assert fired["n"] == 1
+        assert out["months"] == ["2023-11", "2023-12"]
+        assert out["seq"] == 1 + commits + 1
+        left = {
+            (r.sensor_id, r.value)
+            for r in lake.values(SensorType.FLOAT).collect()
+        }
+        assert left == {("a", 3.0), ("c", 4.0)}
 
 
 def test_expire_all_tables_reports_only_droppers(spark, tmp_path):
