@@ -1,13 +1,3 @@
-from sensapp_spark.exporters.csv_exporter import (  # noqa: F401
-    iter_csv_multi,
-    iter_csv_single,
-    to_csv_multi,
-    to_csv_single,
-)
-from sensapp_spark.exporters.jsonl_exporter import iter_jsonl, to_jsonl  # noqa: F401
-from sensapp_spark.exporters.senml_exporter import iter_senml, to_senml  # noqa: F401
-from sensapp_spark.exporters.arrow_exporter import (  # noqa: F401
-    iter_arrow_multi,
-    to_arrow_multi,
-    to_arrow_single,
-)
+from sensapp_spark.exporters.csv_exporter import to_csv_single  # noqa: F401
+from sensapp_spark.exporters.senml_exporter import iter_senml  # noqa: F401
+from sensapp_spark.exporters.arrow_exporter import to_arrow_single  # noqa: F401

@@ -1,20 +1,17 @@
 """CSV exporters (operators X2 single, X3 multi/long).
 
 Row formatting is JVM-side (`lines_*` return a DataFrame of formatted
-lines). Three driver-side assembly strategies, by result size:
+lines). The gateway assembles a request-sized export on the driver:
 
-* `to_csv_*` — full-collect into one string (what the reference's
-  exporters do, src/exporters/csv.rs); right for small results. The
-  multi layout collects `multi_parts` (formatted fixed columns plus
-  escaped label cells) and derives the header's label keys from the
-  same rows, so it is one Spark action.
-* `iter_csv_*` — bounded-memory generators over ``toLocalIterator``:
-  the driver holds one chunk (and one prefetched partition) at a time.
-  The HTTP gateway first peeks ``threshold+1`` rows with one bounded
-  collect and assembles small results from them; only results above
-  its threshold re-execute through these streams, so a near-limit
-  export (the reference caps at 10M rows, src/storage/mod.rs:15-17)
-  never materializes a multi-GB string.
+* a result up to its threshold is ONE bounded peek of the ordered
+  frame: :func:`assemble_multi` joins the peeked :func:`multi_parts`
+  rows and takes the header's label keys from the same rows, so the
+  body is one Spark action;
+* a larger result streams :func:`chunk_lines` over
+  :func:`row_lines` (``toLocalIterator``): the driver holds one chunk
+  and one prefetched partition at a time, so a near-limit export (the
+  reference caps at 10M rows, src/storage/mod.rs:15-17) never
+  materializes a multi-GB string;
 * `write_csv_multi` — fully distributed `df.write.text`, no driver
   data path at all; for offline exports beyond HTTP scale.
 
@@ -29,6 +26,8 @@ Reference shapes:
 """
 
 from __future__ import annotations
+
+from contextlib import closing
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -87,12 +86,12 @@ CHUNK_ROWS = 8192
 def chunk_lines(line_iter, header: str | None = None,
                 chunk_rows: int = CHUNK_ROWS):
     """Yield an optional header, then lines from any string iterator in
-    ``chunk_rows`` batches — THE single chunked-assembly implementation
-    (the exporters' streaming variants and the gateway's peek-ahead
-    continuation both use it, so the streamed-bytes-equal-full-collect
-    guarantee lives in one place). Closes ``line_iter`` on exhaustion
-    or generator close, so an abandoned Spark local iterator releases
-    its serving thread instead of lingering until GC."""
+    ``chunk_rows`` batches — THE line-format assembler: the gateway
+    joins it over peeked lines for a small body and streams it over
+    :func:`row_lines` for a large one, so both are the same bytes.
+    Closes ``line_iter`` on exhaustion or generator close, so an
+    abandoned Spark local iterator releases its serving thread instead
+    of lingering until GC."""
     try:
         if header is not None:
             yield header + "\n"
@@ -110,38 +109,23 @@ def chunk_lines(line_iter, header: str | None = None,
             close()
 
 
-def row_lines(lines: DataFrame):
-    """Per-line string iterator over a formatted-lines frame, with the
-    underlying Spark local iterator closed on exhaustion or generator
-    close (no serving thread lingering until GC).
-
-    ``toLocalIterator(prefetchPartitions=True)`` bounds driver memory to
-    one in-flight partition plus one prefetched — after the `orderBy`,
+def local_rows(frame: DataFrame):
+    """The rows of an ordered frame through
+    ``toLocalIterator(prefetchPartitions=True)``: driver memory is one
+    in-flight partition plus one prefetched — after the `orderBy`,
     partitions are range-sorted, so sequential iteration preserves the
-    global order."""
-    rows = lines.toLocalIterator(prefetchPartitions=True)
-    try:
+    global order. Closing this generator closes the Spark local
+    iterator (``yield from`` forwards the close), so an abandoned
+    stream releases its serving thread instead of lingering until GC."""
+    yield from frame.toLocalIterator(prefetchPartitions=True)
+
+
+def row_lines(lines: DataFrame):
+    """Per-line string iterator over a formatted-lines frame
+    (:func:`local_rows`, closed with this generator)."""
+    with closing(local_rows(lines)) as rows:
         for r in rows:
             yield r.line
-    finally:
-        close = getattr(rows, "close", None)
-        if close is not None:
-            close()
-
-
-def _iter_chunks(lines: DataFrame, header: str, chunk_rows: int):
-    """Chunked lines of a formatted-lines frame; concatenated chunks are
-    byte-identical to the full-collect assembly."""
-    return chunk_lines(row_lines(lines), header, chunk_rows)
-
-
-def iter_csv_single(df: DataFrame, sensor_type: SensorType,
-                    chunk_rows: int = CHUNK_ROWS):
-    """Bounded-memory generator form of :func:`to_csv_single`."""
-    return _iter_chunks(
-        lines_single(df, sensor_type), csv_header_single(sensor_type),
-        chunk_rows,
-    )
 
 
 def multi_label_keys(df: DataFrame) -> list[str]:
@@ -157,9 +141,9 @@ def multi_label_keys(df: DataFrame) -> list[str]:
 
 def csv_multi_header(label_keys: list[str]) -> str:
     """THE multi-layout header line (csv.rs:130-140 column order). The
-    gateway's streamed peek-ahead path and both exporter assemblies use
-    this one definition, so a column change can never desynchronize the
-    streamed header from the collected one."""
+    small body (:func:`assemble_multi`) and the gateway's stream both
+    use this one definition, so a column change can never
+    desynchronize the streamed header from the peeked one."""
     return ",".join(
         ["timestamp", "sensor_id", "sensor_name", "value", "type"]
         + label_keys
@@ -220,22 +204,6 @@ def assemble_multi(parts: list) -> str:
         for r in parts
     ]
     return "\n".join([csv_multi_header(keys)] + lines) + "\n"
-
-
-def to_csv_multi(df: DataFrame, sensor_type: SensorType) -> str:
-    """Multi-sensor export of one typed frame (the common case: a matcher
-    query over one value table)."""
-    return assemble_multi(multi_parts(df, sensor_type).collect())
-
-
-def iter_csv_multi(df: DataFrame, sensor_type: SensorType,
-                   chunk_rows: int = CHUNK_ROWS):
-    """Bounded-memory generator form of :func:`to_csv_multi`."""
-    keys = multi_label_keys(df)
-    return _iter_chunks(
-        lines_multi(df, sensor_type, keys), csv_multi_header(keys),
-        chunk_rows,
-    )
 
 
 def write_csv_multi(

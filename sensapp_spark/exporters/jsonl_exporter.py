@@ -65,23 +65,6 @@ def lines_jsonl(df: DataFrame, sensor_type: SensorType) -> DataFrame:
     return df.orderBy("sensor_id", "time").select(line.alias("line"))
 
 
-def to_jsonl(df: DataFrame, sensor_type: SensorType) -> str:
-    return "".join(r.line + "\n" for r in lines_jsonl(df, sensor_type).collect())
-
-
-def iter_jsonl(df: DataFrame, sensor_type: SensorType,
-               chunk_rows: int = 8192):
-    """Bounded-memory generator form of :func:`to_jsonl`: one chunk of
-    formatted lines on the driver at a time; the streamed bytes equal
-    the full-collect assembly (shared chunk assembly:
-    ``csv_exporter.chunk_lines``)."""
-    from sensapp_spark.exporters.csv_exporter import chunk_lines, row_lines
-
-    return chunk_lines(
-        row_lines(lines_jsonl(df, sensor_type)), None, chunk_rows
-    )
-
-
 def write_jsonl(df: DataFrame, sensor_type: SensorType, path: str) -> None:
     """Distributed JSONL export: one text file per partition; a billion-row
     export never materializes on the driver."""

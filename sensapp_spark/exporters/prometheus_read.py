@@ -130,38 +130,26 @@ def handle_read_request(
     return snappy_codec.compress(response)
 
 
-def handle_read_request_streamed(
-    body: bytes,
-    sensors: DataFrame,
-    values_for: ValuesFor,
-    compressed: bool = True,
-) -> bytes:
-    """ReadRequest bytes → STREAMED_XOR_CHUNKS response (operator X7).
-
-    Frame format (reference src/parsing/prometheus/stream_writer.rs:7-13):
-    per non-empty query: uvarint message length + 4-byte big-endian
-    CRC32-Castagnoli of the message + protobuf ``ChunkedReadResponse``
-    {1: repeated ChunkedSeries{1: labels, 2: Chunk{1: min_ms, 2: max_ms,
-    3: type=1 (XOR), 4: data}}, 2: query_index}. Each series carries one
-    Gorilla XOR chunk; empty responses are skipped like Prometheus does.
-    """
-    return b"".join(
-        iter_read_request_streamed(body, sensors, values_for, compressed)
-    )
-
-
 def iter_read_request_streamed(
     body: bytes,
     sensors: DataFrame,
     values_for: ValuesFor,
     compressed: bool = True,
 ):
-    """Generator form of :func:`handle_read_request_streamed`: yields one
-    framed ``ChunkedReadResponse`` message per non-empty query AS each
-    query executes, so the HTTP layer can stream frames while later
-    queries are still running and driver memory is bounded by a single
-    query's series (the frame granularity the wire format exists for —
-    stream_writer.rs frames per query and skips empty ones)."""
+    """ReadRequest bytes → STREAMED_XOR_CHUNKS response (operator X7),
+    one framed ``ChunkedReadResponse`` message per non-empty query,
+    yielded AS each query executes, so the HTTP layer can stream frames
+    while later queries are still running and driver memory is bounded
+    by a single query's series (the frame granularity the wire format
+    exists for — stream_writer.rs frames per query and skips empty
+    ones).
+
+    Frame format (reference src/parsing/prometheus/stream_writer.rs:7-13):
+    uvarint message length + 4-byte big-endian CRC32-Castagnoli of the
+    message + protobuf ``ChunkedReadResponse`` {1: repeated
+    ChunkedSeries{1: labels, 2: Chunk{1: min_ms, 2: max_ms, 3: type=1
+    (XOR), 4: data}}, 2: query_index}. Each series carries one Gorilla
+    XOR chunk."""
     from sensapp_spark.wire.protowire import Writer, encode_varint
     from sensapp_spark.wire.xorchunk import crc32c, encode_xor_chunk
 

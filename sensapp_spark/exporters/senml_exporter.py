@@ -16,20 +16,22 @@ Reference src/exporters/senml.rs:16-157:
 
 SenML is inherently a per-sensor sequential document, so final assembly
 is driver-side (as in the reference); sorting and time arithmetic run in
-Spark first.
+Spark first (:func:`ordered_rows`), and :func:`iter_senml` assembles the
+JSON array from any ordered row iterable.
 """
 
 from __future__ import annotations
 
 import base64
 import json
-from itertools import groupby
+from itertools import groupby, islice
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sensapp_spark.datamodel.types import SensorType
+from sensapp_spark.exporters.csv_exporter import CHUNK_ROWS
 
 
 def _sample_records(sensor_type: SensorType, row, rel: float) -> list[dict]:
@@ -68,11 +70,13 @@ def ordered_rows(df: DataFrame) -> DataFrame:
 
 def records_from_rows(rows, sensor_type: SensorType):
     """SenML records from (sensor_id, time)-ordered rows — works over any
-    iterable, so the same logic backs the full-collect list and the
-    bounded-memory generator. Fully streaming: only the sensor's FIRST
-    row is held (for base-record assembly); every later sample is
-    emitted as it arrives, so driver memory stays O(1) in samples even
-    for a single multi-million-sample sensor."""
+    iterable, so the same logic backs the peeked body and the stream.
+    Fully streaming: only the sensor's FIRST row is held (for
+    base-record assembly); every later sample is emitted as it arrives,
+    so driver memory stays O(1) in samples even for a single
+    multi-million-sample sensor. A sensor's samples can span a Spark
+    partition boundary; ``groupby`` handles that since the rows are
+    globally ordered."""
     first_sensor = True
     for _, group in groupby(rows, key=lambda r: r.sensor_id):
         head = next(group)
@@ -97,23 +101,27 @@ def records_from_rows(rows, sensor_type: SensorType):
             )
 
 
-def to_senml(df: DataFrame, sensor_type: SensorType) -> list[dict]:
-    """``(sensor_id, time, value, name, unit, labels)`` → SenML record list."""
-    return list(records_from_rows(ordered_rows(df).collect(), sensor_type))
+# Sorted keys, compact separators and ASCII escapes (Flask's jsonify
+# settings): the SenML bytes the gateway goldens pin.
+_ENCODER = json.JSONEncoder(sort_keys=True, separators=(",", ":"))
 
 
-def iter_senml(df: DataFrame, sensor_type: SensorType):
-    """Bounded-memory generator of SenML records: ``toLocalIterator`` pulls
-    one partition at a time (range-sorted by the ``orderBy``, so sensors
-    arrive contiguously and in order), and at most one sensor's rows are
-    buffered for base-record assembly. A sensor's samples can span a
-    partition boundary; ``groupby`` handles that transparently since the
-    iterator is globally ordered. Closing this generator (or exhausting
-    it) closes the underlying Spark local iterator, so an abandoned
-    stream releases its serving thread immediately."""
-    rows = ordered_rows(df).toLocalIterator(prefetchPartitions=True)
+def iter_senml(rows, sensor_type: SensorType, chunk_rows: int = CHUNK_ROWS):
+    """The SenML JSON array (``[...]`` plus a newline) as text chunks of
+    ``chunk_rows`` records, from any (sensor_id, time)-ordered
+    :func:`ordered_rows` iterable — THE SenML assembler: the gateway
+    joins it over peeked rows for a small body and streams it over the
+    live local iterator for a large one. Each chunk is encoded in one
+    call, and the driver holds one chunk of records at a time. Closes
+    ``rows`` on exhaustion or generator close, so an abandoned stream
+    releases its serving thread immediately."""
     try:
-        yield from records_from_rows(rows, sensor_type)
+        records = records_from_rows(rows, sensor_type)
+        sep = "["
+        while batch := list(islice(records, chunk_rows)):
+            yield sep + _ENCODER.encode(batch)[1:-1]
+            sep = ","
+        yield "[]\n" if sep == "[" else "]\n"
     finally:
         close = getattr(rows, "close", None)
         if close is not None:

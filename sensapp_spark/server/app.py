@@ -47,16 +47,10 @@ import datetime as dt
 import json
 import os
 
-from flask import Flask, Response, jsonify, request
+from flask import Flask, Response, abort, jsonify, request
 
 from sensapp_spark.datamodel.types import SensorType
-from sensapp_spark.exporters import (
-    iter_senml,
-    to_arrow_multi,
-    to_csv_multi,
-    to_jsonl,
-    to_senml,
-)
+from sensapp_spark.exporters import iter_senml
 from sensapp_spark.exporters.prometheus_read import handle_read_request
 from sensapp_spark.ingest.arrow_importer import ingest_arrow
 from sensapp_spark.ingest.csv_importer import CsvFormatError, ingest_csv
@@ -116,24 +110,41 @@ QUERY_RANGE_ROW_CAP = 100_000
 INSTANT_ROW_CAP = 100_000
 
 
+def _int_arg(name: str) -> int | None:
+    """A non-negative integer query argument, None when absent. Parsed
+    by hand: Flask's ``type=int`` silently returns None on a malformed
+    value, which would drop a bound (``limit=abc`` exporting the whole
+    series) or serve the CURRENT version for a time-travel read. A
+    malformed or negative value aborts with a 400."""
+    raw = request.args.get(name)
+    if raw is None:
+        return None
+    try:
+        value = int(raw)
+    except ValueError:
+        value = -1
+    if value < 0:
+        abort(400, f"{name} must be a non-negative integer, got {raw!r}")
+    return value
+
+
 def create_app(
     spark,
     lake: SensorLake,
-    stream_threshold: int | None = DEFAULT_STREAM_THRESHOLD,
+    stream_threshold: int = DEFAULT_STREAM_THRESHOLD,
 ) -> Flask:
     """``stream_threshold``: export row count above which responses are
     served as chunked streams with bounded driver memory instead of one
-    fully-collected body. The reference materializes every export
-    driver-side up to its 10M-row limit (src/storage/mod.rs:15-17 +
-    src/exporters/*) — at that limit that is a multi-GB driver string,
-    the one reference behavior SURVEY §7.4 risk 10 says NOT to copy.
-    Every format decides with ONE bounded action: a
-    ``limit(threshold+1).collect()`` of the ordered result (a single
-    ``TakeOrderedAndProject``). A result that fits is assembled from
-    those rows; a larger one re-executes the query through the
-    bounded-memory ``toLocalIterator`` streams, so only over-threshold
-    exports pay the query twice. ``None`` disables streaming (always
-    collect).
+    body. The reference materializes every export driver-side up to
+    its 10M-row limit (src/storage/mod.rs:15-17 + src/exporters/*) — at
+    that limit that is a multi-GB driver string, the one reference
+    behavior SURVEY §7.4 risk 10 says NOT to copy. Every format decides
+    with ONE bounded action: a ``limit(threshold+1).collect()`` of the
+    ordered result (a single ``TakeOrderedAndProject``). A result that
+    fits is the format's assembler joined over those rows; a larger one
+    re-executes the query and streams the same assembler over the
+    bounded-memory ``toLocalIterator`` rows, so only over-threshold
+    exports pay the query twice.
 
     Raw reads resolve their sensors on the driver first (the pinned
     dimension answers with 0 jobs): under ``ZONEMAP_PROBE_MAX`` matched
@@ -143,26 +154,8 @@ def create_app(
     and no broadcast exchange."""
     app = Flask("sensapp_spark")
 
-    def _stream_senml(records) -> Response:
-        def gen():
-            try:
-                yield "["
-                first = True
-                for rec in records:
-                    yield ("" if first else ",") + json.dumps(
-                        rec, sort_keys=True, separators=(",", ":")
-                    )
-                    first = False
-                yield "]\n"
-            finally:
-                close = getattr(records, "close", None)
-                if close is not None:
-                    close()  # client disconnect → release the iterator
-
-        return Response(gen(), mimetype="application/json")
-
     def _peek(ordered) -> list | None:
-        """THE collect-vs-stream decision: one bounded
+        """THE small-vs-stream decision: one bounded
         ``limit(threshold+1).collect()`` over an ordered frame — Spark
         plans it as a ``TakeOrderedAndProject``, so the query executes
         once and no range-sort sampling job runs. That fusion needs
@@ -173,117 +166,89 @@ def create_app(
         for every format by ``tests/test_gateway_lean_reads.py``.
         Returns the complete result when it fits under the threshold,
         else None (the caller then streams by re-executing the query
-        through a bounded-memory iterator)."""
+        through a bounded-memory iterator: one job per result partition
+        plus the range-sort sampling job)."""
         head = ordered.limit(stream_threshold + 1).collect()
         return head if len(head) <= stream_threshold else None
 
+    def _serve_lines(lines, mimetype: str) -> Response:
+        """A formatted-lines frame (one ``line`` column, ordered) through
+        its assembler, ``chunk_lines``: joined over the peeked rows, or
+        streamed over the live ones."""
+        from sensapp_spark.exporters.csv_exporter import chunk_lines, row_lines
+
+        head = _peek(lines)
+        if head is not None:
+            body = "".join(chunk_lines(r.line for r in head))
+            return Response(body, mimetype=mimetype)
+        return Response(chunk_lines(row_lines(lines)), mimetype=mimetype)
+
     def _export(df, fmt: str, stype: SensorType) -> Response:
+        from sensapp_spark.exporters.arrow_exporter import (
+            arrow_multi_bytes_from_rows,
+            iter_arrow_from_rows,
+            iter_parquet_from_rows,
+            multi_row_frame,
+            multi_rows,
+        )
         from sensapp_spark.exporters.csv_exporter import (
             assemble_multi,
             chunk_lines,
             csv_multi_header,
             lines_multi,
+            local_rows,
             multi_label_keys,
             multi_parts,
             row_lines,
         )
         from sensapp_spark.exporters.jsonl_exporter import lines_jsonl
-        from sensapp_spark.exporters.senml_exporter import (
-            ordered_rows,
-            records_from_rows,
-        )
+        from sensapp_spark.exporters.senml_exporter import ordered_rows
 
         cols = df.select("sensor_id", "time", "value", "name", "unit", "labels")
-        if fmt in ("arrow", "parquet"):
-            # A result that fits assembles the complete file from the
-            # peeked row tuples — for Arrow BYTE-identical to the
-            # golden toArrow() path (schema nullability matched in
-            # MULTI_ARROW_SCHEMA), for parquet content-identical (its
-            # golden pins decoded content) — and a larger one streams
-            # from the live iterator with bounded driver memory. A
-            # consumer wanting more than the 10M-row limit reads the
-            # lake's partitioned tables directly — that IS the scale
-            # path for columnar handoff.
-            from sensapp_spark.exporters.arrow_exporter import (
-                arrow_multi_bytes_from_rows,
-                iter_arrow_from_rows,
-                iter_parquet_from_rows,
-                multi_row_frame,
-                multi_rows,
-                parquet_multi_bytes_from_rows,
-                to_parquet_multi,
-            )
-
-            if stream_threshold is None:
-                body = (
-                    to_arrow_multi(cols, stype)
-                    if fmt == "arrow"
-                    else to_parquet_multi(cols, stype)
-                )
-                return Response(body, mimetype=EXPORT_MEDIA[fmt])
-            head = _peek(multi_row_frame(cols, stype))
-            if head is not None:
-                rows = [tuple(r) for r in head]
-                body = (
-                    arrow_multi_bytes_from_rows(rows)
-                    if fmt == "arrow"
-                    else parquet_multi_bytes_from_rows(rows)
-                )
-                return Response(body, mimetype=EXPORT_MEDIA[fmt])
-            frames = (
-                iter_arrow_from_rows(multi_rows(cols, stype))
-                if fmt == "arrow"
-                else iter_parquet_from_rows(multi_rows(cols, stype))
-            )
-            return Response(frames, mimetype=EXPORT_MEDIA[fmt])
-        if stream_threshold is None:
-            if fmt == "csv":
-                body = to_csv_multi(cols, stype)
-            elif fmt == "jsonl":
-                body = to_jsonl(cols, stype)
-            else:
-                return jsonify(to_senml(cols, stype))
-            return Response(body, mimetype=EXPORT_MEDIA[fmt])
-        # Peek (one bounded action, _peek): a result that fits assembles
-        # the exact collect-path body from the peeked rows. A larger
-        # one RE-EXECUTES the query through the bounded-memory
-        # iterators (toLocalIterator: one job per result partition
-        # plus the range-sort sampling job), so above the threshold
-        # the query runs twice — the bounded top-K pass is the price
-        # of the single-job small path, which is every request under
-        # the threshold.
-        if fmt == "senml":
-            head = _peek(ordered_rows(cols))
-            if head is not None:
-                return jsonify(list(records_from_rows(head, stype)))
-            return _stream_senml(iter_senml(cols, stype))
+        media = EXPORT_MEDIA[fmt]
+        if fmt == "jsonl":
+            return _serve_lines(lines_jsonl(cols, stype), media)
         if fmt == "csv":
-            # The header's label keys come from the peeked rows
-            # themselves (assemble_multi), so the small path is one
-            # job; only a stream needs them up front.
+            # CSV keeps two line joins: the small body takes the
+            # header's label keys from the peeked rows themselves
+            # (assemble_multi), so it is one job; a stream needs the
+            # keys before its first line and formats in the JVM.
             head = _peek(multi_parts(cols, stype))
             if head is not None:
-                return Response(
-                    assemble_multi(head), mimetype=EXPORT_MEDIA[fmt]
-                )
+                return Response(assemble_multi(head), mimetype=media)
             keys = multi_label_keys(cols)
-            header = csv_multi_header(keys)
             lines = lines_multi(cols, stype, keys)
-        else:
-            header = None
-            lines = lines_jsonl(cols, stype)
-            head = _peek(lines)
+            return Response(
+                chunk_lines(row_lines(lines), csv_multi_header(keys)),
+                mimetype=media,
+            )
+        if fmt == "senml":
+            rows = ordered_rows(cols)
+            head = _peek(rows)
             if head is not None:
-                return Response(
-                    "".join(r.line + "\n" for r in head),
-                    mimetype=EXPORT_MEDIA[fmt],
-                )
-        # Shared chunk assembly (csv_exporter.chunk_lines): the streamed
-        # bytes stay byte-identical to the full-collect bodies, and the
-        # guarantee lives in exactly one implementation.
-        return Response(
-            chunk_lines(row_lines(lines), header), mimetype=EXPORT_MEDIA[fmt]
-        )
+                body = "".join(iter_senml(head, stype))
+                return Response(body, mimetype="application/json")
+            return Response(
+                iter_senml(local_rows(rows), stype),
+                mimetype="application/json",
+            )
+        # Arrow and Parquet: the IPC/Parquet file over the row tuples,
+        # one batch or row group when peeked, chunk_rows at a time when
+        # streamed. A consumer wanting more than the 10M-row limit
+        # reads the lake's partitioned tables directly — that IS the
+        # scale path for columnar handoff.
+        head = _peek(multi_row_frame(cols, stype))
+        if head is None:
+            assemble = (
+                iter_arrow_from_rows if fmt == "arrow"
+                else iter_parquet_from_rows
+            )
+            return Response(assemble(multi_rows(cols, stype)), mimetype=media)
+        if fmt == "arrow":
+            body = arrow_multi_bytes_from_rows(head)
+        else:
+            body = b"".join(iter_parquet_from_rows(head, max(1, len(head))))
+        return Response(body, mimetype=media)
 
     @app.errorhandler(400)
     def bad_request(e):
@@ -799,7 +764,8 @@ def create_app(
             end = _parse_rfc3339(request.args.get("end"))
         except ValueError as e:
             return jsonify({"error": f"bad datetime: {e}"}), 400
-        limit = request.args.get("limit", type=int)
+        limit = _int_arg("limit")  # 0 or absent: no limit
+        at_seq = _int_arg("at_seq")
         from pyspark.sql import functions as F
 
         # Column equality, not f-string SQL: the id comes from the URL
@@ -823,20 +789,6 @@ def create_app(
         # 410 when the version has been pruned, which is not a client
         # error and not a 404: the series exists, the snapshot is
         # gone).
-        # Parse at_seq by hand: Flask's type=int silently returns None
-        # on a malformed value, which would serve the CURRENT version
-        # with 200 — a time-travel read silently answering from the
-        # wrong snapshot. Present-but-not-an-integer is a 400; 410 is
-        # reserved for a valid seq whose version has been pruned.
-        at_seq_raw = request.args.get("at_seq")
-        at_seq = None
-        if at_seq_raw is not None:
-            try:
-                at_seq = int(at_seq_raw)
-            except ValueError:
-                return jsonify(
-                    {"error": f"at_seq must be an integer, got "
-                              f"{at_seq_raw!r}"}), 400
         try:
             vals = lake.values(
                 stype, start, end, at_seq=at_seq,
@@ -979,10 +931,6 @@ def create_app(
     def rollup_read():
         from pyspark.sql import functions as F
 
-        from sensapp_spark.exporters.csv_exporter import (
-            chunk_lines,
-            row_lines,
-        )
         from sensapp_spark.exporters.text import rfc3339_col
         from sensapp_spark.storage.rollup import RollupStore
 
@@ -1032,18 +980,7 @@ def create_app(
                 ).alias("line")
             )
         )
-        if stream_threshold is None:
-            head = lines.collect()
-        else:
-            head = _peek(lines)
-        if head is not None:
-            return Response(
-                "".join(r.line + "\n" for r in head),
-                mimetype="application/jsonl",
-            )
-        return Response(
-            chunk_lines(row_lines(lines)), mimetype="application/jsonl"
-        )
+        return _serve_lines(lines, "application/jsonl")
 
     # Beyond-reference (round 11): one composed maintenance pass —
     # rollup/sketch refresh, stats-driven compaction, zone-map
@@ -1593,21 +1530,16 @@ def create_app(
     DEFAULT_LABEL_LIMIT = 1000
 
     def _label_limit():
-        limit = request.args.get("limit", type=int)
+        limit = _int_arg("limit")
         if limit is None:
             return DEFAULT_LABEL_LIMIT
-        if limit < 0:
-            raise ValueError("limit must be >= 0")
         return limit or None  # 0 → unlimited
 
     @app.get("/api/v1/labels")
     def labels():
         from sensapp_spark.operators.catalog import label_names
 
-        try:
-            limit = _label_limit()
-        except ValueError as e:
-            return jsonify({"error": str(e)}), 400
+        limit = _label_limit()
         df = label_names(lake.sensors()).orderBy("label")
         if limit:
             df = df.limit(limit)
@@ -1619,10 +1551,7 @@ def create_app(
     def label_values_route(name):
         from sensapp_spark.operators.catalog import label_values
 
-        try:
-            limit = _label_limit()
-        except ValueError as e:
-            return jsonify({"error": str(e)}), 400
+        limit = _label_limit()
         df = label_values(lake.sensors(), name).orderBy("value")
         if limit:
             df = df.limit(limit)

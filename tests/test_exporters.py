@@ -13,20 +13,34 @@ import pytest
 from pyspark.sql import functions as F
 
 from sensapp_spark.datamodel.types import SensorType
-from sensapp_spark.exporters import (
-    to_arrow_multi,
-    to_arrow_single,
-    to_csv_multi,
-    to_csv_single,
-    to_jsonl,
-    to_senml,
+from sensapp_spark.exporters import iter_senml, to_arrow_single, to_csv_single
+from sensapp_spark.exporters.arrow_exporter import (
+    arrow_multi_bytes_from_rows,
+    multi_row_frame,
 )
+from sensapp_spark.exporters.csv_exporter import (
+    assemble_multi,
+    chunk_lines,
+    multi_parts,
+)
+from sensapp_spark.exporters.jsonl_exporter import lines_jsonl
+from sensapp_spark.exporters.senml_exporter import ordered_rows
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
 
 def ts(seconds):
     return T0 + dt.timedelta(seconds=seconds)
+
+
+def _jsonl(df, stype) -> str:
+    return "".join(chunk_lines(r.line for r in lines_jsonl(df, stype).collect()))
+
+
+def _senml(df, stype) -> list[dict]:
+    """One record per chunk, so the array framing spans chunks."""
+    rows = ordered_rows(df).collect()
+    return json.loads("".join(iter_senml(rows, stype, chunk_rows=1)))
 
 
 @pytest.fixture(scope="module")
@@ -82,7 +96,7 @@ def test_csv_single_location(spark):
 
 
 def test_csv_multi_label_pivot(float_df):
-    out = to_csv_multi(float_df, SensorType.FLOAT)
+    out = assemble_multi(multi_parts(float_df, SensorType.FLOAT).collect())
     lines = out.splitlines()
     # Union of label keys sorted: env, room (csv.rs:130-145).
     assert lines[0] == "timestamp,sensor_id,sensor_name,value,type,env,room"
@@ -92,8 +106,8 @@ def test_csv_multi_label_pivot(float_df):
 
 
 def test_jsonl(float_df):
-    out = to_jsonl(float_df.filter(F.col("sensor_id") == "u2"),
-                   SensorType.FLOAT)
+    out = _jsonl(float_df.filter(F.col("sensor_id") == "u2"),
+                 SensorType.FLOAT)
     obj = json.loads(out.splitlines()[0])
     assert obj == {
         "labels": {"env": "prod"},
@@ -112,13 +126,13 @@ def test_jsonl_json_value_inlined(spark):
               "unit string, labels map<string,string>")
     df = spark.createDataFrame(
         [("u", T0, '{"a": [1, 2]}', "j", None, {})], schema)
-    obj = json.loads(to_jsonl(df, SensorType.JSON).splitlines()[0])
+    obj = json.loads(_jsonl(df, SensorType.JSON).splitlines()[0])
     assert obj["value"] == {"a": [1, 2]}
     assert obj["type"] == "json"
 
 
 def test_senml_relative_times(float_df):
-    records = to_senml(float_df, SensorType.FLOAT)
+    records = _senml(float_df, SensorType.FLOAT)
     # Sensor u1: base + one relative record; sensor u2: base only.
     assert records[0]["bn"] == "u1"
     assert records[0]["_name"] == "temp"
@@ -140,7 +154,7 @@ def test_senml_location_two_records_per_sample(spark):
     df = spark.createDataFrame(
         [("u", T0, (59.9, 10.7), "gps", None, {}),
          ("u", ts(10), (60.0, 10.8), "gps", None, {})], schema)
-    records = to_senml(df, SensorType.LOCATION)
+    records = _senml(df, SensorType.LOCATION)
     assert records[0]["n"] == "lat" and records[0]["v"] == 59.9
     assert records[1] == {"t": 0, "n": "lon", "v": 10.7}
     assert records[2] == {"t": 10.0, "n": "lat", "v": 60.0}
@@ -157,7 +171,9 @@ def test_arrow_single_roundtrip(float_df):
 
 
 def test_arrow_multi_long_schema(float_df):
-    raw = to_arrow_multi(float_df, SensorType.FLOAT)
+    raw = arrow_multi_bytes_from_rows(
+        multi_row_frame(float_df, SensorType.FLOAT).collect()
+    )
     table = ipc.open_file(pa.BufferReader(raw)).read_all()
     assert table.column_names == [
         "timestamp", "sensor_id", "sensor_name", "value", "type", "labels"]

@@ -10,6 +10,7 @@ a zero delta means no Spark job ran at all.
 from __future__ import annotations
 
 import datetime as dt
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -209,30 +210,39 @@ def test_compacting_tick_leaves_rollup_current_and_reads_poll_nothing(
     assert r.get_json()["result"]
 
 
+# 24 one-minute buckets, computed from raw by the realtime read.
+ROLLUP = "/api/v1/rollup?type=float&grain=60&realtime=1"
+
+
 @pytest.fixture(scope="module")
 def bodies(spark, lean):
-    """Each format through the peek-then-stream path (threshold 5 <
-    24 rows), the peek's small path (threshold 1000) and the collect
-    path (no threshold)."""
+    """Each format, and the JSONL rollup read, through the
+    peek-then-stream path (threshold 5 < 24 rows) and the peek's small
+    path (threshold 1000)."""
     lake, _ = lean
     out = {}
-    for key, threshold in (("stream", 5), ("small", 1000),
-                           ("collect", None)):
+    for key, threshold in (("stream", 5), ("small", 1000)):
         app = create_app(spark, lake, stream_threshold=threshold)
         with app.test_client() as c:
             out[key] = {f: c.get(QUERY + f).get_data() for f in FORMATS}
+            out[key]["rollup"] = c.get(ROLLUP).get_data()
     return out
 
 
-@pytest.mark.parametrize("fmt", FORMATS)
+@pytest.mark.parametrize("fmt", FORMATS + ("rollup",))
 def test_export_paths_byte_identical(bodies, fmt):
-    assert bodies["collect"][fmt]
-    assert bodies["stream"][fmt] == bodies["collect"][fmt]
-    assert bodies["small"][fmt] == bodies["collect"][fmt]
+    assert bodies["small"][fmt]
+    assert bodies["stream"][fmt] == bodies["small"][fmt]
+
+
+def test_rollup_body_holds_every_bucket(bodies):
+    lines = bodies["small"]["rollup"].decode().splitlines()
+    assert len(lines) == 24
+    assert json.loads(lines[0])["sensor_id"] == "lean-0"
 
 
 def test_csv_header_carries_label_union(bodies):
-    lines = bodies["collect"]["csv"].decode().splitlines()
+    lines = bodies["small"]["csv"].decode().splitlines()
     assert lines[0] == "timestamp,sensor_id,sensor_name,value,type,dc,host"
     assert len(lines) == 25
     assert lines[9].endswith(',"x,y",b')  # lean-1's first row

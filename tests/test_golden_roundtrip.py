@@ -410,7 +410,7 @@ def test_arrow_parses_and_matches_input_values(client):
     table = pa.ipc.open_file(io.BytesIO(r.get_data())).read_all()
     assert table.num_rows == 3
     # Multi-sensor Arrow is the long layout with stringified values
-    # (arrow_exporter.to_arrow_multi) — one schema across all types.
+    # (arrow_exporter.multi_row_frame) — one schema across all types.
     assert sorted(table.column("value").to_pylist()) == ["20.5", "21.0", "21.5"]
     assert table.column("sensor_name").to_pylist() == ["temperature"] * 3
 

@@ -158,6 +158,33 @@ def test_series_limit_and_range(client):
     assert len(lines) == 1 and json.loads(lines[0])["value"] == 21.0
 
 
+def test_series_rejects_malformed_int_args(client):
+    """limit and at_seq are parsed by hand: a malformed or negative
+    value is a 400, never a silently unbounded export (limit=abc) or a
+    Spark error (limit=-1); limit=0 still means no limit."""
+    doc = client.get("/series?metric=temperature").get_json()
+    uuid = doc["dcat:dataset"][0]["dct:identifier"]
+    for arg in ("limit=-1", "limit=abc", "limit=1.5", "at_seq=-1"):
+        r = client.get(f"/series/{uuid}?format=jsonl&{arg}")
+        assert r.status_code == 400, arg
+        assert arg.split("=")[0] in r.get_json()["error"]
+    full = client.get(f"/series/{uuid}?format=jsonl").get_data()
+    assert client.get(f"/series/{uuid}?format=jsonl&limit=0").get_data() == full
+    assert full.count(b"\n") == 2
+
+
+@pytest.mark.parametrize(
+    "path", ["/api/v1/labels", "/api/v1/label/__name__/values"]
+)
+def test_label_routes_reject_malformed_limit(client, path):
+    """The label routes share the parser: limit=abc no longer falls
+    back to the default cap."""
+    for arg in ("abc", "-1"):
+        r = client.get(f"{path}?limit={arg}")
+        assert r.status_code == 400, arg
+        assert "limit" in r.get_json()["error"]
+
+
 def test_influx_write(client):
     r = client.post("/api/v2/write?bucket=b&precision=s",
                     data="weather,site=x temp=11.5 1700000000")
@@ -755,7 +782,16 @@ def test_arrow_string_roundtrip_through_gateway(spark, tmp_path_factory):
 def test_export_empty_result_shapes(spark, tmp_path_factory):
     """Reference query_export.rs:287-316: an empty export is a lone CSV
     header and a zero-byte JSONL body — driven through the gateway with
-    a time range that excludes every sample."""
+    a time range that excludes every sample. Arrow is a schema-only IPC
+    file and Parquet a 0-row file, both with the multi-layout columns,
+    and SenML an empty array."""
+    import io
+
+    import pyarrow.ipc as ipc
+    import pyarrow.parquet as pq
+
+    from sensapp_spark.exporters.arrow_exporter import MULTI_ARROW_SCHEMA
+
     lake = SensorLake(spark, str(tmp_path_factory.mktemp("lake_empty")))
     app = create_app(spark, lake)
     app.testing = True
@@ -767,16 +803,23 @@ def test_export_empty_result_shapes(spark, tmp_path_factory):
         (ds,) = doc["dcat:dataset"]
         uuid = ds["dct:identifier"]
         window = "start=1999-01-01T00:00:00Z&end=1999-01-02T00:00:00Z"
-        csv_body = c.get(
-            f"/series/{uuid}?format=csv&{window}"
-        ).get_data(as_text=True)
-        jsonl_body = c.get(
-            f"/series/{uuid}?format=jsonl&{window}"
-        ).get_data(as_text=True)
+        body = {
+            fmt: c.get(f"/series/{uuid}?format={fmt}&{window}").get_data()
+            for fmt in ("csv", "jsonl", "arrow", "parquet", "senml")
+        }
+    csv_body = body["csv"].decode()
     assert csv_body.strip().splitlines() == [
         csv_body.strip()
     ] and csv_body.startswith("timestamp,")  # header only
-    assert jsonl_body.strip() == ""  # no lines
+    assert body["jsonl"].strip() == b""  # no lines
+    arrow = ipc.open_file(io.BytesIO(body["arrow"]))
+    assert arrow.num_record_batches == 0
+    assert arrow.schema.equals(MULTI_ARROW_SCHEMA)
+    assert len(arrow.schema) == 6
+    parquet = pq.read_table(io.BytesIO(body["parquet"]))
+    assert parquet.num_rows == 0
+    assert parquet.schema.equals(MULTI_ARROW_SCHEMA)
+    assert body["senml"] == b"[]\n"
 
 
 def test_concurrent_catalog_queries(client):

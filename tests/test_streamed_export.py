@@ -1,14 +1,14 @@
 """Streamed HTTP export path: above ``stream_threshold`` rows the gateway
-serves CSV/JSONL/Arrow/SenML as chunked responses with bounded driver
-memory (`iter_*` exporters over ``toLocalIterator``) instead of one
-fully-collected body — the one reference behavior SURVEY §7.4 risk 10
+serves CSV/JSONL/Arrow/Parquet/SenML as chunked responses with bounded
+driver memory (each format's assembler over ``toLocalIterator`` rows)
+instead of one body — the one reference behavior SURVEY §7.4 risk 10
 says NOT to copy at scale (the reference builds the whole export string
 driver-side up to its 10M-row limit, src/storage/mod.rs:15-17).
 
-The big-path tests monkeypatch the collect-path exporters to raise, so a
-regression back to full collect fails loudly; body equivalence against
-the collect path (captured before patching) proves the streamed bytes
-are the same export.
+Reference bodies come from a default-threshold app, whose bytes the
+gateway goldens pin; every big-path response must be streamed
+(``is_streamed``), so a regression back to one collected body fails
+loudly.
 """
 
 from __future__ import annotations
@@ -19,7 +19,6 @@ import json
 import pyarrow.ipc as ipc
 import pytest
 
-import sensapp_spark.server.app as appmod
 from sensapp_spark.server.app import create_app
 from sensapp_spark.storage.lake import SensorLake
 
@@ -40,51 +39,46 @@ def _fixture_csv() -> str:
 def env(spark, tmp_path_factory):
     lake = SensorLake(spark, str(tmp_path_factory.mktemp("lake_stream")))
     streaming = create_app(spark, lake, stream_threshold=5)
-    collecting = create_app(spark, lake, stream_threshold=None)
-    streaming.testing = collecting.testing = True
-    with collecting.test_client() as c:
+    default = create_app(spark, lake)
+    streaming.testing = default.testing = True
+    with default.test_client() as c:
         assert c.post(
             "/publish", data=_fixture_csv(), content_type="text/csv"
         ).status_code == 200
-        # Reference bodies from the collect path, captured BEFORE the
-        # big-path tests patch the collect exporters away.
-        expected = {
-            fmt: c.get(QUERY + fmt).get_data()
-            for fmt in ("csv", "jsonl", "arrow", "senml", "parquet")
-        }
+    expected = {}
+    for fmt in ("csv", "jsonl", "arrow", "senml", "parquet"):
+        r = _served(default, QUERY + fmt)
+        assert not r.is_streamed  # one body under the threshold
+        expected[fmt] = r.get_data()
     return streaming, expected
 
 
-@pytest.fixture()
-def no_full_collect(monkeypatch):
-    def boom(*a, **k):  # pragma: no cover - the regression case
-        raise AssertionError("full-collect exporter called on the big path")
+def _served(app, path: str):
+    """The view's own Response: the test client wraps every body in an
+    iterator, so only this object tells a stream from one body."""
+    with app.test_request_context(path):
+        r = app.full_dispatch_request()
+    assert r.status_code == 200
+    return r
 
-    for name in ("to_csv_multi", "to_jsonl", "to_arrow_multi", "to_senml"):
-        monkeypatch.setattr(appmod, name, boom)
-    # The gateway imports the parquet exporter lazily per request, so the
-    # patch lands on its home module.
-    import sensapp_spark.exporters.arrow_exporter as arrowmod
 
-    monkeypatch.setattr(arrowmod, "to_parquet_multi", boom)
+def _streamed(app, fmt: str):
+    r = _served(app, QUERY + fmt)
+    assert r.is_streamed
+    return r
 
 
 @pytest.mark.parametrize("fmt", ["csv", "jsonl"])
-def test_streamed_text_bytes_equal_collected(env, no_full_collect, fmt):
+def test_streamed_text_bytes_equal_collected(env, fmt):
     streaming, expected = env
-    with streaming.test_client() as c:
-        r = c.get(QUERY + fmt)
-    assert r.status_code == 200
-    streamed = r.get_data()
+    streamed = _streamed(streaming, fmt).get_data()
     assert streamed == expected[fmt]
     assert streamed.decode().count("streamtemp") >= N_ROWS
 
 
-def test_streamed_arrow_parses_equal(env, no_full_collect):
+def test_streamed_arrow_parses_equal(env):
     streaming, expected = env
-    with streaming.test_client() as c:
-        r = c.get(QUERY + "arrow")
-    assert r.status_code == 200
+    r = _streamed(streaming, "arrow")
     got = ipc.open_file(io.BytesIO(r.get_data())).read_all()
     want = ipc.open_file(io.BytesIO(expected["arrow"])).read_all()
     # Same schema and values; the streamed file carries multiple record
@@ -93,17 +87,15 @@ def test_streamed_arrow_parses_equal(env, no_full_collect):
     assert got.combine_chunks().to_pydict() == want.combine_chunks().to_pydict()
 
 
-def test_streamed_parquet_parses_equal(env, no_full_collect):
+def test_streamed_parquet_parses_equal(env):
     """Above threshold the parquet body streams one row group per chunk
-    (ParquetWriter over the chunk sink) and never calls the buffering
-    to_parquet_multi; the streamed file reads back with the same schema
-    names and values as the collected single-row-group file."""
+    (ParquetWriter over the chunk sink); the streamed file reads back
+    with the same schema names and values as the single-row-group
+    small body."""
     import pyarrow.parquet as pq
 
     streaming, expected = env
-    with streaming.test_client() as c:
-        r = c.get(QUERY + "parquet")
-    assert r.status_code == 200
+    r = _streamed(streaming, "parquet")
     got = pq.read_table(io.BytesIO(r.get_data()))
     want = pq.read_table(io.BytesIO(expected["parquet"]))
     assert got.schema.names == want.schema.names
@@ -111,11 +103,9 @@ def test_streamed_parquet_parses_equal(env, no_full_collect):
     assert got.num_rows == N_ROWS
 
 
-def test_streamed_senml_parses_equal(env, no_full_collect):
+def test_streamed_senml_parses_equal(env):
     streaming, expected = env
-    with streaming.test_client() as c:
-        r = c.get(QUERY + "senml")
-    assert r.status_code == 200
+    r = _streamed(streaming, "senml")
     got = json.loads(r.get_data(as_text=True))
     want = json.loads(expected["senml"].decode())
     assert got == want
@@ -124,8 +114,8 @@ def test_streamed_senml_parses_equal(env, no_full_collect):
 
 def test_small_export_assembles_full_body(env):
     """Below the threshold the peek-ahead path assembles one complete
-    body byte-identical to the collect assembly (header + rows +
-    trailing newline) — golden byte shapes are preserved."""
+    body (header + rows + trailing newline) — golden byte shapes are
+    preserved."""
     streaming, _ = env
     with streaming.test_client() as c:
         r = c.get("/series?metric=streamtemp")
@@ -137,77 +127,3 @@ def test_small_export_assembles_full_body(env):
     assert body.count("\n") == 4  # header + 3 rows
     assert body.startswith("timestamp,sensor_id,sensor_name")
     assert body.endswith("\n") and not body.endswith("\n\n")
-
-
-def test_arrow_small_path_bytes_identical_to_toarrow(spark):
-    """The peek-ahead small path assembles the IPC file from buffered
-    row tuples with NO second Spark job — and the bytes are IDENTICAL
-    to the toArrow() collect path (schema nullability matched), for
-    populated and EMPTY results alike. This identity is what allowed
-    dropping the CollectLimit probe without touching the goldens."""
-    import datetime as dt
-
-    from sensapp_spark.datamodel.types import SensorType
-    from sensapp_spark.exporters.arrow_exporter import (
-        arrow_multi_bytes_from_rows,
-        multi_rows,
-        to_arrow_multi,
-    )
-
-    df = spark.createDataFrame(
-        [("s1", dt.datetime(2024, 1, 1, 0, i), 20.5 + i,
-          "temperature", "°C", {"site": "x"}) for i in range(5)],
-        "sensor_id string, time timestamp, value double, name string, "
-        "unit string, labels map<string,string>",
-    )
-    rows = list(multi_rows(df, SensorType.FLOAT))
-    assert arrow_multi_bytes_from_rows(rows) == to_arrow_multi(
-        df, SensorType.FLOAT
-    )
-    assert arrow_multi_bytes_from_rows([]) == to_arrow_multi(
-        df.limit(0), SensorType.FLOAT
-    )
-
-
-def test_parquet_small_path_content_identical(spark):
-    import datetime as dt
-
-    import pyarrow.parquet as pq
-
-    from sensapp_spark.datamodel.types import SensorType
-    from sensapp_spark.exporters.arrow_exporter import (
-        multi_rows,
-        parquet_multi_bytes_from_rows,
-        to_parquet_multi,
-    )
-
-    df = spark.createDataFrame(
-        [("s1", dt.datetime(2024, 1, 1, 0, i), 20.5 + i,
-          "temperature", "°C", {}) for i in range(5)],
-        "sensor_id string, time timestamp, value double, name string, "
-        "unit string, labels map<string,string>",
-    )
-    rows = list(multi_rows(df, SensorType.FLOAT))
-    got = pq.read_table(io.BytesIO(parquet_multi_bytes_from_rows(rows)))
-    want = pq.read_table(
-        io.BytesIO(to_parquet_multi(df, SensorType.FLOAT))
-    )
-    assert got.schema.names == want.schema.names
-    assert got.to_pydict() == want.to_pydict()
-    empty = pq.read_table(io.BytesIO(parquet_multi_bytes_from_rows([])))
-    assert empty.num_rows == 0 and empty.schema.names == want.schema.names
-
-
-def test_iter_csv_single_bytes_equal(spark):
-    """iter_csv_single (the single-series streaming variant) produces the
-    byte-identical body of to_csv_single."""
-    from sensapp_spark.datamodel.types import SensorType
-    from sensapp_spark.exporters import iter_csv_single, to_csv_single
-
-    df = spark.createDataFrame(
-        [(f"2024-01-01 00:{i:02d}:00", float(i)) for i in range(10)],
-        "time string, value double",
-    ).selectExpr("cast(time as timestamp) time", "value")
-    assert "".join(
-        iter_csv_single(df, SensorType.FLOAT, chunk_rows=3)
-    ) == to_csv_single(df, SensorType.FLOAT)

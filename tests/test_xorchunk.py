@@ -94,7 +94,7 @@ def test_crc32c_known_vectors():
 def test_streamed_read_response(spark):
     from sensapp_spark.datamodel.types import SENSOR_SCHEMA, SensorType
     from sensapp_spark.exporters.prometheus_read import (
-        handle_read_request_streamed,
+        iter_read_request_streamed,
     )
     from sensapp_spark.operators.matchers import LabelMatcher, MatcherType
     from sensapp_spark.wire import snappy_codec
@@ -113,8 +113,8 @@ def test_streamed_read_response(spark):
         ReadQuery(start_ms=0, end_ms=1,  # matches nothing → skipped frame
                   matchers=[LabelMatcher("__name__", "none", MatcherType.EQUAL)]),
     ]))
-    stream = handle_read_request_streamed(
-        req, sensors, lambda st, ids: {SensorType.FLOAT: floats}.get(st))
+    stream = b"".join(iter_read_request_streamed(
+        req, sensors, lambda st, ids: {SensorType.FLOAT: floats}.get(st)))
 
     # Exactly one frame (empty query skipped); frame = uvarint len + crc + msg
     length, pos = decode_varint(stream, 0)
