@@ -18,33 +18,41 @@ globally-aggregated (``sum(a) / sum(b)``) operands, ``on``/
 round 11 — ONE nested binary operand with Prometheus precedence and
 associativity: ``(a / b) > 0.5``, ``a / b / c``,
 ``sum(a) / (sum(b) + sum(c))``), and one level of **subquery**
-(``expr[range:step]``, with its own trailing offset). A fixed ``@``
-anchor is supported in both instant and range queries (in a range
-query the anchored expression is constant across steps — one instant
-evaluation broadcast onto the step grid, Prometheus semantics). The
-remaining didactic rejections are the genuinely rare tail: 4+-level
-aggregation nesting, 2+-level binary nesting, by/without-grouped
-binary operands, nested subqueries, and ``@`` inside a subquery;
-those raise the didactic ``PromQLError`` naming the construct.
+(``expr[range:step]``, with its own trailing ``@``/offset). A fixed
+``@`` anchor makes an expression constant across a range query's steps
+(Prometheus semantics). The remaining didactic rejections are the
+genuinely rare tail: 4+-level aggregation nesting, 2+-level binary
+nesting, by/without-grouped binary operands, nested subqueries, and
+``@`` inside a subquery; those raise the didactic ``PromQLError``
+naming the construct.
 
-Evaluation shapes (all single-shuffle, map-side partial aggregates):
+Evaluation shapes. There is ONE evaluator, the range evaluator
+(:func:`evaluate_range` / :func:`evaluate_range_binary`). An instant
+query is a one-step range query at its evaluation instant ``T`` (the
+parse anchor, recorded as ``eval_at``) with the step column dropped —
+Prometheus evaluates instant queries the same way (promql/engine.go
+``execEvalStmt``: start = end = T, one step). All single-shuffle,
+map-side partial aggregates:
 
-* range function → ``groupBy(sensor_id)`` over the selector window;
-  ``rate``/``increase`` use ``max_by/min_by`` (first/last sample), the
+* range function → each sample joins the steps whose window
+  ``[t − R, t]`` covers it (a bounded explode; a one-step grid is a
+  plain window filter), then ``groupBy(sensor_id, step)``;
+  ``rate``/``increase`` take the first/last sample, the
   ``*_over_time`` family maps to the matching Spark aggregate.
-* instant selector → last sample per series (``max_by(value, time)``).
-* aggregation → second ``groupBy`` over ``element_at(labels, k)`` keys —
-  by then the frame is one row per *series*, so this shuffle is
-  dimension-sized, not sample-sized. ``without`` groups on the
-  canonical string of the remaining label set (Spark cannot group by a
-  MAP column directly).
-* ``topk``/``bottomk`` → row_number window over the per-series instant
-  vector; the window input is one row per series (dimension-sized), so
-  the single-partition global window is not a scale hazard.
+* instant selector → last sample per (series, step).
+* aggregation → second ``groupBy`` over ``element_at(labels, k)`` keys
+  and the step — by then the frame is one row per *series* and step,
+  so this shuffle is dimension-sized, not sample-sized. ``without``
+  groups on the canonical string of the remaining label set (Spark
+  cannot group by a MAP column directly). Grouping by the step means
+  an aggregate over an empty vector is an empty vector.
+* ``topk``/``bottomk`` → row_number window per step over the
+  per-series vector (dimension-sized), not a scale hazard.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as dt
 import math
 import re
@@ -192,9 +200,9 @@ class ExtendedQuery:
     sub_range_s: float | None = None
     sub_step_s: float | None = None
     sub_eval: dt.datetime | None = None
-    # The subquery's own trailing `offset` (seconds) — already folded
-    # into sub_eval for instant evaluation; range evaluation rejects it
-    # (use @, whose fixed anchor is constant over the range).
+    # The subquery's own trailing `offset` (seconds), also folded into
+    # sub_eval. Range evaluation shifts the subquery's step grid back
+    # by it, so every step T evaluates the inner grid ending at T − o.
     sub_offset_s: float = 0.0
     # sort()/sort_desc() wrapping the whole expression: "asc"/"desc".
     sort: str | None = None
@@ -206,16 +214,15 @@ class ExtendedQuery:
     # default argument): the value; selector is None.
     const: float | None = None
     # The const came from time() (directly, via vector(time()), or as
-    # a date function's default argument). Instant evaluation freezes
-    # it at the parse anchor — correct, Prometheus evaluates the whole
-    # instant query at one timestamp — but RANGE evaluation must emit
-    # the PER-STEP timestamp (Prometheus evaluates time() at each
-    # step); _const_range_vector branches on this flag instead of
-    # repeating the parse-time now at every step.
+    # a date function's default argument). ``const`` holds the parse
+    # anchor, but Prometheus evaluates time() at each step, so
+    # _const_range_vector emits the step timestamp instead (for an
+    # instant query the one step IS the parse anchor).
     const_is_time: bool = False
-    # The selector carried an absolute `@ <ts>` evaluation anchor —
-    # range evaluation must reject it (a fixed window cannot slide
-    # with the steps).
+    # The selector (or subquery) carried an absolute `@ <ts>` anchor:
+    # its window does not slide with the steps. Range evaluation
+    # evaluates it once, as a one-step grid at the anchor, and repeats
+    # that answer at every step.
     at_fixed: bool = False
     # The selector carried an `offset` modifier. Pure plan-time window
     # arithmetic (already folded into selector.start/end), but HTTP
@@ -242,17 +249,19 @@ class ExtendedQuery:
     # the one dashboard triple ("total held by the top k"). Everything
     # deeper or wider stays parse-rejected.
     outer2_agg: str | None = None
+    # The instant an instant query evaluates at: the parse anchor
+    # ``now`` (selector windows, offsets and time() are all relative to
+    # it). evaluate_extended evaluates the one-step grid here.
+    eval_at: dt.datetime | None = None
 
 
 class TimeScalar(float):
     """``time()`` as a binary operand: a plain float scalar (the parse
-    anchor — INSTANT evaluation happens at exactly that timestamp, so
-    the frozen value is correct there) that RANGE evaluation
-    recognizes by type to substitute the per-step timestamp column —
-    Prometheus evaluates time() independently at every step, and a
-    frozen clock repeated across the grid is silently wrong (round-12
-    advisor). Subclassing float keeps every scalar-operand code path
-    (validation, instant apply, didactic rejections) untouched."""
+    anchor) that range evaluation recognizes by type to substitute the
+    per-step timestamp column — Prometheus evaluates time()
+    independently at every step, and a frozen clock repeated across
+    the grid is silently wrong (round-12 advisor). Subclassing float
+    keeps the parse-time scalar-operand checks untouched."""
 
     __slots__ = ()
 
@@ -294,6 +303,8 @@ class BinaryQuery:
     bool_mode: bool = False
     group_mode: str | None = None
     group_labels: list[str] = field(default_factory=list)
+    # The parse anchor, as ExtendedQuery.eval_at.
+    eval_at: dt.datetime | None = None
 
 
 def _strip_parens(s: str) -> tuple[str, str]:
@@ -628,8 +639,6 @@ def _nest_aggregation(
     triple. Anything deeper or wider is rejected, as are
     ``count_values``/``limitk``/``limit_ratio`` as the outer level
     and outers over aggregated histogram functions."""
-    import dataclasses
-
     if sub.outer_agg is not None:
         if (
             sub.outer2_agg is None
@@ -714,8 +723,16 @@ _NUMBER_RE = re.compile(
 
 
 def parse_extended(query: str, now: dt.datetime | None = None) -> ExtendedQuery:
-    """Parse selector | FUNC(matrix-selector) | AGG [by|without (…)] ( inner )."""
+    """Parse selector | FUNC(matrix-selector) | AGG [by|without (…)] ( inner ).
+    ``now`` (default: the wall clock) anchors every window and is
+    recorded as the query's evaluation instant ``eval_at``."""
     now = now or dt.datetime.now(dt.timezone.utc)
+    eq = _parse_extended(query, now)
+    eq.eval_at = now
+    return eq
+
+
+def _parse_extended(query: str, now: dt.datetime) -> ExtendedQuery:
     s = query.strip()
     m = _NAME_RE.match(s)
     head = m.group(0) if m else None
@@ -1490,9 +1507,8 @@ def parse_extended_expr(
         if re.fullmatch(r"time\s*\(\s*\)", text):
             # time() is a SCALAR in Prometheus — as an operand it is a
             # plain literal, not an empty-label vector to match on.
-            # The TimeScalar type lets range evaluation swap in the
-            # per-step timestamp (instant evaluation keeps the frozen
-            # anchor, which IS its evaluation time).
+            # The TimeScalar type lets evaluation swap in the per-step
+            # timestamp.
             return TimeScalar(_now_epoch(now))
         if re.fullmatch(r"pi\s*\(\s*\)", text):
             return math.pi
@@ -1583,6 +1599,7 @@ def parse_extended_expr(
         bool_mode=bool_mode,
         group_mode=gmode,
         group_labels=glabels,
+        eval_at=now,
     )
 
 
@@ -1641,6 +1658,72 @@ def _epoch_us(ts: dt.datetime) -> int:
     if ts.tzinfo is None:
         ts = ts.replace(tzinfo=dt.timezone.utc)
     return int(ts.timestamp() * 1_000_000)
+
+
+def _offset_us(eq: ExtendedQuery, now: dt.datetime | None) -> int:
+    """The selector's ``offset`` in µs: the parse anchor ``now`` minus
+    the selector's (already shifted) window end; 0 without ``now``."""
+    if now is None:
+        return 0
+    return max(0, _epoch_us(now) - _epoch_us(eq.selector.end_time))
+
+
+@dataclass(frozen=True)
+class _Grid:
+    """The evaluation steps ``t_i = start + i·step``, i ∈ [0, n_steps],
+    in µs; ``start``/``end`` keep the caller's datetimes for scan
+    bounds. An instant query is the grid with ``n_steps == 0``."""
+
+    start: dt.datetime
+    end: dt.datetime
+    start_us: int
+    s_us: int
+    n_steps: int
+
+    @classmethod
+    def of(cls, start: dt.datetime, end: dt.datetime, step_seconds: float):
+        start_us, s_us = _epoch_us(start), int(step_seconds * 1_000_000)
+        return cls(start, end, start_us, s_us,
+                   (_epoch_us(end) - start_us) // s_us)
+
+    def step_us(self, i: F.Column) -> F.Column:
+        return (F.lit(self.start_us) + i * F.lit(self.s_us)).cast("long")
+
+    def t_col(self, i: F.Column | None = None) -> F.Column:
+        """The step timestamp ``t`` of step index ``i`` (default the
+        ``__i`` column)."""
+        i = F.col("__i") if i is None else i
+        return F.timestamp_micros(self.step_us(i)).alias("t")
+
+    def steps(self, spark) -> DataFrame:
+        return spark.range(self.n_steps + 1).select(
+            F.col("id").alias("__i")
+        )
+
+    def explode(self, frame: DataFrame, tau: F.Column, r_us: int):
+        """``frame`` with one row per step ``__i`` whose closed window
+        ``[t_i − R, t_i]`` covers the instant ``tau`` (µs) — a bounded
+        fan-out of ceil(R/step) rows per input row. A one-step grid
+        needs no explode: it is a filter on that one window."""
+        start = F.lit(self.start_us)
+        if self.n_steps == 0:
+            return frame.filter(
+                (tau <= start) & (tau >= start - F.lit(r_us))
+            ).withColumn("__i", F.lit(0).cast("long"))
+        # ceil((tau − start)/S) via negated floor — stays integral.
+        idx0 = F.greatest(
+            F.lit(0), -F.floor((tau - start) / -self.s_us).cast("long")
+        )
+        idx1 = F.least(
+            F.lit(self.n_steps),
+            F.floor((tau + F.lit(r_us) - start) / self.s_us).cast("long"),
+        )
+        # sequence() counts DOWNWARD for idx0 > idx1 (a sample falling
+        # between two step windows has an empty step set) — filter
+        # before the explode.
+        return frame.filter(idx0 <= idx1).withColumn(
+            "__i", F.explode(F.sequence(idx0, idx1))
+        )
 
 
 _OVER_TIME = {
@@ -1870,17 +1953,15 @@ def _array_median(a: F.Column) -> F.Column:
 def _per_series_agg(
     scan: DataFrame,
     eq: ExtendedQuery,
-    keys: tuple[str, ...] = ("sensor_id",),
-    eval_us: F.Column | None = None,
+    keys: tuple[str, ...],
+    eval_us: F.Column,
 ) -> DataFrame:
     """The per-series window reduction for ``eq.func`` grouped by
-    ``keys`` — (sensor_id,) for an instant evaluation, (sensor_id,
-    step) for a range query. One shuffle, map-side partials.
+    ``keys`` — (sensor_id, step). One shuffle, map-side partials.
 
-    ``eval_us`` is the evaluation timestamp in µs as a post-aggregation
-    column expression (a literal for instant queries, derived from the
-    step index for range queries) — only ``predict_linear`` reads it.
-    """
+    ``eval_us`` is the step's evaluation timestamp in µs as a
+    post-aggregation column expression — only ``predict_linear`` reads
+    it."""
     gb = scan.groupBy(*keys)
     # First/last samples via min/max over struct(time, value):
     # lexicographic struct ordering makes the duplicate-timestamp
@@ -1979,10 +2060,6 @@ def _per_series_agg(
         if eq.func == "deriv":
             value = slope
         else:
-            if eval_us is None:
-                raise PromQLError(
-                    "call", "predict_linear() needs an evaluation time."
-                )
             eval_sec = (eval_us - F.lit(x0)) / F.lit(1e6)
             value = F.col("__ay") + slope * (
                 eval_sec + F.lit(eq.func_param) - F.col("__ax")
@@ -2089,302 +2166,92 @@ def evaluate_extended(
 ) -> DataFrame:
     """Evaluate to an instant vector: ``(sensor_id, name, labels, value)``
     — or, aggregated, one row per ``by``-group: ``(*by, value)``.
-    ``sort()``/``sort_desc()`` order the final frame by value (the
-    result is dashboard-sized — series or groups, never samples — so
-    the global sort is presentation cost, not a scale hazard).
+
+    An instant query is a one-step range query: :func:`evaluate_range`
+    on the grid ``start = end = eq.eval_at`` (the parse anchor), with
+    the step column dropped. ``sort()``/``sort_desc()`` and
+    ``sort_by_label()`` then order the final frame (the result is
+    dashboard-sized — series or groups, never samples — so the global
+    sort is presentation cost, not a scale hazard).
 
     ``cache`` (optional) is a per-construction operand memo: callers
     evaluating SEVERAL expressions over the same (sensors, values) —
     the tagged-union registry entries, a dashboard batch — pass one
     dict so canonically-equal per-series vectors are computed once and
-    shared (see _evaluate_extended_core). It must never outlive one
-    logical query/request: sharing across requests would serve stale
-    data after an ingest commit."""
-    out = _evaluate_extended_core(sensors, values, eq, cache)
-    if eq.sort is not None:
-        if eq.sort_labels:
-            # sort_by_label(_desc): lexicographic on each given label's
-            # value in turn (absent labels last), sensor_id tie-break.
-            cols = [
-                (
-                    F.element_at(F.col("labels"), lbl).asc_nulls_last()
-                    if eq.sort == "asc"
-                    else F.element_at(F.col("labels"), lbl).desc_nulls_last()
-                )
-                for lbl in eq.sort_labels
-            ]
-            return out.orderBy(*cols, F.col("sensor_id"))
-        direction = (
-            F.col("value").asc_nulls_last()
-            if eq.sort == "asc"
-            else F.col("value").desc_nulls_last()
-        )
-        # Deterministic tie-break on sensor_id when the frame carries
-        # one (the labels MAP is not orderable; aggregated frames'
-        # group keys already disambiguate rows for any consumer).
-        ties = ["sensor_id"] if "sensor_id" in out.columns else []
-        out = out.orderBy(direction, *ties)
-    return out
+    shared (see evaluate_range). It must never outlive one logical
+    query/request: sharing across requests would serve stale data
+    after an ingest commit."""
+    at = eq.eval_at
+    # The step length never enters a one-step evaluation.
+    out = evaluate_range(
+        sensors, values, dataclasses.replace(eq, sort=None), at, at, 1.0,
+        now=at, cache=cache,
+    ).drop("t")
+    if eq.sort is None:
+        return out
+    if eq.sort_labels:
+        # sort_by_label(_desc): lexicographic on each given label's
+        # value in turn (absent labels last), sensor_id tie-break.
+        cols = [
+            (
+                F.element_at(F.col("labels"), lbl).asc_nulls_last()
+                if eq.sort == "asc"
+                else F.element_at(F.col("labels"), lbl).desc_nulls_last()
+            )
+            for lbl in eq.sort_labels
+        ]
+        return out.orderBy(*cols, F.col("sensor_id"))
+    direction = (
+        F.col("value").asc_nulls_last()
+        if eq.sort == "asc"
+        else F.col("value").desc_nulls_last()
+    )
+    # Deterministic tie-break on sensor_id when the frame carries one
+    # (the labels MAP is not orderable; aggregated frames' group keys
+    # already disambiguate rows for any consumer).
+    ties = ["sensor_id"] if "sensor_id" in out.columns else []
+    return out.orderBy(direction, *ties)
 
 
-def _const_range_vector(
-    spark, eq: ExtendedQuery, start: dt.datetime, end: dt.datetime,
-    step_seconds: float,
+def evaluate_binary(
+    sensors: DataFrame,
+    values: DataFrame,
+    bq: BinaryQuery,
+    cache: dict | None = None,
 ) -> DataFrame:
-    """A constant vector evaluated over a step grid — the range form of
-    :func:`_const_vector`: one empty-label series carrying ``eq.const``
-    at every step. Exists for BINARY range operands ('x or vector(0)',
-    the Grafana fallback): a top-level constant range query stays a
-    didactic 400 in evaluate_range, but as an operand the constant has
-    a well-defined per-step value and costs one ``spark.range``."""
-    s_us = int(step_seconds * 1_000_000)
-    start_us = int(
-        start.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6
-    )
-    n_steps = int(
-        (end.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6 - start_us)
-        // s_us
-    )
-    # time()-derived constants are only constant at ONE evaluation
-    # instant: Prometheus evaluates time() independently at every step,
-    # so the range form emits the per-step timestamp — repeating the
-    # parse-time `now` would silently serve a frozen clock (round-12
-    # advisor). vector(s) and number literals stay on the constant
-    # path.
+    """Evaluate a binary operation as an instant vector: the one-step
+    :func:`evaluate_range_binary` at ``bq.eval_at``, step column
+    dropped. Vector∘vector results key on the matching label string
+    ``(labels, value)``; vector∘scalar and set operations keep the
+    operand's shape."""
+    at = bq.eval_at
+    return evaluate_range_binary(
+        sensors, values, bq, at, at, 1.0, now=at, cache=cache
+    ).drop("t")
+
+
+def _const_range_vector(spark, eq: ExtendedQuery, grid: _Grid) -> DataFrame:
+    """``vector(s)`` / ``time()`` / a date function's default argument
+    over a step grid: one series with the EMPTY label set (Prometheus)
+    carrying the constant at every step — it flows through label ops,
+    posts and aggregation like any other vector and costs one
+    ``spark.range``. A time()-derived constant carries each step's own
+    timestamp: Prometheus evaluates time() at every step, and
+    repeating the parse-time ``now`` would serve a frozen clock
+    (round-12 advisor)."""
     value = (
-        (F.lit(start_us) + F.col("id") * F.lit(s_us)) / F.lit(1e6)
+        grid.step_us(F.col("id")) / F.lit(1e6)
         if eq.const_is_time
-        else F.lit(eq.const).cast("double")
+        else F.lit(eq.const)
     )
-    out = spark.range(n_steps + 1).select(
+    out = spark.range(grid.n_steps + 1).select(
         F.lit(None).cast("string").alias("sensor_id"),
         F.lit(None).cast("string").alias("name"),
         F.create_map().cast("map<string,string>").alias("labels"),
         F.col("id").alias("__i"),
         value.cast("double").alias("value"),
     )
-    if eq.label_ops:
-        out = _apply_label_ops(out, eq.label_ops)
-    if eq.series_post:
-        out = _apply_post(out, eq.series_post)
-    t_col = F.timestamp_micros(
-        (F.lit(start_us) + F.col("__i") * F.lit(s_us)).cast("long")
-    ).alias("t")
-    return _finish_range(out, eq, t_col)
-
-
-def _const_vector(spark, eq: ExtendedQuery) -> DataFrame:
-    """``vector(s)`` / ``time()`` / a date function's default argument:
-    one series with the EMPTY label set (Prometheus) — flows through
-    label ops, posts, and aggregation like any other instant vector."""
-    one = spark.range(1).select(
-        F.lit(None).cast("string").alias("sensor_id"),
-        F.lit(None).cast("string").alias("name"),
-        F.create_map().cast("map<string,string>").alias("labels"),
-        F.lit(eq.const).cast("double").alias("value"),
-    )
-    if eq.label_ops:
-        one = _apply_label_ops(one, eq.label_ops)
-    if eq.series_post:
-        one = _apply_post(one, eq.series_post)
-    return _finish_instant(one, eq)
-
-
-def _evaluate_extended_core(
-    sensors: DataFrame,
-    values: DataFrame,
-    eq: ExtendedQuery,
-    cache: dict | None = None,
-) -> DataFrame:
-    if eq.const is not None:
-        return _const_vector(sensors.sparkSession, eq)
-    if _is_hist(eq):
-        import dataclasses
-
-        # The enclosing agg (if any) is the OUTER one — an aggregated
-        # INNER (sum by (le,…)) travels as eq.agg only when no outer
-        # agg exists (the parser rejects agg-over-agg). The inner
-        # evaluation applies ONLY hist_inner_post (functions inside
-        # the argument, over bucket values); everything wrapping the
-        # quantile — series_post (posts the AGG branch lifted off the
-        # wrapper), the outer agg, and eq.post — applies AFTERWARDS in
-        # parse order: quantile → series_post → agg → post.
-        inner_agg = eq.agg is not None and "le" in eq.by
-        vec = evaluate_extended(
-            sensors,
-            values,
-            cache=cache,
-            eq=dataclasses.replace(
-                eq,
-                hist_quantile=None,
-                hist_fraction=None,
-                sort=None,  # the outer wrapper sorts; not the buckets
-                post=eq.hist_inner_post,
-                **(
-                    {}
-                    if inner_agg
-                    else {"agg": None, "param": None, "by": [],
-                          "without": [], "series_post": []}
-                ),
-            ),
-        )
-        if eq.hist_quantile is not None:
-            hq = _histogram_le_quantile(
-                vec, eq.hist_quantile, by=(eq.by if inner_agg else None)
-            )
-        else:
-            hq = _histogram_le_fraction(
-                vec, *eq.hist_fraction, by=(eq.by if inner_agg else None)
-            )
-        if not inner_agg and eq.series_post:
-            hq = _apply_post(hq, eq.series_post)
-        if eq.agg is not None and not inner_agg:
-            # Ungrouped outer aggregation over the quantile vector
-            # (max(histogram_quantile(…))) — by/without outer grouping
-            # is parse-rejected.
-            if eq.agg == "quantile":
-                agg_col = F.percentile("value", F.lit(eq.param)).cast(
-                    "double"
-                )
-            else:
-                agg_col = _AGG_FNS[eq.agg]("value")
-                if eq.agg == "count":
-                    agg_col = agg_col.cast("long")
-            hq = hq.groupBy().agg(agg_col.alias("value"))
-        return _apply_post(hq, eq.post)
-    if eq.func in ABSENT_FUNCS:
-        return _evaluate_absent(sensors, values, eq)
-    if eq.sub_inner is not None:
-        out, series_shaped = _evaluate_subquery(sensors, values, eq)
-        if series_shaped:
-            if eq.label_ops:
-                out = _apply_label_ops(out, eq.label_ops)
-            if eq.series_post:
-                out = _apply_post(out, eq.series_post)
-            return _finish_instant(out, eq)
-        # Aggregated-inner subqueries already carry their group keys;
-        # the (parse-rejected) enclosing aggregation never applies.
-        return _apply_post(out, eq.post)
-    q = eq.selector
-    # Operand sharing (round 14, guide §2.4/§3.3): within ONE evaluation
-    # context (``cache`` dict scoped to a single query construction —
-    # never across calls), canonically-equal per-series vectors are
-    # built once and MATERIALIZED via a lazy localCheckpoint. A tagged
-    # union whose cases repeat an operand (rate(click[31d]) appears in
-    # all 7 binary_ratio cases) otherwise re-executes the sample scan +
-    # per-series reduction per branch: AQE's stage cache does not reuse
-    # canonically-equal exchanges across union branches (measured in
-    # round 13: 97 jobs/2179 tasks vs 16/789 with static ReuseExchange).
-    # The checkpointed frame is SERIES-sized (post-reduction) — the
-    # only shape that is sane to persist at 100 TB; raw scans are never
-    # cached. The key excludes every post-reduction field (agg/by/post/
-    # sort/…) — those are re-applied per consumer below.
-    key = ("series", repr(q), eq.func, repr(eq.func_param))
-    out = cache.get(key) if cache is not None else None
-    if out is None:
-        selected = select_sensors(sensors, q.matchers)
-        scan = values.join(
-            F.broadcast(selected.select("sensor_id")), "sensor_id",
-            "leftsemi",
-        )
-        scan = time_range(scan, q.start_time, q.end_time)
-
-        eval_us = (
-            F.lit(_epoch_us(q.end_time)) if q.end_time is not None else None
-        )
-        per_series = _per_series_agg(scan, eq, eval_us=eval_us)
-
-        out = per_series.join(
-            F.broadcast(selected.select("sensor_id", "name", "labels")),
-            "sensor_id",
-        )
-        if cache is not None:
-            out = out.localCheckpoint(eager=False)
-            cache[key] = out
-    if eq.label_ops:
-        out = _apply_label_ops(out, eq.label_ops)
-    if eq.series_post:
-        out = _apply_post(out, eq.series_post)
-    return _finish_instant(out, eq)
-
-
-def _finish_instant(out: DataFrame, eq: ExtendedQuery) -> DataFrame:
-    """Shared instant-vector tail: per-series projection or the
-    aggregation step(s), over any ``(sensor_id, name, labels, value)``
-    frame (the raw-scan path and the subquery path both end here).
-    A nested aggregation's outer level applies AFTER the inner one and
-    its wrappers (parse order: inner agg → post → outer agg →
-    outer_post)."""
-    res = _finish_instant_core(out, eq)
-    if eq.outer_agg is not None:
-        res = _apply_post(
-            _apply_outer2(_apply_outer_agg(res, eq), eq), eq.outer_post
-        )
-    return res
-
-
-def _finish_instant_core(out: DataFrame, eq: ExtendedQuery) -> DataFrame:
-    if eq.agg is None:
-        return _apply_post(
-            out.select("sensor_id", "name", "labels", "value"), eq.post
-        )
-
-    if eq.agg == "count_values":
-        # Group by the sample value itself (plus any by-labels); the
-        # value column becomes the count. The key keeps its double type
-        # instead of Prometheus' stringified label value — engine-
-        # portable (no float-formatting divergence).
-        keys = [F.col("value").alias(eq.label_param)] + [
-            F.element_at(F.col("labels"), lbl).alias(lbl) for lbl in eq.by
-        ]
-        return _apply_post(
-            out.groupBy(*keys).agg(
-                F.count("*").cast("long").alias("value")
-            ),
-            eq.post,
-        )
-
-    if eq.agg in ("topk", "bottomk"):
-        # Series selection, not aggregation: keep the k extreme series
-        # (per by-group when given). Input is the per-series instant
-        # vector — dimension-sized — so a driver-global window is fine.
-        order = (
-            F.col("value").desc() if eq.agg == "topk" else F.col("value").asc()
-        )
-        part = [F.element_at(F.col("labels"), lbl) for lbl in eq.by]
-        w = (
-            Window.partitionBy(*part) if part else Window.partitionBy()
-        ).orderBy(order, F.col("sensor_id"))
-        return _apply_post(
-            out.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= int(eq.param))
-            .select("sensor_id", "name", "labels", "value"),
-            eq.post,
-        )
-
-    if eq.agg in LIMIT_AGGS:
-        picked = _limit_agg_filter(out, eq)
-        return _apply_post(
-            picked.select("sensor_id", "name", "labels", "value"), eq.post
-        )
-
-    if eq.agg == "quantile":
-        agg_col = F.percentile("value", F.lit(eq.param)).cast("double")
-    elif eq.agg == "group":
-        agg_col = F.max(F.lit(1.0))
-    else:
-        agg_col = _AGG_FNS[eq.agg]("value")
-        if eq.agg == "count":
-            agg_col = agg_col.cast("long")
-
-    if eq.without:
-        grouped = out.groupBy(_labels_without(eq.without).alias("labels"))
-    else:
-        keys = [
-            F.element_at(F.col("labels"), lbl).alias(lbl) for lbl in eq.by
-        ]
-        grouped = out.groupBy(*keys) if keys else out.groupBy()
-    return _apply_post(grouped.agg(agg_col.alias("value")), eq.post)
+    return _finish_range(out, eq, grid)
 
 
 def _apply_outer_agg(out: DataFrame, eq: ExtendedQuery) -> DataFrame:
@@ -2398,12 +2265,11 @@ def _apply_outer_agg(out: DataFrame, eq: ExtendedQuery) -> DataFrame:
     * key-shaped (inner was a by-reduction / count_values): carries
       ``(*inner_keys, value)`` — outer ``by`` keys ARE columns.
 
-    A range-query input additionally carries ``t``; the outer level
-    always groups/partitions per step. The frame is dashboard-sized
-    (groups × steps), so the window/groupBy here is presentation-scale
-    work, not a shuffle of samples."""
+    Either shape also carries the step ``t``; the outer level always
+    groups/partitions per step. The frame is dashboard-sized (groups ×
+    steps), so the window/groupBy here is presentation-scale work, not
+    a shuffle of samples."""
     series_shaped = "sensor_id" in out.columns
-    step_keys = [F.col("t")] if "t" in out.columns else []
 
     if eq.outer_without:
         keys = [
@@ -2436,7 +2302,7 @@ def _apply_outer_agg(out: DataFrame, eq: ExtendedQuery) -> DataFrame:
                 if c not in ("value", "t")
             ]
         )
-        w = Window.partitionBy(*step_keys, *keys).orderBy(order, *ties)
+        w = Window.partitionBy("t", *keys).orderBy(order, *ties)
         return (
             out.withColumn("__orn", F.row_number().over(w))
             .filter(F.col("__orn") <= int(eq.outer_param))
@@ -2453,26 +2319,23 @@ def _apply_outer_agg(out: DataFrame, eq: ExtendedQuery) -> DataFrame:
         agg_col = _AGG_FNS[eq.outer_agg]("value")
         if eq.outer_agg == "count":
             agg_col = agg_col.cast("long")
-    grouped = out.groupBy(*keys, *step_keys)
-    return grouped.agg(agg_col.alias("value"))
+    return out.groupBy(*keys, "t").agg(agg_col.alias("value"))
 
 
 def _apply_outer2(out: DataFrame, eq: ExtendedQuery) -> DataFrame:
     """The permitted THIRD nesting level (round 9): an ungrouped plain
-    reduction over the level-2 topk/bottomk sampler's selected rows —
-    per step on a range input. Output shape matches an ungrouped
-    reduction (one row, or one row per ``t``), which every downstream
-    consumer already handles."""
+    reduction over the level-2 topk/bottomk sampler's selected rows,
+    per step. Output shape matches an ungrouped reduction (one row per
+    ``t``), which every downstream consumer already handles."""
     if eq.outer2_agg is None:
         return out
-    step_keys = [F.col("t")] if "t" in out.columns else []
     if eq.outer2_agg == "group":
         agg_col = F.max(F.lit(1.0))
     else:
         agg_col = _AGG_FNS[eq.outer2_agg]("value")
         if eq.outer2_agg == "count":
             agg_col = agg_col.cast("long")
-    return out.groupBy(*step_keys).agg(agg_col.alias("value"))
+    return out.groupBy("t").agg(agg_col.alias("value"))
 
 
 def data_window(eq: ExtendedQuery) -> tuple[dt.datetime, dt.datetime]:
@@ -2518,90 +2381,6 @@ def data_window(eq: ExtendedQuery) -> tuple[dt.datetime, dt.datetime]:
     return eq.selector.start_time, eq.selector.end_time
 
 
-def _evaluate_absent(
-    sensors: DataFrame, values: DataFrame, eq: ExtendedQuery
-) -> DataFrame:
-    """``absent(m{…})`` / ``absent_over_time(m[5m])``: a 1-element
-    vector ``(labels, value=1.0)`` iff the selector matches NO samples
-    in its window, else empty — the Prometheus alerting primitive for
-    dead targets. The output labels are the selector's EQUALITY
-    matchers (prometheus promql/functions.go createLabelsForAbsentFunction).
-
-    Plan: one constant row anti-joined against ``LIMIT 1`` of the
-    matched scan — the probe short-circuits at the first matching
-    sample (no count, no full scan), and the filter/semi-join still
-    push down to the value table, so at 100 TB this reads at most one
-    row group of the pruned window."""
-    from sensapp_spark.operators.matchers import MatcherType
-
-    q = eq.selector
-    selected = select_sensors(sensors, q.matchers)
-    scan = values.join(
-        F.broadcast(selected.select("sensor_id")), "sensor_id", "leftsemi"
-    )
-    scan = time_range(scan, q.start_time, q.end_time)
-    pairs = sorted(
-        (m.name, m.value)
-        for m in q.matchers
-        if m.name != "__name__" and m.matcher_type is MatcherType.EQUAL
-    )
-    # Escape backslash/quote in values so the emitted label set stays a
-    # well-formed k="v" list (matcher values may contain either).
-    def _esc(v: str) -> str:
-        return v.replace("\\", "\\\\").replace('"', '\\"')
-
-    lbl_str = ",".join(f'{k}="{_esc(v)}"' for k, v in pairs)
-    one = sensors.sparkSession.range(1).select(
-        F.lit(lbl_str).alias("labels"), F.lit(1.0).alias("value")
-    )
-    return _apply_post(
-        one.join(scan.limit(1), F.lit(True), "left_anti"), eq.post
-    )
-
-
-def _evaluate_subquery(
-    sensors: DataFrame, values: DataFrame, eq: ExtendedQuery
-) -> tuple[DataFrame, bool]:
-    """Prometheus subquery: evaluate the inner expression at every step
-    of ``[sub_eval - range, sub_eval]`` (the existing range-query
-    machinery — ONE bounded sample explode + one (series, step)
-    reduction, no per-step jobs), then apply the OUTER range function
-    (``eq.func``) over each series' step samples.
-
-    Returns ``(frame, series_shaped)``: a series-shaped inner
-    (unaggregated / topk / bottomk) yields ``(sensor_id, name, labels,
-    value)`` — ready for :func:`_finish_instant` so enclosing
-    aggregations compose — while an aggregated inner keeps its group
-    keys. The outer aggregation groups the STEP frame (series × steps
-    rows, dimension-sized): one cheap shuffle.
-
-    Documented deviation (like the inclusive range endpoints): step
-    timestamps anchor at ``sub_eval − range`` and count forward, while
-    Prometheus aligns subquery steps to ABSOLUTE multiples of the step
-    (timestamps divisible by ``step``), so the sample clock here can be
-    phase-shifted vs upstream by up to one step for the same query."""
-    inner = eq.sub_inner
-    start = eq.sub_eval - dt.timedelta(seconds=eq.sub_range_s)
-    steps = evaluate_range(
-        sensors, values, inner, start, eq.sub_eval, eq.sub_step_s,
-        now=eq.sub_eval,  # activates the inner selector's offset
-    )
-    series_shaped = "sensor_id" in steps.columns
-    if series_shaped:
-        group = ["sensor_id"]
-        carry = [
-            F.first("name").alias("name"),
-            F.first("labels").alias("labels"),
-        ]
-    else:
-        group = [c for c in steps.columns if c not in ("t", "value")]
-        carry = []
-    return (
-        _outer_step_agg(steps, eq, group, carry, F.unix_micros("t")),
-        series_shaped,
-    )
-
-
 def _outer_step_agg(
     frame: DataFrame,
     eq: ExtendedQuery,
@@ -2610,11 +2389,10 @@ def _outer_step_agg(
     t_us: F.Column,
 ) -> DataFrame:
     """Apply ``eq.func`` — the subquery's OUTER range function — over
-    each group's step samples (shared by the instant-subquery path and
-    the range-evaluated-subquery path, whose groups additionally carry
-    the outer step index)."""
+    each group's inner step samples (the groups carry the outer step
+    index ``__i``)."""
     outer = eq.func
-    grouped = frame.groupBy(*group) if group else frame.groupBy()
+    grouped = frame.groupBy(*group)
     if outer in ("rate", "increase", "delta"):
         raw = grouped.agg(
             *carry,
@@ -2640,12 +2418,10 @@ def _outer_step_agg(
     return grouped.agg(*carry, val.alias("value"))
 
 
-def _stage_le_buckets(
-    vec: DataFrame, by: list[str] | None, extra_keys: tuple[str, ...]
-):
+def _stage_le_buckets(vec: DataFrame, by: list[str] | None):
     """Shared staging for the histogram functions: resolve the group
     (label-string for a series vector, by-keys for ``sum by (le,…)``
-    output, plus ``extra_keys`` like the range path's ``t``), cast
+    output, plus the step ``t``), cast
     ``le`` to double (``+Inf`` included), and repair non-monotone
     cumulative counts with a running max. Returns ``(staged frame with
     group_names + __le + __cum, group exprs, group names)`` — one
@@ -2660,8 +2436,8 @@ def _stage_le_buckets(
         le_str = F.col("le")
         group_names = [k for k in by if k != "le"]
         group = [F.col(k) for k in group_names]
-    group = group + [F.col(k) for k in extra_keys]
-    group_names = group_names + list(extra_keys)
+    group = group + [F.col("t")]
+    group_names = group_names + ["t"]
 
     le_d = F.when(le_str == "+Inf", F.lit(inf)).otherwise(
         le_str.cast("double")
@@ -2679,7 +2455,6 @@ def _histogram_le_quantile(
     vec: DataFrame,
     phi: float,
     by: list[str] | None,
-    extra_keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """Prometheus-native ``histogram_quantile`` over cumulative
     ``le``-bucket series (prometheus/prometheus promql/quantile.go
@@ -2696,14 +2471,13 @@ def _histogram_le_quantile(
     ``by`` None means the input is a series vector (labels map, the
     ``le`` label extracted and dropped from the output key); otherwise
     the input is ``sum by (le, …)`` output and the group is the
-    remaining by-keys. ``extra_keys`` appends further group columns —
-    the range-query path passes ``("t",)`` so each evaluation step
-    quantiles its own bucket snapshot. Every window here partitions
-    the SERIES frame (one row per bucket series, × steps for a range)
-    — dimension-sized, so the sort-within-group work is trivial at any
-    corpus scale."""
+    remaining by-keys; either way the step ``t`` joins the group, so
+    each evaluation step quantiles its own bucket snapshot. Every window
+    here partitions the SERIES frame (one row per bucket series and
+    step) — dimension-sized, so the sort-within-group work is trivial
+    at any corpus scale."""
     inf = float("inf")
-    staged, group, group_names = _stage_le_buckets(vec, by, extra_keys)
+    staged, group, group_names = _stage_le_buckets(vec, by)
 
     if phi != phi or phi < 0 or phi > 1:  # NaN / out-of-range φ
         edge = float("nan") if phi != phi else (-inf if phi < 0 else inf)
@@ -2759,7 +2533,6 @@ def _histogram_le_fraction(
     lower: float,
     upper: float,
     by: list[str] | None,
-    extra_keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """``histogram_fraction(lower, upper, b)`` over cumulative
     ``le``-bucket series: the estimated fraction of observations in
@@ -2778,7 +2551,7 @@ def _histogram_le_fraction(
     then each group's buckets fold into ONE sorted array row — both
     bound lookups are array expressions over it, entirely in JVM."""
     inf = float("inf")
-    staged, _, group_names = _stage_le_buckets(vec, by, extra_keys)
+    staged, _, group_names = _stage_le_buckets(vec, by)
     agged = staged.groupBy(*group_names).agg(
         F.sort_array(
             F.collect_list(
@@ -2834,19 +2607,21 @@ def evaluate_range(
     now: dt.datetime | None = None,
     cache: dict | None = None,
 ) -> DataFrame:
-    """Prometheus range query: evaluate ``eq`` at every step in
-    [start, end] (the matrix selector's range — or the 1 h instant
-    lookback — slides with each step). Output adds a ``t`` column (the
-    step timestamp); aggregations group per (labels…, t).
+    """Prometheus range query — the one evaluator: evaluate ``eq`` at
+    every step in [start, end] (the matrix selector's range — or the
+    1 h instant lookback — slides with each step). Output adds a ``t``
+    column (the step timestamp); aggregations group per (labels…, t).
+    An instant query is the grid ``start = end = T`` (see
+    :func:`evaluate_extended`).
 
     Plan shape: each sample is exploded to the step indices whose
     window [t-R, t] covers it — a bounded fan-out of ceil(R/step) rows
-    per sample (the classic sliding-window-as-explode) — then the SAME
-    per-series reduction as the instant path runs grouped by (series,
-    step). One shuffle keyed (sensor, step) with map-side partials; no
-    per-step jobs, no driver loop. Range endpoints are inclusive-both,
-    matching the engine's Q5 time-range semantics (Prometheus itself
-    uses a left-open window).
+    per sample (the classic sliding-window-as-explode; a one-step grid
+    is a plain filter) — then the per-series reduction runs grouped by
+    (series, step). One shuffle keyed (sensor, step) with map-side
+    partials; no per-step jobs, no driver loop. Range endpoints are
+    inclusive-both, matching the engine's Q5 time-range semantics
+    (Prometheus itself uses a left-open window).
 
     ``now`` (the selector's parse-time evaluation anchor) activates the
     selector's ``offset`` modifier: offset = now − selector end, and
@@ -2854,14 +2629,13 @@ def evaluate_range(
     implemented by shifting the sample clock by +offset before the
     step-index math, so the explode/reduce shape is unchanged. Without
     ``now`` the offset cannot be derived and is ignored (pre-existing
-    registry callers evaluate offset-free selectors)."""
-    if eq.const is not None:
-        raise PromQLError(
-            "call",
-            "constant expressions (vector()/time()/argless date "
-            "functions) in range queries are not supported; evaluate "
-            "them as instant queries.",
-        )
+    registry callers evaluate offset-free selectors).
+
+    Constants (``vector()``, ``time()``, argless date functions) read
+    no samples: one empty-label series per step. A fixed ``@`` anchor
+    is constant over the range: the expression is evaluated once, as a
+    one-step grid at the anchor, and that answer repeats at every step.
+    ``sort()`` has no defined order across steps and is rejected."""
     if eq.sort is not None:
         raise PromQLError(
             "call",
@@ -2869,108 +2643,75 @@ def evaluate_range(
             "across steps (Prometheus ignores it there); sort the "
             "instant query instead.",
         )
+    grid = _Grid.of(start, end, step_seconds)
     if eq.at_fixed:
-        # Prometheus semantics: a fixed @ anchor makes the expression
-        # CONSTANT over the range — every step carries the value
-        # evaluated at the anchor. One instant evaluation, then the
-        # (series-sized) result repeats across the (bounded) step grid
-        # via a broadcast cross join — no per-step work.
-        import dataclasses
-
-        inst = evaluate_extended(
-            sensors, values, dataclasses.replace(eq, sort=None)
+        # The anchored window's end: the subquery's (@ − offset) grid
+        # end, or the selector's window end with its offset folded in.
+        anchor = (
+            eq.sub_eval if eq.sub_inner is not None
+            else eq.selector.end_time
         )
-        spark = sensors.sparkSession
-        s_us = int(step_seconds * 1_000_000)
-        start_us = int(
-            start.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6
+        fixed = evaluate_range(
+            sensors, values,
+            dataclasses.replace(eq, at_fixed=False, sub_offset_s=0.0),
+            anchor, anchor, step_seconds, now=anchor, cache=cache,
         )
-        n_steps = int(
-            (end.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6
-             - start_us) // s_us
-        )
-        steps = spark.range(n_steps + 1).select(
-            F.timestamp_micros(
-                (F.lit(start_us) + F.col("id") * s_us).cast("long")
-            ).alias("t")
-        )
-        keep = [c for c in inst.columns if c != "value"]
-        return inst.crossJoin(F.broadcast(steps)).select(
+        fixed = fixed.drop("t")
+        keep = [c for c in fixed.columns if c != "value"]
+        if grid.n_steps == 0:
+            return fixed.select(*keep, grid.t_col(F.lit(0)), "value")
+        # The (series-sized) answer repeats across the bounded step
+        # grid via a broadcast cross join — no per-step work.
+        steps = grid.steps(sensors.sparkSession).select(grid.t_col())
+        return fixed.crossJoin(F.broadcast(steps)).select(
             *keep, "t", "value"
         )
+    if eq.const is not None:
+        return _const_range_vector(sensors.sparkSession, eq, grid)
     if _is_hist(eq):
         return _evaluate_range_histogram(
-            sensors, values, eq, start, end, step_seconds, now
+            sensors, values, eq, start, end, step_seconds, now, cache
         )
     if eq.sub_inner is not None:
         return _evaluate_range_subquery(
-            sensors, values, eq, start, end, step_seconds, now
-        )
-    if eq.func in ABSENT_FUNCS:
-        return _evaluate_range_absent(
-            sensors, values, eq, start, end, step_seconds
+            sensors, values, eq, grid, now, cache
         )
     q = eq.selector
-    lookback = q.end_time - q.start_time
-    off_us = 0
-    if now is not None:
-        end_t = q.end_time
-        anchor = now if now.tzinfo else now.replace(tzinfo=dt.timezone.utc)
-        if end_t.tzinfo is None:
-            end_t = end_t.replace(tzinfo=dt.timezone.utc)
-        off_us = max(0, int((anchor - end_t).total_seconds() * 1_000_000))
-    offset = dt.timedelta(microseconds=off_us)
-    r_us = int(lookback.total_seconds() * 1_000_000)
-    s_us = int(step_seconds * 1_000_000)
-    start_us = int(start.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6)
-    n_steps = int(
-        (end.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6 - start_us)
-        // s_us
-    )
+    off_us = _offset_us(eq, now)
+    selected = select_sensors(sensors, q.matchers)
+    if eq.func in ABSENT_FUNCS:
+        return _evaluate_range_absent(
+            _covered_steps(values, selected, q, grid, off_us), eq, grid
+        )
 
-    # Range-path operand memo — the range analogue of the instant
-    # path's series-vector sharing (see _evaluate_extended_core): the
-    # per-(series, step) frame for an identical (selector, func, grid)
-    # is built once per construction context and localCheckpoint'd, so
-    # e.g. a range entry evaluating rate(click[2d]) both standalone and
-    # as a binary operand runs the sample explode + reduction once.
+    # Operand memo: the per-(series, step) frame for an identical
+    # (selector, func, grid) is built once per construction context
+    # (``cache`` is scoped to a single query construction — never
+    # across calls) and MATERIALIZED via a lazy localCheckpoint. A
+    # tagged union whose cases repeat an operand (rate(click[31d])
+    # appears in all 7 binary_ratio cases) otherwise re-executes the
+    # sample scan + per-series reduction per branch: AQE's stage cache
+    # does not reuse canonically-equal exchanges across union branches
+    # (measured in round 13: 97 jobs/2179 tasks vs 16/789 with static
+    # ReuseExchange). The checkpointed frame is SERIES-sized
+    # (post-reduction) — the only shape that is sane to persist at
+    # 100 TB; raw scans are never cached. The key excludes every
+    # post-reduction field (agg/by/post/…) — those are re-applied per
+    # consumer by _finish_range.
     key = (
-        "range", repr(q), eq.func, repr(eq.func_param),
-        start_us, s_us, n_steps, off_us, r_us,
+        "series", repr(q), eq.func, repr(eq.func_param),
+        grid.start_us, grid.s_us, grid.n_steps, off_us,
     )
     out = cache.get(key) if cache is not None else None
     if out is None:
-        selected = select_sensors(sensors, q.matchers)
-        scan = values.join(
-            F.broadcast(selected.select("sensor_id")), "sensor_id",
-            "leftsemi",
-        )
-        scan = time_range(scan, start - lookback - offset, end - offset)
-
-        tau = F.unix_micros("time") + F.lit(off_us)
-        idx0 = F.greatest(
-            F.lit(0), -F.floor((tau - F.lit(start_us)) / -s_us).cast("long")
-        )  # ceil((tau-start)/S) via negated floor — stays integral
-        idx1 = F.least(
-            F.lit(n_steps),
-            F.floor(
-                (tau + F.lit(r_us) - F.lit(start_us)) / s_us
-            ).cast("long"),
-        )
-        # sequence() counts DOWNWARD for idx0 > idx1 (a sample falling
-        # between two step windows has an empty step set) — filter
-        # before the explode.
-        exploded = scan.filter(idx0 <= idx1).withColumn(
-            "__i", F.explode(F.sequence(idx0, idx1))
-        )
-
-        step_eval_us = (
-            F.lit(start_us) + F.col("__i") * F.lit(s_us)
-        ).cast("long")
+        # One step: the reduction keys on the series alone (the step
+        # index is the constant 0, added below).
+        step = F.col("__i") if grid.n_steps else F.lit(0)
         per_step = _per_series_agg(
-            exploded, eq, keys=("sensor_id", "__i"), eval_us=step_eval_us
+            _covered_steps(values, selected, q, grid, off_us), eq,
+            keys=("sensor_id", "__i") if grid.n_steps else ("sensor_id",),
+            eval_us=grid.step_us(step),
         )
-
         out = per_step.join(
             F.broadcast(selected.select("sensor_id", "name", "labels")),
             "sensor_id",
@@ -2978,19 +2719,49 @@ def evaluate_range(
         if cache is not None:
             out = out.localCheckpoint(eager=False)
             cache[key] = out
-    t_col = F.timestamp_micros(
-        (F.lit(start_us) + F.col("__i") * s_us).cast("long")
-    ).alias("t")
-    return _finish_range(out, eq, t_col)
+    if not grid.n_steps:
+        # A literal step index, outside the memo: the planner folds the
+        # step out of every key above (per-step windows and groupings
+        # plan as on a plain per-series vector), and a reduction keyed
+        # on the series alone keeps the metadata join's size estimate
+        # series-sized, so the joins above it still broadcast.
+        out = out.withColumn("__i", F.lit(0).cast("long"))
+    return _finish_range(out, eq, grid)
 
 
-def _finish_range(out: DataFrame, eq: ExtendedQuery, t_col) -> DataFrame:
-    """Shared range-query tail over any per-(series, step) frame
-    carrying ``(sensor_id, name, labels, __i, value)`` — the raw-scan
-    path and the range-evaluated-subquery path both end here (the
-    instant analogue is :func:`_finish_instant`). A nested
-    aggregation's outer level applies per step, after the inner."""
-    res = _finish_range_core(out, eq, t_col)
+def _covered_steps(
+    values: DataFrame,
+    selected: DataFrame,
+    q: ParsedQuery,
+    grid: _Grid,
+    off_us: int,
+) -> DataFrame:
+    """The matched samples, one row per step ``__i`` whose window
+    ``[t − offset − R, t − offset]`` holds the sample: the selector's
+    sensors semi-joined onto a scan pruned to the grid's reach."""
+    offset = dt.timedelta(microseconds=off_us)
+    lookback = q.end_time - q.start_time
+    scan = values.join(
+        F.broadcast(selected.select("sensor_id")), "sensor_id", "leftsemi"
+    )
+    scan = time_range(
+        scan, grid.start - lookback - offset, grid.end - offset
+    )
+    return grid.explode(
+        scan,
+        F.unix_micros("time") + F.lit(off_us),
+        lookback // dt.timedelta(microseconds=1),
+    )
+
+
+def _finish_range(out: DataFrame, eq: ExtendedQuery, grid: _Grid) -> DataFrame:
+    """Shared tail over any per-(series, step) frame carrying
+    ``(sensor_id, name, labels, __i, value)`` — the raw-scan, constant,
+    subquery and rollup-served paths all end here: label ops, posts
+    and the aggregation step(s), per step. A nested aggregation's outer
+    level applies AFTER the inner one and its wrappers (parse order:
+    inner agg → post → outer agg → outer_post)."""
+    res = _finish_range_core(out, eq, grid.t_col())
     if eq.outer_agg is not None:
         res = _apply_post(
             _apply_outer2(_apply_outer_agg(res, eq), eq), eq.outer_post
@@ -3011,6 +2782,10 @@ def _finish_range_core(
             eq.post,
         )
     if eq.agg == "count_values":
+        # Group by the sample value itself (plus any by-labels); the
+        # value column becomes the count. The key keeps its double type
+        # instead of Prometheus' stringified label value — engine-
+        # portable (no float-formatting divergence).
         keys = [F.col("value").alias(eq.label_param)] + [
             F.element_at(F.col("labels"), lbl).alias(lbl) for lbl in eq.by
         ]
@@ -3021,9 +2796,9 @@ def _finish_range_core(
             eq.post,
         )
     if eq.agg in ("topk", "bottomk"):
-        # k extreme series PER STEP (and per by-group). The window input
-        # is series × steps — bounded by the step count, never by the
-        # sample count.
+        # Series selection, not aggregation: the k extreme series PER
+        # STEP (and per by-group). The window input is series × steps —
+        # bounded by the step count, never by the sample count.
         order = (
             F.col("value").desc() if eq.agg == "topk" else F.col("value").asc()
         )
@@ -3065,73 +2840,42 @@ def _finish_range_core(
 
 
 def _evaluate_range_absent(
-    sensors: DataFrame,
-    values: DataFrame,
-    eq: ExtendedQuery,
-    start: dt.datetime,
-    end: dt.datetime,
-    step_seconds: float,
+    covered: DataFrame, eq: ExtendedQuery, grid: _Grid
 ) -> DataFrame:
-    """Range-evaluated ``absent()``/``absent_over_time()`` (round 7 —
-    closes the last didactic range rejection): one row ``(labels, t,
-    1.0)`` for every step whose window contains NO matching sample —
-    the alerting shape Grafana draws as a "gap detector".
+    """``absent(m{…})`` / ``absent_over_time(m[5m])``: one row ``(labels,
+    t, 1.0)`` for every step whose window contains NO matching sample —
+    the Prometheus alerting primitive for dead targets, which Grafana
+    draws as a "gap detector". The output labels are the selector's
+    EQUALITY matchers (prometheus promql/functions.go
+    createLabelsForAbsentFunction).
 
-    Plan: the matched scan explodes each sample to its covering step
-    indices (the standard bounded fan-out), reduces to the DISTINCT
-    present steps (≤ n_steps rows), and the bounded step grid
-    anti-joins against that — sample-grain data never crosses the
-    anti-join, so the cost is the pruned scan plus two tiny-frame
-    operations."""
+    Plan: ``covered`` (the matched samples per covering step) reduces to
+    the present steps, and the bounded step grid anti-joins against
+    them on the step — sample-grain data never crosses the join. On a
+    one-step grid the present set is a LIMIT-1 probe that stops at the
+    first matching sample (no distinct, no full scan)."""
     from sensapp_spark.operators.matchers import MatcherType
 
-    q = eq.selector
-    lookback = q.end_time - q.start_time
-    r_us = int(lookback.total_seconds() * 1_000_000)
-    s_us = int(step_seconds * 1_000_000)
-    start_us = int(start.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6)
-    n_steps = int(
-        (end.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6 - start_us)
-        // s_us
-    )
-    selected = select_sensors(sensors, q.matchers)
-    scan = values.join(
-        F.broadcast(selected.select("sensor_id")), "sensor_id", "leftsemi"
-    )
-    scan = time_range(scan, start - lookback, end)
-    tau = F.unix_micros("time")
-    idx0 = F.greatest(
-        F.lit(0), -F.floor((tau - F.lit(start_us)) / -s_us).cast("long")
-    )
-    idx1 = F.least(
-        F.lit(n_steps),
-        F.floor((tau + F.lit(r_us) - F.lit(start_us)) / s_us).cast("long"),
-    )
-    present = (
-        scan.filter(idx0 <= idx1)
-        .withColumn("__i", F.explode(F.sequence(idx0, idx1)))
-        .select("__i")
-        .distinct()
-    )
-    spark = sensors.sparkSession
-    steps = spark.range(n_steps + 1).select(F.col("id").alias("__i"))
+    present = covered.select("__i")
+    present = present.limit(1) if grid.n_steps == 0 else present.distinct()
+    steps = grid.steps(covered.sparkSession)
     missing = steps.join(present, "__i", "left_anti")
     pairs = sorted(
         (m.name, m.value)
-        for m in q.matchers
+        for m in eq.selector.matchers
         if m.name != "__name__" and m.matcher_type is MatcherType.EQUAL
     )
 
+    # Escape backslash/quote in values so the emitted label set stays a
+    # well-formed k="v" list (matcher values may contain either).
     def _esc(v: str) -> str:
         return v.replace("\\", "\\\\").replace('"', '\\"')
 
     lbl_str = ",".join(f'{k}="{_esc(v)}"' for k, v in pairs)
-    t_col = F.timestamp_micros(
-        (F.lit(start_us) + F.col("__i") * s_us).cast("long")
-    ).alias("t")
     return _apply_post(
         missing.select(
-            F.lit(lbl_str).alias("labels"), t_col, F.lit(1.0).alias("value")
+            F.lit(lbl_str).alias("labels"), grid.t_col(),
+            F.lit(1.0).alias("value"),
         ),
         eq.post,
     )
@@ -3145,15 +2889,23 @@ def _evaluate_range_histogram(
     end: dt.datetime,
     step_seconds: float,
     now: dt.datetime | None,
+    cache: dict | None,
 ) -> DataFrame:
-    """Range-evaluated ``histogram_quantile`` (round 7 — closes the
-    round-6 didactic rejection): the bucket expression is range-
-    evaluated first (one bounded explode, per the standard path), then
-    each step's bucket snapshot is quantiled independently — the
-    cumulative-bucket interpolation runs per (group, t), still entirely
-    in JVM expressions over the dimension×steps frame."""
-    import dataclasses
+    """``histogram_quantile``/``histogram_fraction``: the bucket
+    expression is range-evaluated first (one bounded explode, per the
+    standard path), then each step's bucket snapshot is quantiled
+    independently — the cumulative-bucket interpolation runs per
+    (group, t), entirely in JVM expressions over the dimension×steps
+    frame.
 
+    The enclosing agg (if any) is the OUTER one — an aggregated INNER
+    (sum by (le,…)) travels as eq.agg only when no outer agg exists
+    (the parser rejects agg-over-agg). The inner evaluation applies
+    ONLY hist_inner_post (functions inside the argument, over bucket
+    values); everything wrapping the quantile — series_post (posts the
+    AGG branch lifted off the wrapper), the outer agg, and eq.post —
+    applies AFTERWARDS in parse order: quantile → series_post → agg →
+    post."""
     inner_agg = eq.agg is not None and "le" in eq.by
     vec = evaluate_range(
         sensors,
@@ -3162,7 +2914,6 @@ def _evaluate_range_histogram(
             eq,
             hist_quantile=None,
             hist_fraction=None,
-            sort=None,
             post=eq.hist_inner_post,
             **(
                 {}
@@ -3175,27 +2926,19 @@ def _evaluate_range_histogram(
         end,
         step_seconds,
         now=now,
+        cache=cache,
     )
+    by = eq.by if inner_agg else None
     if eq.hist_quantile is not None:
-        hq = _histogram_le_quantile(
-            vec,
-            eq.hist_quantile,
-            by=(eq.by if inner_agg else None),
-            extra_keys=("t",),
-        )
+        hq = _histogram_le_quantile(vec, eq.hist_quantile, by=by)
     else:
-        hq = _histogram_le_fraction(
-            vec,
-            *eq.hist_fraction,
-            by=(eq.by if inner_agg else None),
-            extra_keys=("t",),
-        )
+        hq = _histogram_le_fraction(vec, *eq.hist_fraction, by=by)
     if not inner_agg and eq.series_post:
         hq = _apply_post(hq, eq.series_post)
     if eq.agg is not None and not inner_agg:
         # Ungrouped outer aggregation over the quantile vector, PER
         # STEP (max(histogram_quantile(…))) — grouped outer
-        # aggregation is parse-rejected, as on the instant path.
+        # aggregation is parse-rejected.
         if eq.agg == "quantile":
             agg_col = F.percentile("value", F.lit(eq.param)).cast("double")
         else:
@@ -3210,72 +2953,52 @@ def _evaluate_range_subquery(
     sensors: DataFrame,
     values: DataFrame,
     eq: ExtendedQuery,
-    start: dt.datetime,
-    end: dt.datetime,
-    step_seconds: float,
+    grid: _Grid,
     now: dt.datetime | None,
+    cache: dict | None,
 ) -> DataFrame:
-    """Range-evaluated subquery (round 7 — closes the round-6 didactic
-    rejection): the inner expression is range-evaluated ONCE over the
-    widened window [start − range, end] at the SUBQUERY's step
-    resolution, then each outer step ``T`` applies ``eq.func`` over the
-    inner samples with ``t ∈ [T − range, T]`` — a second bounded
-    explode, this time over the dimension×inner-steps frame, never over
-    raw samples.
+    """Prometheus subquery ``f(expr[range:step] offset o)``: the inner
+    expression is range-evaluated ONCE over the widened window
+    [start − o − range, end − o] at the SUBQUERY's step resolution,
+    then each outer step ``T`` applies the OUTER range function
+    ``eq.func`` over the inner samples with ``t ∈ [T − o − range,
+    T − o]`` — a second bounded explode, this time over the
+    dimension×inner-steps frame, never over raw samples. A
+    series-shaped inner (unaggregated / topk / bottomk) keeps
+    ``(sensor_id, name, labels)`` so enclosing aggregations compose;
+    an aggregated inner keeps its group keys.
 
-    Anchoring deviation (documented, same as the instant subquery
-    path): the inner grid anchors at ``start − range`` and is SHARED by
-    all outer steps, while Prometheus re-derives absolutely-aligned
-    inner timestamps; when the outer step is a multiple of the inner
-    step the grids coincide."""
-    if eq.sub_offset_s:
-        raise PromQLError(
-            "modifier",
-            "a subquery offset in range queries is not supported; "
-            "use an absolute @ anchor (constant over the range) or "
-            "shift the query window itself.",
-        )
+    Anchoring deviation (documented, like the inclusive range
+    endpoints): the inner grid anchors at ``start − o − range`` and is
+    SHARED by all outer steps, while Prometheus aligns subquery steps
+    to ABSOLUTE multiples of the step; when the outer step is a
+    multiple of the inner step the grids coincide, and otherwise the
+    sample clock can be phase-shifted vs upstream by up to one step."""
+    shift = dt.timedelta(seconds=eq.sub_offset_s)
     widen = dt.timedelta(seconds=eq.sub_range_s)
     steps = evaluate_range(
-        sensors, values, eq.sub_inner, start - widen, end, eq.sub_step_s,
-        now=now,
+        sensors, values, eq.sub_inner,
+        grid.start - shift - widen, grid.end - shift, eq.sub_step_s,
+        now=now, cache=cache,
     )
-    series_shaped = "sensor_id" in steps.columns
-    tau = F.unix_micros("t")
-    s_us = int(step_seconds * 1_000_000)
-    r_us = int(eq.sub_range_s * 1_000_000)
-    start_us = int(start.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6)
-    n_steps = int(
-        (end.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6 - start_us)
-        // s_us
-    )
-    idx0 = F.greatest(
-        F.lit(0), -F.floor((tau - F.lit(start_us)) / -s_us).cast("long")
-    )
-    idx1 = F.least(
-        F.lit(n_steps),
-        F.floor((tau + F.lit(r_us) - F.lit(start_us)) / s_us).cast("long"),
-    )
-    exploded = steps.filter(idx0 <= idx1).withColumn(
-        "__i", F.explode(F.sequence(idx0, idx1))
-    )
-    t_col = F.timestamp_micros(
-        (F.lit(start_us) + F.col("__i") * s_us).cast("long")
-    ).alias("t")
-    if series_shaped:
-        group = ["sensor_id", "__i"]
+    # Shifted inner clock: τ = t + o puts the windows at [T − range, T].
+    tau = F.unix_micros("t") + F.lit(int(eq.sub_offset_s * 1_000_000))
+    exploded = grid.explode(steps, tau, int(eq.sub_range_s * 1_000_000))
+    if "sensor_id" in steps.columns:
         carry = [
             F.first("name").alias("name"),
             F.first("labels").alias("labels"),
         ]
-        out = _outer_step_agg(exploded, eq, group, carry, tau)
-        return _finish_range(out, eq, t_col)
+        out = _outer_step_agg(
+            exploded, eq, ["sensor_id", "__i"], carry, tau
+        )
+        return _finish_range(out, eq, grid)
     # Aggregated-inner subquery: the group keys ride along; the
     # (parse-rejected) enclosing aggregation never applies.
     group = [c for c in steps.columns if c not in ("t", "value")] + ["__i"]
     out = _outer_step_agg(exploded, eq, group, [], tau)
     keys = [c for c in out.columns if c not in ("value", "__i")]
-    return _apply_post(out.select(*keys, t_col, "value"), eq.post)
+    return _apply_post(out.select(*keys, grid.t_col(), "value"), eq.post)
 
 
 def _pdiv(lc: F.Column, rc: F.Column) -> F.Column:
@@ -3319,128 +3042,80 @@ def _matching_key(on: list[str], ignoring: list[str]) -> F.Column:
     return _labels_without(ignoring)
 
 
-def evaluate_binary(
+def evaluate_range_binary(
     sensors: DataFrame,
-    values: DataFrame,
+    values: DataFrame | None,
     bq: BinaryQuery,
+    start: dt.datetime,
+    end: dt.datetime,
+    step_seconds: float,
+    now: dt.datetime | None = None,
+    side_eval=None,
     cache: dict | None = None,
 ) -> DataFrame:
-    """Evaluate one arithmetic operation between two instant vectors
-    with one-to-one matching, or between a vector and a scalar.
+    """Binary operations between two vectors, or a vector and a scalar
+    — the Grafana ratio panel: evaluate both operands at every step,
+    then apply the operation PER STEP. An instant query is the one-step
+    grid (see :func:`evaluate_binary`).
 
-    Vector∘vector arithmetic returns ``(labels, value)`` keyed on the
-    matching label string (the metric name is dropped, as in
-    Prometheus); vector∘scalar and the set operations keep the series
-    shape ``(sensor_id, name, labels, value)``. Both operand vectors
-    are series-sized (post per-series aggregation), so the equality
-    join is dimension-sized — AQE is free to broadcast it. Many-to-one
-    matches (duplicate keys on a side) multiply rows; Prometheus
-    rejects them at runtime, here they are documented as undefined
-    instead of paying a duplicate check.
+    * Vector∘vector one-to-one matching: series pair up on their full
+      label set (metric name dropped), restricted by ``on``/
+      ``ignoring``, joined on (key, t); the result is ``(labels, t,
+      value)`` keyed on the matching label string. Both operands are
+      series-sized (post per-series reduction), so the equality join
+      is dimension-sized — AQE is free to broadcast it. Many-to-one
+      matches (duplicate keys on a side) multiply rows; Prometheus
+      rejects them at runtime, here they are documented as undefined
+      instead of paying a duplicate check.
+    * Vector∘scalar keeps the vector's shape; ``scalar(expr)`` reduces
+      per step (NaN unless exactly one series at that step) and joins
+      on t; ``time()`` is each step's own timestamp.
+    * Comparisons follow Prometheus: without ``bool`` they FILTER the
+      left vector (value unchanged); with ``bool`` every series
+      survives with value 1.0/0.0.
+    * ``and``/``unless``/``or`` become left-semi / left-anti joins / a
+      union with an anti-join on (key, t) — no value columns cross
+      sides.
+    * ``group_left``/``group_right`` many-to-one matching (the
+      info-metric ratio panel) joins per (match key, t).
 
-    Comparisons follow Prometheus: without ``bool`` they FILTER the
-    left vector (value unchanged); with ``bool`` every series survives
-    with value 1.0/0.0. Set operations (``and``/``unless``/``or``)
-    become left-semi / left-anti joins / a union with an anti-join on
-    the matching key — no value columns cross sides, so all three stay
-    dimension-sized joins."""
-    # Operands must evaluate to label-map series vectors (or scalars):
-    # a histogram_quantile result keys on a canonical label STRING and
-    # an aggregated-inner subquery keeps its group columns — either
-    # would crash the matching-key expression with an opaque
-    # AnalysisException, so reject them didactically up front (this
-    # covers the set-op, scalar, group, and one-to-one paths alike).
-    for side_eq in (bq.left, bq.right):
-        if isinstance(side_eq, float):
-            continue
-        if isinstance(side_eq, ScalarOf):
-            # The reduction to one value is shape-agnostic (row count +
-            # first value), so any inner that parses is evaluable;
-            # parse-time checks (no absent, no sort) already ran.
-            continue
-        if isinstance(side_eq, BinaryQuery):
-            # A nested binary operand (round 11) re-enters this
-            # function — its own operands were checked by its own
-            # recursion.
-            continue
-        if _is_hist(side_eq):
-            raise PromQLError(
-                "binary",
-                "histogram-function operands in binary operations "
-                "are not supported; compute them separately.",
-            )
-        if side_eq.func in ABSENT_FUNCS:
-            raise PromQLError(
-                "binary",
-                f"{side_eq.func}() operands in binary operations are "
-                "not supported; alert on the absent vector directly.",
-            )
-        if side_eq.outer_agg is not None or (
-            side_eq.sub_inner is not None
-            and side_eq.sub_inner.outer_agg is not None
-        ):
-            # A nested aggregation's result keys on the OUTER group
-            # columns, not a label map — the matching-key expression
-            # would crash opaquely. The same applies wrapped in a
-            # subquery: avg_over_time(sum(topk(2, m))[10m:5m]) loses
-            # the series shape even though sub_inner.agg ('topk')
-            # alone would pass the allowlist below (round-8 review).
-            raise PromQLError(
-                "binary",
-                "Nested-aggregation operands in binary operations are "
-                "not supported; compute the sides separately.",
-            )
-        if side_eq.sub_inner is not None and side_eq.sub_inner.agg not in (
-            None,
-            "topk",
-            "bottomk",
-        ):
-            # topk/bottomk inners stay series-shaped (see
-            # _evaluate_subquery) — only true aggregations lose the
-            # label map.
-            raise PromQLError(
-                "binary",
-                "Aggregated-inner subquery operands in binary "
-                "operations are not supported; use a series-shaped "
-                "subquery or aggregate the result.",
+    ``side_eval(eq) -> DataFrame`` evaluates one vector operand to its
+    per-step frame — the HTTP route passes a callback that serves a
+    grain-compatible side from the MAINTAINED rollup
+    (query/rollup_serve.py) and falls back to the raw
+    ``evaluate_range``; the default evaluates raw against ``values``.
+    Each operand therefore picks its own fastest exact path."""
+    if side_eval is None:
+        def side_eval(eq):
+            return evaluate_range(
+                sensors, values, eq,
+                start=start, end=end, step_seconds=step_seconds,
+                now=now, cache=cache,
             )
 
-    def apply(lc: F.Column, rc: F.Column) -> F.Column:
-        return {
-            "+": lc + rc,
-            "-": lc - rc,
-            "*": lc * rc,
-            "/": _pdiv(lc, rc),
-            # Spark's % on doubles is Java fmod — truncated toward
-            # zero, sign of the dividend, same as Go math.Mod
-            # (Prometheus % semantics); _pdiv/_pmod add the IEEE
-            # zero-divisor cases ANSI mode would otherwise throw on.
-            "%": _pmod(lc, rc),
-            "^": F.pow(lc, rc),
-            "atan2": F.atan2(lc, rc),
-            ">": lc > rc,
-            "<": lc < rc,
-            ">=": lc >= rc,
-            "<=": lc <= rc,
-            "==": lc == rc,
-            "!=": lc != rc,
-        }[bq.op]
+    _validate_binary(bq)
+    grid = _Grid.of(start, end, step_seconds)
 
-    def _operand_frame(side) -> DataFrame:
-        """Evaluate one vector operand — an ExtendedQuery (series
-        shape: map labels) or a nested BinaryQuery (one-to-one
-        arithmetic results carry a CANONICAL LABEL STRING instead)."""
+    def _frame(side) -> DataFrame:
         if isinstance(side, BinaryQuery):
-            return evaluate_binary(sensors, values, side, cache)
-        return evaluate_extended(sensors, values, side, cache)
+            return evaluate_range_binary(
+                sensors, values, side, start, end, step_seconds,
+                now=now, side_eval=side_eval, cache=cache,
+            )
+        if side.const is not None:
+            # Constant-vector operand ('x or vector(0)'): evaluated
+            # here, never through side_eval — the constant needs no
+            # scan, and so no rollup lookup either.
+            return _const_range_vector(sensors.sparkSession, side, grid)
+        return side_eval(side)
 
-    def _key_for(frame: DataFrame) -> F.Column:
+    def _key(frame: DataFrame) -> F.Column:
         """The matching key for one operand frame. A string-labeled
         frame (nested arithmetic result) IS its full-label canonical
         key; a label-LESS frame (a global aggregation like ``sum(a)``
-        — one row, Prometheus' empty label set) keys on the empty
-        string. on/ignoring cannot re-address labels inside either
-        shape, so explicit matching over them is didactic."""
+        — one row per step, Prometheus' empty label set) keys on the
+        empty string. on/ignoring cannot re-address labels inside
+        either shape, so explicit matching over them is didactic."""
         kind = dict(frame.dtypes).get("labels")
         if kind == "string" or kind is None:
             if bq.on or bq.ignoring:
@@ -3455,235 +3130,11 @@ def evaluate_binary(
             return F.col("labels") if kind else F.lit("")
         return _matching_key(bq.on, bq.ignoring)
 
-    if bq.op in _SET_OPS:
-        for side_eq in (bq.left, bq.right):
-            if not isinstance(side_eq, BinaryQuery) and (
-                side_eq.agg is not None
-            ):
-                raise PromQLError(
-                    "binary",
-                    f"'{bq.op}' operates on series vectors; aggregated "
-                    "operands have no series identity to match on.",
-                )
-        left = _operand_frame(bq.left)
-        right = _operand_frame(bq.right)
-        lkey, rkey = _key_for(left), _key_for(right)
-        lk = left.withColumn("__k", lkey)
-        rk = right.select(rkey.alias("__k")).distinct()
-        cols = [
-            c for c in ("sensor_id", "name", "labels", "value")
-            if c in left.columns
-        ]
-        if bq.op == "and":
-            return lk.join(rk, "__k", "leftsemi").select(*cols)
-        if bq.op == "unless":
-            return lk.join(rk, "__k", "leftanti").select(*cols)
-        # or: all left series, plus right series whose key matches no
-        # left series. Mixed shapes (one side a string-labeled nested
-        # result) canonicalize BOTH sides to (labels, value) so the
-        # union is well-typed.
-        mixed = dict(left.dtypes).get("labels") != dict(
-            right.dtypes
-        ).get("labels")
-        if mixed:
-            left = left.select(lkey.alias("labels"), "value")
-            right = right.select(rkey.alias("labels"), "value")
-            lkey = rkey = F.col("labels")
-            cols = ["labels", "value"]
-        rcols = [c for c in cols if c in right.columns]
-        lkeys = left.select(lkey.alias("__k")).distinct()
-        extra = (
-            right.withColumn("__k", rkey)
-            .join(lkeys, "__k", "leftanti")
-            .select(*rcols)
-        )
-        return left.select(*cols).unionByName(extra)
-
-    if isinstance(bq.left, (float, ScalarOf)) or isinstance(
-        bq.right, (float, ScalarOf)
-    ):
-        scalar_left = isinstance(bq.left, (float, ScalarOf))
-        eq = bq.right if scalar_left else bq.left
-        sc = bq.left if scalar_left else bq.right
-        out = _operand_frame(eq)
-        if isinstance(sc, ScalarOf):
-            # scalar(v): ONE value — the single series' value, or NaN
-            # unless exactly one series (Prometheus). The reduction is
-            # a global aggregate of a series-sized frame; the 1-row
-            # result broadcasts onto the vector side (the same
-            # broadcast-literal nested-loop shape as the engine's other
-            # one-row scalars — bounded by construction).
-            reduced = evaluate_extended(sensors, values, sc.eq, cache).agg(
-                F.count("*").alias("__n"),
-                F.first("value").alias("__v"),
-            ).select(
-                F.when(F.col("__n") == 1, F.col("__v"))
-                .otherwise(F.lit(float("nan")))
-                .alias("__sv")
-            )
-            out = out.crossJoin(F.broadcast(reduced))
-            sc_col = F.col("__sv")
-        else:
-            sc_col = F.lit(sc)
-        if scalar_left:
-            res = apply(sc_col, F.col("value"))
-        else:
-            res = apply(F.col("value"), sc_col)
-        cols = [c for c in ("sensor_id", "name", "labels") if c in out.columns]
-        if bq.op in _CMP_OPS:
-            if bq.bool_mode:
-                return out.select(
-                    *cols, res.cast("double").alias("value")
-                )
-            return out.filter(res).select(*cols, "value")
-        return out.select(*cols, res.alias("value"))
-
-    if bq.group_mode is not None:
-        return _evaluate_group_binary(sensors, values, bq, apply, cache)
-
-    for side_eq in (bq.left, bq.right):
-        if (
-            not isinstance(side_eq, BinaryQuery)
-            and side_eq.agg not in (None, "topk", "bottomk")
-            # A GLOBAL reduction (no by/without — round 11) is
-            # Prometheus' one-row empty-label vector: sum(a) / sum(b)
-            # joins on the empty key, the dashboard ratio shape.
-            # count_values is excluded: its rows differ only in the
-            # value-label column, which the empty key cannot see.
-            and (side_eq.by or side_eq.without
-                 or side_eq.agg == "count_values")
-        ):
-            raise PromQLError(
-                "binary",
-                "by/without-grouped operands in vector-to-vector "
-                "binary operations are not supported (their result "
-                "keys on group columns, not a label set); use "
-                "'on (…)' with group_left/group_right, or aggregate "
-                "the result instead.",
-            )
-    left = _operand_frame(bq.left)
-    right = _operand_frame(bq.right)
-    lk = left.select(
-        _key_for(left).alias("labels"), F.col("value").alias("__lv")
-    )
-    rk = right.select(
-        _key_for(right).alias("labels"), F.col("value").alias("__rv")
-    )
-    joined = lk.join(rk, "labels")
-    if bq.op in _CMP_OPS:
-        cond = apply(F.col("__lv"), F.col("__rv"))
-        if bq.bool_mode:
-            return joined.select(
-                "labels", cond.cast("double").alias("value")
-            )
-        return joined.filter(cond).select(
-            "labels", F.col("__lv").alias("value")
-        )
-    return joined.select(
-        "labels", apply(F.col("__lv"), F.col("__rv")).alias("value")
-    )
-
-
-def evaluate_range_binary(
-    sensors: DataFrame,
-    values: DataFrame | None,
-    bq: BinaryQuery,
-    start: dt.datetime,
-    end: dt.datetime,
-    step_seconds: float,
-    now: dt.datetime | None = None,
-    side_eval=None,
-    cache: dict | None = None,
-) -> DataFrame:
-    """Range-query binary operations (round 11) — the Grafana ratio
-    panel: evaluate both operands at every step, then apply the
-    operation PER STEP (one-to-one matching joins on (key, t); scalar
-    operands broadcast; ``scalar(expr)`` reduces per step).
-
-    ``side_eval(eq) -> DataFrame`` evaluates one vector operand to its
-    per-step frame — the HTTP route passes a callback that serves a
-    grain-compatible side from the MAINTAINED rollup
-    (query/rollup_serve.py) and falls back to the raw
-    ``evaluate_range``; the default evaluates raw against ``values``.
-    Each operand therefore picks its own fastest exact path.
-
-    Supported operand shapes mirror the instant path: plain series
-    vectors, global aggregations (empty-label one-row-per-step),
-    topk/bottomk samplers, scalars, ONE nested BinaryQuery, and
-    group_left/group_right many-to-one matching (the info-metric
-    ratio panel) joined per (match key, t)."""
-    if side_eval is None:
-        def side_eval(eq):
-            return evaluate_range(
-                sensors, values, eq,
-                start=start, end=end, step_seconds=step_seconds,
-                now=now, cache=cache,
-            )
-
-    for side_eq in (bq.left, bq.right):
-        if isinstance(side_eq, (float, ScalarOf, BinaryQuery)):
-            continue
-        if _is_hist(side_eq) or side_eq.func in ABSENT_FUNCS:
-            raise PromQLError(
-                "binary",
-                "histogram/absent operands in range binary operations "
-                "are not supported; compute them separately.",
-            )
-        if side_eq.outer_agg is not None:
-            raise PromQLError(
-                "binary",
-                "Nested-aggregation operands in binary operations are "
-                "not supported; compute the sides separately.",
-            )
-        if bq.group_mode is None and side_eq.agg not in (
-            None, "topk", "bottomk"
-        ) and (
-            side_eq.by or side_eq.without
-            or side_eq.agg == "count_values"
-        ):
-            # (group_mode's aggregated-one-side legality is checked by
-            # _validate_group_shapes in its own branch below.)
-            raise PromQLError(
-                "binary",
-                "by/without-grouped operands in vector-to-vector "
-                "binary operations are not supported (their result "
-                "keys on group columns, not a label set).",
-            )
-
-    def _frame(side) -> DataFrame:
-        if isinstance(side, BinaryQuery):
-            return evaluate_range_binary(
-                sensors, values, side, start, end, step_seconds,
-                now=now, side_eval=side_eval, cache=cache,
-            )
-        if getattr(side, "const", None) is not None:
-            # Constant-vector operand ('x or vector(0)'): evaluated
-            # here, never through side_eval — the callback's lake
-            # scan-window arithmetic has no selector to read (the
-            # route used to 500 on exactly this shape), and the
-            # constant needs no scan at all.
-            return _const_range_vector(
-                sensors.sparkSession, side, start, end, step_seconds
-            )
-        return side_eval(side)
-
-    def _key(frame: DataFrame) -> F.Column:
-        kind = dict(frame.dtypes).get("labels")
-        if kind == "string" or kind is None:
-            if bq.on or bq.ignoring:
-                raise PromQLError(
-                    "binary",
-                    "on/ignoring over a parenthesized-binary or "
-                    "globally-aggregated operand is not supported — "
-                    "put the matching clause inside the parentheses.",
-                )
-            return F.col("labels") if kind else F.lit("")
-        return _matching_key(bq.on, bq.ignoring)
-
     def apply(lc: F.Column, rc: F.Column) -> F.Column:
-        # IEEE division/modulo via _pdiv/_pmod — see the instant
-        # path's apply; ANSI throwing on one zero-valued series would
-        # abort the whole range query.
+        # Spark's % on doubles is Java fmod — truncated toward zero,
+        # sign of the dividend, same as Go math.Mod (Prometheus %
+        # semantics); _pdiv/_pmod add the IEEE zero-divisor cases ANSI
+        # mode would otherwise throw on, aborting the whole query.
         return {
             "+": lc + rc, "-": lc - rc, "*": lc * rc,
             "/": _pdiv(lc, rc),
@@ -3693,39 +3144,7 @@ def evaluate_range_binary(
             "<=": lc <= rc, "==": lc == rc, "!=": lc != rc,
         }[bq.op]
 
-    if bq.group_mode is not None:
-        # group_left/group_right PER STEP (round 11 session 2 — the
-        # info-metric ratio panel): the same many-to-one join body as
-        # the instant path, keyed (match key, t); the duplicate-one-
-        # side guard partitions per (key, step).
-        one_aggregated = _validate_group_shapes(bq)
-        many_eq = bq.left if bq.group_mode == "left" else bq.right
-        one_eq = bq.right if bq.group_mode == "left" else bq.left
-        return _group_join(
-            _frame(many_eq), _frame(one_eq), bq, apply,
-            one_aggregated, with_t=True,
-        )
-
     if bq.op in _SET_OPS:
-        for side_eq in (bq.left, bq.right):
-            if isinstance(side_eq, (float, ScalarOf)):
-                raise PromQLError(
-                    "binary",
-                    f"'{bq.op}' is a set operation between two instant "
-                    "vectors; scalars have no label sets to match on.",
-                )
-            # Same guard as the instant path (evaluate_binary): an
-            # aggregated operand has no series identity to match on —
-            # without this, 'sum(a) and sum(b)' was a 400 as an
-            # instant query yet evaluated as a range query.
-            if not isinstance(side_eq, BinaryQuery) and (
-                side_eq.agg is not None
-            ):
-                raise PromQLError(
-                    "binary",
-                    f"'{bq.op}' operates on series vectors; aggregated "
-                    "operands have no series identity to match on.",
-                )
         left, right = _frame(bq.left), _frame(bq.right)
         lk = left.withColumn("__k", _key(left))
         rk = right.select(_key(right).alias("__k"), "t").distinct()
@@ -3737,6 +3156,10 @@ def evaluate_range_binary(
             return lk.join(rk, ["__k", "t"], "leftsemi").select(*cols)
         if bq.op == "unless":
             return lk.join(rk, ["__k", "t"], "leftanti").select(*cols)
+        # or: all left series, plus right series whose key matches no
+        # left series at that step. Mixed shapes (one side a
+        # string-labeled nested result) canonicalize BOTH sides to
+        # (labels, t, value) so the union is well-typed.
         mixed = dict(left.dtypes).get("labels") != dict(
             right.dtypes
         ).get("labels")
@@ -3764,8 +3187,10 @@ def evaluate_range_binary(
         out = _frame(eq)
         if isinstance(sc, ScalarOf):
             # scalar(v) PER STEP: the inner vector reduces to one value
-            # per t (NaN unless exactly one series at that step) and
-            # joins back on t — step-count-sized, broadcastable.
+            # per t and joins back on t — step-count-sized,
+            # broadcastable. A step where the inner vector is empty
+            # has no reduced row: the left join reads NaN there
+            # (Prometheus: scalar() of an empty vector is NaN).
             reduced = (
                 _frame(sc.eq)
                 .groupBy("t")
@@ -3773,15 +3198,11 @@ def evaluate_range_binary(
                     F.count("*").alias("__n"),
                     F.first("value").alias("__v"),
                 )
-                .select(
-                    "t",
-                    F.when(F.col("__n") == 1, F.col("__v"))
-                    .otherwise(F.lit(float("nan")))
-                    .alias("__sv"),
-                )
             )
-            out = out.join(F.broadcast(reduced), "t")
-            sc_col = F.col("__sv")
+            out = out.join(F.broadcast(reduced), "t", "left")
+            sc_col = F.when(F.col("__n") == 1, F.col("__v")).otherwise(
+                F.lit(float("nan"))
+            )
         elif isinstance(sc, TimeScalar):
             # time() PER STEP: the step grid's own timestamp, never
             # the parse-time anchor repeated (Prometheus evaluates
@@ -3806,6 +3227,17 @@ def evaluate_range_binary(
             return out.filter(res).select(*cols, "t", "value")
         return out.select(*cols, "t", res.alias("value"))
 
+    if bq.group_mode is not None:
+        # group_left/group_right PER STEP: the many-to-one join keyed
+        # (match key, t); the duplicate-one-side guard partitions per
+        # (key, step).
+        one_aggregated = _validate_group_shapes(bq)
+        many_eq = bq.left if bq.group_mode == "left" else bq.right
+        one_eq = bq.right if bq.group_mode == "left" else bq.left
+        return _group_join(
+            _frame(many_eq), _frame(one_eq), bq, apply, one_aggregated
+        )
+
     left, right = _frame(bq.left), _frame(bq.right)
     lk = left.select(
         _key(left).alias("labels"), "t", F.col("value").alias("__lv")
@@ -3828,46 +3260,91 @@ def evaluate_range_binary(
     )
 
 
-def _evaluate_group_binary(
-    sensors: DataFrame,
-    values: DataFrame,
-    bq: BinaryQuery,
-    apply,
-    cache: dict | None = None,
-) -> DataFrame:
-    """Many-to-one vector matching (``group_left``/``group_right``) —
-    the real-dashboard join the one-to-one path can't express: each
-    "many"-side series joins its match group's single "one"-side series
-    on the ``on``/``ignoring`` key.
-
-    Two "one"-side shapes are accepted:
-
-    * a series vector (the Prometheus info-metric pattern) — optionally
-      with ``group_left(lbl, …)`` copying one-side labels onto the
-      result. DUPLICATE one-side keys raise at execution time (a
-      ``raise_error`` guard over a dimension-sized window count) —
-      Prometheus likewise rejects many-to-many matching at runtime,
-      and silently multiplied series would mislead dashboards;
-    * an aggregation ``by`` EXACTLY the ``on`` labels (``m / on (k)
-      group_left sum by (k) (n)``) — unique per group by construction.
-
-    Output rows carry the MANY side's full label set (canonical
-    string, metric name dropped, copied labels merged in) — Prometheus'
-    many-to-one output shape. Plan: both operands are series-sized
-    instant vectors, so the equality join is dimension-sized and AQE
-    broadcasts the smaller ("one") side; nothing here touches the
-    sample-grain frame."""
-    many_eq = bq.left if bq.group_mode == "left" else bq.right
-    one_eq = bq.right if bq.group_mode == "left" else bq.left
-    one_aggregated = _validate_group_shapes(bq)
-    many = evaluate_extended(sensors, values, many_eq, cache)
-    one = evaluate_extended(sensors, values, one_eq, cache)
-    return _group_join(many, one, bq, apply, one_aggregated)
+def _validate_binary(bq: BinaryQuery) -> None:
+    """The operand-shape rules of one binary operation, checked before
+    any frame is built. Vector operands must evaluate to label-map
+    series vectors (or scalars): a histogram-function result keys on a
+    canonical label STRING, and a nested aggregation or an
+    aggregated-inner subquery keeps its group columns — any of them
+    would crash the matching-key expression with an opaque
+    AnalysisException, so they are rejected didactically up front.
+    Nested BinaryQuery operands are checked by their own recursion."""
+    sides = [
+        s for s in (bq.left, bq.right)
+        if not isinstance(s, (float, ScalarOf, BinaryQuery))
+    ]
+    for side_eq in sides:
+        if _is_hist(side_eq):
+            raise PromQLError(
+                "binary",
+                "histogram-function operands in binary operations "
+                "are not supported; compute them separately.",
+            )
+        if side_eq.func in ABSENT_FUNCS:
+            raise PromQLError(
+                "binary",
+                f"{side_eq.func}() operands in binary operations are "
+                "not supported; alert on the absent vector directly.",
+            )
+        if side_eq.outer_agg is not None or (
+            side_eq.sub_inner is not None
+            and side_eq.sub_inner.outer_agg is not None
+        ):
+            # The subquery case: avg_over_time(sum(topk(2, m))[10m:5m])
+            # loses the series shape even though sub_inner.agg ('topk')
+            # alone would pass the check below (round-8 review).
+            raise PromQLError(
+                "binary",
+                "Nested-aggregation operands in binary operations are "
+                "not supported; compute the sides separately.",
+            )
+        if side_eq.sub_inner is not None and side_eq.sub_inner.agg not in (
+            None, "topk", "bottomk"
+        ):
+            # topk/bottomk inners stay series-shaped — only true
+            # aggregations lose the label map.
+            raise PromQLError(
+                "binary",
+                "Aggregated-inner subquery operands in binary "
+                "operations are not supported; use a series-shaped "
+                "subquery or aggregate the result.",
+            )
+    if bq.op in _SET_OPS:
+        if any(s.agg is not None for s in sides):
+            raise PromQLError(
+                "binary",
+                f"'{bq.op}' operates on series vectors; aggregated "
+                "operands have no series identity to match on.",
+            )
+        return
+    if bq.group_mode is not None or any(
+        isinstance(s, (float, ScalarOf)) for s in (bq.left, bq.right)
+    ):
+        # vector∘scalar keeps any vector shape; group_left/right has
+        # its own rules (_validate_group_shapes).
+        return
+    for side_eq in sides:
+        if side_eq.agg not in (None, "topk", "bottomk") and (
+            # A GLOBAL reduction (no by/without — round 11) is
+            # Prometheus' one-row empty-label vector: sum(a) / sum(b)
+            # joins on the empty key, the dashboard ratio shape.
+            # count_values is excluded: its rows differ only in the
+            # value-label column, which the empty key cannot see.
+            side_eq.by or side_eq.without or side_eq.agg == "count_values"
+        ):
+            raise PromQLError(
+                "binary",
+                "by/without-grouped operands in vector-to-vector "
+                "binary operations are not supported (their result "
+                "keys on group columns, not a label set); use "
+                "'on (…)' with group_left/group_right, or aggregate "
+                "the result instead.",
+            )
 
 
 def _validate_group_shapes(bq: BinaryQuery) -> bool:
-    """The group_left/group_right operand-shape rules, shared by the
-    instant and range paths; returns one_aggregated."""
+    """The group_left/group_right operand-shape rules; returns
+    one_aggregated."""
     many_eq = bq.left if bq.group_mode == "left" else bq.right
     one_eq = bq.right if bq.group_mode == "left" else bq.left
     if many_eq.agg not in (None, "topk", "bottomk"):
@@ -3908,12 +3385,29 @@ def _group_join(
     bq: BinaryQuery,
     apply,
     one_aggregated: bool,
-    with_t: bool = False,
 ) -> DataFrame:
-    """The many-to-one join body shared by the instant and range group
-    paths: ``with_t`` joins on (key, t) — the per-step form — and the
-    duplicate-one-side guard then partitions per (key, t)."""
-    jk = ["__k"] + (["t"] if with_t else [])
+    """Many-to-one vector matching (``group_left``/``group_right``) per
+    step — the real-dashboard join the one-to-one path can't express:
+    each "many"-side series joins its match group's single "one"-side
+    series on the ``on``/``ignoring`` key and the step ``t``.
+
+    Two "one"-side shapes are accepted:
+
+    * a series vector (the Prometheus info-metric pattern) — optionally
+      with ``group_left(lbl, …)`` copying one-side labels onto the
+      result. DUPLICATE one-side keys raise at execution time (a
+      ``raise_error`` guard over a dimension-sized window count per
+      (key, t)) — Prometheus likewise rejects many-to-many matching at
+      runtime, and silently multiplied series would mislead dashboards;
+    * an aggregation ``by`` EXACTLY the ``on`` labels (``m / on (k)
+      group_left sum by (k) (n)``) — unique per group by construction.
+
+    Output rows carry the MANY side's full label set (canonical string,
+    metric name dropped, copied labels merged in) — Prometheus'
+    many-to-one output shape. Both operands are series-sized, so the
+    equality join is dimension-sized and AQE broadcasts the smaller
+    ("one") side; nothing here touches the sample-grain frame."""
+    jk = ["__k", "t"]
     key = _matching_key(bq.on, bq.ignoring)
     mk = many.withColumn("__k", key)
     if one_aggregated:
@@ -3931,13 +3425,11 @@ def _group_join(
         ]
         ok = one.select(
             F.concat_ws(",", *parts).alias("__k"),
-            *(["t"] if with_t else []),
+            "t",
             F.col("value").alias("__ov"),
         )
     else:
-        sel = [key.alias("__k")] + (
-            [F.col("t")] if with_t else []
-        ) + [F.col("value").alias("__ov")]
+        sel = [key.alias("__k"), F.col("t"), F.col("value").alias("__ov")]
         if bq.group_labels:
             sel.append(F.col("labels").alias("__ol"))
         ok = one.select(*sel)
@@ -3990,9 +3482,7 @@ def _group_join(
         )
     else:
         merged = F.col("labels")
-    out_cols = [_labels_without([], merged).alias("labels")] + (
-        [F.col("t")] if with_t else []
-    )
+    out_cols = [_labels_without([], merged).alias("labels"), F.col("t")]
     lv = F.col("value") if bq.group_mode == "left" else F.col("__ov")
     rv = F.col("__ov") if bq.group_mode == "left" else F.col("value")
     if bq.op in _CMP_OPS:

@@ -36,13 +36,21 @@ per-series window reduction behaves identically by construction.
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as dt
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sensapp_spark.datamodel.types import SensorType
 from sensapp_spark.operators.selection import select_sensors
+from sensapp_spark.query.promql_ext import (
+    _epoch_us,
+    _finish_range,
+    _Grid,
+    _offset_us,
+)
 from sensapp_spark.storage.rollup import RollupStore
 
 __all__ = [
@@ -119,20 +127,6 @@ def min_schema_for(func) -> int:
     ``func`` exactly (∞-like large for unservable funcs — callers
     check membership in ROLLUP_SERVE_FUNCS first)."""
     return SERVE_MIN_SCHEMA.get(func, 10**9)
-
-
-def _epoch_us(t: dt.datetime) -> int:
-    if t.tzinfo is None:
-        t = t.replace(tzinfo=dt.timezone.utc)
-    return int(t.timestamp() * 1_000_000)
-
-
-def _offset_us(eq, now: dt.datetime | None) -> int:
-    """The selector's offset in µs — same derivation as
-    promql_ext.evaluate_range (offset = parse anchor − selector end)."""
-    if now is None:
-        return 0
-    return max(0, _epoch_us(now) - _epoch_us(eq.selector.end_time))
 
 
 def rollup_serveable(
@@ -571,56 +565,35 @@ def evaluate_range_rollup(
     multi-numeric-type fleets — their per-window values union with the
     primary's BEFORE the tail (the Integer/Numeric→f64 semantics of
     exporters/prometheus_read.py:36-68, served)."""
-    from sensapp_spark.query.promql_ext import _finish_range
-
     off_us = _offset_us(eq, now)
     selected = select_sensors(sensors, eq.selector.matchers)
     win = _served_window_values(
         [(store, stype), *extra], eq, selected,
         start, end, step_seconds, off_us, realtime,
     )
-    s_us = int(step_seconds * 1_000_000)
-    start_us = _epoch_us(start)
-    t_col = F.timestamp_micros(
-        (F.lit(start_us) + F.col("__i") * F.lit(s_us)).cast("long")
-    ).alias("t")
     out = win.join(
         F.broadcast(selected.select("sensor_id", "name", "labels")),
         "sensor_id",
     )
-    return _finish_range(out, eq, t_col)
+    return _finish_range(out, eq, _Grid.of(start, end, step_seconds))
 
 
 def rollup_serveable_instant(eq, grain_s: int) -> bool:
     """True iff the INSTANT evaluation of ``eq`` folds exactly from a
-    grain_s rollup. Same shape gates as the range check plus
-    sort-None (sort applies in evaluate_extended's wrapper, above the
-    tail this path reuses); the window arithmetic is simpler — offset
-    and @ anchors are already folded into the selector's absolute
-    [start, end] at parse time, so the check is R and end both
-    grain-aligned. Unanchored instant queries (end = wall-clock now)
-    essentially never align; the anchored dashboards ('@ <ts>', the
-    replay/report shape) are the ones this serves."""
-    if (
-        eq is None
-        or getattr(eq, "selector", None) is None
-        or eq.const is not None
-        or eq.sub_inner is not None
-        or eq.sort is not None
-        or eq.hist_quantile is not None
-        or eq.hist_fraction is not None
-        or eq.series_post
-        or eq.func not in ROLLUP_SERVE_FUNCS
-    ):
+    grain_s rollup: :func:`rollup_serveable` on the one-step grid at
+    the selector's window end, with step = grain. An ``@`` or
+    ``offset`` is already folded into that window end at parse time,
+    so the grid is evaluated there with no further offset or anchor;
+    the check comes down to R and the window end both grain-aligned.
+    Unanchored instant queries (end = wall-clock now) essentially
+    never align; the anchored dashboards ('@ <ts>', the replay/report
+    shape) are the ones this serves."""
+    if eq is None or getattr(eq, "selector", None) is None:
         return False
-    g_us = grain_s * 1_000_000
-    r_us = _epoch_us(eq.selector.end_time) - _epoch_us(
-        eq.selector.start_time
-    )
-    return (
-        r_us > 0
-        and r_us % g_us == 0
-        and _epoch_us(eq.selector.end_time) % g_us == 0
+    end = eq.selector.end_time
+    return rollup_serveable(
+        dataclasses.replace(eq, at_fixed=False), grain_s, end, grain_s,
+        now=end,
     )
 
 
@@ -632,41 +605,21 @@ def evaluate_instant_rollup(
     realtime: bool = True,
     extra: tuple = (),
 ) -> DataFrame:
-    """promql_ext.evaluate_extended, served from the rollup: the
-    instant window [selector.start, selector.end] is ONE closed window
-    — a degenerate step grid (start = end = selector end, one step) of
-    the range fold — and the tail reuses _finish_instant so label ops,
-    aggregations and post functions behave identically. Caller must
-    have checked :func:`rollup_serveable_instant`. ``extra`` unions
-    further (store, stype) pairs before the tail, as in
-    :func:`evaluate_range_rollup`."""
-    import math
-
-    from sensapp_spark.query.promql_ext import (
-        _apply_label_ops,
-        _finish_instant,
-    )
-
-    q = eq.selector
-    end_t = q.end_time
-    if end_t.tzinfo is not None:
-        end_t = end_t.astimezone(dt.timezone.utc).replace(tzinfo=None)
-    selected = select_sensors(sensors, q.matchers)
-    pairs = [(store, stype), *extra]
-    # The degenerate grid has one step, but range_windows asserts
-    # step % grain per store — the lcm satisfies every pair.
-    step = float(math.lcm(*(s.grain_s for s, _ in pairs)))
-    win = _served_window_values(
-        pairs, eq, selected, start=end_t, end=end_t,
-        step_seconds=step, offset_us=0, realtime=realtime,
-    )
-    out = win.drop("__i").join(
-        F.broadcast(selected.select("sensor_id", "name", "labels")),
-        "sensor_id",
-    )
-    if eq.label_ops:
-        out = _apply_label_ops(out, eq.label_ops)
-    return _finish_instant(out, eq)
+    """promql_ext.evaluate_extended, served from the rollup:
+    :func:`evaluate_range_rollup` on the one-step grid at the
+    selector's window end, with the step column dropped — the same
+    tail, so label ops, aggregations and post functions behave
+    identically. Caller must have checked
+    :func:`rollup_serveable_instant`. ``extra`` unions further
+    (store, stype) pairs before the tail."""
+    end = eq.selector.end_time
+    # range_windows asserts step % grain per store — the lcm satisfies
+    # every pair (one step, so its length never enters the answer).
+    step = float(math.lcm(store.grain_s, *(s.grain_s for s, _ in extra)))
+    return evaluate_range_rollup(
+        store, sensors, eq, end, end, step, now=end, stype=stype,
+        realtime=realtime, extra=extra,
+    ).drop("t")
 
 
 def maintained_grains(
@@ -784,7 +737,6 @@ def evaluate_range_quantile(
     deterministic sample (exact when the window holds ≤ K samples).
     Caller must have checked :func:`quantile_rollup_serveable` AND
     the user's explicit opt-in."""
-    from sensapp_spark.query.promql_ext import _finish_range
     from sensapp_spark.storage.qrollup import quantile_windows
 
     q = eq.selector
@@ -803,13 +755,8 @@ def evaluate_range_quantile(
             stat="mad" if mad else "quantile",
         )
         out = win if out is None else out.unionByName(win)
-    s_us = int(step_seconds * 1_000_000)
-    start_us = _epoch_us(start)
-    t_col = F.timestamp_micros(
-        (F.lit(start_us) + F.col("__i") * F.lit(s_us)).cast("long")
-    ).alias("t")
     joined = out.join(
         F.broadcast(selected.select("sensor_id", "name", "labels")),
         "sensor_id",
     )
-    return _finish_range(joined, eq, t_col)
+    return _finish_range(joined, eq, _Grid.of(start, end, step_seconds))

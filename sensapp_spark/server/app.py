@@ -227,10 +227,9 @@ def create_app(
             head = _peek(rows)
             if head is not None:
                 body = "".join(iter_senml(head, stype))
-                return Response(body, mimetype="application/json")
+                return Response(body, mimetype=media)
             return Response(
-                iter_senml(local_rows(rows), stype),
-                mimetype="application/json",
+                iter_senml(local_rows(rows), stype), mimetype=media
             )
         # Arrow and Parquet: the IPC/Parquet file over the row tuples,
         # one batch or row group when peeked, chunk_rows at a time when
@@ -1283,10 +1282,14 @@ def create_app(
             """Raw-scan window for ONE vector operand — lookback +
             offset behind [start, end], widened for subquery reach
             and fixed-@ anchors (whose window may lie entirely
-            outside the step range)."""
+            outside the step range). A constant reads no samples."""
+            if seq.selector is None:
+                return None, None
             lookback = seq.selector.end_time - seq.selector.start_time
             if seq.sub_inner is not None:
-                lookback += dt.timedelta(seconds=seq.sub_range_s)
+                lookback += dt.timedelta(
+                    seconds=seq.sub_range_s + seq.sub_offset_s
+                )
             offset = max(
                 dt.timedelta(0), now_parse - seq.selector.end_time
             )
@@ -1421,16 +1424,6 @@ def create_app(
                 out, served_from,
                 approx_note="; ".join(approx_notes) or None,
             )
-        if eq.selector is None:
-            # Constant vectors (vector()/time()/argless date funcs)
-            # have no sample window; evaluate_range rejects them with
-            # the didactic message.
-            return jsonify(
-                {
-                    "error": "constant expressions in range queries are "
-                    "not supported; evaluate them as instant queries."
-                }
-            ), 400
         # Auto-route grain-compatible range queries through the
         # MAINTAINED continuous aggregate (query/rollup_serve.py):
         # exact — the rollup's edge quartet makes closed windows fold

@@ -1127,3 +1127,64 @@ def test_series_at_seq_time_travel(spark, tmp_path):
         r = c.get(f"/series/{sid}?at_seq=abc")
         assert r.status_code == 400
         assert "at_seq" in r.get_json()["error"]
+
+
+@pytest.mark.parametrize("threshold", [10_000, 1])
+def test_senml_served_as_senml_json(spark, tmp_path_factory, threshold):
+    """Both SenML routes answer RFC 8428's ``application/senml+json`` —
+    the media type the DCAT catalog advertises for the same download
+    URL — as one body (default threshold) and as a stream (threshold
+    1)."""
+    lake = SensorLake(spark, str(tmp_path_factory.mktemp("lake_senml")))
+    app = create_app(spark, lake, stream_threshold=threshold)
+    app.testing = True
+    with app.test_client() as c:
+        assert c.post(
+            "/publish", data=CSV, content_type="text/csv"
+        ).status_code == 200
+        (ds,) = c.get("/series?metric=temperature").get_json()[
+            "dcat:dataset"
+        ]
+    (dist,) = [
+        d for d in ds["dcat:distribution"]
+        if d["dcat:downloadURL"].endswith("format=senml")
+    ]
+    for path in (
+        dist["dcat:downloadURL"],
+        "/api/v1/query?query=temperature[1000000h]&format=senml",
+    ):
+        # The view's own Response: only it tells a stream from a body.
+        with app.test_request_context(path):
+            r = app.full_dispatch_request()
+        assert r.status_code == 200, path
+        assert r.is_streamed == (threshold == 1), path
+        assert r.mimetype == dist["dcat:mediaType"] == "application/senml+json"
+        assert len(json.loads(r.get_data(as_text=True))) == 2
+
+
+def test_extended_global_aggregate_over_nothing_is_empty(client):
+    """An aggregate over an empty vector answers an empty vector
+    (Prometheus), not one ``{value: null}`` row."""
+    r = client.get("/api/v1/query?query=sum(nosuch)&extended=1")
+    assert r.status_code == 200
+    assert r.get_json() == {"result": []}
+
+
+def test_query_range_evaluates_constants_per_step(client):
+    """query_range answers a top-level constant per step: vector(2) is
+    one empty-label series, time() each step's own timestamp, hour()
+    the hour of it."""
+    span = "&start=2024-01-01T00:00:00Z&end=2024-01-01T02:00:00Z&step=3600"
+    for expr, want in (
+        ("vector(2)", [2.0, 2.0, 2.0]),
+        ("time()", [1704067200.0, 1704070800.0, 1704074400.0]),
+        ("hour()", [0.0, 1.0, 2.0]),
+    ):
+        r = client.get(f"/api/v1/query_range?query={expr}{span}")
+        assert r.status_code == 200, (expr, r.get_data(as_text=True))
+        rows = sorted(r.get_json()["result"], key=lambda d: d["t"])
+        assert [d["value"] for d in rows] == want, expr
+        assert [d["t"] for d in rows] == [
+            "2024-01-01T00:00:00", "2024-01-01T01:00:00",
+            "2024-01-01T02:00:00",
+        ]

@@ -363,13 +363,26 @@ def test_scalar_rejections(frames):
 # -- range-query guards ------------------------------------------------------
 
 def test_const_and_sort_rejected_in_range(frames):
+    """sort() has no order across steps and stays rejected in a range
+    query; constants evaluate per step — vector(1) is one empty-label
+    series at every step, time() each step's own timestamp."""
     from sensapp_spark.query.promql_ext import evaluate_range
 
     sensors, vals = frames
-    for expr, frag in [
-        ("vector(1)", "constant expressions"),
-        ("sort(m)", "no defined order"),
-    ]:
-        eq = parse_extended(expr, now=NOW)
-        with pytest.raises(PromQLError, match=frag):
-            evaluate_range(sensors, vals, eq, T0, NOW, 60.0)
+    with pytest.raises(PromQLError, match="no defined order"):
+        evaluate_range(
+            sensors, vals, parse_extended("sort(m)", now=NOW), T0, NOW, 60.0
+        )
+    steps = [T0 + dt.timedelta(minutes=i) for i in range(31)]
+    rows = evaluate_range(
+        sensors, vals, parse_extended("vector(1)", now=NOW), T0, NOW, 60.0
+    ).collect()
+    assert sorted(r.t for r in rows) == steps
+    assert {(r.sensor_id, r.value) for r in rows} == {(None, 1.0)}
+    assert all(r.labels == {} for r in rows)
+    rows = evaluate_range(
+        sensors, vals, parse_extended("time()", now=NOW), T0, NOW, 60.0
+    ).collect()
+    assert sorted((r.t, r.value) for r in rows) == [
+        (t, t.replace(tzinfo=dt.timezone.utc).timestamp()) for t in steps
+    ]

@@ -191,11 +191,24 @@ def test_subquery_modifier_rejections(frames):
             ),
             now=NOW,
         )
-    eq = parse_extended("max_over_time(click[10d:1d] offset 1d)", now=NOW)
-    with pytest.raises(PromQLError, match="subquery offset in range"):
-        evaluate_range(
-            sensors, vals, eq, NOW - dtm.timedelta(days=2), NOW, 86400
+    # A subquery offset shifts the subquery's step grid at every range
+    # step: each step T equals the instant answer evaluated at T.
+    expr = "max_over_time(click[10d:1d] offset 1d)"
+    steps = evaluate_range(
+        sensors, vals, parse_extended(expr, now=NOW),
+        NOW - dtm.timedelta(days=2), NOW, 86400,
+    ).collect()
+    assert steps
+    for k in range(3):
+        at = NOW - dtm.timedelta(days=2 - k)
+        want = sorted(
+            (r.sensor_id, r.value)
+            for r in evaluate_extended(
+                sensors, vals, parse_extended(expr, now=at)
+            ).collect()
         )
+        got = sorted((r.sensor_id, r.value) for r in steps if r.t == at)
+        assert got == want and got, at
 
 
 def test_subquery_count_is_long(frames):
