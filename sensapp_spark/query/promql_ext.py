@@ -1686,14 +1686,18 @@ class _Grid:
         return cls(start, end, start_us, s_us,
                    (_epoch_us(end) - start_us) // s_us)
 
-    def step_us(self, i: F.Column) -> F.Column:
-        return (F.lit(self.start_us) + i * F.lit(self.s_us)).cast("long")
+    def step_us(self, i: str = "__i") -> F.Column:
+        """The step time (µs) of the step index column ``i`` — a
+        literal on a one-step grid."""
+        if self.n_steps == 0:
+            return F.lit(self.start_us)
+        return (F.lit(self.start_us) + F.col(i) * F.lit(self.s_us)).cast(
+            "long"
+        )
 
-    def t_col(self, i: F.Column | None = None) -> F.Column:
-        """The step timestamp ``t`` of step index ``i`` (default the
-        ``__i`` column)."""
-        i = F.col("__i") if i is None else i
-        return F.timestamp_micros(self.step_us(i)).alias("t")
+    def t_col(self) -> F.Column:
+        """The step timestamp ``t`` of the ``__i`` column."""
+        return F.timestamp_micros(self.step_us()).alias("t")
 
     def steps(self, spark) -> DataFrame:
         return spark.range(self.n_steps + 1).select(
@@ -1957,7 +1961,8 @@ def _per_series_agg(
     eval_us: F.Column,
 ) -> DataFrame:
     """The per-series window reduction for ``eq.func`` grouped by
-    ``keys`` — (sensor_id, step). One shuffle, map-side partials.
+    ``keys`` — (sensor_id, step), or (sensor_id,) on a one-step grid.
+    One shuffle, map-side partials.
 
     ``eval_us`` is the step's evaluation timestamp in µs as a
     post-aggregation column expression — only ``predict_linear`` reads
@@ -2240,7 +2245,7 @@ def _const_range_vector(spark, eq: ExtendedQuery, grid: _Grid) -> DataFrame:
     repeating the parse-time ``now`` would serve a frozen clock
     (round-12 advisor)."""
     value = (
-        grid.step_us(F.col("id")) / F.lit(1e6)
+        grid.step_us("id") / F.lit(1e6)
         if eq.const_is_time
         else F.lit(eq.const)
     )
@@ -2659,7 +2664,7 @@ def evaluate_range(
         fixed = fixed.drop("t")
         keep = [c for c in fixed.columns if c != "value"]
         if grid.n_steps == 0:
-            return fixed.select(*keep, grid.t_col(F.lit(0)), "value")
+            return fixed.select(*keep, grid.t_col(), "value")
         # The (series-sized) answer repeats across the bounded step
         # grid via a broadcast cross join — no per-step work.
         steps = grid.steps(sensors.sparkSession).select(grid.t_col())
@@ -2706,11 +2711,10 @@ def evaluate_range(
     if out is None:
         # One step: the reduction keys on the series alone (the step
         # index is the constant 0, added below).
-        step = F.col("__i") if grid.n_steps else F.lit(0)
         per_step = _per_series_agg(
             _covered_steps(values, selected, q, grid, off_us), eq,
             keys=("sensor_id", "__i") if grid.n_steps else ("sensor_id",),
-            eval_us=grid.step_us(step),
+            eval_us=grid.step_us(),
         )
         out = per_step.join(
             F.broadcast(selected.select("sensor_id", "name", "labels")),
