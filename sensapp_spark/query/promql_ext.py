@@ -1688,7 +1688,8 @@ class _Grid:
 
     def step_us(self, i: str = "__i") -> F.Column:
         """The step time (µs) of the step index column ``i`` — a
-        literal on a one-step grid."""
+        literal on a one-step grid, which keeps the planner folding
+        the step out of every window, grouping and join key."""
         if self.n_steps == 0:
             return F.lit(self.start_us)
         return (F.lit(self.start_us) + F.col(i) * F.lit(self.s_us)).cast(
@@ -1707,13 +1708,14 @@ class _Grid:
     def explode(self, frame: DataFrame, tau: F.Column, r_us: int):
         """``frame`` with one row per step ``__i`` whose closed window
         ``[t_i − R, t_i]`` covers the instant ``tau`` (µs) — a bounded
-        fan-out of ceil(R/step) rows per input row. A one-step grid
-        needs no explode: it is a filter on that one window."""
-        start = F.lit(self.start_us)
+        fan-out of ceil(R/step) rows per input row. ``frame`` holds only
+        rows whose ``tau`` lies in the grid's reach ``[start − R, end]``
+        (the caller's scan bounds), so a one-step grid needs neither
+        explode nor filter (that reach IS its one window) and no
+        ``__i``: every step expression of the grid is a literal."""
         if self.n_steps == 0:
-            return frame.filter(
-                (tau <= start) & (tau >= start - F.lit(r_us))
-            ).withColumn("__i", F.lit(0).cast("long"))
+            return frame
+        start = F.lit(self.start_us)
         # ceil((tau − start)/S) via negated floor — stays integral.
         idx0 = F.greatest(
             F.lit(0), -F.floor((tau - start) / -self.s_us).cast("long")
@@ -2661,14 +2663,13 @@ def evaluate_range(
             dataclasses.replace(eq, at_fixed=False, sub_offset_s=0.0),
             anchor, anchor, step_seconds, now=anchor, cache=cache,
         )
-        fixed = fixed.drop("t")
-        keep = [c for c in fixed.columns if c != "value"]
+        keep = [c for c in fixed.columns if c not in ("t", "value")]
         if grid.n_steps == 0:
             return fixed.select(*keep, grid.t_col(), "value")
         # The (series-sized) answer repeats across the bounded step
         # grid via a broadcast cross join — no per-step work.
         steps = grid.steps(sensors.sparkSession).select(grid.t_col())
-        return fixed.crossJoin(F.broadcast(steps)).select(
+        return fixed.drop("t").crossJoin(F.broadcast(steps)).select(
             *keep, "t", "value"
         )
     if eq.const is not None:
@@ -2683,8 +2684,8 @@ def evaluate_range(
         )
     q = eq.selector
     off_us = _offset_us(eq, now)
-    selected = select_sensors(sensors, q.matchers)
     if eq.func in ABSENT_FUNCS:
+        selected = select_sensors(sensors, q.matchers)
         return _evaluate_range_absent(
             _covered_steps(values, selected, q, grid, off_us), eq, grid
         )
@@ -2709,8 +2710,11 @@ def evaluate_range(
     )
     out = cache.get(key) if cache is not None else None
     if out is None:
-        # One step: the reduction keys on the series alone (the step
-        # index is the constant 0, added below).
+        selected = select_sensors(sensors, q.matchers)
+        # One step: the reduction keys on the series alone — a key the
+        # planner knows is unique per series, which keeps the metadata
+        # join's size estimate series-sized and the joins above it
+        # broadcast.
         per_step = _per_series_agg(
             _covered_steps(values, selected, q, grid, off_us), eq,
             keys=("sensor_id", "__i") if grid.n_steps else ("sensor_id",),
@@ -2723,13 +2727,6 @@ def evaluate_range(
         if cache is not None:
             out = out.localCheckpoint(eager=False)
             cache[key] = out
-    if not grid.n_steps:
-        # A literal step index, outside the memo: the planner folds the
-        # step out of every key above (per-step windows and groupings
-        # plan as on a plain per-series vector), and a reduction keyed
-        # on the series alone keeps the metadata join's size estimate
-        # series-sized, so the joins above it still broadcast.
-        out = out.withColumn("__i", F.lit(0).cast("long"))
     return _finish_range(out, eq, grid)
 
 
@@ -2741,8 +2738,9 @@ def _covered_steps(
     off_us: int,
 ) -> DataFrame:
     """The matched samples, one row per step ``__i`` whose window
-    ``[t − offset − R, t − offset]`` holds the sample: the selector's
-    sensors semi-joined onto a scan pruned to the grid's reach."""
+    ``[t − offset − R, t − offset]`` holds the sample (no ``__i`` on a
+    one-step grid): the selector's sensors semi-joined onto a scan
+    pruned to the grid's reach."""
     offset = dt.timedelta(microseconds=off_us)
     lookback = q.end_time - q.start_time
     scan = values.join(
@@ -2760,12 +2758,13 @@ def _covered_steps(
 
 def _finish_range(out: DataFrame, eq: ExtendedQuery, grid: _Grid) -> DataFrame:
     """Shared tail over any per-(series, step) frame carrying
-    ``(sensor_id, name, labels, __i, value)`` — the raw-scan, constant,
-    subquery and rollup-served paths all end here: label ops, posts
-    and the aggregation step(s), per step. A nested aggregation's outer
+    ``(sensor_id, name, labels, value)`` and, on a multi-step grid, the
+    step index ``__i`` — the raw-scan, constant, subquery and
+    rollup-served paths all end here: label ops, posts and the
+    aggregation step(s), per step. A nested aggregation's outer
     level applies AFTER the inner one and its wrappers (parse order:
     inner agg → post → outer agg → outer_post)."""
-    res = _finish_range_core(out, eq, grid.t_col())
+    res = _finish_range_core(out, eq, grid)
     if eq.outer_agg is not None:
         res = _apply_post(
             _apply_outer2(_apply_outer_agg(res, eq), eq), eq.outer_post
@@ -2774,8 +2773,9 @@ def _finish_range(out: DataFrame, eq: ExtendedQuery, grid: _Grid) -> DataFrame:
 
 
 def _finish_range_core(
-    out: DataFrame, eq: ExtendedQuery, t_col
+    out: DataFrame, eq: ExtendedQuery, grid: _Grid
 ) -> DataFrame:
+    t_col = grid.t_col()
     if eq.label_ops:
         out = _apply_label_ops(out, eq.label_ops)
     if eq.series_post:
@@ -2806,7 +2806,7 @@ def _finish_range_core(
         order = (
             F.col("value").desc() if eq.agg == "topk" else F.col("value").asc()
         )
-        part = [F.col("__i")] + [
+        part = [grid.step_us()] + [
             F.element_at(F.col("labels"), lbl) for lbl in eq.by
         ]
         w = Window.partitionBy(*part).orderBy(order, F.col("sensor_id"))
@@ -2819,7 +2819,7 @@ def _finish_range_core(
     if eq.agg in LIMIT_AGGS:
         # Same deterministic sampler PER STEP (limitk windows partition
         # on the step index too; limit_ratio is step-independent).
-        picked = _limit_agg_filter(out, eq, extra_part=[F.col("__i")])
+        picked = _limit_agg_filter(out, eq, extra_part=[grid.step_us()])
         return _apply_post(
             picked.select("sensor_id", "name", "labels", t_col, "value"),
             eq.post,
@@ -2860,10 +2860,12 @@ def _evaluate_range_absent(
     first matching sample (no distinct, no full scan)."""
     from sensapp_spark.operators.matchers import MatcherType
 
-    present = covered.select("__i")
-    present = present.limit(1) if grid.n_steps == 0 else present.distinct()
     steps = grid.steps(covered.sparkSession)
-    missing = steps.join(present, "__i", "left_anti")
+    if grid.n_steps:
+        present = covered.select("__i").distinct()
+        missing = steps.join(present, "__i", "left_anti")
+    else:
+        missing = steps.join(covered.limit(1), F.lit(True), "left_anti")
     pairs = sorted(
         (m.name, m.value)
         for m in eq.selector.matchers
@@ -2988,18 +2990,17 @@ def _evaluate_range_subquery(
     # Shifted inner clock: τ = t + o puts the windows at [T − range, T].
     tau = F.unix_micros("t") + F.lit(int(eq.sub_offset_s * 1_000_000))
     exploded = grid.explode(steps, tau, int(eq.sub_range_s * 1_000_000))
+    step = ["__i"] if grid.n_steps else []
     if "sensor_id" in steps.columns:
         carry = [
             F.first("name").alias("name"),
             F.first("labels").alias("labels"),
         ]
-        out = _outer_step_agg(
-            exploded, eq, ["sensor_id", "__i"], carry, tau
-        )
+        out = _outer_step_agg(exploded, eq, ["sensor_id", *step], carry, tau)
         return _finish_range(out, eq, grid)
     # Aggregated-inner subquery: the group keys ride along; the
     # (parse-rejected) enclosing aggregation never applies.
-    group = [c for c in steps.columns if c not in ("t", "value")] + ["__i"]
+    group = [c for c in steps.columns if c not in ("t", "value")] + step
     out = _outer_step_agg(exploded, eq, group, [], tau)
     keys = [c for c in out.columns if c not in ("value", "__i")]
     return _apply_post(out.select(*keys, grid.t_col(), "value"), eq.post)
@@ -3194,16 +3195,16 @@ def evaluate_range_binary(
             # per t and joins back on t — step-count-sized,
             # broadcastable. A step where the inner vector is empty
             # has no reduced row: the left join reads NaN there
-            # (Prometheus: scalar() of an empty vector is NaN).
-            reduced = (
-                _frame(sc.eq)
-                .groupBy("t")
-                .agg(
-                    F.count("*").alias("__n"),
-                    F.first("value").alias("__v"),
-                )
-            )
-            out = out.join(F.broadcast(reduced), "t", "left")
+            # (Prometheus: scalar() of an empty vector is NaN). On one
+            # step a global reduction is that one row (NaN when empty)
+            # and needs no second shuffle on the step.
+            inner = _frame(sc.eq)
+            stats = (F.count("*").alias("__n"), F.first("value").alias("__v"))
+            if grid.n_steps:
+                reduced = inner.groupBy("t").agg(*stats)
+                out = out.join(F.broadcast(reduced), "t", "left")
+            else:
+                out = out.crossJoin(F.broadcast(inner.agg(*stats)))
             sc_col = F.when(F.col("__n") == 1, F.col("__v")).otherwise(
                 F.lit(float("nan"))
             )
