@@ -3220,9 +3220,10 @@ def evaluate_range_binary(
             if scalar_left
             else apply(F.col("value"), sc_col)
         )
+        # Every series column of the operand: a by-grouped aggregate
+        # keys on its group columns, not on sensor_id/name/labels.
         cols = [
-            c for c in ("sensor_id", "name", "labels")
-            if c in out.columns
+            c for c in out.columns if c not in ("t", "value", "__n", "__v")
         ]
         if bq.op in _CMP_OPS:
             if bq.bool_mode:

@@ -7,6 +7,9 @@ matter identically on a 1000-executor cluster:
 * Arrow execution for the few Pandas-UDF operators
 * shuffle partitions sized for the test scale; on a real cluster AQE's
   coalescing makes the initial number mostly a ceiling.
+* per-task buffers (the Tungsten page, the torrent-broadcast chunk)
+  sized from the driver heap so that G1 never sees them as humongous
+  objects (``buffer_sizes``).
 """
 
 from __future__ import annotations
@@ -27,6 +30,55 @@ def _ensure_worker_pythonpath() -> None:
         )
 
 
+_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+_MIB = 1 << 20
+# TaskMemoryManager's page table: a task can hold at most this many pages.
+_PAGE_TABLE_SIZE = 8192
+# The header of a long[], which Spark subtracts from its own G1 default.
+_LONG_ARRAY_OFFSET = 16
+
+
+def _heap_bytes(memory: str) -> int:
+    """A JVM memory string (``512m``, ``8g``; a bare number is MiB, as
+    for ``spark.driver.memory``) in bytes."""
+    text = memory.strip().lower().removesuffix("b")
+    if text[-1:] in _UNITS:
+        return int(text[:-1]) * _UNITS[text[-1]]
+    return int(text) * _MIB
+
+
+def buffer_sizes(memory: str) -> tuple[int, str]:
+    """``(spark.buffer.pageSize in bytes, spark.broadcast.blockSize)``
+    for a driver heap of ``memory``.
+
+    Spark allocates both buffers whole, however few rows a task has:
+    every aggregate, sort or window task takes one Tungsten page
+    (16 MiB at a 2 GiB heap, 64 MiB at 8 GiB by Spark's own rule), and
+    every stage's task binary and every broadcast is cut into 4 MiB
+    chunks. G1 treats an object larger than half a region as humongous:
+    it lands in fresh regions outside eden and its pages stay resident,
+    so a gateway serving a few hundred rows per request grew its RSS by
+    hundreds of MB. R below is the region JDK 17 picks for the heap
+    (heap/2048 as a power of two, 1-32 MiB), rounded down: JDK 17
+    rounds a non-power-of-two up, so the buffers stay under half a
+    region either way.
+
+    * The page is R/2 minus the ``long[]`` header, so it is never
+      humongous, unless that would leave 8192 pages short of the heap:
+      ``TaskMemoryManager.allocatePage`` throws instead of spilling
+      past 8192 pages, so from 128 GiB up (R stops at 32 MiB) coverage
+      wins and the page is heap/8192.
+    * The broadcast chunk is R/4 (the conf's unit is KiB).
+    """
+    heap = _heap_bytes(memory)
+    target = max(heap // 2048, _MIB)
+    region = min(1 << (target.bit_length() - 1), 32 * _MIB)
+    page = max(region // 2 - _LONG_ARRAY_OFFSET, -(-heap // _PAGE_TABLE_SIZE))
+    block_kib = region // 4 >> 10
+    block = f"{block_kib >> 10}m" if block_kib % 1024 == 0 else f"{block_kib}k"
+    return page, block
+
+
 def get_spark(
     app_name: str = "sensapp-spark",
     master: str | None = None,
@@ -36,6 +88,8 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or int(os.environ.get("SENSAPP_SHUFFLE_PARTITIONS", "32"))
+    memory = os.environ.get("SENSAPP_DRIVER_MEMORY", "8g")
+    page_size, block_size = buffer_sizes(memory)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -56,7 +110,9 @@ def get_spark(
         # The lake's zone maps (storage/zonemap.py) read those footer
         # stats; INT96-era files simply stay unknown on the time axis.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.driver.memory", os.environ.get("SENSAPP_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", memory)
+        .config("spark.buffer.pageSize", str(page_size))
+        .config("spark.broadcast.blockSize", block_size)
         .config("spark.ui.enabled", "false")
         # PySpark's DataFrame debugging wraps EVERY Column / functions
         # call: it looks up the active session over py4j, reads a conf,

@@ -438,3 +438,34 @@ def test_gateway_range_binary_served_from_rollup(spark, tmp_path):
             "2024-01-01T01:00:00": 2.0,
             "2024-01-01T02:00:00": 3.0,
         }
+
+@pytest.mark.parametrize(
+    "expr, want",
+    [
+        ("sum by (user) (a) * 10", [("u1", 40.0), ("u2", 90.0)]),
+        ("10 - sum by (user) (a)", [("u1", 6.0), ("u2", 1.0)]),
+        ("sum by (user) (a) > 5", [("u2", 9.0)]),
+        ("sum by (user) (a) > bool 5", [("u1", 0.0), ("u2", 1.0)]),
+        ("sum by (user) (a) / scalar(sum(b))", [("u1", 0.8), ("u2", 1.8)]),
+    ],
+)
+def test_grouped_operand_keeps_group_keys_with_scalar(frames, expr, want):
+    """Vector∘scalar over a by-grouped operand answers the group
+    columns, as the aggregate alone does — instant and per step."""
+    from sensapp_spark.query.promql_ext import evaluate_range_binary
+
+    sensors, vals = frames
+    bq = parse_extended_expr(expr, now=NOW)
+    out = evaluate_binary(sensors, vals, bq)
+    assert out.columns == ["user", "value"]
+    assert sorted((r.user, round(r.value, 6)) for r in out.collect()) == want
+    out = evaluate_range_binary(
+        sensors, vals, bq,
+        start=T0 + dt.timedelta(minutes=10),
+        end=T0 + dt.timedelta(minutes=20),
+        step_seconds=600, now=NOW,
+    )
+    assert sorted(out.columns) == ["t", "user", "value"]
+    assert sorted(
+        (r.t.minute, r.user, round(r.value, 6)) for r in out.collect()
+    ) == sorted((m, u, v) for m in (10, 20) for u, v in want)
