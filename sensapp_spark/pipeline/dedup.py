@@ -29,6 +29,7 @@ from sensapp_spark.pipeline.text import (
     spread_if_needed,
     word_ngrams,
 )
+from sensapp_spark.session import size_bytes
 
 DEFAULT_NGRAM = 3  # word shingles
 DEFAULT_MINHASH_K = 16
@@ -58,20 +59,6 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
     )
 
 
-def _parse_byte_conf(raw: str) -> int:
-    """Parse a Spark size conf value ("134217728b", "128MB", "1g")."""
-    s = raw.strip().lower()
-    mult = 1
-    for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                      ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-                      ("b", 1)):
-        if s.endswith(suffix):
-            s = s[: -len(suffix)]
-            mult = m
-            break
-    return int(s) * mult
-
-
 def scan_needs_spread(df: DataFrame) -> bool:
     """True when a file-scan input genuinely yields fewer splits than
     cores. Split count is ESTIMATED per file as ceil(size /
@@ -90,7 +77,7 @@ def scan_needs_spread(df: DataFrame) -> bool:
     files = df.inputFiles()
     if not files:
         return False
-    max_bytes = _parse_byte_conf(
+    max_bytes = size_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
     )
     splits = 0

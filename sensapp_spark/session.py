@@ -30,7 +30,6 @@ def _ensure_worker_pythonpath() -> None:
         )
 
 
-_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
 _MIB = 1 << 20
 # TaskMemoryManager's page table: a task can hold at most this many pages.
 _PAGE_TABLE_SIZE = 8192
@@ -38,13 +37,19 @@ _PAGE_TABLE_SIZE = 8192
 _LONG_ARRAY_OFFSET = 16
 
 
-def _heap_bytes(memory: str) -> int:
-    """A JVM memory string (``512m``, ``8g``; a bare number is MiB, as
-    for ``spark.driver.memory``) in bytes."""
-    text = memory.strip().lower().removesuffix("b")
-    if text[-1:] in _UNITS:
-        return int(text[:-1]) * _UNITS[text[-1]]
-    return int(text) * _MIB
+def size_bytes(raw: str) -> int:
+    """Parse a Spark size conf value or a heap size ("134217728b",
+    "128MB", "8g"); a bare number is bytes, as for ``-Xmx``."""
+    s = raw.strip().lower()
+    mult = 1
+    for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
+                      ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
+                      ("b", 1)):
+        if s.endswith(suffix):
+            s = s[: -len(suffix)]
+            mult = m
+            break
+    return int(s) * mult
 
 
 def buffer_sizes(memory: str) -> tuple[int, str]:
@@ -52,31 +57,29 @@ def buffer_sizes(memory: str) -> tuple[int, str]:
     for a driver heap of ``memory``.
 
     Spark allocates both buffers whole, however few rows a task has:
-    every aggregate, sort or window task takes one Tungsten page
-    (16 MiB at a 2 GiB heap, 64 MiB at 8 GiB by Spark's own rule), and
+    every aggregate, sort or window task takes one Tungsten page (by
+    Spark's own rule up to 64 MiB; 16 MiB at a 2 GiB heap on 4 cores), and
     every stage's task binary and every broadcast is cut into 4 MiB
     chunks. G1 treats an object larger than half a region as humongous:
     it lands in fresh regions outside eden and its pages stay resident,
     so a gateway serving a few hundred rows per request grew its RSS by
-    hundreds of MB. R below is the region JDK 17 picks for the heap
+    hundreds of MB. ``region`` is the one JDK 17 picks for the heap
     (heap/2048 as a power of two, 1-32 MiB), rounded down: JDK 17
     rounds a non-power-of-two up, so the buffers stay under half a
     region either way.
 
-    * The page is R/2 minus the ``long[]`` header, so it is never
-      humongous, unless that would leave 8192 pages short of the heap:
-      ``TaskMemoryManager.allocatePage`` throws instead of spilling
-      past 8192 pages, so from 128 GiB up (R stops at 32 MiB) coverage
-      wins and the page is heap/8192.
-    * The broadcast chunk is R/4 (the conf's unit is KiB).
+    * The page is half a region minus the ``long[]`` header, so it is
+      never humongous, unless that would leave 8192 pages short of the
+      heap: ``TaskMemoryManager.allocatePage`` throws instead of
+      spilling past 8192 pages, so from 128 GiB up (the region stops
+      at 32 MiB) coverage wins and the page is heap/8192.
+    * The broadcast chunk is a quarter region (the conf's unit is KiB).
     """
-    heap = _heap_bytes(memory)
+    heap = size_bytes(memory)
     target = max(heap // 2048, _MIB)
     region = min(1 << (target.bit_length() - 1), 32 * _MIB)
     page = max(region // 2 - _LONG_ARRAY_OFFSET, -(-heap // _PAGE_TABLE_SIZE))
-    block_kib = region // 4 >> 10
-    block = f"{block_kib >> 10}m" if block_kib % 1024 == 0 else f"{block_kib}k"
-    return page, block
+    return page, f"{region // 4 >> 10}k"
 
 
 def get_spark(

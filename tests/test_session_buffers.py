@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pytest
 
-from sensapp_spark.session import buffer_sizes
+from sensapp_spark.session import buffer_sizes, size_bytes
 
 MIB = 1 << 20
 
@@ -23,10 +23,10 @@ MIB = 1 << 20
         ("1536m", 512 * 1024 - 16, "256k"),
         ("2g", 512 * 1024 - 16, "256k"),
         ("3g", 512 * 1024 - 16, "256k"),
-        ("8g", 2 * MIB - 16, "1m"),
-        ("64g", 16 * MIB - 16, "8m"),
+        ("8g", 2 * MIB - 16, "1024k"),
+        ("64g", 16 * MIB - 16, "8192k"),
         # The region stops at 32 MiB: coverage (8192 pages ≥ heap) wins.
-        ("256g", 32 * MIB, "8m"),
+        ("256g", 32 * MIB, "8192k"),
     ],
 )
 def test_buffer_sizes(heap, page, block):
@@ -35,18 +35,8 @@ def test_buffer_sizes(heap, page, block):
 
 @pytest.mark.parametrize("heap", ["512m", "1536m", "2g", "3g", "8g", "64g", "256g"])
 def test_pages_cover_the_heap(heap):
-    from sensapp_spark.session import _heap_bytes
-
     page, _ = buffer_sizes(heap)
-    assert 8192 * page >= _heap_bytes(heap)
-
-
-def test_heap_strings():
-    from sensapp_spark.session import _heap_bytes
-
-    assert _heap_bytes("2048") == 2 * 1024 * MIB  # bare number = MiB
-    assert _heap_bytes("2G") == _heap_bytes("2gb") == 2 * 1024 * MIB
-    assert _heap_bytes("524288k") == 512 * MIB
+    assert 8192 * page >= size_bytes(heap)
 
 
 def test_live_session_buffers_are_not_humongous(spark):
