@@ -57,10 +57,10 @@ def buffer_sizes(memory: str) -> tuple[int, str]:
     for a driver heap of ``memory``.
 
     Spark allocates both buffers whole, however few rows a task has:
-    every aggregate, sort or window task takes one Tungsten page (by
-    Spark's own rule up to 64 MiB; 16 MiB at a 2 GiB heap on 4 cores), and
-    every stage's task binary and every broadcast is cut into 4 MiB
-    chunks. G1 treats an object larger than half a region as humongous:
+    every aggregate, sort or window task takes one Tungsten page (up to
+    64 MiB by Spark's own rule; 16 MiB at a 2 GiB heap on 4 cores),
+    and every stage's task binary and every broadcast is cut into
+    4 MiB chunks. G1 treats an object larger than half a region as humongous:
     it lands in fresh regions outside eden and its pages stay resident,
     so a gateway serving a few hundred rows per request grew its RSS by
     hundreds of MB. ``region`` is the one JDK 17 picks for the heap
