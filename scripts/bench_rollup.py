@@ -345,7 +345,7 @@ def main() -> int:
     # sampling error the X-Approx header states (reported, not
     # asserted: the estimate is approximate BY CONTRACT).
     from sensapp_spark.query.rollup_serve import (
-        evaluate_range_quantile,
+        evaluate_range_rollup,
         quantile_rollup_serveable,
     )
     from sensapp_spark.storage.qrollup import QuantileRollupStore
@@ -357,7 +357,7 @@ def main() -> int:
     qeq = parse_extended("quantile_over_time(0.95, dense[1d])", now=now)
     assert quantile_rollup_serveable(qeq, 3600, q0, step, now=now)
     t0 = time.time()
-    qs = evaluate_range_quantile(
+    qs = evaluate_range_rollup(
         qstore, dsensors, qeq, q0, q1, step, now=now
     ).select("sensor_id", "t", "value").cache()
     nqs = qs.count()

@@ -4,9 +4,8 @@ Implemented from the public BLAKE3 specification ("BLAKE3: one function,
 fast everywhere", Jean-Philippe Aumasson et al., 2020 — the paper and
 the reference-implementation pseudocode in its §2 and §5 are public).
 Exists so sensor-UUID identity (reference src/datamodel/sensor.rs:74-80
-uses ``blake3::derive_key`` + keyed BLAKE3) is byte-exact even though
-the compiled ``blake3`` wheel is not installed in this environment; the
-compiled package is preferred at runtime when importable
+uses ``blake3::derive_key`` + keyed BLAKE3) is byte-exact with no
+compiled dependency; it is the only BLAKE3 the engine uses
 (datamodel/sensor.py).
 
 Driver-side only: UUID assignment happens on small per-batch sensor

@@ -15,11 +15,11 @@ The reference derives the MAC key with ``blake3::derive_key`` and hashes
 with keyed BLAKE3 (sensor.rs:74-80, 153-172). Both modes are implemented
 in pure Python (``datamodel/blake3_pure.py``, written from the public
 BLAKE3 spec), so UUIDs are byte-identical to the reference's in every
-environment — the golden test vs sensor.rs:366-370 always runs. When the
-compiled ``blake3`` wheel happens to be importable it is preferred for
-speed; outputs are identical either way. UUID assignment is a driver-side
-small-dimension operation (per-batch sensor metadata, not per-row), so
-the pure-Python rate is never a query bottleneck.
+environment — the golden test vs sensor.rs:366-370 always runs. There is
+no compiled fast path: UUID assignment is a driver-side small-dimension
+operation (per-batch sensor metadata, not per-row), so the pure-Python
+rate is never a query bottleneck, and one implementation is the one the
+golden test pins.
 """
 
 from __future__ import annotations
@@ -32,14 +32,6 @@ from sensapp_spark.config import CONFIG
 from sensapp_spark.datamodel.blake3_pure import blake3_derive_key, blake3_keyed
 from sensapp_spark.datamodel.types import SensorType
 
-try:  # pragma: no cover - depends on environment
-    import blake3 as _blake3
-
-    _HAVE_BLAKE3 = True
-except ImportError:
-    _blake3 = None
-    _HAVE_BLAKE3 = False
-
 _KEY_CONTEXT = b"SENSAPP uuid hash mac 2024-01-19 strings to unique ids"
 _RS = b"\x1e"  # Record Separator
 _US = b"\x1f"  # Unit Separator
@@ -48,17 +40,7 @@ _SPECIAL = frozenset((11, 28, 29, 30, 31))
 
 @lru_cache(maxsize=8)
 def _mac_key(salt: str) -> bytes:
-    if _HAVE_BLAKE3:
-        return _blake3.blake3(
-            salt.encode(), derive_key_context=_KEY_CONTEXT.decode()
-        ).digest()
     return blake3_derive_key(_KEY_CONTEXT.decode(), salt.encode())
-
-
-def _keyed_hash(key: bytes, data: bytes, out_len: int) -> bytes:
-    if _HAVE_BLAKE3:
-        return _blake3.blake3(data, key=key).digest(length=out_len)
-    return blake3_keyed(key, data, out_len)
 
 
 def _check_special(s: str, what: str) -> None:
@@ -99,8 +81,8 @@ def sensor_uuid(
     sorted_labels = sorted((labels or {}).items())
     buf = _uuid_buffer(name, sensor_type, unit, sorted_labels)
     key = _mac_key(salt if salt is not None else CONFIG.sensor_salt)
-    head = _keyed_hash(key, name.encode(), 4)
-    tail = _keyed_hash(key, buf, 12)
+    head = blake3_keyed(key, name.encode(), 4)
+    tail = blake3_keyed(key, buf, 12)
     raw = bytearray(head + tail)
     # Stamp as UUID version 8, RFC 4122 variant (uuid::Builder::from_custom_bytes).
     raw[6] = (raw[6] & 0x0F) | 0x80

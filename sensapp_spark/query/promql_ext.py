@@ -2176,10 +2176,7 @@ def evaluate_extended(
 
     An instant query is a one-step range query: :func:`evaluate_range`
     on the grid ``start = end = eq.eval_at`` (the parse anchor), with
-    the step column dropped. ``sort()``/``sort_desc()`` and
-    ``sort_by_label()`` then order the final frame (the result is
-    dashboard-sized — series or groups, never samples — so the global
-    sort is presentation cost, not a scale hazard).
+    the step column dropped and :func:`sort_instant` applied.
 
     ``cache`` (optional) is a per-construction operand memo: callers
     evaluating SEVERAL expressions over the same (sensors, values) —
@@ -2193,8 +2190,17 @@ def evaluate_extended(
     out = evaluate_range(
         sensors, values, dataclasses.replace(eq, sort=None), at, at, 1.0,
         now=at, cache=cache,
-    ).drop("t")
-    if eq.sort is None:
+    )
+    return sort_instant(out.drop("t"), eq)
+
+
+def sort_instant(out: DataFrame, eq) -> DataFrame:
+    """``out`` (an instant vector) ordered by ``eq``'s ``sort()``/
+    ``sort_desc()`` or ``sort_by_label()`` wrapper; unchanged without
+    one (a BinaryQuery has none). The result is dashboard-sized —
+    series or groups, never samples — so the global sort is
+    presentation cost, not a scale hazard."""
+    if getattr(eq, "sort", None) is None:
         return out
     if eq.sort_labels:
         # sort_by_label(_desc): lexicographic on each given label's
@@ -2345,47 +2351,38 @@ def _apply_outer2(out: DataFrame, eq: ExtendedQuery) -> DataFrame:
     return out.groupBy("t").agg(agg_col.alias("value"))
 
 
-def data_window(eq: ExtendedQuery) -> tuple[dt.datetime, dt.datetime]:
-    """The sample window an engine must LOAD to evaluate ``eq`` — what
-    a storage layer passes to its partition-pruned scan. For plain
-    expressions this is the selector window; a subquery additionally
-    reaches back ``range`` plus the inner lookback from its evaluation
-    time (the selector window alone would silently starve the earliest
-    steps of their samples). Constant vectors read no samples:
-    ``(None, None)``. A nested BinaryQuery operand (round 11) loads
-    the envelope of its own operands' windows."""
-    if isinstance(eq, BinaryQuery):
-        windows = [
-            data_window(s.eq if isinstance(s, ScalarOf) else s)
-            for s in (eq.left, eq.right)
-            if not isinstance(s, float)
-        ]
-        windows = [w for w in windows if w[0] is not None]
-        if not windows:
-            return None, None
-        return min(w[0] for w in windows), max(w[1] for w in windows)
+def scan_window(
+    eq: ExtendedQuery,
+    start: dt.datetime,
+    end: dt.datetime,
+    now: dt.datetime | None,
+) -> tuple[dt.datetime | None, dt.datetime | None]:
+    """The samples :func:`evaluate_range` reads for the vector operand
+    ``eq`` over the steps ``[start, end]`` — the bounds a storage layer
+    passes to its partition-pruned scan. It follows the evaluator's own
+    window arithmetic: each step ``t`` reads ``[t − offset − R,
+    t − offset]``; a subquery evaluates its inner expression over
+    ``[start − o − range, end − o]``; a fixed ``@`` evaluates once at
+    its anchor. Constants read no samples: ``(None, None)``."""
     if eq.const is not None:
         return None, None
-    if eq.sub_inner is not None:
-        lookback = eq.selector.end_time - eq.selector.start_time
-        end = eq.sub_eval
-        if end.tzinfo is None:
-            end = end.replace(tzinfo=dt.timezone.utc)
-        sel_end = eq.selector.end_time
-        if sel_end.tzinfo is None:
-            sel_end = sel_end.replace(tzinfo=dt.timezone.utc)
-        # An inner `offset` pushes every step window further back; the
-        # offset is the gap between the evaluation anchor and the
-        # selector's (shifted) end.
-        offset = max(dt.timedelta(0), end - sel_end)
-        start = (
-            end
-            - dt.timedelta(seconds=eq.sub_range_s)
-            - lookback
-            - offset
+    if eq.at_fixed:
+        anchor = _fixed_anchor(eq)
+        return scan_window(
+            dataclasses.replace(eq, at_fixed=False, sub_offset_s=0.0),
+            anchor, anchor, anchor,
         )
-        return start, end
-    return eq.selector.start_time, eq.selector.end_time
+    if eq.sub_inner is not None:
+        shift = dt.timedelta(seconds=eq.sub_offset_s)
+        return scan_window(
+            eq.sub_inner,
+            start - shift - dt.timedelta(seconds=eq.sub_range_s),
+            end - shift,
+            now,
+        )
+    offset = dt.timedelta(microseconds=_offset_us(eq, now))
+    lookback = eq.selector.end_time - eq.selector.start_time
+    return start - lookback - offset, end - offset
 
 
 def _outer_step_agg(
@@ -2604,6 +2601,33 @@ def _histogram_le_fraction(
     )
 
 
+def _fixed_anchor(eq: ExtendedQuery) -> dt.datetime:
+    """The end of a fixed-``@`` window: the subquery's (@ − offset)
+    grid end, or the selector's window end with its offset folded in."""
+    return eq.sub_eval if eq.sub_inner is not None else eq.selector.end_time
+
+
+def evaluate_at_anchor(eq: ExtendedQuery, grid: _Grid, evaluate) -> DataFrame:
+    """A fixed ``@`` anchor is constant over the range: ``evaluate(e,
+    at)`` evaluates ``e`` (``eq`` with the anchor cleared) once, as a
+    one-step grid at the anchor ``at``, and that answer repeats at
+    every step of ``grid``. Raw and rollup-served evaluation share this
+    rule."""
+    anchor = _fixed_anchor(eq)
+    fixed = evaluate(
+        dataclasses.replace(eq, at_fixed=False, sub_offset_s=0.0), anchor
+    )
+    keep = [c for c in fixed.columns if c not in ("t", "value")]
+    if grid.n_steps == 0:
+        return fixed.select(*keep, grid.t_col(), "value")
+    # The (series-sized) answer repeats across the bounded step grid
+    # via a broadcast cross join — no per-step work.
+    steps = grid.steps(fixed.sparkSession).select(grid.t_col())
+    return fixed.drop("t").crossJoin(F.broadcast(steps)).select(
+        *keep, "t", "value"
+    )
+
+
 def evaluate_range(
     sensors: DataFrame,
     values: DataFrame,
@@ -2652,25 +2676,12 @@ def evaluate_range(
         )
     grid = _Grid.of(start, end, step_seconds)
     if eq.at_fixed:
-        # The anchored window's end: the subquery's (@ − offset) grid
-        # end, or the selector's window end with its offset folded in.
-        anchor = (
-            eq.sub_eval if eq.sub_inner is not None
-            else eq.selector.end_time
-        )
-        fixed = evaluate_range(
-            sensors, values,
-            dataclasses.replace(eq, at_fixed=False, sub_offset_s=0.0),
-            anchor, anchor, step_seconds, now=anchor, cache=cache,
-        )
-        keep = [c for c in fixed.columns if c not in ("t", "value")]
-        if grid.n_steps == 0:
-            return fixed.select(*keep, grid.t_col(), "value")
-        # The (series-sized) answer repeats across the bounded step
-        # grid via a broadcast cross join — no per-step work.
-        steps = grid.steps(sensors.sparkSession).select(grid.t_col())
-        return fixed.drop("t").crossJoin(F.broadcast(steps)).select(
-            *keep, "t", "value"
+        return evaluate_at_anchor(
+            eq, grid,
+            lambda e, at: evaluate_range(
+                sensors, values, e, at, at, step_seconds, now=at,
+                cache=cache,
+            ),
         )
     if eq.const is not None:
         return _const_range_vector(sensors.sparkSession, eq, grid)

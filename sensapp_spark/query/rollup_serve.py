@@ -6,7 +6,8 @@ AggregatingMergeTree materialized views precisely to avoid that
 (src/storage/clickhouse/migrations/20240223133248_init.sql:133-146).
 This module is the Spark-side analogue's QUERY path: when a range
 query's window arithmetic is grain-compatible with a maintained
-RollupStore, ``/api/v1/query_range`` folds the answer from rollup
+RollupStore, ``/api/v1/query_range`` (and ``/api/v1/query?extended=1``,
+the same handler on a one-step grid) folds the answer from rollup
 buckets instead of re-scanning raw samples — measured 5.4× less IO at
 10× (BASELINE.md), and the gap is the table-to-rollup size ratio, so
 it widens with scale.
@@ -38,7 +39,6 @@ from __future__ import annotations
 
 import dataclasses
 import datetime as dt
-import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -50,11 +50,13 @@ from sensapp_spark.query.promql_ext import (
     _finish_range,
     _Grid,
     _offset_us,
+    evaluate_at_anchor,
 )
 from sensapp_spark.storage.rollup import RollupStore
 
 __all__ = [
     "ROLLUP_SERVE_FUNCS",
+    "QUANTILE_SERVE_FUNCS",
     "SERVE_MIN_SCHEMA",
     "min_schema_for",
     "rollup_serveable",
@@ -63,7 +65,6 @@ __all__ = [
     "range_windows",
     "evaluate_range_rollup",
     "evaluate_instant_rollup",
-    "evaluate_range_quantile",
     "maintained_grains",
 ]
 
@@ -121,6 +122,10 @@ SERVE_MIN_SCHEMA = {
 
 ROLLUP_SERVE_FUNCS = frozenset(SERVE_MIN_SCHEMA)
 
+# The window functions the bottom-k sample rollup (storage/qrollup.py)
+# APPROXIMATES — served only behind the user's explicit opt-in.
+QUANTILE_SERVE_FUNCS = frozenset(["quantile_over_time", "mad_over_time"])
+
 
 def min_schema_for(func) -> int:
     """The minimum committed rollup schema version that serves
@@ -129,45 +134,82 @@ def min_schema_for(func) -> int:
     return SERVE_MIN_SCHEMA.get(func, 10**9)
 
 
+def _window_aligned(
+    eq,
+    grain_s: int,
+    start: dt.datetime,
+    step_seconds: float,
+    now: dt.datetime | None,
+    end: dt.datetime | None,
+) -> bool:
+    """True iff every window of ``eq`` over the steps ``[start, end]``
+    (``end`` None: a multi-step grid) folds from whole ``grain_s``
+    buckets — the alignment rule both rollup stores serve under. The
+    shape is one plain selector window (no constant, subquery,
+    histogram, sort or series-post — anything else falls back to the
+    raw path, which evaluates it or raises its own didactic error), and
+    R, start − offset and, on a multi-step grid, the step are multiples
+    of the grain. A fixed ``@`` is checked as the one-step grid at its
+    anchor, the answer that repeats at every step
+    (promql_ext.evaluate_at_anchor); a one-step grid has no step to
+    align."""
+    if (
+        eq is None
+        or getattr(eq, "selector", None) is None
+        or eq.const is not None
+        or eq.sub_inner is not None
+        or eq.sort is not None
+        or eq.hist_quantile is not None
+        or eq.hist_fraction is not None
+        or eq.series_post
+    ):
+        return False
+    if eq.at_fixed:
+        start = end = now = eq.selector.end_time
+        eq = dataclasses.replace(eq, at_fixed=False)
+    g_us = grain_s * 1_000_000
+    r_us = int(
+        (eq.selector.end_time - eq.selector.start_time).total_seconds()
+        * 1_000_000
+    )
+    one_step = (
+        end is not None and _Grid.of(start, end, step_seconds).n_steps == 0
+    )
+    return (
+        r_us > 0
+        and r_us % g_us == 0
+        and (one_step or int(step_seconds * 1_000_000) % g_us == 0)
+        and (_epoch_us(start) - _offset_us(eq, now)) % g_us == 0
+    )
+
+
+def _store_grid(
+    grain_s: int, start: dt.datetime, end: dt.datetime, step_seconds: float
+) -> tuple[dt.datetime, float]:
+    """The (end, step) one store's windows are cut on: the query's own,
+    or on a one-step grid ``(start, grain)`` — the step length never
+    enters a one-step answer, and the store's own grain meets the
+    window functions' alignment contract."""
+    if _Grid.of(start, end, step_seconds).n_steps == 0:
+        return start, float(grain_s)
+    return end, step_seconds
+
+
 def rollup_serveable(
     eq,
     grain_s: int,
     start: dt.datetime,
     step_seconds: float,
     now: dt.datetime | None = None,
+    end: dt.datetime | None = None,
 ) -> bool:
-    """True iff ``eq`` evaluated at steps ``start + i·step`` folds
-    EXACTLY from a grain_s rollup: the shape is a quartet-expressible
-    range function over one selector (aggregations/post-ops on top are
-    fine — they apply to per-series per-step values either way), and
-    every window endpoint lands on a bucket boundary."""
-    # Shape gates — anything here falls back to the raw path (which
-    # either evaluates it or raises its own didactic error).
-    if (
-        eq is None
-        or getattr(eq, "selector", None) is None
-        or eq.const is not None
-        or eq.sub_inner is not None
-        or eq.at_fixed
-        or eq.sort is not None
-        or eq.hist_quantile is not None
-        or eq.hist_fraction is not None
-        or eq.series_post
-        or eq.func not in ROLLUP_SERVE_FUNCS
-    ):
-        return False
-    g_us = grain_s * 1_000_000
-    r_us = int(
-        (eq.selector.end_time - eq.selector.start_time).total_seconds()
-        * 1_000_000
-    )
-    s_us = int(step_seconds * 1_000_000)
-    off_us = _offset_us(eq, now)
-    return (
-        r_us > 0
-        and r_us % g_us == 0
-        and s_us % g_us == 0
-        and (_epoch_us(start) - off_us) % g_us == 0
+    """True iff ``eq`` evaluated at steps ``start + i·step`` (up to
+    ``end``, when given) folds EXACTLY from a grain_s rollup: a
+    quartet-expressible range function (aggregations/post-ops on top
+    are fine — they apply to per-series per-step values either way)
+    whose windows are grain-aligned (:func:`_window_aligned`)."""
+    return getattr(eq, "func", None) in ROLLUP_SERVE_FUNCS and (
+        _window_aligned(eq, grain_s, start, step_seconds, now, end)
     )
 
 
@@ -515,31 +557,52 @@ def _served_window_values(
     pairs, eq, selected, start, end, step_seconds, offset_us, realtime
 ) -> DataFrame:
     """Per-(sensor, __i) served values unioned across one or more
-    (store, stype) pairs. A sensor has exactly one type, so the union
-    never collides; it happens BEFORE the shared tail so aggregations
-    (sum over a mixed Integer/Float fleet) group across types exactly
-    like the raw path's pre-aggregation union."""
+    (store, stype) pairs: folded from the quartet rollup, or — for
+    ``quantile_over_time``/``mad_over_time`` over a bottom-k sample
+    rollup — estimated from the merged sample (storage/qrollup.py). A
+    sensor has exactly one type, so the union never collides; it
+    happens BEFORE the shared tail so aggregations (sum over a mixed
+    Integer/Float fleet) group across types exactly like the raw
+    path's pre-aggregation union."""
+    from sensapp_spark.storage.qrollup import quantile_windows
+
     q = eq.selector
     window_s = (q.end_time - q.start_time).total_seconds()
-    value, keep = _func_value(eq.func)
-    need = _needed_stats(eq.func)
+    quantile = eq.func in QUANTILE_SERVE_FUNCS
+    if not quantile:
+        value, keep = _func_value(eq.func)
+        need = _needed_stats(eq.func)
+    mad = eq.func == "mad_over_time"
     out = None
     for store, stype in pairs:
-        win = range_windows(
-            store,
-            stype,
-            start,
-            end,
-            step_seconds,
-            window_s,
-            offset_us=offset_us,
-            sensor_ids=selected.select("sensor_id"),
-            realtime=realtime,
-            need=need,
+        store_end, store_step = _store_grid(
+            store.grain_s, start, end, step_seconds
         )
-        if keep is not None:
-            win = win.filter(keep)
-        frame = win.select("sensor_id", "__i", value.alias("value"))
+        if quantile:
+            frame = quantile_windows(
+                store, stype, start, store_end, store_step, window_s,
+                phi=0.5 if mad else float(eq.func_param),
+                offset_us=offset_us,
+                sensor_ids=selected.select("sensor_id"),
+                realtime=realtime,
+                stat="mad" if mad else "quantile",
+            )
+        else:
+            win = range_windows(
+                store,
+                stype,
+                start,
+                store_end,
+                store_step,
+                window_s,
+                offset_us=offset_us,
+                sensor_ids=selected.select("sensor_id"),
+                realtime=realtime,
+                need=need,
+            )
+            if keep is not None:
+                win = win.filter(keep)
+            frame = win.select("sensor_id", "__i", value.alias("value"))
         out = frame if out is None else out.unionByName(frame)
     return out
 
@@ -559,12 +622,25 @@ def evaluate_range_rollup(
     """promql_ext.evaluate_range, served from the rollup: same output
     frame, same tail (_finish_range — label ops, aggregations,
     topk/bottomk, post functions apply identically), but the scan reads
-    rollup buckets instead of raw samples. Caller must have checked
-    :func:`rollup_serveable` (per store for grain, per type for
-    schema). ``extra`` is additional (store, stype) pairs for
+    rollup buckets instead of raw samples. A fixed ``@`` evaluates once
+    at its anchor and repeats, as the raw path does. Caller must have
+    checked :func:`rollup_serveable` (per store for grain, per type for
+    schema) — or, for ``quantile_over_time``/``mad_over_time`` over
+    QuantileRollupStores, :func:`quantile_rollup_serveable` AND the
+    user's explicit opt-in: those values are APPROXIMATE (exact when a
+    window holds ≤ K samples). ``extra`` is additional (store, stype) pairs for
     multi-numeric-type fleets — their per-window values union with the
     primary's BEFORE the tail (the Integer/Numeric→f64 semantics of
     exporters/prometheus_read.py:36-68, served)."""
+    grid = _Grid.of(start, end, step_seconds)
+    if eq.at_fixed:
+        return evaluate_at_anchor(
+            eq, grid,
+            lambda e, at: evaluate_range_rollup(
+                store, sensors, e, at, at, step_seconds, now=at,
+                stype=stype, realtime=realtime, extra=extra,
+            ),
+        )
     off_us = _offset_us(eq, now)
     selected = select_sensors(sensors, eq.selector.matchers)
     win = _served_window_values(
@@ -575,26 +651,18 @@ def evaluate_range_rollup(
         F.broadcast(selected.select("sensor_id", "name", "labels")),
         "sensor_id",
     )
-    return _finish_range(out, eq, _Grid.of(start, end, step_seconds))
+    return _finish_range(out, eq, grid)
 
 
 def rollup_serveable_instant(eq, grain_s: int) -> bool:
     """True iff the INSTANT evaluation of ``eq`` folds exactly from a
     grain_s rollup: :func:`rollup_serveable` on the one-step grid at
-    the selector's window end, with step = grain. An ``@`` or
-    ``offset`` is already folded into that window end at parse time,
-    so the grid is evaluated there with no further offset or anchor;
-    the check comes down to R and the window end both grain-aligned.
-    Unanchored instant queries (end = wall-clock now) essentially
-    never align; the anchored dashboards ('@ <ts>', the replay/report
-    shape) are the ones this serves."""
-    if eq is None or getattr(eq, "selector", None) is None:
-        return False
-    end = eq.selector.end_time
-    return rollup_serveable(
-        dataclasses.replace(eq, at_fixed=False), grain_s, end, grain_s,
-        now=end,
-    )
+    the parse anchor ``eq.eval_at``. Unanchored instant queries (the
+    window ends at wall-clock now) essentially never align; the
+    anchored dashboards ('@ <ts>', the replay/report shape) are the
+    ones this serves."""
+    at = getattr(eq, "eval_at", None)
+    return rollup_serveable(eq, grain_s, at, 1.0, now=at, end=at)
 
 
 def evaluate_instant_rollup(
@@ -606,18 +674,12 @@ def evaluate_instant_rollup(
     extra: tuple = (),
 ) -> DataFrame:
     """promql_ext.evaluate_extended, served from the rollup:
-    :func:`evaluate_range_rollup` on the one-step grid at the
-    selector's window end, with the step column dropped — the same
-    tail, so label ops, aggregations and post functions behave
-    identically. Caller must have checked
-    :func:`rollup_serveable_instant`. ``extra`` unions further
-    (store, stype) pairs before the tail."""
-    end = eq.selector.end_time
-    # range_windows asserts step % grain per store — the lcm satisfies
-    # every pair (one step, so its length never enters the answer).
-    step = float(math.lcm(store.grain_s, *(s.grain_s for s, _ in extra)))
+    :func:`evaluate_range_rollup` on the one-step grid at the parse
+    anchor ``eq.eval_at``, with the step column dropped. Caller must
+    have checked :func:`rollup_serveable_instant`."""
+    at = eq.eval_at
     return evaluate_range_rollup(
-        store, sensors, eq, end, end, step, now=end, stype=stype,
+        store, sensors, eq, at, at, 1.0, now=at, stype=stype,
         realtime=realtime, extra=extra,
     ).drop("t")
 
@@ -675,88 +737,19 @@ def quantile_rollup_serveable(
     start: dt.datetime,
     step_seconds: float,
     now: dt.datetime | None = None,
+    end: dt.datetime | None = None,
 ) -> bool:
     """True iff ``eq`` is a ``quantile_over_time(φ, m[W])`` or
     ``mad_over_time(m[W])`` range evaluation the bottom-k sample
-    rollup can APPROXIMATE: same window-arithmetic gates as
-    :func:`rollup_serveable`, φ within [0, 1] (Prometheus maps
-    outside-φ to ±Inf — that stays on the raw path). The caller must
-    ALSO have the user's explicit ?approx=1 — approximation is never
-    silently substituted."""
-    if (
-        eq is None
-        or getattr(eq, "selector", None) is None
-        or eq.const is not None
-        or eq.sub_inner is not None
-        or eq.at_fixed
-        or eq.sort is not None
-        or eq.hist_quantile is not None
-        or eq.hist_fraction is not None
-        or eq.series_post
-        or eq.func not in ("quantile_over_time", "mad_over_time")
-        or (
-            eq.func == "quantile_over_time"
-            and (
-                eq.func_param is None
-                or not (0.0 <= float(eq.func_param) <= 1.0)
-            )
-        )
+    rollup can APPROXIMATE: the window alignment of
+    :func:`rollup_serveable` (:func:`_window_aligned`), φ within
+    [0, 1] (Prometheus maps outside-φ to ±Inf — that stays on the raw
+    path). The caller must ALSO have the user's explicit ?approx=1 —
+    approximation is never silently substituted."""
+    func = getattr(eq, "func", None)
+    if func not in QUANTILE_SERVE_FUNCS or (
+        func == "quantile_over_time"
+        and (eq.func_param is None or not 0.0 <= float(eq.func_param) <= 1.0)
     ):
         return False
-    g_us = grain_s * 1_000_000
-    r_us = int(
-        (eq.selector.end_time - eq.selector.start_time).total_seconds()
-        * 1_000_000
-    )
-    s_us = int(step_seconds * 1_000_000)
-    off_us = _offset_us(eq, now)
-    return (
-        r_us > 0
-        and r_us % g_us == 0
-        and s_us % g_us == 0
-        and (_epoch_us(start) - off_us) % g_us == 0
-    )
-
-
-def evaluate_range_quantile(
-    store,
-    sensors: DataFrame,
-    eq,
-    start: dt.datetime,
-    end: dt.datetime,
-    step_seconds: float,
-    now: dt.datetime | None = None,
-    stype: SensorType = SensorType.FLOAT,
-    realtime: bool = True,
-    extra: tuple = (),
-) -> DataFrame:
-    """promql_ext.evaluate_range for ``quantile_over_time`` /
-    ``mad_over_time``, served APPROXIMATELY from the bottom-k sample
-    rollup (storage/qrollup.py): same output frame, same
-    _finish_range tail, per-window values estimated from the merged
-    deterministic sample (exact when the window holds ≤ K samples).
-    Caller must have checked :func:`quantile_rollup_serveable` AND
-    the user's explicit opt-in."""
-    from sensapp_spark.storage.qrollup import quantile_windows
-
-    q = eq.selector
-    off_us = _offset_us(eq, now)
-    selected = select_sensors(sensors, q.matchers)
-    window_s = (q.end_time - q.start_time).total_seconds()
-    mad = eq.func == "mad_over_time"
-    out = None
-    for qstore, st in [(store, stype), *extra]:
-        win = quantile_windows(
-            qstore, st, start, end, step_seconds, window_s,
-            phi=0.5 if mad else float(eq.func_param),
-            offset_us=off_us,
-            sensor_ids=selected.select("sensor_id"),
-            realtime=realtime,
-            stat="mad" if mad else "quantile",
-        )
-        out = win if out is None else out.unionByName(win)
-    joined = out.join(
-        F.broadcast(selected.select("sensor_id", "name", "labels")),
-        "sensor_id",
-    )
-    return _finish_range(joined, eq, _Grid.of(start, end, step_seconds))
+    return _window_aligned(eq, grain_s, start, step_seconds, now, end)

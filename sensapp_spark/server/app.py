@@ -28,7 +28,9 @@ Routes:
   (round 11; streaming/maintenance.py runs the same tick on a schedule)
 * ``GET /api/v1/query_range`` — Prometheus range queries; grain-
   compatible shapes are served from the maintained rollup
-  (query/rollup_serve.py — X-Served-From header; ?rollup=0 opts out)
+  (query/rollup_serve.py — X-Served-From header; ?rollup=0 opts out).
+  ``GET /api/v1/query?extended=1`` is the same handler on the one-step
+  grid at the query's evaluation instant
 * ``GET /`` — frontpage: instance name as JSON (server.rs:151-155)
 * ``GET /docs`` — OpenAPI 3 document generated from the live route
   table (server.rs:40-52,84 — reference's ApiDoc derive + Scalar UI)
@@ -43,6 +45,7 @@ parsing, dispatch, and serialization.
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as dt
 import json
 import os
@@ -558,30 +561,36 @@ def create_app(
             out = frame if out is None else out.unionByName(frame)
         return out
 
-    def _pick_rollup(eq, serveable) -> list | None:
+    def _pick_rollup(eq, serveable, quantile: bool = False) -> list | None:
         """One (store, stype, grain) per present numeric type whose
         window arithmetic ``serveable(grain)`` accepts — coarsest
-        grain first — with each function gated on the minimum rollup
-        row-schema version its fold reads (rollup_serve.
+        grain first. Quartet rollups are gated on the minimum rollup
+        row-schema version the function's fold reads (rollup_serve.
         SERVE_MIN_SCHEMA: a pre-upgrade table would fold nulls or
-        stale cnt semantics). None when ANY type with data cannot be
-        served: a partial serve would silently drop that type's
-        series, so the caller falls back to the raw union instead."""
+        stale cnt semantics); ``quantile=True`` picks bottom-k sample
+        rollups instead (storage/qrollup.py). None when ANY type with
+        data cannot be served: a partial serve would silently drop
+        that type's series, so the caller falls back to the raw union
+        instead."""
         from sensapp_spark.query.rollup_serve import (
             maintained_grains,
             min_schema_for,
         )
+        from sensapp_spark.storage.qrollup import QuantileRollupStore
         from sensapp_spark.storage.rollup import RollupStore
 
         picked = []
         for st in _numeric_types_present():
             got = None
-            for g in maintained_grains(lake, st):
+            for g in maintained_grains(lake, st, quantile=quantile):
                 if not serveable(g):
                     continue
-                store = RollupStore(lake, grain_s=g)
-                if store.committed_schema(st) < min_schema_for(eq.func):
-                    continue
+                if quantile:
+                    store = QuantileRollupStore(lake, grain_s=g)
+                else:
+                    store = RollupStore(lake, grain_s=g)
+                    if store.committed_schema(st) < min_schema_for(eq.func):
+                        continue
                 got = (store, st, g)
                 break
             if got is None:
@@ -593,27 +602,143 @@ def create_app(
         grains = sorted({g for _, _, g in picked})
         return "rollup-" + "+".join(f"{g}s" for g in grains)
 
-    def _finish_instant_vector(out, served_from: str | None = None):
-        """Materialize an instant-vector (or binary) result with the
-        in-plan INSTANT_ROW_CAP guard: limit(cap+1) caps the collect
-        itself, so a pathological-cardinality query returns 400
-        instead of OOMing the driver (the query_range discipline,
-        extended to its siblings — round-12 review)."""
-        cap = INSTANT_ROW_CAP
+    def _capped_rows(out, cap: int) -> list | None:
+        """The rows of a PromQL result as dicts, or None past ``cap``:
+        limit(cap+1) caps the collect itself, so a
+        pathological-cardinality query returns 400 instead of OOMing
+        the driver."""
         rows = [
             row.asDict(recursive=True)
             for row in out.limit(cap + 1).collect()
         ]
-        if len(rows) > cap:
-            return jsonify({
-                "error": f"result exceeds {cap} series; narrow the "
-                "matchers or aggregate with a lower-cardinality "
-                "grouping"
-            }), 400
-        resp = jsonify({"result": rows})
-        if served_from is not None:
-            resp.headers["X-Served-From"] = served_from
+        return None if len(rows) > cap else rows
+
+    def _promql_response(body, served_from: str, approx_note: str | None):
+        resp = jsonify(body)
+        resp.headers["X-Served-From"] = served_from
+        if approx_note:
+            resp.headers["X-Approx"] = approx_note
         return resp
+
+    def _evaluate_promql(eq, start, end, step, now):
+        """The one extended-PromQL evaluation behind both routes:
+        ``eq`` over the steps ``[start, end]`` (an instant query is the
+        one-step grid ``start = end``), returned as ``(frame,
+        served_from, approx_note)`` with the step column ``t``.
+
+        Each vector operand picks its own exact path. It folds from the
+        MAINTAINED continuous aggregate (query/rollup_serve.py) when its
+        window arithmetic is grain-compatible — exact, so no opt-in is
+        needed, only the ``?rollup=0`` opt-out for A/B — and otherwise
+        reads the raw numeric union over its own scan window
+        (promql_ext.scan_window), probed by id when few sensors match.
+        ``?approx=1`` is the user's EXPLICIT opt-in to approximate
+        quantile serving from the bottom-k sample rollup; its notes
+        become the X-Approx header. ``served_from`` blends the
+        operands' paths for X-Served-From. Raises PromQLError for the
+        shapes the evaluator rejects (client errors)."""
+        from sensapp_spark.query.promql_ext import (
+            BinaryQuery,
+            evaluate_range,
+            evaluate_range_binary,
+            scan_window,
+        )
+
+        rollup_on = request.args.get("rollup", "auto").lower() not in (
+            "0", "off", "false"
+        )
+        approx_on = request.args.get("approx", "").lower() in (
+            "1", "true"
+        )
+        approx_notes: list[str] = []
+        served_tags: list[str] = []
+
+        def _raw_side(seq):
+            lo, hi = scan_window(seq, start, end, now)
+            # Integer/Numeric→f64 union (round 12): integer counters
+            # appear in PromQL results exactly as in remote-read.
+            return evaluate_range(
+                lake.sensors(),
+                _numeric_values(
+                    lo, hi, sensor_ids=_probe_matched_ids(seq)
+                ),
+                seq,
+                start=start, end=end, step_seconds=step, now=now,
+            )
+
+        def _rollup_side(seq):
+            """The maintained-rollup frame and tag for one operand when
+            its window arithmetic is grain-compatible (for EVERY
+            numeric type holding data), else None. APPROXIMATE
+            quantile/mad serving from the bottom-k sample rollup comes
+            only behind ?approx=1 and self-describes via X-Approx — the
+            exact raw path is never silently substituted."""
+            if not rollup_on:
+                return None
+            from sensapp_spark.query.rollup_serve import (
+                evaluate_range_rollup,
+                quantile_rollup_serveable,
+                rollup_serveable,
+            )
+            from sensapp_spark.storage.qrollup import QuantileRollupStore
+
+            picked = _pick_rollup(
+                seq,
+                lambda g: rollup_serveable(
+                    seq, g, start, step, now=now, end=end
+                ),
+            )
+            approx = approx_on and not picked
+            if approx:
+                picked = _pick_rollup(
+                    seq,
+                    lambda g: quantile_rollup_serveable(
+                        seq, g, start, step, now=now, end=end
+                    ),
+                    quantile=True,
+                )
+            if not picked:
+                return None
+            store, st, _g = picked[0]
+            frame = evaluate_range_rollup(
+                store, lake.sensors(), seq,
+                start=start, end=end, step_seconds=step,
+                now=now, stype=st,
+                extra=[(s, t) for s, t, _ in picked[1:]],
+            )
+            if not approx:
+                return frame, _rollup_tag(picked)
+            k = QuantileRollupStore.K
+            approx_notes.append(
+                f"{seq.func}: bottom-k sample (k={k}), rank error ~ "
+                f"1/sqrt(k) = {1 / k ** 0.5:.3f}; exact for windows "
+                f"holding <= {k} samples"
+            )
+            return frame, _rollup_tag(picked) + "-quantile-approx"
+
+        def side_frame(seq):
+            hit = _rollup_side(seq)
+            if hit is not None:
+                frame, tag = hit
+                served_tags.append(tag)
+                return frame
+            served_tags.append("raw")
+            return _raw_side(seq)
+
+        if isinstance(eq, BinaryQuery):
+            out = evaluate_range_binary(
+                lake.sensors(), None, eq,
+                start=start, end=end, step_seconds=step,
+                now=now, side_eval=side_frame,
+            )
+        else:
+            out = side_frame(eq)
+        served_from = (
+            served_tags[0]
+            if len(set(served_tags)) == 1
+            else "mixed(" + ",".join(served_tags) + ")"
+        )
+        return out, served_from, "; ".join(approx_notes) or None
 
     @app.get("/api/v1/query")
     def promql_query():
@@ -631,89 +756,45 @@ def create_app(
         if request.args.get("extended", "").lower() in ("1", "true"):
             from sensapp_spark.query.promql_ext import (
                 BinaryQuery,
-                data_window,
-                evaluate_binary,
-                evaluate_extended,
                 needs_extended,
                 parse_extended_expr,
+                sort_instant,
             )
 
             try:
                 eq = parse_extended_expr(query)
             except PromQLError as e:
                 return jsonify({"error": str(e)}), 400
-            if isinstance(eq, BinaryQuery):
-                from sensapp_spark.query.promql_ext import ScalarOf
-
-                # Load the envelope of both operands' data windows
-                # (data_window widens for subquery operands, unwraps
-                # scalar() operands, and is (None, None) for constant
-                # vectors); each side re-applies its own exact range
-                # inside evaluate.
-                windows = [
-                    data_window(s.eq if isinstance(s, ScalarOf) else s)
-                    for s in (eq.left, eq.right)
-                    if not isinstance(s, float)
-                ]
-                windows = [w for w in windows if w[0] is not None]
-                start = min((w[0] for w in windows), default=None)
-                end = max((w[1] for w in windows), default=None)
+            if isinstance(eq, BinaryQuery) or needs_extended(eq):
+                # An instant query is the range query on the one-step
+                # grid at the parse anchor (naive UTC, like the range
+                # route's bounds), with the step column dropped and
+                # sort()/sort_by_label() applied to the vector.
+                at = eq.eval_at.astimezone(dt.timezone.utc).replace(
+                    tzinfo=None
+                )
+                unsorted = (
+                    eq if isinstance(eq, BinaryQuery)
+                    else dataclasses.replace(eq, sort=None)
+                )
                 try:
-                    out = evaluate_binary(
-                        lake.sensors(),
-                        _numeric_values(start, end),
-                        eq,
+                    out, served_from, approx_note = _evaluate_promql(
+                        unsorted, at, at, 1.0, eq.eval_at
                     )
                 except PromQLError as e:
-                    # Operand-shape rejections raised at evaluation
-                    # time (absent/hist/aggregated-inner operands) are
-                    # client errors, not 500s.
                     return jsonify({"error": str(e)}), 400
-                return _finish_instant_vector(out)
-            if needs_extended(eq):
-                from sensapp_spark.query.rollup_serve import (
-                    evaluate_instant_rollup,
-                    rollup_serveable_instant,
+                rows = _capped_rows(
+                    sort_instant(out.drop("t"), eq), INSTANT_ROW_CAP
                 )
-
-                # Auto-route grain-compatible INSTANT evaluations
-                # through the maintained rollup (round 12) — the same
-                # exactness argument as query_range's served path;
-                # ?rollup=0 opts out for A/B. The served evaluation
-                # sits in the same try/except PromQLError → 400 as the
-                # raw branch: the shared tail (_finish_range) raises
-                # the same validation errors on both paths, and a
-                # served 500 where raw answers 400 would make the
-                # auto-routing observable as a bug (round-12 advisor).
-                out, served_from = None, "raw"
-                try:
-                    if request.args.get(
-                        "rollup", "auto"
-                    ).lower() not in ("0", "off", "false"):
-                        picked = _pick_rollup(
-                            eq,
-                            lambda g: rollup_serveable_instant(eq, g),
-                        )
-                        if picked:
-                            store, st, _g = picked[0]
-                            out = evaluate_instant_rollup(
-                                store, lake.sensors(), eq, stype=st,
-                                extra=[(s, t) for s, t, _ in picked[1:]],
-                            )
-                            served_from = _rollup_tag(picked)
-                    if out is None:
-                        start, end = data_window(eq)
-                        out = evaluate_extended(
-                            lake.sensors(),
-                            _numeric_values(
-                                start, end,
-                                sensor_ids=_probe_matched_ids(eq),
-                            ),
-                            eq,
-                        )
-                except PromQLError as e:
-                    return jsonify({"error": str(e)}), 400
-                return _finish_instant_vector(out, served_from)
+                if rows is None:
+                    return jsonify({
+                        "error": f"result exceeds {INSTANT_ROW_CAP} "
+                        "series; narrow the matchers or aggregate with "
+                        "a lower-cardinality grouping"
+                    }), 400
+                return _promql_response(
+                    {"result": rows}, served_from, approx_note
+                )
         try:
             parsed = parse_promql_query(query)
         except PromQLError as e:
@@ -1214,43 +1295,17 @@ def create_app(
     # expression at step intervals over [start, end].
     @app.get("/api/v1/query_range")
     def promql_query_range():
-        from sensapp_spark.query.promql_ext import (
-            BinaryQuery,
-            evaluate_range,
-            evaluate_range_binary,
-            parse_extended_expr,
-        )
+        from sensapp_spark.query.promql_ext import parse_extended_expr
 
         query = request.args.get("query")
         if not query:
             return jsonify({"error": "missing query parameter"}), 400
-
-        def parse_time(name):
-            raw = request.args.get(name)
-            if raw is None:
-                raise ValueError(f"missing {name} parameter")
-            try:
-                return dt.datetime.fromtimestamp(
-                    float(raw), dt.timezone.utc
-                ).replace(tzinfo=None)
-            except (OverflowError, OSError) as e:
-                raise ValueError(
-                    f"{name} epoch timestamp out of range"
-                ) from e
-            except ValueError:
-                # Naive ISO input is UTC (the API-wide contract) —
-                # astimezone() on a naive value would reinterpret it
-                # in host-local time.
-                parsed = dt.datetime.fromisoformat(
-                    raw.replace("Z", "+00:00")
-                )
-                if parsed.tzinfo is not None:
-                    parsed = parsed.astimezone(dt.timezone.utc)
-                return parsed.replace(tzinfo=None)
-
+        for name in ("start", "end"):
+            if request.args.get(name) is None:
+                return jsonify({"error": f"missing {name} parameter"}), 400
         try:
-            start = parse_time("start")
-            end = parse_time("end")
+            start = _parse_ts(request.args["start"])
+            end = _parse_ts(request.args["end"])
             raw_step = request.args.get("step", "60")
             try:
                 step = float(raw_step)
@@ -1266,249 +1321,65 @@ def create_app(
             eq = parse_extended_expr(query, now=now_parse)
         except (ValueError, PromQLError) as e:
             return jsonify({"error": str(e)}), 400
-
-        rollup_on = request.args.get("rollup", "auto").lower() not in (
-            "0", "off", "false"
-        )
-        # ?approx=1: the user's EXPLICIT opt-in to approximate
-        # quantile serving from the bottom-k sample rollup; notes
-        # collected per served operand surface as the X-Approx header.
-        approx_on = request.args.get("approx", "").lower() in (
-            "1", "true"
-        )
-        approx_notes: list[str] = []
-
-        def _scan_bounds(seq):
-            """Raw-scan window for ONE vector operand — lookback +
-            offset behind [start, end], widened for subquery reach
-            and fixed-@ anchors (whose window may lie entirely
-            outside the step range). A constant reads no samples."""
-            if seq.selector is None:
-                return None, None
-            lookback = seq.selector.end_time - seq.selector.start_time
-            if seq.sub_inner is not None:
-                lookback += dt.timedelta(
-                    seconds=seq.sub_range_s + seq.sub_offset_s
-                )
-            offset = max(
-                dt.timedelta(0), now_parse - seq.selector.end_time
+        try:
+            out, served_from, approx_note = _evaluate_promql(
+                eq, start, end, step, now_parse
             )
-            lo, hi = start - lookback - offset, end
-            if seq.at_fixed:
-                def _naive(t: dt.datetime) -> dt.datetime:
-                    if t.tzinfo is not None:
-                        t = t.astimezone(
-                            dt.timezone.utc
-                        ).replace(tzinfo=None)
-                    return t
-
-                lo = min(lo, _naive(seq.selector.start_time) - (
-                    dt.timedelta(seconds=seq.sub_range_s)
-                    if seq.sub_inner is not None else dt.timedelta(0)
-                ))
-                hi = max(hi, _naive(seq.selector.end_time))
-            return lo, hi
-
-        def _raw_side(seq):
-            lo, hi = _scan_bounds(seq)
-            # Integer/Numeric→f64 union (round 12): integer counters
-            # appear in range queries exactly as in remote-read.
-            return evaluate_range(
-                lake.sensors(),
-                _numeric_values(
-                    lo, hi, sensor_ids=_probe_matched_ids(seq)
-                ),
-                seq,
-                start=start, end=end, step_seconds=step, now=now_parse,
-            )
-
-        def _rollup_side(seq):
-            """The maintained-rollup frame for one operand when its
-            window arithmetic is grain-compatible (for EVERY numeric
-            type holding data — a partial serve would drop the
-            unserved type's series), else None."""
-            if not rollup_on:
-                return None
-            from sensapp_spark.query.rollup_serve import (
-                evaluate_range_quantile,
-                evaluate_range_rollup,
-                maintained_grains,
-                quantile_rollup_serveable,
-                rollup_serveable,
-            )
-
-            picked = _pick_rollup(
-                seq,
-                lambda g: rollup_serveable(seq, g, start, step, now_parse),
-            )
-            if picked:
-                store, st, _g = picked[0]
-                frame = evaluate_range_rollup(
-                    store, lake.sensors(), seq,
-                    start=start, end=end, step_seconds=step,
-                    now=now_parse, stype=st,
-                    extra=[(s, t) for s, t, _ in picked[1:]],
-                )
-                return frame, _rollup_tag(picked)
-            # APPROXIMATE quantile/mad serving (round 13): only
-            # behind the user's explicit ?approx=1, only for
-            # quantile_over_time / mad_over_time, only when a
-            # bottom-k sample rollup (storage/qrollup.py) is
-            # maintained and grain-compatible for EVERY numeric type
-            # with data. The response self-describes via X-Approx —
-            # the exact raw path is never silently substituted.
-            if not (
-                approx_on
-                and getattr(seq, "func", None)
-                in ("quantile_over_time", "mad_over_time")
-            ):
-                return None
-            from sensapp_spark.storage.qrollup import QuantileRollupStore
-
-            qpicked = []
-            for st in _numeric_types_present():
-                got = None
-                for g in maintained_grains(lake, st, quantile=True):
-                    if quantile_rollup_serveable(
-                        seq, g, start, step, now_parse
-                    ):
-                        got = (QuantileRollupStore(lake, grain_s=g), st, g)
-                        break
-                if got is None:
-                    return None
-                qpicked.append(got)
-            store, st, _g = qpicked[0]
-            frame = evaluate_range_quantile(
-                store, lake.sensors(), seq,
-                start=start, end=end, step_seconds=step,
-                now=now_parse, stype=st,
-                extra=[(s, t) for s, t, _ in qpicked[1:]],
-            )
-            k = QuantileRollupStore.K
-            approx_notes.append(
-                f"{seq.func}: bottom-k sample (k={k}), rank "
-                f"error ~ 1/sqrt(k) = {1 / k ** 0.5:.3f}; exact for "
-                f"windows holding <= {k} samples"
-            )
-            return frame, _rollup_tag(qpicked) + "-quantile-approx"
-
-        if isinstance(eq, BinaryQuery):
-            # Range-query binary operations (round 11) — each vector
-            # operand independently picks the maintained rollup when
-            # grain-compatible; X-Served-From reports the blend.
-            served_tags: list[str] = []
-
-            def side_frame(seq):
-                hit = _rollup_side(seq)
-                if hit is not None:
-                    frame, tag = hit
-                    served_tags.append(tag)
-                    return frame
-                served_tags.append("raw")
-                return _raw_side(seq)
-
-            try:
-                out = evaluate_range_binary(
-                    lake.sensors(), None, eq,
-                    start=start, end=end, step_seconds=step,
-                    now=now_parse, side_eval=side_frame,
-                )
-            except PromQLError as e:
-                return jsonify({"error": str(e)}), 400
-            served_from = (
-                served_tags[0]
-                if len(set(served_tags)) == 1
-                else "mixed(" + ",".join(served_tags) + ")"
-            )
-            return _finish_query_range(
-                out, served_from,
-                approx_note="; ".join(approx_notes) or None,
-            )
-        # Auto-route grain-compatible range queries through the
-        # MAINTAINED continuous aggregate (query/rollup_serve.py):
-        # exact — the rollup's edge quartet makes closed windows fold
-        # precisely from half-open buckets — so no opt-in is needed,
-        # only an opt-out (?rollup=0) for A/B verification. The served
-        # plan reads rollup buckets (∪ recomputed live tail), never
-        # the raw value table; X-Served-From says which path answered.
-        hit = _rollup_side(eq)
-        if hit is not None:
-            out, served_from = hit
-        else:
-            served_from = "raw"
-            try:
-                out = _raw_side(eq)
-            except PromQLError as e:
-                # Shapes evaluate_range rejects (histogram_quantile
-                # etc.) are client errors, not 500s.
-                return jsonify({"error": str(e)}), 400
-        return _finish_query_range(
-            out, served_from,
-            approx_note="; ".join(approx_notes) or None,
-        )
-
-    def _finish_query_range(out, served_from: str,
-                            approx_note: str | None = None):
+        except PromQLError as e:
+            return jsonify({"error": str(e)}), 400
         # ISO-format the step timestamp explicitly (Flask would render
         # datetime values as RFC-822 strings).
         from pyspark.sql import functions as F
 
-        out = out.withColumn(
-            "t", F.date_format("t", "yyyy-MM-dd'T'HH:mm:ss")
+        rows = _capped_rows(
+            out.withColumn(
+                "t", F.date_format("t", "yyyy-MM-dd'T'HH:mm:ss")
+            ),
+            QUERY_RANGE_ROW_CAP,
         )
-        cap = QUERY_RANGE_ROW_CAP
-        rows = [
-            row.asDict(recursive=True)
-            for row in out.limit(cap + 1).collect()
-        ]
-        if len(rows) > cap:
+        if rows is None:
             return jsonify({
-                "error": f"result exceeds {cap} points; increase the "
-                "step, narrow the time range, or export raw samples "
-                "via /series"
+                "error": f"result exceeds {QUERY_RANGE_ROW_CAP} points; "
+                "increase the step, narrow the time range, or export "
+                "raw samples via /series"
             }), 400
-        if request.args.get("format") == "matrix":
-            # Prometheus-style matrix: one entry per series with its
-            # label set and the (t, value) samples in step order.
-            series: dict = {}
-            for d in rows:
-                t, v = d.pop("t"), d.pop("value")
-                metric: dict = {}
-                lbls = d.pop("labels", None)
-                if isinstance(lbls, dict):
-                    metric.update(lbls)
-                elif lbls is not None:
-                    metric["labels"] = lbls
-                name = d.pop("name", None)
-                if name is not None:
-                    metric["__name__"] = name
-                metric.update(
-                    {k: str(val) for k, val in d.items() if val is not None}
-                )
-                key = json.dumps(metric, sort_keys=True)
-                series.setdefault(
-                    key, {"metric": metric, "values": []}
-                )["values"].append([t, v])
-            for entry in series.values():
-                entry["values"].sort(key=lambda tv: tv[0])
-            resp = jsonify(
-                {
-                    "status": "success",
-                    "data": {
-                        "resultType": "matrix",
-                        "result": list(series.values()),
-                    },
-                }
+        if request.args.get("format") != "matrix":
+            return _promql_response(
+                {"result": rows}, served_from, approx_note
             )
-            resp.headers["X-Served-From"] = served_from
-            if approx_note:
-                resp.headers["X-Approx"] = approx_note
-            return resp
-        resp = jsonify({"result": rows})
-        resp.headers["X-Served-From"] = served_from
-        if approx_note:
-            resp.headers["X-Approx"] = approx_note
-        return resp
+        # Prometheus-style matrix: one entry per series with its label
+        # set and the (t, value) samples in step order.
+        series: dict = {}
+        for d in rows:
+            t, v = d.pop("t"), d.pop("value")
+            metric: dict = {}
+            lbls = d.pop("labels", None)
+            if isinstance(lbls, dict):
+                metric.update(lbls)
+            elif lbls is not None:
+                metric["labels"] = lbls
+            name = d.pop("name", None)
+            if name is not None:
+                metric["__name__"] = name
+            metric.update(
+                {k: str(val) for k, val in d.items() if val is not None}
+            )
+            key = json.dumps(metric, sort_keys=True)
+            series.setdefault(
+                key, {"metric": metric, "values": []}
+            )["values"].append([t, v])
+        for entry in series.values():
+            entry["values"].sort(key=lambda tv: tv[0])
+        return _promql_response(
+            {
+                "status": "success",
+                "data": {
+                    "resultType": "matrix",
+                    "result": list(series.values()),
+                },
+            },
+            served_from, approx_note,
+        )
 
     # Beyond-reference: Prometheus HTTP-API label browsing (the
     # response envelope is Prometheus' {"status","data"} shape).

@@ -1,6 +1,8 @@
 """Round-13 HTTP surface: per-step time() in range binaries, the
-instant/binary driver-materialization caps, and the served-instant
-PromQLError → 400 parity with the raw branch."""
+instant/binary driver-materialization caps, the served-instant
+PromQLError → 400 parity with the raw branch, and rollup serving of
+instant binaries and fixed-``@`` range queries (both extended PromQL
+routes run one pipeline)."""
 
 from __future__ import annotations
 
@@ -171,7 +173,7 @@ def test_served_instant_promql_error_is_400(r13_app, monkeypatch):
     def boom(*a, **k):
         raise PromQLError("aggregation", "synthetic served-tail error")
 
-    monkeypatch.setattr(rs, "evaluate_instant_rollup", boom)
+    monkeypatch.setattr(rs, "evaluate_range_rollup", boom)
     anchor = int(
         (T0 + dt.timedelta(hours=2))
         .replace(tzinfo=dt.timezone.utc).timestamp()
@@ -184,3 +186,113 @@ def test_served_instant_promql_error_is_400(r13_app, monkeypatch):
         )
         assert r.status_code == 400
         assert "synthetic served-tail error" in r.get_json()["error"]
+
+
+def _anchor(hours: int) -> int:
+    return int(
+        (T0 + dt.timedelta(hours=hours))
+        .replace(tzinfo=dt.timezone.utc).timestamp()
+    )
+
+
+def _served_and_raw(c, path):
+    """(served response, ?rollup=0 response) for one GET path."""
+    assert c.post("/api/v1/admin/rollup/refresh").status_code == 200
+    served = c.get(path)
+    raw = c.get(path + "&rollup=0")
+    assert served.status_code == 200, served.get_data(as_text=True)
+    assert raw.status_code == 200, raw.get_data(as_text=True)
+    assert raw.headers["X-Served-From"] == "raw"
+    return served, raw
+
+
+def _by_row(rows):
+    return sorted(rows, key=lambda r: sorted(map(str, r.items())))
+
+
+def test_instant_binary_is_rollup_served(r13_app):
+    """An instant binary runs the query_range pipeline on a one-step
+    grid, so each operand folds from the maintained rollup — with the
+    body ?rollup=0 answers."""
+    import urllib.parse
+
+    app, _lake = r13_app
+    at = _anchor(2)
+    expr = urllib.parse.quote(f"rate(fm[2h] @ {at}) / rate(im[2h] @ {at})")
+    with app.test_client() as c:
+        served, raw = _served_and_raw(
+            c, f"/api/v1/query?extended=1&query={expr}"
+        )
+    assert served.headers["X-Served-From"] == "rollup-3600s"
+    rows = served.get_json()["result"]
+    assert len(rows) == 1
+    # In [00:00, 02:00] fm rises 1 → 10 over 00:10–01:40 and im
+    # 100 → 280 over 00:05–01:35: both spans are 5400 s.
+    assert rows[0]["value"] == pytest.approx((9.0 / 5400) / (180.0 / 5400))
+    assert _by_row(rows) == _by_row(raw.get_json()["result"])
+
+
+def test_fixed_at_range_query_is_rollup_served(r13_app):
+    """A fixed ``@`` range query evaluates once at its anchor and
+    repeats — the rollup serves that one-step grid too."""
+    import urllib.parse
+
+    app, _lake = r13_app
+    expr = urllib.parse.quote(f"rate(fm[2h] @ {_anchor(2)})")
+    with app.test_client() as c:
+        served, raw = _served_and_raw(
+            c,
+            f"/api/v1/query_range?query={expr}"
+            "&start=2024-01-01T00:00:00Z&end=2024-01-01T03:00:00Z"
+            "&step=1800",
+        )
+    assert served.headers["X-Served-From"] == "rollup-3600s"
+    rows = served.get_json()["result"]
+    assert len(rows) == 7
+    assert [r["value"] for r in rows] == [pytest.approx(9.0 / 5400)] * 7
+    assert _by_row(rows) == _by_row(raw.get_json()["result"])
+
+
+def test_grouped_fixed_at_instant_stays_served(spark, tmp_path):
+    """The dashboard shape ``sum by (region) (avg_over_time(m[4d] @
+    T))`` stays rollup-served on the one pipeline and equals raw."""
+    import urllib.parse
+
+    lake = SensorLake(spark, str(tmp_path / "region_lake"))
+    rows = [
+        (f"m/{i}", T0 + dt.timedelta(hours=h), float(i * 100 + h))
+        for i in range(3)
+        for h in range(5 * 24)
+    ]
+    lake.append_values(
+        SensorType.FLOAT,
+        spark.createDataFrame(
+            rows, "sensor_id string, time timestamp, value double"
+        ),
+    )
+    lake.upsert_sensors(
+        spark.createDataFrame(
+            [(f"m/{i}", "m", "Float", ("eu", "eu", "us")[i])
+             for i in range(3)],
+            "sensor_id string, name string, type string, region string",
+        ).select(
+            "sensor_id", "name", "type",
+            F.lit(None).cast("string").alias("unit"),
+            F.lit(None).cast("string").alias("unit_description"),
+            F.create_map(F.lit("region"), F.col("region")).alias("labels"),
+        )
+    )
+    app = create_app(spark, lake)
+    app.testing = True
+    expr = urllib.parse.quote(
+        f"sum by (region) (avg_over_time(m[4d] @ {_anchor(4 * 24 + 6)}))"
+    )
+    with app.test_client() as c:
+        served, raw = _served_and_raw(
+            c, f"/api/v1/query?extended=1&query={expr}"
+        )
+    assert served.headers["X-Served-From"] == "rollup-3600s"
+    got = {r["region"]: r["value"] for r in served.get_json()["result"]}
+    want = {r["region"]: r["value"] for r in raw.get_json()["result"]}
+    assert set(got) == {"eu", "us"}
+    assert got == {k: pytest.approx(v, rel=1e-12) for k, v in want.items()}

@@ -14,9 +14,9 @@ from pyspark.sql import functions as F
 from sensapp_spark.query.promql_ext import (
     BinaryQuery,
     PromQLError,
-    data_window,
     evaluate_binary,
     parse_extended_expr,
+    scan_window,
 )
 
 T0 = dt.datetime(2024, 1, 1)
@@ -319,12 +319,46 @@ def test_gateway_range_binary_const_vector_fallback(spark, tmp_path):
         }
 
 
-def test_data_window_envelope_covers_nested_operands():
+def test_scan_window_covers_nested_operands():
+    """Each vector operand of a nested binary scans its own window on
+    the instant's one-step grid — no shared envelope."""
     bq = parse_extended_expr(
-        "(rate(a[2h]) / rate(b[1h])) > 0.5", now=NOW
+        "(rate(a[2h]) / rate(b[1h] offset 30m)) > 0.5", now=NOW
     )
-    start, end = data_window(bq)
-    assert end - start == dt.timedelta(hours=2)
+    a, b = bq.left.left, bq.left.right
+    assert scan_window(a, NOW, NOW, NOW) == (NOW - dt.timedelta(hours=2), NOW)
+    half = dt.timedelta(minutes=30)
+    assert scan_window(b, NOW, NOW, NOW) == (
+        NOW - half - dt.timedelta(hours=1), NOW - half
+    )
+
+
+@pytest.mark.parametrize(
+    "expr, lo_min, hi_min",
+    [
+        # Steps [NOW, NOW+2h]: each reads [t − offset − R, t − offset];
+        # the upper bound stops at end − offset.
+        ("rate(m[1h])", -60, 120),
+        ("rate(m[1h] offset 1d)", -1500, -1320),
+        # A subquery's inner grid spans [start − o − range, end − o],
+        # and its selector reaches R behind that.
+        ("max_over_time(rate(m[1h])[3h:30m])", -240, 120),
+        ("max_over_time(rate(m[1h])[3h:30m] offset 1h)", -300, 60),
+        # A fixed @ (T0 = NOW − 30m) is one window at its anchor,
+        # wherever the steps are.
+        ("rate(m[1h] @ 1704067200)", -90, -30),
+    ],
+)
+def test_scan_window_follows_the_evaluator(expr, lo_min, hi_min):
+    eq = parse_extended_expr(expr, now=NOW)
+    lo, hi = scan_window(eq, NOW, NOW + dt.timedelta(hours=2), NOW)
+    m = dt.timedelta(minutes=1)
+    assert (lo, hi) == (NOW + lo_min * m, NOW + hi_min * m)
+
+
+def test_scan_window_of_a_constant_is_empty():
+    eq = parse_extended_expr("vector(1)", now=NOW)
+    assert scan_window(eq, NOW, NOW, NOW) == (None, None)
 
 
 def test_gateway_nested_binary(spark, tmp_path):

@@ -4,9 +4,13 @@
 ``evaluate_instant_rollup``) evaluate the one-step grid at the query's
 evaluation instant through the range functions and drop the step
 column; there is no second, instant-only evaluator to keep in parity.
-The static checks below fail if an instant twin is defined again or a
-wrapper stops delegating; the Spark checks pin the Prometheus
-semantics the single path gives an aggregate over an empty vector.
+The gateway keeps one request path too: ``/api/v1/query?extended=1``
+runs the ``/api/v1/query_range`` pipeline on a one-step grid.
+
+The static checks below fail if an instant twin is defined again, a
+wrapper stops delegating, or the gateway grows a second extended-PromQL
+path; the Spark checks pin the Prometheus semantics the single path
+gives an aggregate over an empty vector.
 """
 
 from __future__ import annotations
@@ -24,10 +28,9 @@ from sensapp_spark.query.promql_ext import (
     parse_extended_expr,
 )
 
-QUERY = os.path.join(
+PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "sensapp_spark",
-    "query",
 )
 DELETED_TWINS = {
     "_evaluate_extended_core",
@@ -41,7 +44,7 @@ DELETED_TWINS = {
 
 
 def _functions(module: str) -> dict[str, ast.FunctionDef]:
-    with open(os.path.join(QUERY, module)) as fh:
+    with open(os.path.join(PKG, "query", module)) as fh:
         tree = ast.parse(fh.read())
     return {
         n.name: n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)
@@ -75,6 +78,32 @@ def test_instant_entry_points_delegate_to_the_range_path(
     module, wrapper, delegate
 ):
     assert delegate in _called(_functions(module)[wrapper])
+
+
+def _app_functions() -> dict[str, ast.FunctionDef]:
+    with open(os.path.join(PKG, "server", "app.py")) as fh:
+        tree = ast.parse(fh.read())
+    return {
+        n.name: n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)
+    }
+
+
+def test_gateway_has_one_extended_promql_path():
+    """Both extended routes call the one handler; the instant route
+    calls none of the instant entry points, and the range route's old
+    private time parser and scan-bounds helper stay gone."""
+    fns = _app_functions()
+    instant = _called(fns["promql_query"])
+    assert not instant & {
+        "evaluate_extended",
+        "evaluate_binary",
+        "evaluate_instant_rollup",
+        "rollup_serveable_instant",
+        "data_window",
+    }
+    assert "_evaluate_promql" in instant
+    assert "_evaluate_promql" in _called(fns["promql_query_range"])
+    assert not {"parse_time", "_scan_bounds"} & set(fns)
 
 
 def test_per_series_reduction_has_one_caller():

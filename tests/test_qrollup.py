@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from sensapp_spark.datamodel.types import SensorType
 from sensapp_spark.query.promql_ext import evaluate_range, parse_extended
 from sensapp_spark.query.rollup_serve import (
-    evaluate_range_quantile,
+    evaluate_range_rollup,
     quantile_rollup_serveable,
 )
 from sensapp_spark.storage.lake import SensorLake
@@ -77,7 +77,7 @@ def test_exact_below_k_matches_raw(spark, tmp_path):
         assert quantile_rollup_serveable(
             eq, store.grain_s, T0 + dt.timedelta(hours=2), 3600, now=NOW
         )
-        served = evaluate_range_quantile(
+        served = evaluate_range_rollup(
             store, sensors, eq,
             T0 + dt.timedelta(hours=2), T0 + dt.timedelta(hours=5),
             3600, now=NOW,
@@ -111,7 +111,7 @@ def test_truncated_sample_stays_rank_accurate(spark, tmp_path):
     eq = parse_extended("quantile_over_time(0.5, m[2h])", now=NOW)
     served = {
         r.sensor_id: r.value
-        for r in evaluate_range_quantile(
+        for r in evaluate_range_rollup(
             store, sensors, eq,
             T0 + dt.timedelta(hours=2), T0 + dt.timedelta(hours=2),
             3600, now=NOW,

@@ -401,7 +401,11 @@ def test_serveability_gate(served_lake):
     assert ok("changes(m[1h])")
     assert not ok("quantile_over_time(0.5, m[1h])")  # not mergeable
     assert not ok("sum(abs(m))")                     # series_post on samples
-    assert not ok("max_over_time(m[1h] @ 1704070800)")  # fixed anchor
+    # A fixed anchor is one window, checked at the anchor: aligned
+    # there, it serves every step; off the grain, it never does.
+    assert ok("max_over_time(m[1h] @ 1704070800)")
+    assert ok("max_over_time(m[1h] @ 1704070800)", step=1800)
+    assert not ok("max_over_time(m[1h] @ 1704070807)")
 
 
 def test_served_plan_reads_rollup_not_raw(served_lake):
