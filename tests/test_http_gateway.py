@@ -412,8 +412,8 @@ def test_extended_promql_round6_features(client):
     ).status_code == 200
 
     # Subquery: 20 steps of 1000h; early step windows cover the 2024
-    # fixture samples only because the gateway loads data_window(eq),
-    # not the bare selector window.
+    # fixture samples only because the gateway scans
+    # scan_window(eq, ...), not the bare selector window.
     r = client.get(
         "/api/v1/query?query="
         "max_over_time(avg_over_time(temperature[10000h])[20000h:1000h])"
