@@ -35,13 +35,11 @@ def main():
     from sensapp_spark.plans.queries import _entry_lake_dir
     from sensapp_spark.query.rollup_serve import (
         _needed_stats,
+        quantile_windows,
         range_windows,
     )
     from sensapp_spark.storage.lake import SensorLake
-    from sensapp_spark.storage.qrollup import (
-        QuantileRollupStore,
-        quantile_windows,
-    )
+    from sensapp_spark.storage.qrollup import QuantileRollupStore
     from sensapp_spark.storage.rollup import RollupStore
 
     spark = get_spark(

@@ -693,10 +693,8 @@ def downsample_rate_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dir; rows are identical either way.
     from concurrent.futures import ThreadPoolExecutor
 
-    from sensapp_spark.storage.qrollup import (
-        QuantileRollupStore,
-        quantile_windows,
-    )
+    from sensapp_spark.query.rollup_serve import quantile_windows
+    from sensapp_spark.storage.qrollup import QuantileRollupStore
 
     class _QK4(QuantileRollupStore):
         K = 4

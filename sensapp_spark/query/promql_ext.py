@@ -1715,6 +1715,20 @@ class _Grid:
         ``__i``: every step expression of the grid is a literal."""
         if self.n_steps == 0:
             return frame
+        idx0, idx1 = self.step_span(tau, r_us)
+        # sequence() counts DOWNWARD for idx0 > idx1 (a sample falling
+        # between two step windows has an empty step set) — filter
+        # before the explode.
+        return frame.filter(idx0 <= idx1).withColumn(
+            "__i", F.explode(F.sequence(idx0, idx1))
+        )
+
+    def step_span(self, tau: F.Column, r_us: int):
+        """The first and last step index ``(idx0, idx1)`` whose closed
+        window ``[t_i − R, t_i]`` covers the instant ``tau`` (µs),
+        clamped to the grid: ``ceil((tau − start)/S)`` and
+        ``floor((tau + R − start)/S)``. ``idx0 > idx1`` when no step
+        covers it."""
         start = F.lit(self.start_us)
         # ceil((tau − start)/S) via negated floor — stays integral.
         idx0 = F.greatest(
@@ -1724,12 +1738,7 @@ class _Grid:
             F.lit(self.n_steps),
             F.floor((tau + F.lit(r_us) - start) / self.s_us).cast("long"),
         )
-        # sequence() counts DOWNWARD for idx0 > idx1 (a sample falling
-        # between two step windows has an empty step set) — filter
-        # before the explode.
-        return frame.filter(idx0 <= idx1).withColumn(
-            "__i", F.explode(F.sequence(idx0, idx1))
-        )
+        return idx0, idx1
 
 
 _OVER_TIME = {

@@ -52,6 +52,7 @@ from sensapp_spark.query.promql_ext import (
     _offset_us,
     evaluate_at_anchor,
 )
+from sensapp_spark.storage.qrollup import QuantileRollupStore
 from sensapp_spark.storage.rollup import RollupStore
 
 __all__ = [
@@ -63,6 +64,7 @@ __all__ = [
     "rollup_serveable_instant",
     "quantile_rollup_serveable",
     "range_windows",
+    "quantile_windows",
     "evaluate_range_rollup",
     "evaluate_instant_rollup",
     "maintained_grains",
@@ -183,18 +185,6 @@ def _window_aligned(
     )
 
 
-def _store_grid(
-    grain_s: int, start: dt.datetime, end: dt.datetime, step_seconds: float
-) -> tuple[dt.datetime, float]:
-    """The (end, step) one store's windows are cut on: the query's own,
-    or on a one-step grid ``(start, grain)`` — the step length never
-    enters a one-step answer, and the store's own grain meets the
-    window functions' alignment contract."""
-    if _Grid.of(start, end, step_seconds).n_steps == 0:
-        return start, float(grain_s)
-    return end, step_seconds
-
-
 def rollup_serveable(
     eq,
     grain_s: int,
@@ -257,6 +247,92 @@ def _needed_stats(func: str | None) -> frozenset:
     return frozenset(need | {"nrows"})
 
 
+def _bucket_windows(
+    store: RollupStore,
+    stype: SensorType,
+    start: dt.datetime,
+    end: dt.datetime,
+    step_seconds: float,
+    window_seconds: float,
+    offset_us: int,
+    sensor_ids: DataFrame | None,
+    realtime: bool,
+    stats: list,
+    edge_if: F.Column,
+) -> DataFrame:
+    """The one bucket fan-out both rollup stores serve through: for
+    each step t_i = start + i·step in [start, end], fold the buckets
+    of the closed window [t_i − offset − W, t_i − offset] into
+    ``(sensor_id, __i, <stats>)``. ``stats`` lists ``(name, full,
+    edge, merge)``: the column a bucket lying wholly inside a window
+    contributes, the column the window's boundary bucket contributes
+    (its samples at exactly the boundary instant, kept where
+    ``edge_if`` holds), and the aggregate that merges them.
+
+    W and start − offset must be multiples of the grain, and so must
+    the step on a multi-step grid (a one-step grid has no step to
+    align — :func:`_window_aligned`, the caller's check); this
+    asserts it. ``realtime`` reads rollup ∪ recomputed live tail —
+    exact even against rows the maintainer has not refreshed yet.
+    ``sensor_ids`` (a 1-column DataFrame) semi-joins BEFORE the step
+    explode so an over-selective matcher prunes the fan-out, not just
+    the output."""
+    grid = _Grid.of(start, end, step_seconds)
+    g_us = store.grain_s * 1_000_000
+    r_us = int(window_seconds * 1_000_000)
+    lo_us = grid.start_us - offset_us
+    if r_us % g_us or lo_us % g_us or (grid.n_steps and grid.s_us % g_us):
+        raise ValueError(
+            "rollup-served windows need W, start-offset and (on a "
+            "multi-step grid) the step to be multiples of the "
+            f"{store.grain_s}s grain"
+        )
+    epoch = dt.datetime(1970, 1, 1)
+    buckets = (store.read_realtime if realtime else store.read)(
+        stype,
+        epoch + dt.timedelta(microseconds=lo_us - r_us),
+        epoch + dt.timedelta(microseconds=lo_us + grid.n_steps * grid.s_us),
+    )
+    if sensor_ids is not None:
+        buckets = buckets.join(
+            F.broadcast(sensor_ids), "sensor_id", "leftsemi"
+        )
+    # Shifted bucket clock: τ = bucket + offset, so step windows are
+    # [t_i − W, t_i] on the τ axis with integer-µs arithmetic.
+    tau = F.unix_micros("bucket") + F.lit(offset_us)
+    # FULL contribution: bucket [τ, τ+g) ⊂ [t_i − W, t_i] ⟺ the
+    # instant τ+g lies in [t_i − (W−g), t_i] — the grid's own sample
+    # span of τ+g over windows of length W − g, i.e. steps
+    # [ceil((τ+g−start)/s), floor((τ+W−start)/s)].
+    i0, i1 = grid.step_span(tau + F.lit(g_us), r_us - g_us)
+    full = (
+        buckets.filter(i0 <= i1)
+        .withColumn("__i", F.explode(F.sequence(i0, i1)))
+        .select("sensor_id", "__i", *[f.alias(n) for n, f, _, _ in stats])
+    )
+    # EDGE contribution: the closed window's right endpoint t_i is the
+    # LEFT boundary of bucket t_i — only that bucket's boundary-exact
+    # samples are inside the window. Two branches scan the rollup
+    # twice — measured FASTER than fusing them into a single
+    # array-of-structs explode (columnar re-scans of a rollup-sized
+    # table are cheap; wide struct-array construction is not: the
+    # fused form doubled the served wall at 10×).
+    d = tau - F.lit(grid.start_us)
+    s_us = F.lit(grid.s_us)
+    edge = buckets.filter(
+        (d >= 0) & (d % s_us == 0) & (d / s_us <= grid.n_steps) & edge_if
+    ).select(
+        "sensor_id",
+        (d / s_us).cast("long").alias("__i"),
+        *[e.alias(n) for n, _, e, _ in stats],
+    )
+    return (
+        full.unionByName(edge)
+        .groupBy("sensor_id", "__i")
+        .agg(*[m(n).alias(n) for n, _, _, m in stats])
+    )
+
+
 def range_windows(
     store: RollupStore,
     stype: SensorType,
@@ -269,62 +345,14 @@ def range_windows(
     realtime: bool = True,
     need: frozenset | None = None,
 ) -> DataFrame:
-    """Per-(sensor, step) closed-window stats from rollup buckets:
-    for each step t_i = start + i·step in [start, end], aggregate the
-    samples in [t_i − offset − W, t_i − offset] as ``(sensor_id, __i,
-    <stats>)`` where <stats> is ``need`` (a subset of
-    ``cnt/vsum/vmin/vmax/first/last/vsum2``; None = all — ``cnt`` is
-    always included for the empty-window guard). Alignment (W, step,
-    start−offset all multiples of the grain) is the CALLER's contract
-    (checked by :func:`rollup_serveable`); this function asserts it.
-
-    ``realtime`` reads rollup ∪ recomputed live tail — exact even
-    against rows the maintainer has not refreshed yet. ``sensor_ids``
-    (a 1-column DataFrame) semi-joins BEFORE the step explode so an
-    over-selective matcher prunes the fan-out, not just the output.
+    """Per-(sensor, step) closed-window stats from quartet rollup
+    buckets (:func:`_bucket_windows`): for each step t_i = start +
+    i·step in [start, end], the samples in [t_i − offset − W, t_i −
+    offset] as ``(sensor_id, __i, <stats>)``. <stats> is ``need``, a
+    subset of ``_STAT_COLS`` (``cnt/vsum/vmin/vmax/first/last/vsum2``,
+    the ordered ``seq``/``last2``, and ``nrows``); None = every scalar
+    stat. ``nrows`` is always included: it is the empty-window guard.
     """
-    g_us = store.grain_s * 1_000_000
-    r_us = int(window_seconds * 1_000_000)
-    s_us = int(step_seconds * 1_000_000)
-    start_us = _epoch_us(start)
-    if r_us % g_us or s_us % g_us or (start_us - offset_us) % g_us:
-        raise ValueError(
-            "rollup-served windows need W, step, start-offset to be "
-            f"multiples of the {store.grain_s}s grain"
-        )
-    n_steps = (_epoch_us(end) - start_us) // s_us
-    epoch = dt.datetime(1970, 1, 1)
-    scan_lo = epoch + dt.timedelta(
-        microseconds=start_us - offset_us - r_us
-    )
-    scan_hi = epoch + dt.timedelta(
-        microseconds=start_us + n_steps * s_us - offset_us
-    )
-    buckets = (
-        store.read_realtime(stype, scan_lo, scan_hi)
-        if realtime
-        else store.read(stype, scan_lo, scan_hi)
-    )
-    if sensor_ids is not None:
-        buckets = buckets.join(
-            F.broadcast(sensor_ids), "sensor_id", "leftsemi"
-        )
-    # Shifted bucket clock: τ = bucket + offset, so step windows are
-    # [t_i − W, t_i] on the τ axis with integer-µs arithmetic.
-    tau = F.unix_micros("bucket") + F.lit(offset_us)
-    # FULL contribution: bucket [b, b+g) ⊂ [t_i − W, t_i] ⟺
-    # t_i − W ≤ τ and τ + g ≤ t_i ⟺ ceil((τ+g−start)/s) ≤ i ≤
-    # floor((τ+W−start)/s). ceil via negated floor stays integral.
-    i0 = F.greatest(
-        F.lit(0),
-        -F.floor(-(tau + F.lit(g_us) - F.lit(start_us)) / F.lit(s_us))
-        .cast("long"),
-    )
-    i1 = F.least(
-        F.lit(n_steps),
-        F.floor((tau + F.lit(r_us) - F.lit(start_us)) / F.lit(s_us))
-        .cast("long"),
-    )
     if need is None:
         # Default: every SCALAR stat (the pre-round-13 full row). The
         # ordered array stats are collect_list merges — only built
@@ -362,45 +390,17 @@ def range_windows(
             last_s.alias("last"), prev_s.alias("prev")
         ),
     }
-    cols = [c for c in _STAT_COLS if c in need]
-    full = (
-        buckets.filter(i0 <= i1)
-        .withColumn("__i", F.explode(F.sequence(i0, i1)))
-        .select(
-            "sensor_id", "__i",
-            *[full_expr[c].alias(c) for c in cols],
-        )
-    )
-    # EDGE contribution: the closed window's right endpoint t_i is the
-    # LEFT boundary of bucket t_i — only that bucket's boundary-exact
-    # samples (the edge quartet) are inside the window. Two branches
-    # scan the rollup twice — measured FASTER than fusing them into a
-    # single array-of-structs explode (columnar re-scans of a rollup-
-    # sized table are cheap; wide struct-array construction is not:
-    # the fused form doubled the served wall at 10×). Edge samples all
-    # share the boundary instant, so under struct(time, value)
-    # ordering their first is (boundary, emin) and their last is
-    # (boundary, emax) — the first/last fold needs no new edge columns.
-    d = tau - F.lit(start_us)
-    # coalesce: a v3 row counts null-valued boundary samples too
-    # (enrows), so a window whose only content is a null sample at the
-    # boundary still produces its row — matching the raw path; pre-v3
-    # rows keep the non-null-count guard they were built under.
-    edge = buckets.filter(
-        (d >= 0)
-        & (d % F.lit(s_us) == 0)
-        & (d / F.lit(s_us) <= n_steps)
-        & (F.coalesce(F.col("enrows"), F.col("ecnt")) > 0)
-    )
+    # Edge samples all share the boundary instant, so under
+    # struct(time, value) ordering their first is (boundary, emin) and
+    # their last is (boundary, emax) — the first/last fold needs no new
+    # edge columns. Under the raw evaluator's (time, value) ordering
+    # they are value-sorted, so resets within the group are 0
+    # (ascending), changes are (#distinct values − 1), and the
+    # second-to-last sample is the second-largest value (evprev).
     efirst_s = F.struct(F.col("bucket").alias("t"),
                         F.col("emin").alias("v"))
     elast_s = F.struct(F.col("bucket").alias("t"),
                        F.col("emax").alias("v"))
-    # Edge samples all share the boundary instant: under the raw
-    # evaluator's (time, value) ordering they are value-sorted, so
-    # resets within the group are 0 (ascending), changes are
-    # (#distinct values − 1), and the second-to-last sample is the
-    # second-largest value (evprev).
     eprev_s = F.when(
         F.col("ecnt") >= 2,
         F.struct(F.col("bucket").alias("t"),
@@ -428,11 +428,6 @@ def range_windows(
             elast_s.alias("last"), eprev_s.alias("prev")
         ),
     }
-    edge = edge.select(
-        "sensor_id",
-        (d / F.lit(s_us)).cast("long").alias("__i"),
-        *[edge_expr[c].alias(c) for c in cols],
-    )
     merge = {
         "cnt": F.sum, "vsum": F.sum, "vmin": F.min, "vmax": F.max,
         "first": F.min, "last": F.max, "vsum2": F.sum,
@@ -443,15 +438,82 @@ def range_windows(
         "seq": lambda c: F.sort_array(F.collect_list(c)),
         "last2": lambda c: F.reverse(F.sort_array(F.collect_list(c))),
     }
-    return (
-        full.unionByName(edge)
-        .groupBy("sensor_id", "__i")
-        .agg(*[merge[c](c).alias(c) for c in cols])
-        # A window no sample falls in produces NO row (PromQL): every
-        # contributing bucket row carries nrows ≥ 1, so this only
-        # guards degenerate unions.
-        .filter(F.col("nrows") > 0)
+    win = _bucket_windows(
+        store, stype, start, end, step_seconds, window_seconds,
+        offset_us, sensor_ids, realtime,
+        [(c, full_expr[c], edge_expr[c], merge[c])
+         for c in _STAT_COLS if c in need],
+        # coalesce: a v3 row counts null-valued boundary samples too
+        # (enrows), so a window whose only content is a null sample at
+        # the boundary still produces its row — matching the raw path;
+        # pre-v3 rows keep the non-null-count guard they were built
+        # under.
+        edge_if=F.coalesce(F.col("enrows"), F.col("ecnt")) > 0,
     )
+    # A window no sample falls in produces NO row (PromQL): every
+    # contributing bucket row carries nrows ≥ 1, so this only guards
+    # degenerate unions.
+    return win.filter(F.col("nrows") > 0)
+
+
+def _interp_quantile(vs: F.Column, phi: float) -> F.Column:
+    """Linearly-interpolated φ-quantile of a SORTED double array —
+    the Prometheus quantile / DuckDB ``quantile_cont`` formula
+    (rank = φ·(n−1), interpolate between the straddling order
+    statistics)."""
+    n = F.size(vs)
+    rank = F.lit(float(phi)) * (n - 1).cast("double")
+    lo = F.floor(rank).cast("int")
+    vlo = F.try_element_at(vs, lo + 1)
+    vhi = F.try_element_at(vs, lo + 2)
+    frac = rank - lo.cast("double")
+    return F.when(frac > 0, vlo + (F.coalesce(vhi, vlo) - vlo) * frac) \
+        .otherwise(vlo)
+
+
+def quantile_windows(
+    store: QuantileRollupStore,
+    stype: SensorType,
+    start: dt.datetime,
+    end: dt.datetime,
+    step_seconds: float,
+    window_seconds: float,
+    phi: float,
+    offset_us: int = 0,
+    sensor_ids: DataFrame | None = None,
+    realtime: bool = True,
+    stat: str = "quantile",
+) -> DataFrame:
+    """Per-(sensor, step) approximate φ-quantiles over closed windows
+    [t_i − offset − W, t_i − offset] from bottom-k sample buckets
+    (:func:`_bucket_windows`, storage/qrollup.py): merge the covered
+    buckets' samples ``qs`` (plus the boundary bucket's edge sample
+    ``eqs``), keep the K smallest (h, v) pairs, interpolate — the
+    fan-out is W/grain per bucket over ≤K-element arrays.
+
+    ``stat="mad"`` estimates the median absolute deviation instead
+    (median(|v − median|), both medians linearly interpolated over
+    the SAME merged sample — exactly the raw evaluator's
+    mad_over_time formula applied to the sample; φ is ignored)."""
+    merged = _bucket_windows(
+        store, stype, start, end, step_seconds, window_seconds,
+        offset_us, sensor_ids, realtime,
+        [("sample", F.col("qs"), F.col("eqs"),
+          lambda c: F.slice(
+              F.array_sort(F.flatten(F.collect_list(c))), 1, store.K
+          ))],
+        edge_if=F.size("eqs") > 0,
+    )
+    vs = F.array_sort(F.transform(F.col("sample"), lambda x: x["v"]))
+    if stat == "mad":
+        med = _interp_quantile(vs, 0.5)
+        dev = F.array_sort(
+            F.transform(vs, lambda x: F.abs(x - med))
+        )
+        value = _interp_quantile(dev, 0.5)
+    else:
+        value = _interp_quantile(vs, phi)
+    return merged.select("sensor_id", "__i", value.alias("value"))
 
 
 def _func_value(func: str | None):
@@ -559,13 +621,11 @@ def _served_window_values(
     """Per-(sensor, __i) served values unioned across one or more
     (store, stype) pairs: folded from the quartet rollup, or — for
     ``quantile_over_time``/``mad_over_time`` over a bottom-k sample
-    rollup — estimated from the merged sample (storage/qrollup.py). A
-    sensor has exactly one type, so the union never collides; it
-    happens BEFORE the shared tail so aggregations (sum over a mixed
-    Integer/Float fleet) group across types exactly like the raw
-    path's pre-aggregation union."""
-    from sensapp_spark.storage.qrollup import quantile_windows
-
+    rollup — estimated from the merged sample
+    (:func:`quantile_windows`). A sensor has exactly one type, so the
+    union never collides; it happens BEFORE the shared tail so
+    aggregations (sum over a mixed Integer/Float fleet) group across
+    types exactly like the raw path's pre-aggregation union."""
     q = eq.selector
     window_s = (q.end_time - q.start_time).total_seconds()
     quantile = eq.func in QUANTILE_SERVE_FUNCS
@@ -575,12 +635,9 @@ def _served_window_values(
     mad = eq.func == "mad_over_time"
     out = None
     for store, stype in pairs:
-        store_end, store_step = _store_grid(
-            store.grain_s, start, end, step_seconds
-        )
         if quantile:
             frame = quantile_windows(
-                store, stype, start, store_end, store_step, window_s,
+                store, stype, start, end, step_seconds, window_s,
                 phi=0.5 if mad else float(eq.func_param),
                 offset_us=offset_us,
                 sensor_ids=selected.select("sensor_id"),
@@ -592,8 +649,8 @@ def _served_window_values(
                 store,
                 stype,
                 start,
-                store_end,
-                store_step,
+                end,
+                step_seconds,
                 window_s,
                 offset_us=offset_us,
                 sensor_ids=selected.select("sensor_id"),

@@ -1313,8 +1313,14 @@ def create_app(
                 from sensapp_spark.query.promql_ext import _duration_ms
 
                 step = _duration_ms(raw_step) / 1000.0
-            if step <= 0 or end < start:
-                raise ValueError("step must be > 0 and end >= start")
+            # The grid counts steps in whole µs on a signed 64-bit
+            # clock: NaN, ±inf, a step under 1 µs or one past that
+            # clock's range has no grid (Prometheus likewise rejects a
+            # step that overflows its int64 ns clock).
+            if not 1 <= step * 1_000_000 < 2**63 or end < start:
+                raise ValueError(
+                    "step must be between 1µs and 2^63µs, and end >= start"
+                )
             # Explicit parse anchor so the selector's `offset` can be
             # derived exactly (offset = anchor − selector end).
             now_parse = dt.datetime.now(dt.timezone.utc)

@@ -26,9 +26,12 @@ contributes only ``eqs``. Everything else — CAS commits, the
 exactly-once cursor, affected-bucket recompute, month hardlinks —
 is inherited unchanged from RollupStore.
 
-Serving is OPT-IN (``?approx=1``) and self-describing
-(``X-Approx`` response header); the engine never silently substitutes
-an approximation for the exact path (round-12 verdict task 6).
+This module keeps only the store. Serving lives with the quartet
+store's in query/rollup_serve.py: ``quantile_windows`` folds these
+buckets through the same bucket fan-out as ``range_windows``. It is
+OPT-IN (``?approx=1``) and self-describing (``X-Approx`` response
+header); the engine never silently substitutes an approximation for
+the exact path (round-12 verdict task 6).
 """
 
 from __future__ import annotations
@@ -42,7 +45,7 @@ from sensapp_spark.datamodel.types import SensorType
 from sensapp_spark.storage.lake import MONTH_COL
 from sensapp_spark.storage.rollup import RollupStore
 
-__all__ = ["QuantileRollupStore", "quantile_windows"]
+__all__ = ["QuantileRollupStore"]
 
 
 class QuantileRollupStore(RollupStore):
@@ -189,122 +192,3 @@ class QuantileRollupStore(RollupStore):
         if end is not None:
             out = out.filter(F.col("bucket") <= F.lit(end))
         return out
-
-
-def _interp_quantile(vs: F.Column, phi: float) -> F.Column:
-    """Linearly-interpolated φ-quantile of a SORTED double array —
-    the Prometheus quantile / DuckDB ``quantile_cont`` formula
-    (rank = φ·(n−1), interpolate between the straddling order
-    statistics)."""
-    n = F.size(vs)
-    rank = F.lit(float(phi)) * (n - 1).cast("double")
-    lo = F.floor(rank).cast("int")
-    vlo = F.try_element_at(vs, lo + 1)
-    vhi = F.try_element_at(vs, lo + 2)
-    frac = rank - lo.cast("double")
-    return F.when(frac > 0, vlo + (F.coalesce(vhi, vlo) - vlo) * frac) \
-        .otherwise(vlo)
-
-
-def quantile_windows(
-    store: QuantileRollupStore,
-    stype: SensorType,
-    start: dt.datetime,
-    end: dt.datetime,
-    step_seconds: float,
-    window_seconds: float,
-    phi: float,
-    offset_us: int = 0,
-    sensor_ids: DataFrame | None = None,
-    realtime: bool = True,
-    stat: str = "quantile",
-) -> DataFrame:
-    """Per-(sensor, step) approximate φ-quantiles over closed windows
-    [t_i − offset − W, t_i − offset]: merge the covered buckets'
-    bottom-k samples (plus the boundary bucket's edge sample), keep
-    the k smallest (h, v) pairs, interpolate. Same alignment contract
-    and explode shape as rollup_serve.range_windows — the fan-out is
-    W/grain per bucket over ≤K-element arrays.
-
-    ``stat="mad"`` estimates the median absolute deviation instead
-    (median(|v − median|), both medians linearly interpolated over
-    the SAME merged sample — exactly the raw evaluator's
-    mad_over_time formula applied to the sample; φ is ignored)."""
-    g_us = store.grain_s * 1_000_000
-    r_us = int(window_seconds * 1_000_000)
-    s_us = int(step_seconds * 1_000_000)
-    epoch = dt.datetime(1970, 1, 1)
-    if start.tzinfo is not None:
-        start = start.astimezone(dt.timezone.utc).replace(tzinfo=None)
-    if end.tzinfo is not None:
-        end = end.astimezone(dt.timezone.utc).replace(tzinfo=None)
-    start_us = int((start - epoch).total_seconds() * 1_000_000)
-    if r_us % g_us or s_us % g_us or (start_us - offset_us) % g_us:
-        raise ValueError(
-            "quantile-served windows need W, step, start-offset to be "
-            f"multiples of the {store.grain_s}s grain"
-        )
-    n_steps = (
-        int((end - epoch).total_seconds() * 1_000_000) - start_us
-    ) // s_us
-    scan_lo = epoch + dt.timedelta(
-        microseconds=start_us - offset_us - r_us
-    )
-    scan_hi = epoch + dt.timedelta(
-        microseconds=start_us + n_steps * s_us - offset_us
-    )
-    buckets = (
-        store.read_realtime(stype, scan_lo, scan_hi)
-        if realtime
-        else store.read(stype, scan_lo, scan_hi)
-    )
-    if sensor_ids is not None:
-        buckets = buckets.join(
-            F.broadcast(sensor_ids), "sensor_id", "leftsemi"
-        )
-    tau = F.unix_micros("bucket") + F.lit(offset_us)
-    i0 = F.greatest(
-        F.lit(0),
-        -F.floor(-(tau + F.lit(g_us) - F.lit(start_us)) / F.lit(s_us))
-        .cast("long"),
-    )
-    i1 = F.least(
-        F.lit(n_steps),
-        F.floor((tau + F.lit(r_us) - F.lit(start_us)) / F.lit(s_us))
-        .cast("long"),
-    )
-    full = (
-        buckets.filter((i0 <= i1) & (F.size("qs") > 0))
-        .withColumn("__i", F.explode(F.sequence(i0, i1)))
-        .select("sensor_id", "__i", F.col("qs").alias("sample"))
-    )
-    d = tau - F.lit(start_us)
-    edge = buckets.filter(
-        (d >= 0)
-        & (d % F.lit(s_us) == 0)
-        & (d / F.lit(s_us) <= n_steps)
-        & (F.size("eqs") > 0)
-    ).select(
-        "sensor_id",
-        (d / F.lit(s_us)).cast("long").alias("__i"),
-        F.col("eqs").alias("sample"),
-    )
-    merged = F.slice(
-        F.array_sort(F.flatten(F.collect_list("sample"))),
-        1, store.K,
-    )
-    vs = F.array_sort(F.transform(F.col("__m"), lambda x: x["v"]))
-    if stat == "mad":
-        med = _interp_quantile(vs, 0.5)
-        dev = F.array_sort(
-            F.transform(vs, lambda x: F.abs(x - med))
-        )
-        value = _interp_quantile(dev, 0.5)
-    else:
-        value = _interp_quantile(vs, phi)
-    return (
-        full.unionByName(edge)
-        .groupBy("sensor_id", "__i")
-        .agg(merged.alias("__m"))
-        .select("sensor_id", "__i", value.alias("value"))
-    )

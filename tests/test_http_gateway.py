@@ -536,11 +536,16 @@ def test_query_range_endpoint(client):
     r = client.get("/api/v1/query_range?query=temperature&start=bad"
                    "&end=2024-01-01T00:00:00Z")
     assert r.status_code == 400
-    r = client.get(
-        "/api/v1/query_range?query=temperature"
-        "&start=2024-01-01T00:00:00Z&end=2024-01-01T01:00:00Z&step=0"
-    )
-    assert r.status_code == 400
+    # No step grid: zero, not a number, infinite, under 1 µs, or past
+    # the signed 64-bit µs clock.
+    for step in ("0", "nan", "inf", "1e-9", "1e300"):
+        r = client.get(
+            "/api/v1/query_range?query=temperature"
+            "&start=2024-01-01T00:00:00Z&end=2024-01-01T01:00:00Z"
+            f"&step={step}"
+        )
+        assert r.status_code == 400, step
+        assert "step must be" in r.get_json()["error"], step
 
 
 def test_label_browsing_endpoints(client):

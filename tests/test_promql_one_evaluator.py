@@ -8,9 +8,10 @@ The gateway keeps one request path too: ``/api/v1/query?extended=1``
 runs the ``/api/v1/query_range`` pipeline on a one-step grid.
 
 The static checks below fail if an instant twin is defined again, a
-wrapper stops delegating, or the gateway grows a second extended-PromQL
-path; the Spark checks pin the Prometheus semantics the single path
-gives an aggregate over an empty vector.
+wrapper stops delegating, the gateway grows a second extended-PromQL
+path, or the rollup stores stop sharing one bucket fan-out; the Spark
+checks pin the Prometheus semantics the single path gives an aggregate
+over an empty vector.
 """
 
 from __future__ import annotations
@@ -43,8 +44,10 @@ DELETED_TWINS = {
 }
 
 
-def _functions(module: str) -> dict[str, ast.FunctionDef]:
-    with open(os.path.join(PKG, "query", module)) as fh:
+def _functions(
+    module: str, package: str = "query"
+) -> dict[str, ast.FunctionDef]:
+    with open(os.path.join(PKG, package, module)) as fh:
         tree = ast.parse(fh.read())
     return {
         n.name: n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)
@@ -80,19 +83,11 @@ def test_instant_entry_points_delegate_to_the_range_path(
     assert delegate in _called(_functions(module)[wrapper])
 
 
-def _app_functions() -> dict[str, ast.FunctionDef]:
-    with open(os.path.join(PKG, "server", "app.py")) as fh:
-        tree = ast.parse(fh.read())
-    return {
-        n.name: n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)
-    }
-
-
 def test_gateway_has_one_extended_promql_path():
     """Both extended routes call the one handler; the instant route
     calls none of the instant entry points, and the range route's old
     private time parser and scan-bounds helper stay gone."""
-    fns = _app_functions()
+    fns = _functions("app.py", "server")
     instant = _called(fns["promql_query"])
     assert not instant & {
         "evaluate_extended",
@@ -113,6 +108,25 @@ def test_per_series_reduction_has_one_caller():
         if "_per_series_agg" in _called(fn)
     }
     assert callers == {"evaluate_range"}
+
+
+def test_rollup_windows_share_one_bucket_fan_out():
+    """Both rollup stores fold buckets onto the step grid through one
+    function: it alone explodes a bucket over its steps and asserts
+    the grain alignment; the quantile store's module keeps only the
+    store, and the one-step grain substitute stays gone."""
+    fns = _functions("rollup_serve.py")
+    fan_outs = {n for n, fn in fns.items() if "sequence" in _called(fn)}
+    assert fan_outs == {"_bucket_windows"}
+    raisers = {n for n, fn in fns.items() if "ValueError" in _called(fn)}
+    assert raisers == {"_bucket_windows"}
+    for caller in ("range_windows", "quantile_windows"):
+        assert "_bucket_windows" in _called(fns[caller])
+    assert "_store_grid" not in fns
+    assert not {
+        n for n, fn in _functions("qrollup.py", "storage").items()
+        if n.endswith("_windows") or {"sequence", "explode"} & _called(fn)
+    }
 
 
 NOW = dt.datetime(2024, 1, 1, 1)

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import random
 import zoneinfo
 
 import pytest
@@ -24,6 +25,7 @@ from sensapp_spark.ingest.inference import (
     infer_cell,
     infer_column,
 )
+from sensapp_spark.query.rollup_serve import ROLLUP_SERVE_FUNCS
 from sensapp_spark.wire import snappy_codec
 from sensapp_spark.wire.protowire import (
     Writer,
@@ -386,3 +388,165 @@ def test_train_sample_above_cap_holds_exactly_cap(spark, cap, extra, seeds):
     assert all(0 <= vid < n and emb == [float(vid)] for vid, emb in sample)
     seed_band = set(range(seeds))
     assert seed_band <= set(ids) if seeds <= cap else set(ids) <= seed_band
+
+
+# -- rollup-served == raw ---------------------------------------------------
+#
+# One fixed lake per module, folded by a quartet RollupStore and a
+# bottom-k QuantileRollupStore at the same grain. Hypothesis draws the
+# range function, a grain-aligned window, start and offset, and a step
+# grid: one step (any step length — a one-step grid has no step to
+# align) or several grain-multiple steps. The oracle is the raw
+# evaluator over the same lake.
+
+_G = 1800  # rollup grain (s)
+_T0 = dt.datetime(2024, 1, 1)
+_NOW = dt.datetime(2024, 1, 1, 12, 17, 3)  # parse anchor, not aligned
+
+
+def _rollup_lake_rows():
+    """Samples on bucket edges (multiples of 1800 s), between them,
+    repeated at one instant with different values, a 2 h gap (m/a), a
+    single-sample series (m/c) and a second metric (n/a). Values are
+    quarter-integers, so the folded sums carry only rounding of the
+    Σv²/n − μ² kind."""
+    rng = random.Random(14)
+    times = {
+        "m/a": [*range(0, 3 * 3600, 600), 3600, 3600,
+                *range(5 * 3600, 8 * 3600 + 1, 900)],
+        "m/b": [7, 1799, 1800, 1800, 5401, 9000, 9000, 9000, 12600,
+                16199, 21600, 27000],
+        "m/c": [14400],
+        "n/a": list(range(0, 8 * 3600, 3600)),
+    }
+    return [
+        (sid, _T0 + dt.timedelta(seconds=s), rng.randint(-40, 40) / 4)
+        for sid, ts in times.items()
+        for s in ts
+    ]
+
+
+@pytest.fixture(scope="module")
+def rollup_lake(spark, tmp_path_factory):
+    from pyspark.sql import functions as F
+
+    from sensapp_spark.storage.lake import SensorLake
+    from sensapp_spark.storage.qrollup import QuantileRollupStore
+    from sensapp_spark.storage.rollup import RollupStore
+
+    lake = SensorLake(spark, str(tmp_path_factory.mktemp("prop_rollup")))
+    vals = spark.createDataFrame(
+        _rollup_lake_rows(), "sensor_id string, time timestamp, value double"
+    )
+    lake.append_values(SensorType.FLOAT, vals)
+    sensors = vals.select("sensor_id").distinct().select(
+        "sensor_id",
+        F.split("sensor_id", "/").getItem(0).alias("name"),
+        F.lit("Float").alias("type"),
+        F.lit(None).cast("string").alias("unit"),
+        F.lit(None).cast("string").alias("unit_description"),
+        F.create_map(
+            F.lit("site"), F.split("sensor_id", "/").getItem(1)
+        ).alias("labels"),
+    )
+    store = RollupStore(lake, grain_s=_G)
+    qstore = QuantileRollupStore(lake, grain_s=_G)
+    for s in (store, qstore):
+        s.refresh(SensorType.FLOAT)
+    return lake, sensors, store, qstore
+
+
+# (n_steps, step seconds): one step of any length, or 1–4 steps of
+# 1–3 grains.
+_GRIDS = st.tuples(st.just(0), st.sampled_from([1, 7, 60, _G, 5400])) | (
+    st.tuples(st.integers(1, 4), st.sampled_from([_G, 2 * _G, 3 * _G]))
+)
+_GRID_DRAWS = dict(
+    window=st.integers(1, 4),
+    start=st.integers(0, 18),
+    offset=st.integers(0, 2),
+    grid=_GRIDS,
+)
+
+
+def _served_and_raw(rollup_lake, store, call, window, start, offset, grid):
+    """(served, raw) rows of ``call(m[window·G] offset offset·G)``
+    evaluated at ``T0 + start·G + i·step`` for i ∈ [0, n_steps], keyed
+    by (sensor_id, t)."""
+    from sensapp_spark.query.promql_ext import evaluate_range, parse_extended
+    from sensapp_spark.query.rollup_serve import (
+        _window_aligned,
+        evaluate_range_rollup,
+    )
+
+    lake, sensors, *_ = rollup_lake
+    n_steps, step = grid
+    t0 = _T0 + dt.timedelta(seconds=start * _G)
+    t1 = t0 + dt.timedelta(seconds=n_steps * step)
+    sel = "m" if call is None else f"m[{window * _G}s]"
+    if offset:
+        sel += f" offset {offset * _G}s"
+    eq = parse_extended(sel if call is None else call(sel), now=_NOW)
+    assert _window_aligned(eq, _G, t0, step, _NOW, t1)
+    served = evaluate_range_rollup(
+        store, sensors, eq, t0, t1, step, now=_NOW
+    )
+    raw = evaluate_range(
+        sensors, lake.values(SensorType.FLOAT), eq,
+        start=t0, end=t1, step_seconds=step, now=_NOW,
+    )
+    assert served.columns == raw.columns
+    return tuple(
+        {(r.sensor_id, r.t): r.value for r in df.collect()}
+        for df in (served, raw)
+    )
+
+
+# Folded moment sums: the raw path adds samples, the served path adds
+# per-bucket partial sums (and stdvar/stddev use Σv²/n − μ²).
+_FOLDED_SUMS = frozenset(
+    ["sum_over_time", "avg_over_time", "stddev_over_time", "stdvar_over_time"]
+)
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    func=st.sampled_from(sorted(ROLLUP_SERVE_FUNCS, key=str)),
+    **_GRID_DRAWS,
+)
+def test_rollup_served_equals_raw(rollup_lake, func, window, start, offset,
+                                  grid):
+    """Every served function, on both grid shapes: the same (sensor, t)
+    rows; values bit-equal, or within 1e-9 relative for folded sums.
+    ``func`` None is the plain selector (its window is the 1 h
+    lookback)."""
+    store = rollup_lake[2]
+    call = None if func is None else (lambda sel: f"{func}({sel})")
+    served, raw = _served_and_raw(
+        rollup_lake, store, call, window, start, offset, grid
+    )
+    assert served.keys() == raw.keys()
+    for k, w in raw.items():
+        if func in _FOLDED_SUMS:
+            assert math.isclose(served[k], w, rel_tol=1e-9), (k, w)
+        else:
+            assert served[k] == w, k
+
+
+@settings(max_examples=5, deadline=None)
+@given(phi=st.sampled_from([0.0, 0.1, 0.25, 0.5, 0.9, 1.0]), **_GRID_DRAWS)
+def test_quantile_served_equals_raw_below_k(rollup_lake, phi, window, start,
+                                            offset, grid):
+    """No window of the lake holds more than K = 256 samples, so the
+    merged bottom-k sample is the whole window and the served
+    ``quantile_over_time`` equals the raw one up to the interpolation's
+    last bit (Spark's ``percentile`` weights both order statistics,
+    the fold adds a fraction of their difference)."""
+    qstore = rollup_lake[3]
+    served, raw = _served_and_raw(
+        rollup_lake, qstore, lambda sel: f"quantile_over_time({phi}, {sel})",
+        window, start, offset, grid,
+    )
+    assert served.keys() == raw.keys()
+    for k, w in raw.items():
+        assert math.isclose(served[k], w, rel_tol=1e-12, abs_tol=1e-12), (k, w)
